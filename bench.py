@@ -207,7 +207,8 @@ HEADLINE = [
 ]
 
 # Session-memo builders, invoked ONCE (untimed) during warm-up: these
-# queries construct build-once/serve-many session state on first touch —
+# queries construct build-once/serve-many session state (``SessionMemo``
+# entries, functions/materialize.py) on first touch —
 # the LSH pair cache (dedup_embedding_lsh), the ngram pair set + CC
 # label table (pipeline_keep_list; dedup_clusters then re-times only its
 # own fixpoint against a warm pair set), the resource-feed listing
@@ -225,7 +226,7 @@ WARM_MEMOS = [
     "sim_ann_ivf_pq_served",
     "neardup_lookup_served",
     "jsonl_roundtrip_audit",
-    # standing-corpus CC labels (pipeline._CC_STANDING_CACHE): in
+    # standing-corpus CC labels (pipeline._CC_STANDING memo): in
     # production yesterday's stored table — cc_append's timed path is
     # the absorption, not the standing rebuild
     "cc_append",

@@ -29,11 +29,48 @@ dedup-family queries in one session should call
 ``spark.catalog.clearCache()``, which drops the cached blocks of every
 plan) so intermediates from finished queries stop pressuring storage
 memory.  bench.py / tools/compare.py do exactly that between queries.
+
+Session memos (``SessionMemo``) hold the build-once/serve-many artifacts
+operators reuse across queries: table handles, the verified pair set, CC
+labels, IVF centroids and PQ codebooks, the LSH and IVF-PQ indexes, the
+JSONL export and the engine fixture.  Their lifecycle, in one place:
+
+- **key**: every entry is keyed by ``(applicationId, sessionUUID, ...)``.
+  A DataFrame belongs to the SparkSession that made it, and
+  ``spark.newSession()`` siblings share an applicationId, so the UUID
+  pins the exact session: a sibling builds its own entries.  A ``get``
+  drops the entries of dead (stopped) applications and removes their
+  directories (their checkpoint blocks died with them), so a restarted
+  session never sees a dead handle and nothing accumulates.
+- **release**: the memo's one constructor argument, called as
+  ``release(value, blocking)``, frees what an entry pins:
+  ``unpersist_local_checkpoint`` for checkpointed DataFrames,
+  ``remove_dir`` for directory-backed entries (indexes, the JSONL
+  export, the engine fixture's root).  Plain values need none.
+- **evict_all(blocking=False)**: releases every entry of every memo,
+  newest memo first, so an entry built over another memo's entry (a
+  trimmed engine clone over its base) is released before the base.
+  Timed probes pass ``blocking=True`` so block removal never overlaps
+  the next measured run.  ``materialize`` handles are not memo entries:
+  they live per query and ``unpersist_materialized`` frees them.
+- **ownership**: a release frees only what its own entry owns — a
+  trimmed clone removes its own root, while the base engine's release
+  removes the record files the clone reads.  Checkpoint releases follow
+  the contract in ``unpersist_local_checkpoint``.
+- **exit**: an ``atexit`` hook releases the directory-backed entries, so
+  no ``esspark-*`` temp directory outlives the process.  Checkpointed
+  blocks die with the JVM and need no hook.
 """
 
 from __future__ import annotations
 
+import atexit
+import gc
+import shutil
+import warnings
 import weakref
+from collections.abc import Callable
+from typing import Any
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -77,8 +114,8 @@ def unpersist_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
     that some other DataFrame still builds on makes that DataFrame
     unrecomputable — its next action fails with a missing-block error
     rather than a recompute.  The in-repo callers satisfy this by
-    evicting whole cache FAMILIES at once (``evict_checkpoint_caches``
-    below clears the owning memo dicts in the same call); a library
+    evicting whole memos at once (``evict_all`` below drops the owning
+    ``SessionMemo`` entries in the same call); a library
     consumer releasing a single handle must know nothing else derives
     from it.  A failed plan walk raises RuntimeError (with however many
     checkpoints were already released noted) — it is NOT the False of
@@ -103,32 +140,78 @@ def unpersist_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
     return released > 0
 
 
-def evict_checkpoint_caches(*caches: dict, blocking: bool = False) -> int:
-    """Shared memo-eviction protocol (one copy — the per-module
-    ``evict_session_memos`` hooks delegate here): unpersist the
-    checkpointed RDDs behind every cached DataFrame, clear the cache
-    dicts, then ``gc.collect()`` so the ContextCleaner can also reclaim
-    any intermediate checkpoints (CC per-iteration labels, edges) whose
-    only references died with the dropped handles.  Returns how many
-    cache entries had at least one checkpoint released."""
-    import gc
+def remove_dir(path: str, blocking: bool = False) -> None:
+    """``SessionMemo`` release for a directory-backed entry."""
+    shutil.rmtree(path, ignore_errors=True)
 
-    import warnings
 
-    n = 0
-    for cache in caches:
-        for df in cache.values():
-            try:
-                n += bool(unpersist_local_checkpoint(df, blocking))
-            except RuntimeError as e:
-                # best-effort bulk cleanup: a dead handle (e.g. a memo
-                # from a stopped SparkSession whose stale-purge hasn't
-                # run) must not abort the rest of the family — but it
-                # is surfaced, never silently dropped (r11 ADVICE)
-                warnings.warn(str(e), RuntimeWarning, stacklevel=2)
-        cache.clear()
+_MEMOS: list[SessionMemo] = []
+
+
+class SessionMemo:
+    """Build-once/serve-many memo keyed by session (lifecycle in the
+    module docstring)."""
+
+    def __init__(self, release: Callable[[Any, bool], object] | None = None):
+        self.release = release
+        self._entries: dict[tuple, Any] = {}
+        _MEMOS.append(self)
+
+    def get(
+        self,
+        spark: SparkSession,
+        key: tuple,
+        build: Callable[[], Any],
+        valid: Callable[[Any], bool] | None = None,
+    ) -> Any:
+        """The entry for ``key`` in this session, built on first use (or
+        rebuilt when ``valid`` rejects it, e.g. an index directory that
+        vanished)."""
+        app = spark.sparkContext.applicationId
+        k = (app, str(spark._jsparkSession.sessionUUID()), *key)
+        if k in self._entries:
+            got = self._entries[k]
+            if valid is None or valid(got):
+                return got
+            self._drop(k)
+        for stale in [e for e in self._entries if e[0] != app]:
+            self._drop(stale, spark_alive=False)  # dead application
+        self._entries[k] = got = build()
+        return got
+
+    def _drop(self, k: tuple, blocking: bool = False, spark_alive: bool = True) -> None:
+        """Pop ``k`` and release what it pins.  Without a live Spark
+        application (a dead application's entry, interpreter exit) its
+        checkpoint blocks are already gone: only directories are freed."""
+        value = self._entries.pop(k)
+        if self.release is None or (
+            not spark_alive and self.release is unpersist_local_checkpoint
+        ):
+            return
+        try:
+            self.release(value, blocking)
+        except RuntimeError as e:
+            # best-effort: one dead handle must not abort the rest of the
+            # eviction, but it is surfaced, never silently dropped
+            warnings.warn(str(e), RuntimeWarning, stacklevel=3)
+
+
+def evict_all(blocking: bool = False) -> None:
+    """Release every ``SessionMemo`` entry, newest memo first, then
+    ``gc.collect()`` so the ContextCleaner can also reclaim intermediate
+    checkpoints (CC per-iteration labels) whose only references died
+    with the dropped handles."""
+    for memo in reversed(_MEMOS):
+        for k in list(memo._entries):
+            memo._drop(k, blocking)
     gc.collect()
-    return n
+
+
+@atexit.register
+def _release_dirs_at_exit() -> None:
+    for memo in reversed(_MEMOS):
+        for k in list(memo._entries):
+            memo._drop(k, spark_alive=False)
 
 
 def unpersist_materialized(spark: SparkSession, blocking: bool = False) -> int:

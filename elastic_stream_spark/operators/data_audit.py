@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elastic_stream_spark.functions.materialize import SessionMemo, remove_dir
 from elastic_stream_spark.sources.envelope import load_table, load_table_balanced
 
 SKEW_TOP = 20  # hottest keys reported
@@ -237,9 +238,9 @@ def winsorized_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# one JSONL export per (application, corpus) — the ingest fixture the
+# one JSONL export per (session, corpus) — the ingest fixture the
 # round-trip audit reads; same memo discipline as dedup's LSH index
-_JSONL_CACHE: dict[tuple, str] = {}
+_JSONL = SessionMemo(remove_dir)
 
 JSONL_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -249,12 +250,12 @@ JSONL_SCHEMA = (
 def _documents_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _JSONL_CACHE:
+    def build() -> str:
         d = tempfile.mkdtemp(prefix="esspark-jsonl-")
         load_table(spark, sf_dir, "documents").write.mode("overwrite").json(d)
-        _JSONL_CACHE[key] = d
-    return _JSONL_CACHE[key]
+        return d
+
+    return _JSONL.get(spark, (sf_dir,), build)
 
 
 def jsonl_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,7 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from elastic_stream_spark.functions.materialize import materialize
+from elastic_stream_spark.functions.materialize import (
+    SessionMemo,
+    materialize,
+    remove_dir,
+    unpersist_local_checkpoint,
+)
 from elastic_stream_spark.functions.textfns import bow_fingerprint, shingles
 from elastic_stream_spark.functions.vectorfns import cosine_similarity
 from elastic_stream_spark.sources.envelope import load_table, load_table_balanced
@@ -390,27 +395,29 @@ def lsh_index_build(spark: SparkSession, corpus_sh: DataFrame, index_dir: str) -
     return index_dir
 
 
-_LSH_INDEX_CACHE: dict[tuple[str, str], str] = {}
+_LSH_INDEX = SessionMemo(remove_dir)
 
 
 def _corpus_lsh_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build-once/serve-many memo for the fixture's standing-corpus
-    index (docs with ``doc_id % 4 != 3``), per (application, corpus)."""
+    index (docs with ``doc_id % 4 != 3``), per (session, corpus);
+    rebuilt if its directory vanished."""
     import os as _os
     import tempfile as _tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _LSH_INDEX_CACHE.get(key)
-    if got is None or not _os.path.exists(_os.path.join(got, "params.json")):
-        for stale in [k for k in _LSH_INDEX_CACHE if k[0] != key[0]]:
-            del _LSH_INDEX_CACHE[stale]
+    def build() -> str:
         d = _tempfile.mkdtemp(prefix="esspark-lsh-")
         corpus_sh = _doc_shingles(spark, sf_dir).where(
             F.col("doc_id") % INCREMENTAL_MOD != INCREMENTAL_MOD - 1
         )
-        lsh_index_build(spark, corpus_sh, d)
-        _LSH_INDEX_CACHE[key] = got = d
-    return got
+        return lsh_index_build(spark, corpus_sh, d)
+
+    return _LSH_INDEX.get(
+        spark,
+        (sf_dir,),
+        build,
+        valid=lambda d: _os.path.exists(_os.path.join(d, "params.json")),
+    )
 
 
 def neardup_lookup_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,7 +581,8 @@ def _substring_spans(grams: DataFrame) -> DataFrame:
     sorted positions, and the adjacency-merge (start > prev_end + 1
     opens an island) reconstructs exactly the maximal
     consecutive-position islands the one-window formulation produced
-    (asserted cross-variant in tools/span_ab.py).  A 128-bit collision
+    (the r9 span A/B/C found all three shapes' outputs equal; its 160×
+    timings are in SCALE.extra.md).  A 128-bit collision
     could only merge two gram groups (false span): P ≈ n²/2¹²⁹ (module
     docstring)."""
     assert SUBSTR_MIN_DOCS == 2, "min/max dup test encodes exactly 2"
@@ -723,46 +731,24 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ngram_pair_set(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
-# Verified pair set memo, keyed by (applicationId, corpus dir): the
-# downstream pipeline queries (dedup_clusters, pipeline_keep_list,
-# pipeline_curation_verdict) all consume this edge list; a production
-# pipeline materializes it once and every stage reads the materialization
-# — here the same thing, as a session-lifetime localCheckpoint of the
-# (small, verified) pair table.  The applicationId component makes the
-# session binding explicit: a checkpoint belongs to the SparkContext that
-# created it, so a stopped-and-recreated session can never be served a
-# dead handle.  Corpus immutability within one application still holds by
+# Verified pair set memo (``SessionMemo``, keyed by session and corpus
+# dir): the downstream pipeline queries (dedup_clusters,
+# pipeline_keep_list, pipeline_curation_verdict) all consume this edge
+# list; a production pipeline materializes it once and every stage reads
+# the materialization — here the same thing, as a session-lifetime
+# localCheckpoint of the (small, verified) pair table, released by
+# ``evict_all``.  Corpus immutability within one session still holds by
 # construction (testdata is read-only; tests write one corpus per tmp
 # workdir).
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def evict_session_memos(blocking: bool = False) -> int:
-    """Drop the session pair-set memo AND release its localCheckpoint
-    blocks immediately (public probe/bench hook — r10 ADVICE: tools
-    reaching into ``_PAIR_CACHE`` only dropped dict references, leaving
-    checkpoint blocks pinned until GC + ContextCleaner).  Returns how
-    many cache entries released a checkpoint.  Timed probes pass
-    blocking=True so removal never overlaps the next measured run."""
-    from elastic_stream_spark.functions.materialize import (
-        evict_checkpoint_caches,
-    )
-
-    return evict_checkpoint_caches(_PAIR_CACHE, blocking=blocking)
+_PAIRS = SessionMemo(unpersist_local_checkpoint)
 
 
 def ngram_pair_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # evict entries from other (stopped) applications: their DataFrame
-    # handles are dead and would otherwise pin memory process-lifetime
-    for stale in [k for k in _PAIR_CACHE if k[0] != key[0]]:
-        del _PAIR_CACHE[stale]
-    out = _ngram_pair_set(spark, sf_dir).localCheckpoint(eager=True)
-    _PAIR_CACHE[key] = out
-    return out
+    return _PAIRS.get(
+        spark,
+        (sf_dir,),
+        lambda: _ngram_pair_set(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def _ngram_pair_set(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from elastic_stream_spark.functions.materialize import (
+    SessionMemo,
+    unpersist_local_checkpoint,
+)
 from elastic_stream_spark.functions.textfns import FP_TERM_MOD, bow_fingerprint
 from elastic_stream_spark.operators.curation import EVAL_MOD as CUR_EVAL_MOD
 from elastic_stream_spark.operators.curation import NGRAM_N as CUR_NGRAM_N
@@ -149,53 +153,32 @@ def connected_components(pairs: DataFrame, max_iter: int = CC_MAX_ITER) -> DataF
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
-# Cluster-table memo, keyed by (applicationId, corpus dir): the CC
-# fixpoint is the most expensive stage shared by the downstream verdict
-# queries (pipeline_keep_list, pipeline_curation_verdict) — a production
-# pipeline materializes the cluster table once and every consumer joins
-# it; here the same thing at session lifetime (the fixpoint's final
-# labels are already a localCheckpoint).  dedup_clusters — the
-# CONSTRUCTION query — bypasses this memo so its bench/scale timings
-# measure the fixpoint, not a memo hit.  Same session-binding and
-# immutability argument as dedup._PAIR_CACHE.
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def evict_session_memos(blocking: bool = False) -> int:
-    """Drop the CC label memos (batch + standing) AND release their
-    localCheckpoint blocks immediately (public probe/bench hook — r10
-    ADVICE; see dedup.evict_session_memos).  The cached DataFrames are
-    a ``select`` over the fixpoint's final checkpoint, which is why the
-    release goes through the plan-walking
-    ``unpersist_local_checkpoint`` (a root-only unpersist silently
-    freed nothing here — r11 review finding).  Returns how many cache
-    entries released a checkpoint.  Timed probes pass blocking=True."""
-    from elastic_stream_spark.functions.materialize import (
-        evict_checkpoint_caches,
-    )
-
-    return evict_checkpoint_caches(
-        _CC_CACHE, _CC_STANDING_CACHE, blocking=blocking
-    )
+# Cluster-table memo (``SessionMemo``, keyed by session and corpus
+# dir): the CC fixpoint is the most expensive stage shared by the
+# downstream verdict queries (pipeline_keep_list,
+# pipeline_curation_verdict) — a production pipeline materializes the
+# cluster table once and every consumer joins it; here the same thing
+# at session lifetime (the fixpoint's final labels are already a
+# localCheckpoint, released through the plan-walking
+# ``unpersist_local_checkpoint`` since the memo holds a ``select`` over
+# it).  dedup_clusters — the CONSTRUCTION query — bypasses this memo so
+# its bench/scale timings measure the fixpoint, not a memo hit.
+_CC_LABELS = SessionMemo(unpersist_local_checkpoint)
 
 
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CC_CACHE.get(key)
-    if cached is None:
-        # evict dead-application entries (see dedup._PAIR_CACHE)
-        for stale in [k for k in _CC_CACHE if k[0] != key[0]]:
-            del _CC_CACHE[stale]
-        cached = connected_components(ngram_pair_set(spark, sf_dir))
-        _CC_CACHE[key] = cached
-    return cached
+    return _CC_LABELS.get(
+        spark,
+        (sf_dir,),
+        lambda: connected_components(ngram_pair_set(spark, sf_dir)),
+    )
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: connected components of the verified
     3-gram-Jaccard ≥ 0.8 pair graph, with component size and the kept
     representative flag.  Recomputes the fixpoint each call (construction
-    operator — see _CC_CACHE note); the pair set itself reads the
+    operator — see the _CC_LABELS note); the pair set itself reads the
     session materialization."""
     comp = connected_components(ngram_pair_set(spark, sf_dir))
     w = Window.partitionBy("cluster_id")
@@ -214,24 +197,19 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Standing-label memo for the incremental CC path: in production these
 # are YESTERDAY'S stored cluster labels (built once per corpus version);
 # cc_append's job is absorbing today's batch into them.  Session-memoized
-# exactly like _CC_CACHE so the timed/benched path measures the APPEND
+# exactly like _CC_LABELS so the timed/benched path measures the APPEND
 # work, not the standing rebuild (same build/serve split as
 # ivf_pq_build → ivf_pq_append and neardup index build → serve).
-_CC_STANDING_CACHE: dict[tuple[str, str], DataFrame] = {}
+_CC_STANDING = SessionMemo(unpersist_local_checkpoint)
 
 CC_APPEND_MOD = 4  # docs with doc_id % 4 == 3 play the incoming batch
 # (same fixture convention as dedup.INCREMENTAL_MOD)
 
 
 def _cc_standing(spark: SparkSession, sf_dir: str, corpus_pairs: DataFrame) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CC_STANDING_CACHE.get(key)
-    if cached is None:
-        for stale in [k for k in _CC_STANDING_CACHE if k[0] != key[0]]:
-            del _CC_STANDING_CACHE[stale]
-        cached = connected_components(corpus_pairs)
-        _CC_STANDING_CACHE[key] = cached
-    return cached
+    return _CC_STANDING.get(
+        spark, (sf_dir,), lambda: connected_components(corpus_pairs)
+    )
 
 
 def cc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,7 +398,7 @@ def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents into the same shards — the regression gate a production
     pipeline publishes after every nightly build.
 
-    Plan: the verdict reuses the session CC fixpoint (_CC_CACHE) and
+    Plan: the verdict reuses the session CC fixpoint (_CC_LABELS) and
     key-partitioned left joins; split/shard is a pure projection; the
     packing window partitions by (split, shard) so no shard's docs
     leave their partition; the manifest is one map-side-combinable
@@ -505,7 +483,7 @@ def manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus keeper (``min(doc_id)``) and the standing-corpus keeper
     (``min(doc_id) over corpus-side rows only``, a conditional min over
     the identical partition), each doc left-joins BOTH memoized CC
-    label tables (full ``_CC_CACHE``, standing ``_CC_STANDING_CACHE``,
+    label tables (full ``_CC_LABELS``, standing ``_CC_STANDING``,
     shared with cc_append), and per-doc booleans in_a/in_b replace the
     former doc_id full-outer join outright: snapshot A and B contain
     the SAME doc row or not at all, so the diff is a map-side

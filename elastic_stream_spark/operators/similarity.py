@@ -41,7 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from elastic_stream_spark.functions.materialize import materialize
+from elastic_stream_spark.functions.materialize import (
+    SessionMemo,
+    materialize,
+    remove_dir,
+)
 from elastic_stream_spark.functions.vectorfns import dot, unit
 from elastic_stream_spark.sources.envelope import load_table, load_table_balanced
 
@@ -111,7 +115,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------- IVF
 
-_CENTROID_CACHE: dict[tuple, tuple[int, int, list[list[float]]]] = {}
+_CENTROIDS = SessionMemo()
 
 
 def train_ivf(
@@ -181,18 +185,11 @@ def _train_centroids(
     nlist: int | None = None,
     nprobe: int | None = None,
 ) -> tuple[int, int, list[list[float]]]:
-    # applicationId in the key: the cached centroids are plain lists (no
-    # session binding), but keying per-application also protects against
-    # an sf_dir being rewritten between applications in one process
-    key = (spark.sparkContext.applicationId, sf_dir, nlist, nprobe)
-    cached = _CENTROID_CACHE.get(key)
-    if cached is None:
-        # evict dead-application entries (see dedup._PAIR_CACHE)
-        for stale in [k for k in _CENTROID_CACHE if k[0] != key[0]]:
-            del _CENTROID_CACHE[stale]
-        cached = train_ivf(_unit_emb(spark, sf_dir), nlist, nprobe)
-        _CENTROID_CACHE[key] = cached
-    return cached
+    return _CENTROIDS.get(
+        spark,
+        (sf_dir, nlist, nprobe),
+        lambda: train_ivf(_unit_emb(spark, sf_dir), nlist, nprobe),
+    )
 
 
 def ivf_assign(
@@ -763,7 +760,7 @@ def ivf_pq_topk(
     )
 
 
-_PQ_CACHE: dict[tuple, list] = {}
+_PQ_BOOKS = SessionMemo()
 
 
 # PQ gate fixture: the clustered corpus's intra-cluster cosines pack
@@ -813,21 +810,11 @@ def _twin_pq_books(spark: SparkSession, sf_dir: str) -> list:
     """Session-memoized PQ codebooks for the planted-twin corpus (the
     bounded driver-side k-means sample; shared by the inline query and
     the index build)."""
-    pkey = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "clustered-twin-pq",
-        PQ_M,
-        PQ_K,
+    return _PQ_BOOKS.get(
+        spark,
+        (sf_dir, "clustered-twin-pq", PQ_M, PQ_K),
+        lambda: train_pq(pq_twin_corpus(spark, sf_dir)),
     )
-    books = _PQ_CACHE.get(pkey)
-    if books is None:
-        # evict dead-application entries (see dedup._PAIR_CACHE)
-        for stale in [k for k in _PQ_CACHE if k[0] != pkey[0]]:
-            del _PQ_CACHE[stale]
-        books = train_pq(pq_twin_corpus(spark, sf_dir))
-        _PQ_CACHE[pkey] = books
-    return books
 
 
 def sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1004,21 +991,17 @@ def ivf_pq_load(index_dir: str) -> tuple[list, list]:
     return quant["centroids"], quant["codebooks"]
 
 
-_PQ_INDEX_CACHE: dict[tuple, str] = {}
+_PQ_INDEX = SessionMemo(remove_dir)
 
 
 def _twin_pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build-once/serve-many: the planted-twin corpus's persisted index,
-    built on first use per (application, sf_dir) under the Spark local
-    scratch dir (dies with the host's tmp cleanup, like shuffle data)."""
+    built on first use per (session, sf_dir); rebuilt if its directory
+    vanished."""
     import os as _os
     import tempfile as _tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PQ_INDEX_CACHE.get(key)
-    if got is None or not _os.path.exists(_os.path.join(got, "quantizer.json")):
-        for stale in [k for k in _PQ_INDEX_CACHE if k[0] != key[0]]:
-            del _PQ_INDEX_CACHE[stale]
+    def build() -> str:
         d = _tempfile.mkdtemp(prefix="esspark-ivfpq-")
         ivf_pq_build(
             spark,
@@ -1027,8 +1010,14 @@ def _twin_pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
             _twin_pq_books(spark, sf_dir),
             d,
         )
-        _PQ_INDEX_CACHE[key] = got = d
-    return got
+        return d
+
+    return _PQ_INDEX.get(
+        spark,
+        (sf_dir,),
+        build,
+        valid=lambda d: _os.path.exists(_os.path.join(d, "quantizer.json")),
+    )
 
 
 def sim_ann_ivf_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,20 +1063,11 @@ def _uniform_pq_books(spark: SparkSession, sf_dir: str) -> list:
     """Session-memoized PQ codebooks trained on the RAW driver fixture
     (the uniform corpus — vs ``_twin_pq_books``' planted-twin corpus),
     at the 8-bit serving granularity (PQ_K_REFINED)."""
-    pkey = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "uniform-pq",
-        PQ_M,
-        PQ_K_REFINED,
+    return _PQ_BOOKS.get(
+        spark,
+        (sf_dir, "uniform-pq", PQ_M, PQ_K_REFINED),
+        lambda: train_pq(_unit_emb(spark, sf_dir), k=PQ_K_REFINED),
     )
-    books = _PQ_CACHE.get(pkey)
-    if books is None:
-        for stale in [k for k in _PQ_CACHE if k[0] != pkey[0]]:
-            del _PQ_CACHE[stale]
-        books = train_pq(_unit_emb(spark, sf_dir), k=PQ_K_REFINED)
-        _PQ_CACHE[pkey] = books
-    return books
 
 
 def sim_ann_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:

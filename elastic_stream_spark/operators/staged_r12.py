@@ -301,7 +301,6 @@ QUERIES = {
     "dedup_cluster_density_audit": dedup_cluster_density_audit,
     "stream_integrity_audit": stream_integrity_audit,
 }
-QUERIES_R12 = QUERIES  # r11-era alias kept for tests/test_staged_r12.py
 
 
 def _oracles_r12() -> dict[str, str]:
@@ -423,17 +422,4 @@ BM25_K1_SQL = 1.2
 BM25_B_SQL = 0.75
 
 
-def ORACLES_R12() -> dict[str, str]:  # callable: pipeline import stays lazy
-    return _oracles_r12()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r12()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+ORACLES = _oracles_r12()

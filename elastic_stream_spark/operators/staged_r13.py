@@ -78,7 +78,6 @@ def pack_attention_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {
     "pack_attention_waste_audit": pack_attention_waste_audit,
 }
-QUERIES_R13 = QUERIES  # r12-era alias kept for tests/test_staged_r13.py
 
 
 def _oracles_r13() -> dict[str, str]:
@@ -131,17 +130,4 @@ def _oracles_r13() -> dict[str, str]:
     }
 
 
-def ORACLES_R13() -> dict[str, str]:  # callable: curation import stays lazy
-    return _oracles_r13()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r13()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+ORACLES = _oracles_r13()

@@ -152,7 +152,6 @@ def pack_loader_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {
     "pack_loader_roundtrip_audit": pack_loader_roundtrip_audit,
 }
-QUERIES_R14 = QUERIES
 
 
 def _oracles_r14() -> dict[str, str]:
@@ -238,17 +237,4 @@ def _oracles_r14() -> dict[str, str]:
     }
 
 
-def ORACLES_R14() -> dict[str, str]:  # callable: curation import stays lazy
-    return _oracles_r14()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r14()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+ORACLES = _oracles_r14()

@@ -158,7 +158,6 @@ def curriculum_ramp_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {
     "curriculum_ramp_drift_audit": curriculum_ramp_drift_audit,
 }
-QUERIES_R15 = QUERIES
 
 
 def _oracles_r15() -> dict[str, str]:
@@ -254,17 +253,4 @@ def _oracles_r15() -> dict[str, str]:
     }
 
 
-def ORACLES_R15() -> dict[str, str]:  # callable: curation import stays lazy
-    return _oracles_r15()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r15()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+ORACLES = _oracles_r15()

@@ -128,7 +128,6 @@ def decontaminate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {
     "decontaminate_neardup": decontaminate_neardup,
 }
-QUERIES_R16 = QUERIES
 
 
 def _oracles_r16() -> dict[str, str]:
@@ -178,17 +177,4 @@ def _oracles_r16() -> dict[str, str]:
     }
 
 
-def ORACLES_R16() -> dict[str, str]:  # callable: imports stay lazy
-    return _oracles_r16()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r16()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+ORACLES = _oracles_r16()

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from elastic_stream_spark.functions.materialize import SessionMemo
+
 TABLES = (
     "region",
     "nation",
@@ -46,33 +48,14 @@ RANGE_SIZE = 1000  # offsets per range in the derived fixture (FIXTURES.md B.1)
 # ``spark.read.parquet`` afresh — each call re-lists the path and
 # re-reads the parquet footer on the DRIVER and pays several py4j round
 # trips, and a single query invokes its loaders 3-6 times.  The memo
-# returns the same lazy DataFrame handle per (application, sf_dir,
-# table): no data is cached (every action still computes from the
-# parquet files — the plan is identical), only the relation/schema
-# resolution is reused, exactly what ``spark.table`` on a catalog table
-# gives a production job.  Keyed by applicationId so a restarted
-# session can never be served a dead handle (the dedup._PAIR_CACHE
-# convention); corpus immutability per (application, dir) holds by
+# returns the same lazy DataFrame handle per (session, sf_dir, table):
+# no data is cached (every action still computes from the parquet files
+# — the plan is identical), only the relation/schema resolution is
+# reused, exactly what ``spark.table`` on a catalog table gives a
+# production job.  Corpus immutability per session holds by
 # construction (testdata is read-only; tests write one corpus per tmp
 # workdir).
-_TABLE_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
-
-
-def _memo_key(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, str, str, str]:
-    """Memo key for session-bound handles (r15 ADVICE): a DataFrame
-    belongs to the SparkSession that created it, and sessions made via
-    ``spark.newSession()`` SHARE an applicationId — keying on
-    applicationId alone would serve a sibling session another session's
-    handle.  The key carries (applicationId, sessionUUID, ...): the
-    UUID pins the exact session, while stale eviction stays keyed on
-    applicationId alone so two LIVE sibling sessions coexist and only
-    dead-application entries are dropped."""
-    return (
-        spark.sparkContext.applicationId,
-        str(spark._jsparkSession.sessionUUID()),
-        sf_dir,
-        name,
-    )
+_TABLES = SessionMemo()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -81,14 +64,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a long (``spark.sql.legacy.parquet.nanosAsLong``) and floored to
     microseconds here; the DuckDB oracle applies the identical
     ``epoch_ns // 1000`` normalization (EVENTS_NORM_SQL)."""
-    key = _memo_key(spark, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _TABLE_CACHE if k[0] != key[0]]:
-        del _TABLE_CACHE[stale]
-    _TABLE_CACHE[key] = out = _load_table(spark, sf_dir, name)
-    return out
+    return _TABLES.get(
+        spark, (sf_dir, name), lambda: _load_table(spark, sf_dir, name)
+    )
 
 
 def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -117,24 +95,20 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # staged_r17.decontaminate_semantic) guard their F.broadcast hint on
 # the corpus size — the "eval set" is a modulus slice of the corpus, so
 # its size grows ∝ corpus and an unconditional broadcast OOMs at true
-# scale (r15 VERDICT item 2).  One count job per (application, sf_dir,
+# scale (r15 VERDICT item 2).  One count job per (session, sf_dir,
 # table), driver-cached; the bench's warm-up counts every table anyway,
 # so the timed path always sees a dict hit.  The count is a metadata-
 # cheap scan and deterministic for the immutable fixture dirs.
-_ROWS_CACHE: dict[tuple[str, str, str, str], int] = {}
+_ROWS = SessionMemo()
 
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
-    key = _memo_key(spark, sf_dir, name)
-    got = _ROWS_CACHE.get(key)
-    if got is None:
-        for stale in [k for k in _ROWS_CACHE if k[0] != key[0]]:
-            del _ROWS_CACHE[stale]
-        _ROWS_CACHE[key] = got = load_table(spark, sf_dir, name).count()
-    return got
+    return _ROWS.get(
+        spark, (sf_dir, name), lambda: load_table(spark, sf_dir, name).count()
+    )
 
 
-_BALANCED_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
+_BALANCED = SessionMemo()
 
 
 def load_table_balanced(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -145,17 +119,14 @@ def load_table_balanced(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     multi-split and skips the shuffle entirely.  Handle-memoized like
     ``load_table`` (the ``inputFiles()`` metadata probe is itself a py4j
     + file-listing round trip per call)."""
-    key = _memo_key(spark, sf_dir, name)
-    cached = _BALANCED_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _BALANCED_CACHE if k[0] != key[0]]:
-        del _BALANCED_CACHE[stale]
-    df = load_table(spark, sf_dir, name)
-    if len(df.inputFiles()) < 8:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    _BALANCED_CACHE[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = load_table(spark, sf_dir, name)
+        if len(df.inputFiles()) < 8:
+            df = df.repartition(spark.sparkContext.defaultParallelism)
+        return df
+
+    return _BALANCED.get(spark, (sf_dir, name), build)
 
 
 # DuckDB-side equivalent of the events ts normalization (micros floor).

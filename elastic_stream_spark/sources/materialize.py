@@ -3,7 +3,7 @@
 Round-1 served the oracle-checked stream-surface queries straight off the
 derived envelope view, which validated the envelope math but bypassed
 ``StreamCatalog`` / ``StreamLog`` / ``KVStore``.  This module loads the
-fixture INTO a real (temp-dir) engine instance once per process and hands
+fixture INTO a real (temp-dir) engine instance once per session and hands
 the queries the real read paths:
 
 - records land in the partitioned parquet log via ``StreamLog.bulk_load``
@@ -20,18 +20,23 @@ the queries the real read paths:
 immutable record files) and applies TRIM_STREAM there, so the trim query
 exercises the real trim → fetch path without mutating the shared
 instance (queries stay order-independent).
+
+Both are session memos (``functions/materialize.py``): one instance per
+SparkSession, whose root directory is removed when the memo is evicted.
+A clone's release removes only its own root; the record files it reads
+belong to the base engine.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
 from elastic_stream_spark.catalog import StreamCatalog
+from elastic_stream_spark.functions.materialize import SessionMemo, remove_dir
 from elastic_stream_spark.kv import KVStore
 from elastic_stream_spark.log import StreamLog
 from elastic_stream_spark.sources.envelope import RANGE_SIZE, events_envelope
@@ -46,16 +51,22 @@ class EngineFixture:
     stream_names: dict[int, str]  # stream_id -> event_type
 
 
-_CACHE: dict[str, EngineFixture] = {}
-_TRIM_CACHE: dict[tuple[str, int, int], EngineFixture] = {}
+def _release_engine(eng: EngineFixture, blocking: bool) -> None:
+    remove_dir(eng.root)
+
+
+# defined base first: evict_all releases newest first, so clones go
+# before the base that owns their record files
+_ENGINES = SessionMemo(_release_engine)
+_TRIMMED = SessionMemo(_release_engine)
 
 
 def get_engine(spark: SparkSession, sf_dir: str) -> EngineFixture:
-    """The per-process engine instance loaded from ``sf_dir`` (idempotent)."""
-    eng = _CACHE.get(sf_dir)
-    if eng is not None:
-        return eng
+    """The per-session engine instance loaded from ``sf_dir`` (idempotent)."""
+    return _ENGINES.get(spark, (sf_dir,), lambda: _build_engine(spark, sf_dir))
 
+
+def _build_engine(spark: SparkSession, sf_dir: str) -> EngineFixture:
     root = tempfile.mkdtemp(prefix="esspark-engine-")
     catalog = StreamCatalog(root)
     log = StreamLog(spark, catalog)
@@ -89,9 +100,7 @@ def get_engine(spark: SparkSession, sf_dir: str) -> EngineFixture:
     for row in nation:
         kv.put(row["n_name"].encode(), str(row["n_nationkey"]).encode())
 
-    eng = EngineFixture(root, catalog, log, kv, stream_names)
-    _CACHE[sf_dir] = eng
-    return eng
+    return EngineFixture(root, catalog, log, kv, stream_names)
 
 
 def trimmed_engine(
@@ -101,18 +110,14 @@ def trimmed_engine(
     trim_at)`` applied.  Record files are shared read-only (vacuum is NOT
     run here — physical reclaim is exercised separately in pytest), so the
     clone costs one small JSON copy regardless of data size."""
-    key = (sf_dir, stream_id, trim_at)
-    eng = _TRIM_CACHE.get(key)
-    if eng is not None:
-        return eng
 
-    base = get_engine(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="esspark-engine-trim-")
-    catalog = base.catalog.clone_to(root)
-    log = StreamLog(spark, catalog)
-    log.records_root = base.log.records_root  # share the immutable data files
-    catalog.trim_stream(stream_id, trim_at)
+    def build() -> EngineFixture:
+        base = get_engine(spark, sf_dir)
+        root = tempfile.mkdtemp(prefix="esspark-engine-trim-")
+        catalog = base.catalog.clone_to(root)
+        log = StreamLog(spark, catalog)
+        log.records_root = base.log.records_root  # share the immutable data files
+        catalog.trim_stream(stream_id, trim_at)
+        return EngineFixture(root, catalog, log, base.kv, dict(base.stream_names))
 
-    eng = EngineFixture(root, catalog, log, base.kv, dict(base.stream_names))
-    _TRIM_CACHE[key] = eng
-    return eng
+    return _TRIMMED.get(spark, (sf_dir, stream_id, trim_at), build)

@@ -179,3 +179,23 @@ def test_every_query_has_an_oracle():
     oracles = all_oracles()
     no_oracle = {n for n in qs if n not in oracles}
     assert no_oracle == set()
+
+
+def test_only_the_session_memo_reads_session_identity():
+    """Session-bound state is memoized through ``SessionMemo`` alone: a
+    module that reads ``applicationId`` or ``sessionUUID`` itself is a
+    hand-rolled memo, with its own key, purge and release to get wrong."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(here, "elastic_stream_spark")
+    allowed = os.path.join(pkg, "functions", "materialize.py")
+    readers = []
+    for root, _, files in os.walk(pkg):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or path == allowed:
+                continue
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            if "applicationId" in src or "sessionUUID" in src:
+                readers.append(os.path.relpath(path, here))
+    assert not readers, f"modules reading session identity: {readers}"

@@ -18,18 +18,17 @@ def test_staged_r13_hash_matches_duckdb(spark):
 
     sys.path.insert(0, "/root/repo")
     from elastic_stream_spark.operators.staged_r13 import (
-        ORACLES_R13,
-        QUERIES_R13,
+        ORACLES,
+        QUERIES,
     )
     from tools.compare import compare_one, duck_con
 
-    oracles = ORACLES_R13()
-    assert set(QUERIES_R13) == set(oracles)
+    assert set(QUERIES) == set(ORACLES)
     for sf_dir in (SF_DIR, "/root/testdata/sf0.01", "/root/testdata/sf0.1"):
         con = duck_con(sf_dir)
         try:
-            for name, fn in QUERIES_R13.items():
-                res = compare_one(name, fn, oracles[name], spark, con, sf_dir)
+            for name, fn in QUERIES.items():
+                res = compare_one(name, fn, ORACLES[name], spark, con, sf_dir)
                 assert res.get("status") == "OK", (sf_dir, res)
         finally:
             con.close()

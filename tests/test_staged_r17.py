@@ -16,18 +16,17 @@ def test_staged_r17_hash_matches_duckdb(spark):
 
     sys.path.insert(0, "/root/repo")
     from elastic_stream_spark.operators.staged_r17 import (
-        ORACLES_R17,
-        QUERIES_R17,
+        ORACLES,
+        QUERIES,
     )
     from tools.compare import compare_one, duck_con
 
-    oracles = ORACLES_R17()
-    assert set(QUERIES_R17) == set(oracles)
+    assert set(QUERIES) == set(ORACLES)
     for sf_dir in (SF_DIR, "/root/testdata/sf0.01", "/root/testdata/sf0.1"):
         con = duck_con(sf_dir)
         try:
-            for name, fn in QUERIES_R17.items():
-                res = compare_one(name, fn, oracles[name], spark, con, sf_dir)
+            for name, fn in QUERIES.items():
+                res = compare_one(name, fn, ORACLES[name], spark, con, sf_dir)
                 assert res.get("status") == "OK", (sf_dir, res)
         finally:
             con.close()

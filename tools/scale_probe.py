@@ -209,22 +209,21 @@ def main() -> None:
     # dedup_ngram_jaccard decade flag (r9/r10 isolated re-measures in
     # SCALE.extra.md), fixed at the source here.
     from elastic_stream_spark.functions.materialize import (
+        evict_all,
         unpersist_materialized,
     )
-    from elastic_stream_spark.operators import dedup as _dedup
-    from elastic_stream_spark.operators import pipeline as _pipeline
 
     def _evict_session_memos():
-        # public hooks (r10 ADVICE): clear the memo dicts AND unpersist
-        # their localCheckpoint blocks, so runs 2..n neither serve a memo
-        # nor inherit its pinned storage.  BLOCKING unpersists: async
-        # removal of the 160×-leg multi-GB checkpoint blocks otherwise
-        # overlaps — and taxes — the next timed run (the r11 first-pass
-        # decade leg measured 127 s vs 92 s for exactly this reason)
+        # every session memo, not only the pair/CC ones: release their
+        # localCheckpoint blocks and directories too, so runs 2..n neither
+        # serve a memo nor inherit its pinned storage.  BLOCKING
+        # unpersists: async removal of the 160×-leg multi-GB checkpoint
+        # blocks otherwise overlaps — and taxes — the next timed run (the
+        # r11 first-pass decade leg measured 127 s vs 92 s for exactly
+        # this reason)
         spark.catalog.clearCache()
         unpersist_materialized(spark, blocking=True)
-        _dedup.evict_session_memos(blocking=True)
-        _pipeline.evict_session_memos(blocking=True)
+        evict_all(blocking=True)
 
     amp_dirs = [build_amp_dir(spark, base, f, amp_root) for f in AMP_FACTORS]
     amp_results: dict[str, list[float]] = {name: [] for name in AMP_PROBE}
@@ -341,8 +340,8 @@ def main() -> None:
     emb_lines = _emb_lsh_probe(spark, base)
     lines += emb_lines
 
-    # ---- committed extension sections (deep-dive measurements produced
-    # by their own tools — tools/pairgen_decade.py — live in
+    # ---- committed extension sections (deep-dive measurements recorded
+    # once, e.g. the r7 pair-generation decade extension, live in
     # SCALE.extra.md so a SCALE.md regeneration never loses them)
     extra_path = os.path.join(os.path.dirname(out_md) or ".", "SCALE.extra.md")
     if os.path.exists(extra_path):
