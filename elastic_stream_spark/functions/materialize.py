@@ -82,13 +82,20 @@ _HANDLES: dict[str, list] = {}
 
 
 def materialize(df: DataFrame) -> DataFrame:
-    out = df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    out.count()
-    app = out.sparkSession.sparkContext.applicationId
+    """Persist ``df`` and build its blocks with a count job.  A plan the
+    CacheManager already holds (an identical earlier build) is returned
+    as is: persisting it again only logs a warning, and its count would
+    run a job over blocks that already exist.  Either way the handle is
+    tracked, so ``unpersist_materialized`` can release the plan even if
+    the first handle was dropped."""
+    if df.storageLevel == StorageLevel.NONE:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        df.count()
+    app = df.sparkSession.sparkContext.applicationId
     for stale in [a for a in _HANDLES if a != app]:
         del _HANDLES[stale]  # dead-application entries (restarted session)
-    _HANDLES.setdefault(app, []).append(weakref.ref(out))
-    return out
+    _HANDLES.setdefault(app, []).append(weakref.ref(df))
+    return df
 
 
 def unpersist_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:

@@ -21,14 +21,16 @@ Storage is HASH-SHARDED, like the stream catalog (catalog.py:18-26) and
 for the same reason the reference's PD keeps its KV in etcd's B-tree with
 per-key writes (pd/pkg/server/storage/kv/etcd.go): a monolithic JSON
 snapshot pays O(keyspace) per put (measured 38 ms/op at just 1k entries
-for the catalog's equivalent).  Keys hash into ``KV_SHARDS`` bucket
-files; one put rewrites one bucket (O(keyspace / shards)) plus the tiny
-manifest, and the fsync dominates — put latency stays flat as the
-keyspace grows (tools/kv_bench.py records the curve).
+for the catalog's equivalent).  Keys hash into bucket files; one put
+rewrites one bucket (O(keyspace / buckets)) plus the small manifest, and
+the fsync dominates — put latency stays flat as the keyspace grows
+(tools/kv_bench.py records the curve).  The bucket count grows by
+linear-hashing splits (see ``KV_RESHARD_AT``).
 
 Commit protocol (atomic across shards, crash-safe):
 1. take the ``fcntl`` lock; load the manifest (``kv-meta.json``:
-   revision + the generation-named file of every non-empty bucket);
+   revision, entry count, the linear-hash ``(nshards, next)`` pair, and
+   the generation of every non-empty bucket);
 2. mutate in memory, lazily loading only the buckets the ops touch;
 3. write each dirty bucket to a NEW generation file
    ``kv-shard-<bucket>.<rev>.json`` (tempfile + fsync + rename);
@@ -40,51 +42,18 @@ Lock-free readers resolve manifest → bucket file; if a concurrent
 committer GC'd the file between those two reads, the reader re-reads the
 manifest and retries (the new generation is always resolvable).
 
-A legacy monolithic ``kv.json`` (pre-shard layout) is read transparently
-and migrated to shards by the first write transaction.
+Known limit: point ops read one bucket, but span scans (Range with a
+``range_end``) and DeleteRange read EVERY bucket, because any key can
+hash anywhere.  ``KV_BENCH.json`` ``span_scan_ab`` records a 100-key
+prefix scan at 1M keys at 3.7 s (DeleteRange of 100 keys 2.3 s).  The
+store's traffic is point gets and CAS (sink batch markers) plus scans
+over stores of tens of keys, where this costs nothing measurable.
 
-ORDERED layout (r13, opt-in — ``KVStore(root, layout="ordered")`` on a
-fresh store): hash placement makes point ops O(1) but span scans
-O(keyspace) — a narrow prefix scan at 1M keys reads every bucket file
-because any key can hash anywhere (r12 VERDICT "what's wrong" item 2).
-The ordered layout range-partitions instead: the manifest carries
-``oranges`` — an ordered list of ``[bucket, upper_bound)`` boundary
-keys (the same role as etcd's B-tree page boundaries) — so placement is
-a binary search, span scans and DeleteRange read ONLY the overlapping
-buckets (O(selectivity)), and growth splits an oversize bucket at its
-median key (self-balancing under any key skew, including the
-shared-prefix skew that breaks static prefix sharding); bulk loads
-split multi-way in one sort-and-slice pass, and ranges a txn EMPTIES
-compact out of the boundary list at the same commit (successor
-inherits the span), so the manifest tracks live data in both
-directions.  Same commit protocol, same crash-safety, same lock-free
-readers; the manifest's ``layout`` field is authoritative on reopen,
-and stores without it (every pre-r13 manifest) read as hash, unchanged.
-tools/kv_bench.py records the hash-vs-ordered span-scan A/B at 1M keys.
-
-Boundary side-file (r14; r13 VERDICT "what's wrong" item 2): inlining
-``oranges`` in the manifest made EVERY ordered-layout commit serialize +
-fsync the full boundary list (192 KB at the 4096-entry cap — put p90
-125.5 ms vs hash 14.0).  But a plain put never changes boundaries:
-only splits and compactions do, amortized one per KV_RESHARD_AT
-inserts.  So past ``OR_INLINE_MAX`` entries the boundary list lives in
-its own generation file ``kv-oranges.<rev>.json``; the manifest carries
-just the generation int, boundary-preserving commits reuse it verbatim
-(zero boundary serialization — put cost equals the hash layout's), and
-boundary-changing commits write a new generation that rides the SAME
-atomic manifest swap (readers resolve manifest → boundary file with the
-same retry-on-GC loop as bucket files; the parsed list is cached per
-generation, so warm point-gets stay at one manifest + one bucket read).
-Small stores (≤ OR_INLINE_MAX boundaries) stay inline — one file, no
-extra read — and every pre-r14 inline manifest reads unchanged; the
-form migrates automatically at the next boundary-changing commit.
-
-``migrate_layout("ordered")`` converts a populated hash (or legacy)
-store offline: one sort-and-slice pass into occupancy-target leaves,
-written as new generation files behind the same single-rename commit
-point — a crash at any step leaves the hash layout fully live, and
-revisions/versions survive byte-for-byte (the hypothesis equivalence
-property in tests/test_kv.py runs straight across the migration).
+On-disk input is checked: a manifest that is not this layout (a
+``layout`` field, or no ``n``/``nshards``/``next``) and a root holding a
+bare monolithic ``kv.json`` with no manifest raise ``ValueError`` naming
+the file, rather than reading as an empty store or with keys looked up
+in the wrong buckets.
 """
 
 from __future__ import annotations
@@ -105,15 +74,9 @@ from pyspark.sql import DataFrame, SparkSession
 # serialization-dominated (tools/kv_bench.py records the curve); at the
 # metadata scales this store serves (markers, allocators, sink batch
 # state) buckets stay single-digit KB
-KV_SHARDS = 256  # initial bucket count (adaptive from r11 — see below)
+KV_SHARDS = 256  # initial bucket count
 
-# Adaptive resharding (r11; r10 VERDICT item 5): the 100k-key bench point
-# showed p50 put growing once buckets reach ~400 entries — serialization
-# starts rivaling the fsync.  r12 replaces the r11 WHOLESALE reshard
-# (the committing txn rewrote the entire keyspace at 4× the bucket
-# count; amortized O(1) but the trigger put measured 876 ms at 131k keys
-# and 3.5 s at 524k keys on tmpfs — r11 VERDICT "what's wrong" item 1)
-# with LINEAR-HASHING splits: the manifest carries a round size
+# Growth by LINEAR-HASHING splits: the manifest carries a round size
 # (``nshards``) and a split pointer (``next``); key → bucket is
 # ``h % nshards``, re-hashed to ``h % (nshards·KV_RESHARD_FACTOR)`` when
 # the bucket is below the pointer (already split this round).  While the
@@ -121,35 +84,21 @@ KV_SHARDS = 256  # initial bucket count (adaptive from r11 — see below)
 # bucket — the pointer's — into its ≤FACTOR children (O(keyspace /
 # buckets), a few ms) per KV_RESHARD_AT entries it inserted, so bulk
 # loads catch up inside their own O(txn)-sized commit while single puts
-# never pay more than one bucket split.  When the pointer wraps, the
-# round size multiplies by FACTOR, capped at KV_MAX_SHARDS so the
-# manifest — rewritten and fsynced on EVERY commit — stays a few
-# thousand entries.  Pre-r12 manifests (``next`` absent → 0; wholesale
-# reshards always completed a round) and pre-r11 manifests (``nshards``
-# absent → 256) read unchanged.
+# never pay more than one bucket split (a wholesale reshard's trigger
+# put measured 876 ms at 131k keys and 3.5 s at 524k).  When the pointer
+# wraps, the round size multiplies by FACTOR, capped at KV_MAX_SHARDS so
+# the manifest — rewritten and fsynced on EVERY commit — stays a few
+# thousand entries.
 KV_RESHARD_AT = 512
 KV_RESHARD_FACTOR = 4
-# 4096 = 3 hex digits for HASH bucket ids (filename format unchanged).
-# Ordered-layout names ("o" + %03x of a never-reclaimed allocation
-# counter) can legitimately exceed 3 hex digits on long-lived
-# delete-heavy stores — compaction frees names without reusing them, so
-# the counter outruns 0xfff while live boundaries stay ≤ KV_MAX_SHARDS.
-# %03x zero-PADS, it does not truncate: names simply widen to 4+ digits,
-# no collision (r13 advice — documented as intended).
-KV_MAX_SHARDS = 4096
+KV_MAX_SHARDS = 4096  # = 3 hex digits of bucket id in the filename
 
-# Ordered layout: boundary lists at or below this size stay inline in
-# the manifest (one file, no extra read for tiny stores); above it they
-# move to the kv-oranges.<gen>.json side file so the per-commit
-# manifest stays O(buckets-touched), not O(boundaries) (r14 — see
-# module docstring).
-OR_INLINE_MAX = 64
 
 # The linear-hashing round wrap multiplies nshards by KV_RESHARD_FACTOR
-# whole-sale (kv.py _split_one), so the cap is only respected exactly if
-# it sits on a round boundary: KV_MAX_SHARDS must be KV_SHARDS times a
+# whole-sale (_split_one), so the cap is only respected exactly if it
+# sits on a round boundary: KV_MAX_SHARDS must be KV_SHARDS times a
 # power of KV_RESHARD_FACTOR, or a round in progress overshoots the cap
-# and bucket ids exceed the 3-hex-digit filename space (r12 advice).
+# and bucket ids exceed the 3-hex-digit filename space.
 def _cap_on_round_boundary() -> bool:
     n = KV_MAX_SHARDS
     while n % KV_RESHARD_FACTOR == 0 and n > KV_SHARDS:
@@ -160,6 +109,9 @@ def _cap_on_round_boundary() -> bool:
 assert _cap_on_round_boundary(), (
     "KV_MAX_SHARDS must equal KV_SHARDS * KV_RESHARD_FACTOR**k"
 )
+
+# manifest fields every commit writes
+_META_FIELDS = ("revision", "shards", "n", "nshards", "next")
 
 
 def prefix_end(key: bytes) -> bytes:
@@ -193,43 +145,12 @@ class _State:
         self._store = store
         self.meta = store._read_meta()
         self.revision: int = self.meta["revision"]
-        self.nshards: int = self.meta.get("nshards", KV_SHARDS)
-        self.nextp: int = self.meta.get("next", 0)  # linear-hash pointer
-        # layout is manifest-authoritative (the constructor arg only
-        # seeds a FRESH store via _read_meta); hash stores never carry
-        # the field, so every pre-r13 manifest reads as hash unchanged
-        self.layout: str = self.meta.get("layout", "hash")
-        # resolve inline-or-side-file form (under the txn lock, so the
-        # referenced generation cannot be GC'd concurrently).  ALIASED,
-        # not copied: the put path must stay O(1) in boundaries, so the
-        # cached/inline list is shared read-only and every mutator
-        # (_place allocate, _osplit_one, _ocompact) copies-on-write and
-        # raises ``_oranges_mut`` — which is also the commit's
-        # boundary-changed check (no O(boundaries) compare per put)
-        self.oranges: list = store._oranges(self.meta)
-        self._oranges_mut = False
-        self._oranges_gen: int | None = self.meta.get("oranges_gen")
-        self.onext: int = self.meta.get("onext", 0)
-        # total entry count, maintained incrementally for the reshard
-        # trigger; None = pre-r11 manifest without the field (recounted
-        # once at the next commit)
-        self._n: int | None = self.meta.get("n")
-        if self._n is None and not self.meta["shards"]:
-            self._n = 0  # empty (or fresh) store
+        self.nshards: int = self.meta["nshards"]
+        self.nextp: int = self.meta["next"]  # linear-hash pointer
+        # total entry count, maintained incrementally for the split trigger
+        self.n: int = self.meta["n"]
         self._buckets: dict[str, dict] = {}
         self._dirty: set[str] = set()
-        self._legacy_migration = False
-        if self.meta.get("_legacy"):
-            # pre-shard monolithic kv.json: load it whole; the commit
-            # rewrites every populated bucket and drops the old file
-            legacy = self._store._read_legacy()
-            for ek, ent in legacy["data"].items():
-                self._buckets.setdefault(
-                    self._store._bucket_of_enc(ek, self.nshards, self.nextp), {}
-                )[ek] = ent
-            self._dirty = set(self._buckets)
-            self._legacy_migration = True
-            self._n = sum(len(d) for d in self._buckets.values())
 
     def bucket(self, b: str) -> dict:
         got = self._buckets.get(b)
@@ -238,42 +159,19 @@ class _State:
             self._buckets[b] = got
         return got
 
-    def all_items(self) -> dict:
-        """Every (enc_key -> entry) across buckets — scan-style ops."""
-        out: dict = {}
-        for b in list(self.meta["shards"]) + list(self._buckets):
-            out.update(self.bucket(b))
-        return out
-
     # ------------------------------------------------------- mutations
 
-    def _place(self, key: bytes, allocate: bool = False) -> str | None:
-        """The bucket a key lives in under this txn's (possibly already
-        split) layout state.  ``allocate`` seeds the ordered layout's
-        first bucket on the first write (reads never allocate)."""
-        if self.layout == "ordered":
-            b = KVStore._obucket_at({"oranges": self.oranges}, key)
-            if b is None and allocate:
-                b = f"o{self.onext:03x}"
-                self.onext += 1
-                self.oranges = [[b, None]]
-                self._oranges_mut = True
-            return b
-        return self._store._bucket_of(key, self.nshards, self.nextp)
-
     def get_entry(self, key: bytes):
-        b = self._place(key)
-        if b is None:
-            return None
+        b = self._store._bucket_of(key, self.nshards, self.nextp)
         return self.bucket(b).get(self._store._enc(key))
 
     def set_entry(self, key: bytes, value: bytes) -> int:
         self.revision += 1
-        b = self._place(key, allocate=True)
+        b = self._store._bucket_of(key, self.nshards, self.nextp)
         data = self.bucket(b)
         ek = self._store._enc(key)
-        if self._n is not None and ek not in data:
-            self._n += 1
+        if ek not in data:
+            self.n += 1
         data[ek] = {
             "value": self._store._enc(value),
             "version": self.revision,
@@ -283,16 +181,8 @@ class _State:
 
     def delete_span(self, key: bytes, range_end: bytes | None) -> int:
         n = 0
-        if self.layout == "ordered":
-            # prune to the buckets whose spans intersect [key, range_end)
-            # — the ordered layout's reason to exist; the hash layout
-            # must visit every bucket (any key can live anywhere)
-            names = set(
-                KVStore._ospan_names({"oranges": self.oranges}, key, range_end)
-            )
-        else:
-            names = set(list(self.meta["shards"]) + list(self._buckets))
-        for b in names:
+        # any key can hash anywhere: visit every bucket
+        for b in set(self.meta["shards"]) | set(self._buckets):
             data = self.bucket(b)
             victims = [
                 ek
@@ -306,8 +196,7 @@ class _State:
                 n += len(victims)
         if n:
             self.revision += 1
-            if self._n is not None:
-                self._n -= n
+            self.n -= n
         return n
 
 
@@ -329,27 +218,12 @@ class KVStore:
             return k >= key
         return key <= k < range_end
 
-    def __init__(self, root: str, layout: str = "hash"):
-        """``layout`` applies to a FRESH store only (no manifest yet):
-        "hash" (default — point ops O(1), span scans O(keyspace)) or
-        "ordered" (range-partitioned buckets with manifest-carried
-        boundary keys — span scans read only the overlapping buckets,
-        the B-tree-style layout for scan-heavy prefixes; r12 VERDICT
-        "what's wrong" item 2).  An existing manifest is authoritative:
-        reopening an ordered store with the default arg stays ordered."""
-        if layout not in ("hash", "ordered"):
-            raise ValueError(f"unknown layout: {layout}")
+    def __init__(self, root: str):
         self.root = root
-        self._layout_req = layout
         os.makedirs(root, exist_ok=True)
-        self._legacy_path = os.path.join(root, "kv.json")
         self._meta_path = os.path.join(root, "kv-meta.json")
         self._lock_path = os.path.join(root, "kv.lock")
         self._swept = False  # crash-orphan sweep pending (once per open)
-        # (gen, parsed list) of the last boundary side-file read — a
-        # generation file's content is immutable, so the cache can never
-        # serve stale boundaries; a new gen simply misses and re-reads
-        self._oranges_cache: tuple[int, list] | None = None
 
     # ------------------------------------------------------------- state
 
@@ -361,10 +235,8 @@ class KVStore:
     def _dec(s: str) -> bytes:
         return base64.b64decode(s)
 
-    @classmethod
-    def _bucket_of(
-        cls, key: bytes, nshards: int = KV_SHARDS, nextp: int = 0
-    ) -> str:
+    @staticmethod
+    def _bucket_of(key: bytes, nshards: int, nextp: int) -> str:
         # crc32: stable across processes/runs (NOT Python hash(), which
         # is salted per process) — the bucket of a key moves only when a
         # committed split advances the manifest's (nshards, next) pair.
@@ -376,176 +248,44 @@ class KVStore:
             b = h % (nshards * KV_RESHARD_FACTOR)
         return f"{b:03x}"
 
-    @classmethod
-    def _bucket_of_enc(cls, ek: str, nshards: int = KV_SHARDS, nextp: int = 0) -> str:
-        return cls._bucket_of(cls._dec(ek), nshards, nextp)
-
-    # ---------------------------------------------- ordered-layout placement
-
-    @staticmethod
-    def _separator(left_max: bytes, bound: bytes) -> bytes:
-        """Shortest prefix of ``bound`` strictly greater than
-        ``left_max`` (B-tree separator/suffix truncation): valid as an
-        exclusive upper bound because every left key ≤ left_max < sep ≤
-        bound ≤ every right key — a strict prefix sorts before its
-        extension.  Honest scope (measured r13): adjacent SORTED keys
-        share their longest prefixes, so on a dense same-prefix
-        keyspace separators stay near-full-length (4.5M sequential
-        keys: mean 11.9 of 12 bytes) and the CAP is what bounds the
-        manifest; truncation pays off only at boundaries where key
-        families diverge early ("objects/…"|"streams/…") and for long
-        suffix tails, and it never costs more than O(len) at split
-        time."""
-        for i in range(len(bound)):
-            p = bound[: i + 1]
-            if p > left_max:
-                return p
-        return bound
-    # ``oranges`` (ordered ranges): a manifest-carried list of
-    # ``[bucket_name, upper_bound_b64_or_None]`` with strictly ascending
-    # exclusive upper bounds, the last None (open).  Bucket i spans
-    # [prev_upper, upper) — binary-searchable, so point ops stay O(1)
-    # and a span scan touches only the overlapping buckets instead of
-    # the whole keyspace (the hash layout's one degrading op class).
-
-    @classmethod
-    def _obucket_at(cls, meta: dict, key: bytes) -> str | None:
-        """The ordered-layout bucket whose span holds ``key`` (None on a
-        store with no committed buckets yet)."""
-        oranges = meta.get("oranges") or []
-        if not oranges:
-            return None
-        lo, hi = 0, len(oranges) - 1
-        while lo < hi:
-            mid = (lo + hi) // 2
-            upper = oranges[mid][1]
-            if upper is not None and cls._dec(upper) <= key:
-                lo = mid + 1
-            else:
-                hi = mid
-        return oranges[lo][0]
-
-    @classmethod
-    def _ospan_names(
-        cls, meta: dict, key: bytes, range_end: bytes | None
-    ) -> list[str]:
-        """Ordered-layout bucket names whose spans intersect the query
-        span ``[key, range_end)`` (etcd conventions: None → point,
-        FROM_KEY/b"" → all keys >= key) — the span-scan pruning the
-        hash layout structurally cannot do."""
-        if range_end is None:
-            b = cls._obucket_at(meta, key)
-            return [] if b is None else [b]
-        open_upper = range_end == cls.FROM_KEY or range_end == b""
-        names: list[str] = []
-        lower: str | None = None
-        for name, upper in meta.get("oranges") or []:
-            above = upper is None or cls._dec(upper) > key
-            below = open_upper or lower is None or cls._dec(lower) < range_end
-            if above and below:
-                names.append(name)
-            lower = upper
-        return names
-
-    @staticmethod
-    def _oranges_file(gen: int) -> str:
-        return f"kv-oranges.{gen:012d}.json"
-
-    def _oranges(self, meta: dict, strikes: dict | None = None) -> list:
-        """Resolve the boundary list: inline (``oranges``, stores at or
-        below OR_INLINE_MAX and every pre-r14 manifest) or the
-        generation side file (``oranges_gen``).  Raises FileNotFoundError
-        if a concurrent commit GC'd the generation between the manifest
-        read and this one — callers' existing retry loops handle it.
-
-        A PERMANENTLY missing side file (manual deletion, a partial
-        backup that copied kv-meta.json but not kv-oranges.*) is not
-        churn: gens are monotonic, so if a freshly re-read manifest
-        still references the same gen and the file is still absent, no
-        concurrent commit can explain it — raise a corruption error
-        naming the file instead of letting the reader spin 64 silent
-        retries into a misleading 'manifest churn' failure (r14
-        ADVICE).  The two-strike state lives in the CALLER's retry loop
-        (``strikes``, r15 ADVICE): a handle-level flag let two threads
-        sharing one KVStore cross-contaminate — the second thread's
-        FIRST miss (against its own stale manifest) escalated on the
-        first thread's strike, declaring a healthy store corrupt.  With
-        per-call state, escalation requires the SAME retry loop to
-        re-read the manifest and find the same gen still missing.
-        ``strikes=None`` (the under-lock txn path, which has no retry
-        loop) just propagates FileNotFoundError."""
-        if "oranges" in meta:
-            return meta["oranges"]
-        gen = meta.get("oranges_gen")
-        if gen is None:
-            return []
-        if self._oranges_cache is not None and self._oranges_cache[0] == gen:
-            return self._oranges_cache[1]
-        fname = self._oranges_file(gen)
-        try:
-            with open(os.path.join(self.root, fname)) as f:
-                lst = json.load(f)["oranges"]
-        except FileNotFoundError:
-            if strikes is not None:
-                if strikes.get("missing_gen") == gen:
-                    raise RuntimeError(
-                        f"kv store corrupt: manifest references boundary side "
-                        f"file {fname} which does not exist (deleted or lost "
-                        f"in a partial copy — restore it or migrate_layout)"
-                    ) from None
-                strikes["missing_gen"] = gen
-            raise
-        if strikes is not None:
-            strikes.pop("missing_gen", None)
-        self._oranges_cache = (gen, lst)
-        return lst
-
     def _read_meta(self) -> dict:
-        """Manifest: {"revision": R, "shards": {bucket: filename}}.
-        ``_legacy`` marks a pre-shard kv.json that the next write
-        transaction migrates."""
-        if os.path.exists(self._meta_path):
+        """Manifest: {"revision", "shards": {bucket: generation}, "n",
+        "nshards", "next"}; a fresh root reads as the empty store.  A
+        manifest of another layout, or a monolithic ``kv.json`` with no
+        manifest, is refused (see the module docstring)."""
+        try:
             with open(self._meta_path) as f:
-                return json.load(f)
-        if os.path.exists(self._legacy_path):
-            legacy = self._read_legacy()
-            return {"revision": legacy["revision"], "shards": {}, "_legacy": True}
-        fresh: dict = {"revision": 0, "shards": {}}
-        if self._layout_req == "ordered":
-            fresh.update({"layout": "ordered", "oranges": [], "onext": 0})
-        return fresh
-
-    def _read_legacy(self) -> dict:
-        with open(self._legacy_path) as f:
-            return json.load(f)
+                meta = json.load(f)
+        except FileNotFoundError:
+            legacy = os.path.join(self.root, "kv.json")
+            if os.path.exists(legacy):
+                raise ValueError(
+                    f"{legacy}: monolithic KV snapshot with no kv-meta.json; "
+                    f"this store reads only the hash-sharded layout"
+                ) from None
+            return {
+                "revision": 0,
+                "shards": {},
+                "n": 0,
+                "nshards": KV_SHARDS,
+                "next": 0,
+            }
+        if "layout" in meta or any(k not in meta for k in _META_FIELDS):
+            raise ValueError(
+                f"{self._meta_path}: not a hash-sharded KV manifest "
+                f"(layout {meta.get('layout')!r}, fields {sorted(meta)})"
+            )
+        return meta
 
     @staticmethod
-    def _shard_filename(b: str, gen) -> str:
-        """Manifest entries are generation INTS from r11 (the manifest
-        is rewritten + fsynced on every commit, and at 4096 buckets the
-        full-filename form tripled its size — measured as the dominant
-        per-put cost at 1M keys); pre-r11 string filenames still
-        resolve."""
-        if isinstance(gen, str):
-            return gen
+    def _shard_filename(b: str, gen: int) -> str:
         return f"kv-shard-{b}.{gen:012d}.json"
 
     def _read_bucket_file(self, meta: dict, b: str) -> dict:
-        fn = meta["shards"].get(b)
-        if fn is not None:
-            fn = self._shard_filename(b, fn)
-        if fn is None:
-            if meta.get("_legacy"):
-                legacy = self._read_legacy()
-                ns = meta.get("nshards", KV_SHARDS)
-                np_ = meta.get("next", 0)
-                return {
-                    ek: ent
-                    for ek, ent in legacy["data"].items()
-                    if self._bucket_of_enc(ek, ns, np_) == b
-                }
+        gen = meta["shards"].get(b)
+        if gen is None:
             return {}
-        with open(os.path.join(self.root, fn)) as f:
+        with open(os.path.join(self.root, self._shard_filename(b, gen))) as f:
             return json.load(f)
 
     def _write_file(self, name: str, payload: dict) -> None:
@@ -580,17 +320,8 @@ class KVStore:
     def _commit(self, st: _State) -> None:
         if not st._dirty and st.revision == st.meta["revision"]:
             return  # read-only txn (e.g. failed CAS with no failure ops)
-        n_total = st._n if st._n is not None else len(st.all_items())
-        if st.layout == "ordered":
-            self._osplit_steps(st)
-        else:
-            # pre-r11 manifests carry no entry count: allow a full catch-up
-            # (they predate splitting, so occupancy may be far past trigger)
-            prev_n = st.meta.get("n")
-            added = n_total if prev_n is None else max(0, n_total - prev_n)
-            self._split_steps(st, n_total, added)
-        old_meta = st.meta
-        shards = dict(old_meta["shards"])
+        self._split_steps(st, max(0, st.n - st.meta["n"]))
+        shards = dict(st.meta["shards"])
         replaced: list[str] = []
         for b in sorted(st._dirty):
             data = st._buckets[b]
@@ -604,95 +335,58 @@ class KVStore:
                 shards.pop(b, None)  # bucket emptied
         # THE commit point: one atomic manifest replace covers every
         # bucket this txn touched
-        meta_payload: dict = {
-            "revision": st.revision,
-            "shards": shards,
-            "n": n_total,
-        }
-        old_ogen = new_ogen = None
-        if st.layout == "ordered":
-            meta_payload.update({"layout": "ordered", "onext": st.onext})
-            old_ogen = st._oranges_gen
-            if len(st.oranges) <= OR_INLINE_MAX:
-                # small store: inline, one file, no extra reader hop
-                meta_payload["oranges"] = st.oranges
-            elif old_ogen is not None and not st._oranges_mut:
-                # the common case — no split/compaction this txn: reuse
-                # the standing generation verbatim; the commit serializes
-                # ZERO boundary data (put cost = hash layout's)
-                meta_payload["oranges_gen"] = new_ogen = old_ogen
-            else:
-                new_ogen = st.revision
-                self._write_file(
-                    self._oranges_file(new_ogen), {"oranges": st.oranges}
-                )
-                meta_payload["oranges_gen"] = new_ogen
-                self._oranges_cache = (new_ogen, [list(x) for x in st.oranges])
-        else:
-            meta_payload.update({"nshards": st.nshards, "next": st.nextp})
-        self._write_file(os.path.basename(self._meta_path), meta_payload)
+        self._write_file(
+            os.path.basename(self._meta_path),
+            {
+                "revision": st.revision,
+                "shards": shards,
+                "n": st.n,
+                "nshards": st.nshards,
+                "next": st.nextp,
+            },
+        )
         # GC: the replaced generations directly (O(dirty), not
-        # O(keyspace)) + the migrated legacy snapshot.  Crash ORPHANS
-        # (shard writes without a manifest commit) are swept lazily once
-        # per store open (_sweep_orphans) — pre-r11 this swept via
-        # listdir on EVERY commit, an O(nshards) per-put cost that
-        # dominated once the 1M-key reshard reached 4096 buckets.
+        # O(keyspace)).  Crash ORPHANS (shard writes without a manifest
+        # commit) are swept lazily once per store open (_sweep_orphans)
+        # — a listdir on EVERY commit is an O(nshards) per-put cost that
+        # dominates once a 1M-key store reaches 4096 buckets.
         for fn in replaced:
             p = os.path.join(self.root, fn)
             if os.path.exists(p):
                 os.unlink(p)
-        # GC the superseded boundary generation (replaced by a new gen
-        # or re-inlined); a reader mid-resolve hits FileNotFoundError
-        # and retries against the new manifest, same as bucket files
-        if old_ogen is not None and old_ogen != new_ogen:
-            p = os.path.join(self.root, self._oranges_file(old_ogen))
-            if os.path.exists(p):
-                os.unlink(p)
-        # the manifest is authoritative from here: a kv.json is either
-        # the just-migrated snapshot or debris from a crash between a
-        # previous migration's manifest commit and its GC — gone either way
-        if os.path.exists(self._legacy_path):
-            os.unlink(self._legacy_path)
-        self._sweep_orphans(shards, new_ogen)
+        self._sweep_orphans(shards)
 
-    def _sweep_orphans(self, shards: dict, oranges_gen: int | None = None) -> None:
+    def _sweep_orphans(self, shards: dict) -> None:
         """Unlink generation files the manifest does not reference —
         debris from a crash between shard writes and the manifest
-        commit, or from a crashed pre-GC window.  Covers bucket files
-        and boundary side files alike.  Runs once per store open
-        (inside the first committing txn, under the lock) and after
-        every reshard; normal commits GC their replaced files
+        commit, or from a crashed pre-GC window.  Runs once per store
+        open (inside the first committing txn, under the lock) and after
+        a failed commit; normal commits GC their replaced files
         directly."""
         if self._swept:
             return
         self._swept = True
         live = {self._shard_filename(b, g) for b, g in shards.items()}
-        if oranges_gen is not None:
-            live.add(self._oranges_file(oranges_gen))
         for fn in os.listdir(self.root):
-            if (
-                fn.startswith("kv-shard-") or fn.startswith("kv-oranges.")
-            ) and fn not in live:
+            if fn.startswith("kv-shard-") and fn not in live:
                 try:
                     os.unlink(os.path.join(self.root, fn))
                 except FileNotFoundError:
                     pass
 
-    def _split_steps(self, st: _State, n_total: int, added: int) -> None:
-        """Linear-hashing growth (r12; replaces the r11 wholesale reshard
-        whose trigger put measured 3.5 s at 524k keys): while the average
-        bucket occupancy is at or past the KV_RESHARD_AT trigger, split ONE
-        bucket — the pointer's — per KV_RESHARD_AT entries this txn
-        inserted (minimum 1), in memory; the splits ride the SAME atomic
-        manifest swap as the txn's own writes.  A single put therefore
-        pays at most one O(keyspace / buckets) bucket rewrite (~ms); a
-        bulk load catches up fully inside its own already-O(txn)-sized
-        commit."""
+    def _split_steps(self, st: _State, added: int) -> None:
+        """Linear-hashing growth: while the average bucket occupancy is
+        at or past the KV_RESHARD_AT trigger, split ONE bucket — the
+        pointer's — per KV_RESHARD_AT entries this txn inserted (minimum
+        1), in memory; the splits ride the SAME atomic manifest swap as
+        the txn's own writes.  A single put therefore pays at most one
+        O(keyspace / buckets) bucket rewrite (~ms); a bulk load catches
+        up fully inside its own already-O(txn)-sized commit."""
         budget = max(1, -(-added // KV_RESHARD_AT))
         while (
             st.nshards < KV_MAX_SHARDS
             and budget > 0
-            and n_total
+            and st.n
             >= KV_RESHARD_AT
             * (st.nshards + st.nextp * (KV_RESHARD_FACTOR - 1))
         ):
@@ -730,240 +424,16 @@ class KVStore:
             st.nshards = min(st.nshards * KV_RESHARD_FACTOR, KV_MAX_SHARDS)
             st.nextp = 0
 
-    # ------------------------------------------------- ordered-layout splits
-
-    def _osplit_steps(self, st: _State) -> None:
-        """Ordered-layout growth: split any DIRTY bucket holding more
-        than 2·KV_RESHARD_AT entries at its median key, repeating until
-        none is oversize.  A bucket only grows when written, so every
-        growth moment is a dirty moment — no standing bucket can be
-        oversize without having paid its split in the txn that grew it.
-        Cost stays O(txn): a single put pays at most one median split of
-        one bucket (same bound as the hash layout's linear-hash step); a
-        bulk load catches up inside its own already-O(txn)-sized commit.
-        Median splits self-balance ANY key distribution — the skew that
-        breaks static prefix partitioning (all metadata keys sharing
-        "streams/...") just yields finer boundaries there.
-
-        The boundary list is CAPPED at KV_MAX_SHARDS entries — the same
-        trade the hash layout makes at its round cap: the manifest
-        (rewritten + fsynced on every commit, each ordered entry
-        carrying a b64 boundary key) stays a few thousand entries and
-        per-put latency stays flat in keyspace, while buckets past the
-        cap grow beyond the occupancy target.  Without the cap the
-        boundary list grows ∝ keys/1024 and every put pays an
-        O(keyspace) manifest serialization — the exact cost class this
-        layout exists to remove from scans (review finding, r13)."""
-        changed = True
-        while changed:
-            changed = False
-            for b in list(st._dirty):
-                # cap check per SPLIT, not per pass: a txn with several
-                # organically-oversize buckets just below the cap would
-                # otherwise split them all in one pass and overshoot
-                # KV_MAX_SHARDS (r13 advice — reproduced at cap 8 → 9)
-                if len(st.oranges) >= KV_MAX_SHARDS:
-                    changed = False
-                    break
-                data = st._buckets.get(b)
-                if data is None or len(data) <= 2 * KV_RESHARD_AT:
-                    continue
-                self._osplit_one(st, b, data)
-                changed = True
-        self._ocompact(st)
-
-    def _ocompact(self, st: _State) -> None:
-        """Drop boundary entries whose bucket this txn left EMPTY,
-        merging their span into the successor (or, for the open-ended
-        last entry, into the predecessor) — without this, delete-heavy
-        schedules grow ``oranges`` monotonically with dead ranges the
-        binary search must keep stepping over.  Only DIRTY-empty buckets
-        compact (an untouched bucket with data on disk never moves), so
-        the pass is O(txn), and the dropped names simply leave the
-        manifest — the same atomic swap that removes their files.
-
-        The no-victim case exits after an O(dirty) set probe — the
-        common put never walks the boundary list at all (r14: the put
-        path is O(1) in boundaries; see _State.oranges COW note)."""
-        if len(st.oranges) <= 1:
-            return
-        doomed = {
-            b
-            for b in st._dirty
-            if (d := st._buckets.get(b)) is not None and not d
-        }
-        if not doomed:
-            return
-        live: list = []
-        for name, upper in st.oranges:
-            if name in doomed:
-                # empty: successor inherits the span implicitly; if this
-                # was the LAST entry, re-open the predecessor instead
-                if upper is None and live:
-                    live[-1][1] = None
-                continue
-            live.append([name, upper])
-        if not live:  # everything deleted: keep one open-ended bucket
-            live = [list(st.oranges[-1])]
-            live[0][1] = None
-        if live[-1][1] is not None:  # dropped tail: predecessor re-opens
-            live[-1][1] = None
-        # `live` is built from fresh sublists, so assigning it is safe
-        # even when st.oranges aliased the reader cache
-        st.oranges = live
-        st._oranges_mut = True
-
-    def _osplit_one(self, st: _State, b: str, data: dict) -> None:
-        """Split ordered bucket ``b``.  Organic growth (a put nudging it
-        just past the threshold) splits at the MEDIAN key — the left
-        half keeps the name (its lower bound is implicit in the
-        predecessor), the right half gets a freshly allocated name.
-        A bulk load that left the bucket far oversize (> 4·KV_RESHARD_AT)
-        splits MULTI-WAY in one pass instead — one sort + slice into
-        ~KV_RESHARD_AT-entry leaves, the same fixpoint the median
-        recursion reaches but without re-partitioning every key once
-        per recursion level (O(n) vs O(n log n/T) dict passes).  All new
-        buckets + boundary inserts ride the txn's atomic manifest swap,
-        so readers see either layout, never a torn one."""
-        if not st._oranges_mut:
-            # copy-on-write: st.oranges may alias the reader cache /
-            # inline manifest list (see _State.oranges note)
-            st.oranges = [list(x) for x in st.oranges]
-            st._oranges_mut = True
-        keys = sorted(self._dec(ek) for ek in data)
-        n = len(keys)
-        if n > 4 * KV_RESHARD_AT:
-            nparts = -(-n // KV_RESHARD_AT)
-            # respect the boundary-list cap (manifest stays O(1) in keys)
-            nparts = min(nparts, KV_MAX_SHARDS - len(st.oranges) + 1)
-            cuts = [(n * p) // nparts for p in range(1, nparts)]
-        else:
-            cuts = [n // 2]
-        # truncated separators, not raw keys: strictly ascending because
-        # sep_p > keys[cut_p - 1] >= keys[cut_{p-1}] >= sep_{p-1}
-        bounds = [self._separator(keys[c - 1], keys[c]) for c in cuts]
-        idx = next(i for i, (name, _) in enumerate(st.oranges) if name == b)
-        old_upper = st.oranges[idx][1]
-        names = [b] + [f"o{st.onext + j:03x}" for j in range(len(bounds))]
-        st.onext += len(bounds)
-        parts: list[dict] = [{} for _ in names]
-        import bisect
-
-        for ek, ent in data.items():
-            parts[bisect.bisect_right(bounds, self._dec(ek))][ek] = ent
-        st.oranges[idx : idx + 1] = [
-            [name, self._enc(bd)] for name, bd in zip(names, bounds)
-        ] + [[names[-1], old_upper]]
-        for name, part in zip(names, parts):
-            st._buckets[name] = part
-            st._dirty.add(name)
-
-    def migrate_layout(self, to: str = "ordered") -> None:
-        """Offline hash→ordered migration (r13 VERDICT "what's wrong"
-        item 3): an existing hash store that develops scan-heavy
-        prefixes previously had no path to the ordered layout short of
-        a manual dump/reload — the constructor's ``layout`` arg only
-        seeds FRESH stores.
-
-        One sort-and-slice pass (the same multi-way fixpoint a bulk
-        load's median splits reach) into ~KV_RESHARD_AT-entry leaves,
-        riding the standard commit protocol: every new bucket file and
-        the boundary side file are generation files written BEFORE the
-        single manifest rename — THE commit point — so a crash at any
-        step leaves the hash layout fully live and the half-written
-        ordered files to the orphan sweep.  Revision and every key's
-        version are preserved byte-for-byte (the migration is a layout
-        change, not a mutation), which lets the hypothesis equivalence
-        property in tests/test_kv.py run one schedule straight across a
-        mid-schedule migration.  Legacy monolithic ``kv.json`` stores
-        migrate directly.  Ordered→hash is not supported (nothing needs
-        it: hash placement never beats ordered on any measured op —
-        KV_BENCH.json — it only predates it)."""
-        if to != "ordered":
-            raise ValueError("only hash→ordered migration is supported")
-        import bisect
-
-        with open(self._lock_path, "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            st = _State(self)
-            if st.layout == "ordered":
-                return  # idempotent
-            items = st.all_items()
-            rev = st.revision
-            keys = sorted(self._dec(ek) for ek in items)
-            n = len(keys)
-            nparts = max(1, min(-(-n // KV_RESHARD_AT), KV_MAX_SHARDS))
-            cuts = [(n * p) // nparts for p in range(1, nparts)]
-            bounds = [self._separator(keys[c - 1], keys[c]) for c in cuts]
-            names = [f"o{j:03x}" for j in range(nparts)]
-            parts: list[dict] = [{} for _ in names]
-            for ek, ent in items.items():
-                parts[bisect.bisect_right(bounds, self._dec(ek))][ek] = ent
-            oranges = [
-                [nm, self._enc(bd)] for nm, bd in zip(names, bounds)
-            ] + [[names[-1], None]]
-            shards: dict = {}
-            for nm, part in zip(names, parts):
-                if part:
-                    self._write_file(self._shard_filename(nm, rev), part)
-                    shards[nm] = rev
-            meta_payload: dict = {
-                "revision": rev,
-                "shards": shards,
-                "n": n,
-                "layout": "ordered",
-                "onext": nparts,
-            }
-            if len(oranges) <= OR_INLINE_MAX:
-                new_ogen = None
-                meta_payload["oranges"] = oranges
-            else:
-                new_ogen = rev
-                self._write_file(self._oranges_file(rev), {"oranges": oranges})
-                meta_payload["oranges_gen"] = rev
-            old_files = [
-                self._shard_filename(b, g) for b, g in st.meta["shards"].items()
-            ]
-            # THE commit point: one rename flips the whole layout
-            self._write_file(os.path.basename(self._meta_path), meta_payload)
-            for fn in old_files:
-                p = os.path.join(self.root, fn)
-                if os.path.exists(p):
-                    os.unlink(p)
-            if os.path.exists(self._legacy_path):
-                os.unlink(self._legacy_path)
-            self._swept = False  # crash debris from older windows may remain
-            self._sweep_orphans(shards, new_ogen)
-
-    def _snapshot(
-        self, key: bytes | None = None, range_end: bytes | None = None
-    ) -> tuple[int, dict]:
-        """Lock-free consistent read of (revision, entries): resolve
+    def _snapshot(self) -> tuple[int, dict]:
+        """Lock-free consistent read of (revision, every entry): resolve
         manifest → bucket files, retrying if a concurrent commit GC'd a
         generation file between the two reads (the new manifest always
-        resolves).  With a span ``(key, range_end)`` on an ORDERED-layout
-        store, only the buckets whose ranges intersect the span are read
-        (O(selectivity)); a hash-layout store must read every bucket —
-        any key can live anywhere — so there the span is just a hint."""
-        strikes: dict = {}  # per-CALL side-file strike state (see _oranges)
+        resolves)."""
         for _ in range(64):
             meta = self._read_meta()
             try:
                 out: dict = {}
-                if meta.get("_legacy"):
-                    out.update(self._read_legacy()["data"])
-                if key is not None and meta.get("layout") == "ordered":
-                    # boundary resolution may race a concurrent GC just
-                    # like bucket reads — it sits inside the retry loop
-                    oranges = {"oranges": self._oranges(meta, strikes)}
-                    names: list | set = [
-                        b
-                        for b in self._ospan_names(oranges, key, range_end)
-                        if b in meta["shards"]
-                    ]
-                else:
-                    names = meta["shards"]
-                for b in names:
+                for b in meta["shards"]:
                     out.update(self._read_bucket_file(meta, b))
                 return meta["revision"], out
             except FileNotFoundError:
@@ -976,23 +446,10 @@ class KVStore:
         bucket id is computed from the manifest's OWN ``(nshards, next)``
         pair (a concurrent split moves keys; hashing with a stale pair
         would read the wrong — possibly empty — bucket)."""
-        strikes: dict = {}  # per-CALL side-file strike state (see _oranges)
         for _ in range(64):
             meta = self._read_meta()
+            b = self._bucket_of(key, meta["nshards"], meta["next"])
             try:
-                if meta.get("layout") == "ordered":
-                    # side-file resolution can race a concurrent GC —
-                    # retried exactly like a GC'd bucket generation
-                    ob = self._obucket_at(
-                        {"oranges": self._oranges(meta, strikes)}, key
-                    )
-                    if ob is None:
-                        return {}
-                    b = ob
-                else:
-                    b = self._bucket_of(
-                        key, meta.get("nshards", KV_SHARDS), meta.get("next", 0)
-                    )
                 return self._read_bucket_file(meta, b)
             except FileNotFoundError:
                 continue
@@ -1025,9 +482,8 @@ class KVStore:
                 [(key, self._dec(ent["value"]), ent["version"])] if ent else []
             )
         else:
-            # span form: on an ordered store this reads only the buckets
-            # overlapping [key, range_end); on a hash store, all of them
-            _, data = self._snapshot(key, range_end)
+            # span form reads every bucket (module docstring: known limit)
+            _, data = self._snapshot()
             items = sorted(
                 (self._dec(k), self._dec(v["value"]), v["version"])
                 for k, v in data.items()

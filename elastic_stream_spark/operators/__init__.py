@@ -82,10 +82,9 @@ def _modules():
 # curriculum_ramp_drift_audit stay queued).  The 50 queries whose last
 # driver row is r11 hit the ≤3-round staleness deadline and take ALL 50
 # window slots.  No r14 code touch changes a registered query's plan or
-# output: the KV boundary-manifest paging / migrate_layout work is
-# storage-format-internal (the hypothesis equivalence property pins
-# hash/ordered/migrated observational equivalence, and kv_range_scan —
-# the one KV-backed registry query — builds its store fresh per run),
+# output: the r14 KV storage-format work (since removed with the
+# ordered layout) was internal to the store (kv_range_scan — the one
+# KV-backed registry query — builds its store fresh per run),
 # and the bench canary is off-gate.  So no CHANGED re-entries.
 #
 # Post-saturation escape hatch (policy, stated for future rounds): a

@@ -210,6 +210,52 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _shingle_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate doc pairs with their shared-shingle count: columns
+    ``doc_a < doc_b``, ``common`` and the two shingle-set sizes
+    ``na``/``nb``, for every pair sharing at least one shingle of
+    document frequency 2..SHINGLE_DF_CAP.  The pair operators apply
+    their own integer threshold and projection.
+
+    Plan (NO self-join): df pre-filter (count per shingle, keep 2 ≤ df ≤
+    SHINGLE_DF_CAP, left-semi join back) → groupBy shingle → sorted
+    posting list → pair combinations generated in-place by a double
+    explode (work bounded by df²/2 per shingle, cap-bounded globally) →
+    one map-side-combinable groupBy(pair).count() → per-doc size joins.
+
+    The df filter runs BEFORE collect_list on purpose: a stopword-grade
+    shingle must never materialize its full posting array in one
+    aggregation task only to be discarded by a post-hoc size() filter —
+    the count-only pre-aggregation is map-side combinable and bounds
+    every collected array at SHINGLE_DF_CAP elements, so per-key state
+    stays O(cap) at any corpus size."""
+    sh = _doc_shingles(spark, sf_dir)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
+    capped_df = (
+        sh.groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+        .where((F.col("df") >= 2) & (F.col("df") <= SHINGLE_DF_CAP))
+        .select("shingle")
+    )
+    posting = (
+        sh.join(capped_df, "shingle", "left_semi")
+        .groupBy("shingle")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
+    )
+    # (doc_a, doc_b) with doc_a < doc_b: posting lists are sorted, so
+    # pairing each element with its strict successors is canonical
+    pairs = posting.select(
+        F.posexplode("docs").alias("pos", "doc_a"), F.col("docs")
+    ).select(
+        "doc_a",
+        F.explode(F.slice("docs", F.col("pos") + 2, F.size("docs"))).alias("doc_b"),
+    )
+    common = pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("common"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
+    return common.join(sa, "doc_a").join(sb, "doc_b")
+
+
 CONTAIN_NUM, CONTAIN_DEN = 9, 10  # containment threshold 0.9, exact ratio
 
 
@@ -224,41 +270,16 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.  Emits (inner_doc, outer_doc, containment) with inner = the
     smaller set (doc_id breaks size ties).
 
-    Plan: identical shape to ``_ngram_pair_set`` (df-capped inverted
-    index, sorted posting lists, pairs via double explode, ONE
-    map-side-combinable common-count aggregation) with the integer
-    containment threshold in place of Jaccard — per-key state O(cap),
-    candidates ∝ co-occurrence, no self-join, no floats until the
-    final display rounding."""
-    sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    capped_df = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where((F.col("df") >= 2) & (F.col("df") <= SHINGLE_DF_CAP))
-        .select("shingle")
-    )
-    posting = (
-        sh.join(capped_df, "shingle", "left_semi")
-        .groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-    )
-    pairs = posting.select(
-        F.posexplode("docs").alias("pos", "doc_a"), F.col("docs")
-    ).select(
-        "doc_a",
-        F.explode(F.slice("docs", F.col("pos") + 2, F.size("docs"))).alias("doc_b"),
-    )
-    common = pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("common"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
+    Plan: the ``_shingle_pair_counts`` candidates (shared with
+    ``_ngram_pair_set``) with the integer containment threshold in place
+    of Jaccard — per-key state O(cap), candidates ∝ co-occurrence, no
+    self-join, no floats until the final display rounding."""
     n_min = F.least(F.col("na"), F.col("nb"))
     inner_first = (F.col("na") < F.col("nb")) | (
         (F.col("na") == F.col("nb")) & (F.col("doc_a") < F.col("doc_b"))
     )
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_pair_counts(spark, sf_dir)
         .where(F.col("common") * CONTAIN_DEN >= CONTAIN_NUM * n_min)
         .select(
             F.when(inner_first, F.col("doc_a")).otherwise(F.col("doc_b")).alias(
@@ -754,51 +775,14 @@ def ngram_pair_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ngram_pair_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unordered verified near-dup pair set (doc_a < doc_b, jaccard) —
     the edge list consumed by ``dedup_ngram_jaccard`` (sorted output) and
-    ``pipeline.dedup_clusters`` (connected components).
-
-    Plan (over the materialized index, NO self-join): df pre-filter
-    (count per shingle, keep 2 ≤ df ≤ SHINGLE_DF_CAP, left-semi join
-    back) → groupBy shingle → sorted posting list → pair combinations
-    generated in-place by a double explode (work bounded by df²/2 per
-    shingle, cap-bounded globally) → one map-side-combinable
-    groupBy(pair).count() → per-doc size join + integer threshold.
-
-    The df filter runs BEFORE collect_list on purpose: a stopword-grade
-    shingle must never materialize its full posting array in one
-    aggregation task only to be discarded by a post-hoc size() filter —
-    the count-only pre-aggregation is map-side combinable and bounds
-    every collected array at SHINGLE_DF_CAP elements, so per-key state
-    stays O(cap) at any corpus size.  Replaces the previous index
-    self-join, which shuffled the index twice and re-derived the
-    (expensive, interpreted) shingle transform on both sides."""
-    sh = _doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    capped_df = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where((F.col("df") >= 2) & (F.col("df") <= SHINGLE_DF_CAP))
-        .select("shingle")
-    )
-    posting = (
-        sh.join(capped_df, "shingle", "left_semi")
-        .groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-    )
-    # (doc_a, doc_b) with doc_a < doc_b: posting lists are sorted, so
-    # pairing each element with its strict successors is canonical
-    pairs = posting.select(
-        F.posexplode("docs").alias("pos", "doc_a"), F.col("docs")
-    ).select(
-        "doc_a",
-        F.explode(F.slice("docs", F.col("pos") + 2, F.size("docs"))).alias("doc_b"),
-    )
-    common = pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("common"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
+    ``pipeline.dedup_clusters`` (connected components): the
+    ``_shingle_pair_counts`` candidates at integer Jaccard ≥ threshold.
+    The double-explode pair generation replaces an index self-join,
+    which shuffled the index twice and re-derived the (expensive,
+    interpreted) shingle transform on both sides."""
     union_sz = F.col("na") + F.col("nb") - F.col("common")
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_pair_counts(spark, sf_dir)
         .where(F.col("common") * JACCARD_DEN >= JACCARD_NUM * union_sz)
         .select(
             "doc_a",

@@ -136,35 +136,6 @@ def test_sharded_layout_and_point_ops(workdir):
     assert len(shard_files) == len(buckets)
 
 
-def test_legacy_monolithic_snapshot_migrates(workdir):
-    """A pre-shard ``kv.json`` reads transparently and is migrated to the
-    sharded layout by the first write transaction."""
-    import base64
-    import json
-    import os
-
-    enc = lambda b: base64.b64encode(b).decode()
-    legacy = {
-        "revision": 7,
-        "data": {
-            enc(b"a"): {"value": enc(b"1"), "version": 3},
-            enc(b"b"): {"value": enc(b"2"), "version": 7},
-        },
-    }
-    with open(os.path.join(workdir, "kv.json"), "w") as f:
-        json.dump(legacy, f)
-    kv = KVStore(workdir)
-    # reads see the legacy content, at the legacy versions
-    assert kv.get(b"a") == (b"1", 3)
-    items, _ = kv.range(b"a", KVStore.FROM_KEY)
-    assert [k for k, _, _ in items] == [b"a", b"b"]
-    # first write migrates: revision continues from 7, kv.json is gone
-    rev = kv.put(b"c", b"3")
-    assert rev == 8
-    assert not os.path.exists(os.path.join(workdir, "kv.json"))
-    assert kv.get(b"a") == (b"1", 3) and kv.get(b"c") == (b"3", 8)
-
-
 def test_multi_bucket_txn_atomic_after_crash_window(workdir):
     """Crash between shard-generation writes and the manifest commit
     must leave the store unchanged (orphan generation files are swept by
@@ -459,7 +430,7 @@ def test_readers_resolve_during_concurrent_splits(workdir):
     assert pw.exitcode == 0 and pr.exitcode == 0
     assert q.get(timeout=10) == "ok"
     meta = kv._read_meta()
-    assert meta.get("next", 0) > 0  # the writer really split mid-read
+    assert meta["next"] > 0  # the writer really split mid-read
 
 
 def test_reshard_crash_window_leaves_store_unchanged(workdir):
@@ -493,684 +464,59 @@ def test_reshard_crash_window_leaves_store_unchanged(workdir):
         )
     with open(os.path.join(workdir, "kv-meta.json")) as f:
         meta_after = json.load(f)
-    assert meta_after["nshards"] == meta_before.get("nshards", 256)
+    assert meta_after["nshards"] == meta_before["nshards"]
     assert meta_after["n"] == 21
 
 
-# ---------------------------------------------------------------- ordered
-# Opt-in ordered (range-partitioned) layout, r13: span scans must read
-# only the overlapping buckets instead of the whole keyspace (the hash
-# layout's one O(keyspace) op class — r12 VERDICT "what's wrong" item 2).
-
-
-def _apply_ops(kv: KVStore):
-    """One op sequence exercised identically on both layouts."""
-    for i in range(40):
-        kv.put(f"app/{i:03d}".encode(), f"v{i}".encode())
-    kv.put(b"app/007", b"overwritten")
-    kv.delete_range(b"app/030", b"app/035")
-    kv.txn(
-        compare=[Compare(b"app/001", "exists", "==", True)],
-        success=[("put", b"cas/won", b"yes")],
-    )
-    out = {
-        "prefix": kv.range(b"app/00", prefix_end(b"app/00"))[0],
-        "limited": kv.range(b"app/", prefix_end(b"app/"), limit=7),
-        "from_key": kv.range(b"app/036", KVStore.FROM_KEY)[0],
-        "point": kv.range(b"app/007")[0],
-        "get": kv.get(b"app/012"),
-        "missing": kv.get(b"app/031"),
-    }
-    # versions differ only if op ordering diverged; strip them for the
-    # cross-layout comparison but keep relative structure
-    return {
-        k: [(it[0], it[1]) for it in v] if isinstance(v, list) else v
-        for k, v in out.items()
-        if k not in ("limited", "get", "missing")
-    }, out
-
-
-def test_ordered_layout_semantics_match_hash(workdir):
-    """The layout is a storage choice, not an API change: an identical
-    op sequence must produce identical results on both layouts."""
-    h = KVStore(workdir + "/hash")
-    o = KVStore(workdir + "/ordered", layout="ordered")
-    rh, full_h = _apply_ops(h)
-    ro, full_o = _apply_ops(o)
-    assert rh == ro
-    assert [it[:2] for it in full_h["limited"][0]] == [
-        it[:2] for it in full_o["limited"][0]
-    ]
-    assert full_h["limited"][1] == full_o["limited"][1]  # `more` flag
-    assert full_h["get"][0] == full_o["get"][0]
-    assert full_h["missing"] is None and full_o["missing"] is None
-
-
-def test_ordered_layout_splits_balance_and_preserve_data(workdir):
-    """Bulk-loading past the per-bucket threshold must median-split into
-    multiple buckets with strictly ascending boundaries, every key still
-    readable, and no bucket left oversize."""
-    import json as _json
-    import os as _os
-
-    from elastic_stream_spark.kv import KV_RESHARD_AT
-
-    kv = KVStore(workdir, layout="ordered")
-    n = 10_000
-    with kv._txn() as st:
-        for i in range(n):
-            st.set_entry(f"k:{i:06d}".encode(), b"v")
-    with open(_os.path.join(workdir, "kv-meta.json")) as f:
-        meta = _json.load(f)
-    assert meta["layout"] == "ordered"
-    assert len(meta["oranges"]) >= 8  # 10k keys / (2*512) cap → ≥ 9 leaves
-    # boundaries strictly ascending, last open
-    uppers = [u for _, u in meta["oranges"]]
-    assert uppers[-1] is None
-    decoded = [KVStore._dec(u) for u in uppers[:-1]]
-    assert decoded == sorted(decoded) and len(set(decoded)) == len(decoded)
-    # no bucket oversize; union of buckets is exactly the keyspace
-    seen = 0
-    for b, gen in meta["shards"].items():
-        with open(_os.path.join(workdir, KVStore._shard_filename(b, gen))) as f:
-            data = _json.load(f)
-        assert len(data) <= 2 * KV_RESHARD_AT
-        seen += len(data)
-    assert seen == n
-    # point reads across the whole range
-    for i in (0, 1, 4_999, 5_000, 9_999):
-        assert kv.get(f"k:{i:06d}".encode()) is not None
-    # full scan ordered and complete
-    items, _ = kv.range(b"k:", prefix_end(b"k:"))
-    assert len(items) == n
-    assert [k for k, _, _ in items] == sorted(k for k, _, _ in items)
-
-
-def test_ordered_span_scan_reads_only_overlapping_buckets(workdir, monkeypatch):
-    """THE point of the layout: a narrow prefix scan at a grown keyspace
-    touches O(selectivity) bucket files, not O(keyspace) — the hash
-    layout structurally reads every bucket for the same scan."""
-    kv = KVStore(workdir, layout="ordered")
-    with kv._txn() as st:
-        for i in range(10_000):
-            st.set_entry(f"k:{i:06d}".encode(), b"v")
-    n_buckets = len(kv._read_meta()["shards"])
-    assert n_buckets >= 8
-    reads: list[str] = []
-    orig = KVStore._read_bucket_file
-
-    def counting(self, meta, b):
-        reads.append(b)
-        return orig(self, meta, b)
-
-    monkeypatch.setattr(KVStore, "_read_bucket_file", counting)
-    # 10-key span out of 10k
-    items, _ = kv.range(b"k:00001", prefix_end(b"k:00001"))
-    assert [k for k, _, _ in items] == [
-        f"k:{i:06d}".encode() for i in range(10, 20)
-    ]
-    assert len(reads) <= 2, (
-        f"narrow span read {len(reads)} of {n_buckets} buckets: {reads}"
-    )
-    # pruned DeleteRange too
-    reads.clear()
-    assert kv.delete_range(b"k:00002", prefix_end(b"k:00002")) == 10
-    assert len(reads) <= 2
-    # hash layout contrast: the same scan must read every bucket
-    hv = KVStore(workdir + "/hash")
-    with hv._txn() as st:
-        for i in range(2_000):
-            st.set_entry(f"k:{i:06d}".encode(), b"v")
-    n_hash_buckets = len(hv._read_meta()["shards"])
-    reads.clear()
-    hv.range(b"k:00001", prefix_end(b"k:00001"))
-    assert len(reads) == n_hash_buckets
-
-
-def test_ordered_layout_survives_reopen_and_skewed_keys(workdir):
-    """The manifest's layout field is authoritative on reopen (default
-    constructor arg must NOT flip an ordered store back to hash), and
-    median splits self-balance keys sharing a long common prefix — the
-    skew that breaks static prefix sharding."""
-    kv = KVStore(workdir, layout="ordered")
-    with kv._txn() as st:
-        for i in range(5_000):
-            st.set_entry(f"streams/very/common/prefix/{i:06d}".encode(), b"v")
-    # reopen with the DEFAULT arg: layout comes from the manifest
-    kv2 = KVStore(workdir)
-    meta = kv2._read_meta()
-    assert meta["layout"] == "ordered"
-    from elastic_stream_spark.kv import KV_RESHARD_AT
-
-    import json as _json
-    import os as _os
-
-    for b, gen in meta["shards"].items():
-        with open(_os.path.join(workdir, KVStore._shard_filename(b, gen))) as f:
-            assert len(_json.load(f)) <= 2 * KV_RESHARD_AT
-    assert kv2.get(b"streams/very/common/prefix/004999") == (b"v", 5_000)
-    items, _ = kv2.range(
-        b"streams/very/common/prefix/00001",
-        prefix_end(b"streams/very/common/prefix/00001"),
-    )
-    assert len(items) == 10
-    # writes through the reopened handle keep splitting correctly
-    for i in range(5_000, 5_100):
-        kv2.put(f"streams/very/common/prefix/{i:06d}".encode(), b"w")
-    assert kv2.get(b"streams/very/common/prefix/005050") is not None
-
-
-def test_ordered_split_crash_window_leaves_store_unchanged(workdir):
-    """The ordered layout rides the same commit protocol, so the same
-    crash window must hold: new-generation bucket files on disk with the
-    manifest still pointing at the pre-split generation leave every read
-    serving the old layout; the next commit sweeps the orphans."""
-    import json as _json
-    import os as _os
-
-    kv = KVStore(workdir, layout="ordered")
-    with kv._txn() as st:
-        for i in range(3_000):
-            st.set_entry(f"k:{i:06d}".encode(), b"v")
-    with open(_os.path.join(workdir, "kv-meta.json")) as f:
-        meta_before = _json.load(f)
-    assert len(meta_before["oranges"]) >= 2  # splits actually happened
-    # simulate a crashed follow-up split: orphan generation files for an
-    # existing bucket and a never-committed fresh one
-    victims = [meta_before["oranges"][0][0], "o7ff"]
-    for b in victims:
-        with open(
-            _os.path.join(workdir, f"kv-shard-{b}.000000099999.json"), "w"
-        ) as f:
-            f.write('{"bogus": {"value": "eA==", "version": 9}}')
-    kv2 = KVStore(workdir)  # post-crash open (default arg; manifest wins)
-    items, _ = kv2.range(b"k:", prefix_end(b"k:"))
-    assert len(items) == 3_000  # old generation serves, no bogus key
-    assert kv2.get(b"bogus") is None
-    kv2.put(b"k:999999", b"new")  # first commit sweeps the orphans
-    for b in victims:
-        assert not _os.path.exists(
-            _os.path.join(workdir, f"kv-shard-{b}.000000099999.json")
-        )
-    with open(_os.path.join(workdir, "kv-meta.json")) as f:
-        meta_after = _json.load(f)
-    assert meta_after["layout"] == "ordered"
-    assert meta_after["n"] == 3_001
-
-
-def test_ordered_readers_resolve_during_concurrent_splits(workdir):
-    """The ordered layout's median splits ride the same manifest-swap
-    commit, so lock-free point reads AND pruned span scans must stay
-    consistent while a concurrent writer pushes a bucket through its
-    split threshold — the reader always resolves (manifest-churn retry)
-    and never sees a missing value or a torn boundary list."""
-    import multiprocessing as mp
-
-    from elastic_stream_spark.kv import KV_RESHARD_AT
-
-    kv = KVStore(workdir, layout="ordered")
-    base = 2 * KV_RESHARD_AT - 4  # one bucket, just under its threshold
-    with kv._txn() as st:
-        for i in range(base):
-            st.set_entry(f"k:{i:07d}".encode(), b"v")
-
-    def writer(root: str) -> None:
-        w = KVStore(root)
-        for i in range(300):  # crosses several median-split commits
-            w.put(f"k:{base + i:07d}".encode(), b"g")
-
-    def reader(root: str, q) -> None:
-        r = KVStore(root)
-        try:
-            for i in range(400):
-                k = f"k:{(i * 131) % base:07d}".encode()
-                got = r.get(k)
-                assert got is not None and got[0] == b"v", k
-                if i % 20 == 0:  # pruned span scan mid-split
-                    lo = f"k:{(i * 53) % (base - 10):07d}".encode()
-                    items, _ = r.range(lo, KVStore.FROM_KEY, limit=5)
-                    assert items and items[0][0] >= lo
-            q.put("ok")
-        except BaseException as e:  # surfaced to the asserting parent
-            q.put(f"reader failed: {e!r}")
-
-    ctx = mp.get_context("fork")
-    q = ctx.Queue()
-    pw = ctx.Process(target=writer, args=(workdir,))
-    pr = ctx.Process(target=reader, args=(workdir, q))
-    pr.start(); pw.start()
-    pw.join(120); pr.join(120)
-    assert pw.exitcode == 0 and pr.exitcode == 0
-    assert q.get(timeout=10) == "ok"
-    meta = kv._read_meta()
-    assert len(meta["oranges"]) > 1  # the writer really split mid-read
-
-
-def test_ordered_compaction_shrinks_emptied_ranges(workdir):
-    """Delete-heavy schedules must not grow the boundary list forever:
-    a span delete that empties interior buckets drops their entries at
-    commit (successor inherits the span), an emptied TAIL re-opens the
-    predecessor, and emptying everything leaves exactly one open-ended
-    bucket that serves subsequent writes."""
-    import json as _json
-    import os as _os
-
-    kv = KVStore(workdir, layout="ordered")
-    with kv._txn() as st:
-        for i in range(10_000):
-            st.set_entry(f"k:{i:06d}".encode(), b"v")
-    n0 = len(kv._read_meta()["oranges"])
-    assert n0 >= 8
-    # empty a wide interior band (≥ several whole buckets)
-    assert kv.delete_range(b"k:002000", b"k:008000") == 6_000
-    meta = kv._read_meta()
-    assert len(meta["oranges"]) < n0  # interior entries compacted away
-    uppers = [u for _, u in meta["oranges"]]
-    dec = [KVStore._dec(u) for u in uppers[:-1]]
-    assert dec == sorted(dec) and uppers[-1] is None
-    # survivors intact, deleted band gone, scans correct across the merge
-    items, _ = kv.range(b"k:", prefix_end(b"k:"))
-    assert len(items) == 4_000
-    assert kv.get(b"k:001999") is not None and kv.get(b"k:002000") is None
-    # empty EVERYTHING: one open-ended bucket remains and still serves
-    assert kv.delete_range(b"k:", prefix_end(b"k:")) == 4_000
-    meta = kv._read_meta()
-    assert len(meta["oranges"]) == 1 and meta["oranges"][0][1] is None
-    assert meta["shards"] == {}
-    kv.put(b"fresh", b"x")
-    assert kv.get(b"fresh") == (b"x", kv._read_meta()["revision"])
-    # no orphaned bucket files beyond the manifest's
-    meta = kv._read_meta()
-    live = {
-        KVStore._shard_filename(b, g) for b, g in meta["shards"].items()
-    }
-    on_disk = {
-        fn for fn in _os.listdir(workdir) if fn.startswith("kv-shard-")
-    }
-    assert on_disk == live
-
-
-def test_ordered_boundary_list_respects_shard_cap(workdir, monkeypatch):
-    """The ordered boundary list is capped at KV_MAX_SHARDS — the same
-    manifest-size trade the hash layout makes at its round cap: past
-    the cap, buckets grow beyond the occupancy target instead of the
-    manifest growing with the keyspace.  With shrunken constants a
-    bulk load far past the cap must stop at it, keep every key
-    readable, and keep boundaries strictly ascending."""
-    import json as _json
-    import os as _os
-
-    import elastic_stream_spark.kv as kvmod
-
-    monkeypatch.setattr(kvmod, "KV_RESHARD_AT", 4)
-    monkeypatch.setattr(kvmod, "KV_MAX_SHARDS", 8)
-    kv = KVStore(workdir, layout="ordered")
-    with kv._txn() as st:
-        for i in range(1_000):
-            st.set_entry(f"k:{i:05d}".encode(), b"v")
-    with open(_os.path.join(workdir, "kv-meta.json")) as f:
-        meta = _json.load(f)
-    assert len(meta["oranges"]) <= 8
-    uppers = [u for _, u in meta["oranges"]]
-    dec = [KVStore._dec(u) for u in uppers[:-1]]
-    assert dec == sorted(dec) and uppers[-1] is None
-    items, _ = kv.range(b"k:", prefix_end(b"k:"))
-    assert len(items) == 1_000
-    # organic growth past the cap must also not split further
-    for i in range(1_000, 1_050):
-        kv.put(f"k:{i:05d}".encode(), b"w")
-    with open(_os.path.join(workdir, "kv-meta.json")) as f:
-        meta = _json.load(f)
-    assert len(meta["oranges"]) <= 8
-    assert kv.get(b"k:01049") is not None
-
-
-def test_ordered_cross_process_cas_serializes_under_splits(workdir):
-    """The linearizability claim holds on the ordered layout too, and
-    WHILE the CAS target's bucket keeps splitting: 4 workers bump a
-    shared counter via CAS-retry as each also inserts filler keys that
-    push buckets through median splits; every increment lands exactly
-    once and failed CAS txns stay revision-silent."""
+def test_store_refuses_foreign_formats(workdir):
+    """The store reads one on-disk format.  A root whose manifest
+    carries another placement layout, or that holds a bare monolithic
+    ``kv.json`` with no manifest, must raise ValueError naming the file
+    on read and on write — never read as an empty store or look keys up
+    in the wrong buckets."""
+    import base64
     import json
-    import multiprocessing as mp
     import os
 
-    import elastic_stream_spark.kv as kvmod
+    import pytest
 
-    N_PROCS, N_INCR = 4, 25
-
-    def worker(root: str, wid: int, n: int) -> None:
-        # shrink the split threshold so the filler keys force splits
-        kvmod.KV_RESHARD_AT = 8
+    enc = lambda b: base64.b64encode(b).decode()
+    # a range-partitioned manifest: one bucket "o000" holding key b"a"
+    ordered = os.path.join(workdir, "ordered")
+    os.makedirs(ordered)
+    with open(os.path.join(ordered, "kv-shard-o000.000000000001.json"), "w") as f:
+        json.dump({enc(b"a"): {"value": enc(b"1"), "version": 1}}, f)
+    with open(os.path.join(ordered, "kv-meta.json"), "w") as f:
+        json.dump(
+            {
+                "revision": 1,
+                "shards": {"o000": 1},
+                "n": 1,
+                "layout": "ordered",
+                "onext": 1,
+            },
+            f,
+        )
+    # a pre-shard monolithic snapshot, no manifest
+    legacy = os.path.join(workdir, "legacy")
+    os.makedirs(legacy)
+    with open(os.path.join(legacy, "kv.json"), "w") as f:
+        json.dump(
+            {"revision": 7, "data": {enc(b"a"): {"value": enc(b"1"), "version": 3}}},
+            f,
+        )
+    for root, fname in ((ordered, "kv-meta.json"), (legacy, "kv.json")):
         kv = KVStore(root)
-        for i in range(n):
-            kv.put(f"filler/{wid:02d}/{i:04d}".encode(), b"f")
-            while True:
-                got = kv.get(b"counter")
-                cur, ver = (int(got[0]), got[1]) if got else (0, 0)
-                if kv.cas(b"counter", ver, str(cur + 1).encode()):
-                    break
-
-    kv = KVStore(workdir, layout="ordered")
-    kv.put(b"seed", b"s")  # COMMIT once so the ordered manifest exists
-    ctx = mp.get_context("fork")
-    procs = [
-        ctx.Process(target=worker, args=(workdir, w, N_INCR))
-        for w in range(N_PROCS)
-    ]
-    for p in procs:
-        p.start()
-    for p in procs:
-        p.join(120)
-        assert p.exitcode == 0
-    val, _ = kv.get(b"counter")
-    assert int(val) == N_PROCS * N_INCR  # no lost update, no double-apply
-    with open(os.path.join(workdir, "kv-meta.json")) as f:
-        meta = json.load(f)
-    assert meta["layout"] == "ordered"
-    assert len(meta["oranges"]) > 1  # splits really happened mid-CAS
-    assert meta["n"] == N_PROCS * N_INCR + 2  # fillers + counter + seed
-
-
-def test_ordered_boundary_side_file_lifecycle(workdir, monkeypatch):
-    """r14: past OR_INLINE_MAX boundaries the list moves to the
-    kv-oranges.<gen>.json side file; a boundary-preserving put must
-    REUSE the standing generation (zero boundary serialization — the
-    whole point), a boundary-changing commit must atomically swap in a
-    new generation and GC the old, and shrinking back below the
-    threshold must re-inline and drop the file."""
-    import os as _os
-
-    import elastic_stream_spark.kv as kvmod
-
-    monkeypatch.setattr(kvmod, "KV_RESHARD_AT", 4)
-    monkeypatch.setattr(kvmod, "OR_INLINE_MAX", 6)
-    kv = KVStore(workdir, layout="ordered")
-    for i in range(200):
-        kv.put(f"k{i:04d}".encode(), f"v{i}".encode())
-    meta = kv._read_meta()
-    assert "oranges" not in meta and "oranges_gen" in meta
-    files = [f for f in _os.listdir(workdir) if f.startswith("kv-oranges.")]
-    assert files == [KVStore._oranges_file(meta["oranges_gen"])]
-    boundaries = kv._oranges(meta)
-    assert len(boundaries) > 6
-    # boundary-preserving puts: same generation across many commits
-    g0 = meta["oranges_gen"]
-    for i in range(10):
-        kv.put(f"k{i:04d}".encode(), b"upd")
-    assert kv._read_meta()["oranges_gen"] == g0
-    # a split (boundary change) swaps the generation and GCs the old.
-    # Keep inserting dense batches until one triggers (bounded), then
-    # assert UNCONDITIONALLY — the old `if gen changed` guard could
-    # silently skip the GC property when the single batch happened not
-    # to split (r14 ADVICE)
-    for batch in range(10):
-        with kv._txn() as st:
-            for i in range(1000 + 20 * batch, 1020 + 20 * batch):
-                st.set_entry(f"k{i:04d}".encode(), b"grow")
-        if kv._read_meta().get("oranges_gen") != g0:
-            break
-    m2 = kv._read_meta()
-    assert m2.get("oranges_gen") != g0, (
-        "no boundary split after 200 dense inserts under patched "
-        "KV_RESHARD_AT=4 — the GC property went untested"
+        for op in (
+            lambda: kv.get(b"a"),
+            lambda: kv.range(b"", KVStore.FROM_KEY),
+            lambda: kv.put(b"b", b"2"),
+        ):
+            with pytest.raises(ValueError, match=fname):
+                op()
+    # nothing was rewritten or swept
+    assert os.path.exists(os.path.join(legacy, "kv.json"))
+    assert not os.path.exists(os.path.join(legacy, "kv-meta.json"))
+    assert os.path.exists(
+        os.path.join(ordered, "kv-shard-o000.000000000001.json")
     )
-    assert not _os.path.exists(
-        _os.path.join(workdir, KVStore._oranges_file(g0))
-    )
-    # reads resolve through the side file, cold-handle and warm alike
-    kv2 = KVStore(workdir)
-    assert len(kv2.range(b"k00", prefix_end(b"k00"))[0]) == 100
-    assert kv2.get(b"k0000") == (b"upd", kv2.get(b"k0000")[1])
-    # delete everything → compaction shrinks below the threshold →
-    # re-inlined, side file gone
-    kv.delete_range(b"k", prefix_end(b"k"))
-    m3 = kv._read_meta()
-    assert "oranges" in m3 and "oranges_gen" not in m3
-    assert not [
-        f for f in _os.listdir(workdir) if f.startswith("kv-oranges.")
-    ]
-    kv.put(b"fresh", b"x")
-    assert kv.get(b"fresh")[0] == b"x"
-
-
-def test_ordered_oranges_orphan_swept_after_crash_window(workdir, monkeypatch):
-    """A crash between writing a new boundary generation and the
-    manifest rename leaves an unreferenced kv-oranges file; the next
-    committer's orphan sweep must reclaim it while keeping the live
-    generation."""
-    import os as _os
-
-    import elastic_stream_spark.kv as kvmod
-
-    monkeypatch.setattr(kvmod, "KV_RESHARD_AT", 4)
-    monkeypatch.setattr(kvmod, "OR_INLINE_MAX", 6)
-    kv = KVStore(workdir, layout="ordered")
-    for i in range(100):
-        kv.put(f"k{i:04d}".encode(), b"v")
-    live_gen = kv._read_meta()["oranges_gen"]
-    bogus = _os.path.join(workdir, KVStore._oranges_file(99_999))
-    with open(bogus, "w") as f:
-        f.write('{"oranges": [["o000", null]]}')
-    kv2 = KVStore(workdir)  # post-crash open
-    assert len(kv2.range(b"k", prefix_end(b"k"))[0]) == 100  # manifest wins
-    kv2.put(b"k9999", b"new")  # first commit sweeps
-    assert not _os.path.exists(bogus)
-    m = kv2._read_meta()
-    assert _os.path.exists(
-        _os.path.join(workdir, KVStore._oranges_file(m["oranges_gen"]))
-    )
-
-
-def test_ordered_missing_side_file_is_diagnosed_not_retried(
-    workdir, monkeypatch
-):
-    """r14 ADVICE: a PERMANENTLY missing kv-oranges.<gen>.json (manual
-    deletion, a partial backup that grabbed kv-meta.json + kv-shard-*
-    only) must surface as a corruption error NAMING the file — not 64
-    silent retries ending in the misleading 'manifest churn exceeded
-    retries' (which describes a live-concurrency condition, not a dead
-    store).  Gens are monotonic, so same-gen + still-absent on the
-    retry proves no concurrent commit can explain the absence."""
-    import os as _os
-
-    import pytest as _pytest
-
-    import elastic_stream_spark.kv as kvmod
-
-    monkeypatch.setattr(kvmod, "KV_RESHARD_AT", 4)
-    monkeypatch.setattr(kvmod, "OR_INLINE_MAX", 6)
-    kv = KVStore(workdir, layout="ordered")
-    for i in range(200):
-        kv.put(f"k{i:04d}".encode(), b"v")
-    meta = kv._read_meta()
-    assert "oranges_gen" in meta  # boundaries really live in the side file
-    fname = KVStore._oranges_file(meta["oranges_gen"])
-    _os.unlink(_os.path.join(workdir, fname))
-    # cold handle (no warm _oranges_cache); both read paths diagnose
-    kv2 = KVStore(workdir)
-    with _pytest.raises(RuntimeError, match=fname):
-        kv2.get(b"k0000")
-    kv3 = KVStore(workdir)
-    with _pytest.raises(RuntimeError, match=fname):
-        kv3.range(b"k", b"l")
-
-
-def test_ordered_cap_not_overshot_by_multi_oversize_txn(workdir, monkeypatch):
-    """r13 advice: the cap was checked once per split PASS, so a txn
-    with several organically-oversize dirty buckets one below the cap
-    split them all and pushed len(oranges) past KV_MAX_SHARDS
-    (reproduced: cap 8 → 9).  The check is per SPLIT now: the invariant
-    len(oranges) ≤ KV_MAX_SHARDS must hold after ANY txn."""
-    import elastic_stream_spark.kv as kvmod
-
-    # grow several buckets under a lenient threshold first
-    monkeypatch.setattr(kvmod, "KV_RESHARD_AT", 16)
-    kv = KVStore(workdir, layout="ordered")
-    with kv._txn() as st:
-        for i in range(120):
-            st.set_entry(f"k{i:04d}".encode(), b"v")
-    n_b = len(kv._oranges(kv._read_meta()))
-    assert n_b >= 3
-    # now tighten: every standing bucket is oversize, cap one above
-    monkeypatch.setattr(kvmod, "KV_RESHARD_AT", 4)
-    monkeypatch.setattr(kvmod, "KV_MAX_SHARDS", n_b + 1)
-    with kv._txn() as st:  # dirty EVERY bucket in one txn
-        for i in range(120):
-            st.set_entry(f"k{i:04d}".encode(), b"w")
-    oranges = kv._oranges(kv._read_meta())
-    assert len(oranges) <= n_b + 1, (
-        f"cap overshot: {len(oranges)} > {n_b + 1}"
-    )
-    # data intact regardless
-    items, _ = kv.range(b"k", prefix_end(b"k"))
-    assert len(items) == 120 and all(v == b"w" for _, v, _ in items)
-
-
-def test_migrate_layout_hash_to_ordered(workdir, monkeypatch):
-    """r13 VERDICT item 4: a populated hash store migrates offline to
-    the ordered layout with byte-identical range()/get() results and
-    versions, pruned span scans after, and idempotent re-invocation."""
-    import elastic_stream_spark.kv as kvmod
-
-    kv = KVStore(workdir)  # hash
-    vers = {}
-    for i in range(3_000):
-        vers[i] = kv.put(f"m{i:05d}".encode(), f"w{i}".encode())
-    kv.delete_range(b"m00100", b"m00200")  # holes survive migration too
-    before = kv.range(b"", KVStore.FROM_KEY)
-    rev_before = kv._read_meta()["revision"]
-
-    kv.migrate_layout("ordered")
-
-    m = kv._read_meta()
-    assert m["layout"] == "ordered" and m["revision"] == rev_before
-    assert kv.range(b"", KVStore.FROM_KEY) == before  # bytes + versions
-    assert kv.get(b"m02999") == (b"w2999", vers[2999])
-    assert kv.get(b"m00150") is None
-    # span scans now prune to the overlapping buckets
-    reads: list[str] = []
-    orig = KVStore._read_bucket_file
-
-    def counting(self, meta, b):
-        reads.append(b)
-        return orig(self, meta, b)
-
-    monkeypatch.setattr(KVStore, "_read_bucket_file", counting)
-    items, _ = kv.range(b"m0250", prefix_end(b"m0250"))
-    assert len(items) == 10
-    assert len(reads) <= 2, f"span scan read {len(reads)} buckets post-migration"
-    monkeypatch.undo()
-    # idempotent; ordered→hash unsupported by design
-    kv.migrate_layout("ordered")
-    assert kv.range(b"", KVStore.FROM_KEY) == before
-    try:
-        kv.migrate_layout("hash")
-        raise AssertionError("ordered→hash must be rejected")
-    except ValueError:
-        pass
-    # fresh handle reads the migrated store; writes keep splitting
-    kv2 = KVStore(workdir)
-    kv2.put(b"m99999", b"tail")
-    assert kv2.get(b"m99999")[0] == b"tail"
-
-
-def test_migrate_layout_crash_window_leaves_hash_store_live(workdir, monkeypatch):
-    """The migration's commit point is the single manifest rename: a
-    crash AFTER the ordered bucket + boundary files are written but
-    BEFORE the rename must leave the hash layout fully serving (reads
-    and writes), with the half-written ordered files reclaimed by the
-    next committer's orphan sweep."""
-    import os as _os
-
-    kv = KVStore(workdir)
-    for i in range(2_000):
-        kv.put(f"c{i:05d}".encode(), f"v{i}".encode())
-    before = kv.range(b"", KVStore.FROM_KEY)
-
-    orig = KVStore._write_file
-
-    def dying(self, name, payload):
-        if name == "kv-meta.json":
-            raise OSError("simulated crash before the manifest rename")
-        orig(self, name, payload)
-
-    monkeypatch.setattr(KVStore, "_write_file", dying)
-    try:
-        kv.migrate_layout("ordered")
-        raise AssertionError("migration should have crashed")
-    except OSError:
-        pass
-    monkeypatch.undo()
-    # debris exists, but the store still serves the hash layout
-    debris = [
-        f
-        for f in _os.listdir(workdir)
-        if f.startswith("kv-shard-o") or f.startswith("kv-oranges.")
-    ]
-    assert debris  # the crash really left half-written ordered files
-    kv2 = KVStore(workdir)  # post-crash open
-    assert kv2._read_meta().get("layout", "hash") == "hash"
-    assert kv2.range(b"", KVStore.FROM_KEY) == before
-    kv2.put(b"c99999", b"after")  # first commit sweeps the debris
-    for f in debris:
-        assert not _os.path.exists(_os.path.join(workdir, f)), f
-    # and a RETRIED migration completes cleanly on the same store
-    kv2.migrate_layout("ordered")
-    assert kv2._read_meta()["layout"] == "ordered"
-    assert kv2.get(b"c99999")[0] == b"after"
-    assert len(kv2.range(b"c", prefix_end(b"c"))[0]) == 2_001
-
-
-def test_migrate_layout_legacy_and_empty_stores(workdir):
-    """A pre-shard monolithic kv.json migrates straight to ordered
-    (revision and versions preserved); an empty hash store just flips
-    its layout and serves subsequent writes."""
-    import json as _json
-    import os as _os
-
-    legacy_root = _os.path.join(workdir, "legacy")
-    _os.makedirs(legacy_root)
-    legacy = {
-        "revision": 7,
-        "data": {
-            KVStore._enc(f"L{i}".encode()): {
-                "value": KVStore._enc(b"old"),
-                "version": i + 1,
-            }
-            for i in range(5)
-        },
-    }
-    with open(_os.path.join(legacy_root, "kv.json"), "w") as f:
-        _json.dump(legacy, f)
-    kv = KVStore(legacy_root)
-    kv.migrate_layout("ordered")
-    m = kv._read_meta()
-    assert m["layout"] == "ordered" and m["revision"] == 7
-    assert not _os.path.exists(_os.path.join(legacy_root, "kv.json"))
-    assert kv.get(b"L3") == (b"old", 4)
-    assert len(kv.range(b"L", prefix_end(b"L"))[0]) == 5
-
-    empty_root = _os.path.join(workdir, "empty")
-    e = KVStore(empty_root)
-    e.put(b"x", b"1")
-    e.delete_range(b"x")
-    e.migrate_layout("ordered")
-    assert e._read_meta()["layout"] == "ordered"
-    rev = e.put(b"y", b"2")
-    assert e.get(b"y") == (b"2", rev)
-
-
-def test_to_df_on_ordered_store_across_splits(spark, workdir):
-    """The ``_kv`` DataFrame view reads the full snapshot regardless of
-    layout: an ordered store that has split several times must expose
-    every (key, value, version) row exactly once."""
-    kv = KVStore(workdir, layout="ordered")
-    with kv._txn() as st:
-        for i in range(3_000):
-            st.set_entry(f"k:{i:05d}".encode(), str(i).encode())
-    assert len(kv._read_meta()["oranges"]) > 1
-    df = kv.to_df(spark)
-    assert df.count() == 3_000
-    got = {bytes(r.key): bytes(r.value) for r in df.collect()}
-    assert got[b"k:02999"] == b"2999" and len(got) == 3_000

@@ -66,3 +66,33 @@ def test_evict_all_removes_memo_directories_and_rebuilds(spark):
     finally:
         con.close()
     assert all(os.path.isdir(memo_dir(spark, SF_DIR)) for memo_dir in memo_dirs)
+
+
+def test_materialize_skips_plans_already_cached(spark):
+    """A second ``materialize`` of an identical plan reuses the cached
+    blocks and runs no Spark job.  Both handles are tracked, so
+    ``unpersist_materialized`` releases the plan."""
+    from pyspark import StorageLevel
+
+    from elastic_stream_spark.functions.materialize import (
+        materialize,
+        unpersist_materialized,
+    )
+
+    sc = spark.sparkContext
+    plan = lambda: spark.range(1000).selectExpr("id", "id % 7 AS k")
+    sc.setJobGroup("materialize-first", "first build")
+    try:
+        first = materialize(plan())
+        sc.setJobGroup("materialize-again", "identical plan")
+        again = materialize(plan())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("materialize-first")
+    assert tracker.getJobIdsForGroup("materialize-again") == []
+    assert again.storageLevel == first.storageLevel != StorageLevel.NONE
+    assert again.count() == 1000
+    assert unpersist_materialized(spark, blocking=True) >= 2
+    assert plan().storageLevel == StorageLevel.NONE

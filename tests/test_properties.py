@@ -271,6 +271,12 @@ _KV_RESHARD_OPS = st.lists(
     st.one_of(
         st.tuples(st.just("put"), st.integers(0, 99), st.integers(0, 99)),
         st.tuples(st.just("delete"), st.integers(0, 99), st.just(0)),
+        # prefix scan / prefix delete over a 10-key decimal prefix
+        st.tuples(st.just("span"), st.integers(0, 9), st.just(0)),
+        st.tuples(st.just("delspan"), st.integers(0, 9), st.just(0)),
+        # a version-guarded put at the current version, retried at the
+        # now-stale version (must fail without bumping the revision)
+        st.tuples(st.just("cas"), st.integers(0, 99), st.integers(0, 99)),
     ),
     min_size=20,
     max_size=120,
@@ -282,15 +288,18 @@ _KV_RESHARD_OPS = st.lists(
 )
 @given(ops=_KV_RESHARD_OPS)
 def test_kv_matches_model_across_reshards(ops):
-    """Adaptive growth (r11 wholesale reshard; r12 linear-hash splits)
-    is invisible to clients: with the shard constants shrunk so any
-    dense schedule crosses at least one split boundary, the store still
-    agrees with a plain dict after every op, the full range scan
-    matches, and the manifest's entry count stays exact."""
+    """Adaptive growth (linear-hash splits) is invisible to clients:
+    with the shard constants shrunk so any dense schedule crosses at
+    least one split boundary, the store agrees with a plain dict model
+    (values and versions) after every put / point-delete / prefix-scan /
+    prefix-delete / CAS, a stale CAS fails without bumping the revision,
+    the full range scan matches, and the manifest's entry count stays
+    exact."""
     import json
     import os
 
     import elastic_stream_spark.kv as kvmod
+    from elastic_stream_spark.kv import prefix_end
 
     saved = (kvmod.KV_SHARDS, kvmod.KV_RESHARD_AT, kvmod.KV_MAX_SHARDS)
     kvmod.KV_SHARDS, kvmod.KV_RESHARD_AT, kvmod.KV_MAX_SHARDS = 4, 4, 64
@@ -298,23 +307,48 @@ def test_kv_matches_model_across_reshards(ops):
         base = "/dev/shm" if os.path.isdir("/dev/shm") else None
         with tempfile.TemporaryDirectory(prefix="ess-kvresh-", dir=base) as root:
             kv = KVStore(root)
-            model: dict[bytes, bytes] = {}
+            model: dict[bytes, tuple[bytes, int]] = {}  # key -> (value, version)
+            rev = 0  # model revision: +1 per mutating op
             for op in ops:
+                kind = op[0]
+                if kind in ("span", "delspan"):
+                    pre = f"k{op[1]:02d}".encode()
+                    hit = sorted(k for k in model if k.startswith(pre))
+                    if kind == "span":
+                        items, more = kv.range(pre, prefix_end(pre))
+                        assert not more
+                        assert items == [(k, *model[k]) for k in hit]
+                    else:
+                        assert kv.delete_range(pre, prefix_end(pre)) == len(hit)
+                        for k in hit:
+                            del model[k]
+                        rev += bool(hit)
+                    continue
                 key = f"k{op[1]:04d}".encode()
-                if op[0] == "put":
+                if kind == "put":
                     val = f"v{op[2]}".encode()
-                    kv.put(key, val)
-                    model[key] = val
-                else:
-                    kv.delete_range(key, key + b"\x00")
+                    rev += 1
+                    assert kv.put(key, val) == rev
+                    model[key] = (val, rev)
+                elif kind == "delete":
+                    assert kv.delete_range(key, key + b"\x00") == (key in model)
+                    rev += key in model
                     model.pop(key, None)
-                got = kv.get(key)
-                assert (got[0] if got else None) == model.get(key)
+                else:  # cas at the current version, then at the stale one
+                    ver = model[key][1] if key in model else 0
+                    val = f"c{op[2]}".encode()
+                    assert kv.cas(key, ver, val)
+                    rev += 1
+                    model[key] = (val, rev)
+                    assert not kv.cas(key, ver, b"stale")
+                    assert kv._read_meta()["revision"] == rev
+                assert kv.get(key) == model.get(key)
             items, more = kv.range(b"", KVStore.FROM_KEY)
             assert not more
-            assert {k: v for k, v, _ in items} == model
+            assert items == [(k, *model[k]) for k in sorted(model)]
             with open(os.path.join(root, "kv-meta.json")) as f:
                 meta = json.load(f)
+            assert meta["revision"] == rev
             assert meta["n"] == len(model)
             if len(model) >= 16:  # crossed the shrunken threshold
                 eff = meta["nshards"] + meta["next"] * (
@@ -323,164 +357,3 @@ def test_kv_matches_model_across_reshards(ops):
                 assert eff > 4  # grew past the shrunken base round
     finally:
         kvmod.KV_SHARDS, kvmod.KV_RESHARD_AT, kvmod.KV_MAX_SHARDS = saved
-
-
-_KV_LAYOUT_OPS = st.lists(
-    st.one_of(
-        st.tuples(st.just("put"), st.integers(0, 99), st.integers(0, 99)),
-        st.tuples(st.just("delete"), st.integers(0, 99), st.just(0)),
-        st.tuples(st.just("span"), st.integers(0, 9), st.just(0)),
-        st.tuples(st.just("delspan"), st.integers(0, 9), st.just(0)),
-        # compare-and-swap (r14, r13 VERDICT item 6): a version-guarded
-        # put at the current version (succeeds on both stores or
-        # neither) immediately retried at the now-stale version (must
-        # fail on both, revision-silent)
-        st.tuples(st.just("cas"), st.integers(0, 99), st.integers(0, 99)),
-    ),
-    min_size=20,
-    max_size=120,
-)
-
-
-def _apply_layout_op(a: "KVStore", b: "KVStore", op) -> None:
-    """Apply one schedule op to both stores, asserting identical
-    observable results (values, versions, revisions, paging flags)."""
-    from elastic_stream_spark.kv import prefix_end
-
-    kind = op[0]
-    if kind == "put":
-        key = f"k{op[1]:04d}".encode()
-        val = f"v{op[2]}".encode()
-        assert a.put(key, val) == b.put(key, val)  # revisions
-    elif kind == "delete":
-        key = f"k{op[1]:04d}".encode()
-        assert a.delete_range(key, key + b"\x00") == b.delete_range(
-            key, key + b"\x00"
-        )
-    elif kind == "span":
-        pre = f"k{op[1]:02d}".encode()  # 10-key decimal prefix
-        assert a.range(pre, prefix_end(pre)) == b.range(pre, prefix_end(pre))
-    elif kind == "delspan":
-        pre = f"k{op[1]:02d}".encode()
-        assert a.delete_range(pre, prefix_end(pre)) == b.delete_range(
-            pre, prefix_end(pre)
-        )
-    else:  # cas
-        key = f"k{op[1]:04d}".encode()
-        ga, gb = a.get(key), b.get(key)
-        assert ga == gb
-        ver = ga[1] if ga else 0
-        val = f"c{op[2]}".encode()
-        assert a.cas(key, ver, val) == b.cas(key, ver, val) is True
-        # the version just moved: the same guard must now fail on both,
-        # without burning a revision on either
-        ra, rb = a._read_meta()["revision"], b._read_meta()["revision"]
-        assert a.cas(key, ver, b"stale") == b.cas(key, ver, b"stale") is False
-        assert a._read_meta()["revision"] == ra
-        assert b._read_meta()["revision"] == rb
-
-
-@settings(
-    max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow]
-)
-@given(ops=_KV_LAYOUT_OPS)
-def test_kv_layouts_are_observationally_equivalent(ops):
-    """The ordered layout (r13) is a storage choice, not an API change:
-    under ANY schedule of put / point-delete / prefix-scan /
-    prefix-delete — with the split constants shrunk so the schedule
-    crosses median-split boundaries — the hash and ordered stores must
-    return IDENTICAL results from every op, byte-for-byte including
-    versions (both stores see the same revision history), and the
-    ordered manifest must keep strictly ascending boundary keys with no
-    oversize bucket.  OR_INLINE_MAX is shrunk too, so schedules cross
-    the inline ↔ side-file boundary-storage threshold in both
-    directions (r14)."""
-    import json
-    import os
-
-    import elastic_stream_spark.kv as kvmod
-
-    saved = (
-        kvmod.KV_SHARDS,
-        kvmod.KV_RESHARD_AT,
-        kvmod.KV_MAX_SHARDS,
-        kvmod.OR_INLINE_MAX,
-    )
-    kvmod.KV_SHARDS, kvmod.KV_RESHARD_AT, kvmod.KV_MAX_SHARDS = 4, 4, 64
-    kvmod.OR_INLINE_MAX = 5
-    try:
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        with tempfile.TemporaryDirectory(prefix="ess-kvlay-", dir=base) as root:
-            h = KVStore(os.path.join(root, "h"))
-            o = KVStore(os.path.join(root, "o"), layout="ordered")
-            for op in ops:
-                _apply_layout_op(h, o, op)
-            assert h.range(b"", KVStore.FROM_KEY) == o.range(b"", KVStore.FROM_KEY)
-            meta = o._read_meta()
-            oranges = o._oranges(meta)
-            if oranges:
-                uppers = [u for _, u in oranges]
-                assert uppers[-1] is None
-                dec = [KVStore._dec(u) for u in uppers[:-1]]
-                assert dec == sorted(dec) and len(set(dec)) == len(dec)
-                for b, gen in meta["shards"].items():
-                    fn = KVStore._shard_filename(b, gen)
-                    with open(os.path.join(root, "o", fn)) as bf:
-                        assert len(json.load(bf)) <= 2 * kvmod.KV_RESHARD_AT
-    finally:
-        (
-            kvmod.KV_SHARDS,
-            kvmod.KV_RESHARD_AT,
-            kvmod.KV_MAX_SHARDS,
-            kvmod.OR_INLINE_MAX,
-        ) = saved
-
-
-@settings(
-    max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow]
-)
-@given(ops=_KV_LAYOUT_OPS)
-def test_kv_migration_preserves_observational_equivalence(ops):
-    """migrate_layout (r14): one store runs the whole schedule on hash;
-    the other starts hash and migrates to ordered MID-SCHEDULE.  Every
-    op before, at, and after the migration must return identical
-    results byte-for-byte including versions — the migration is a
-    layout change, not a mutation — and the migrated store must keep
-    the ordered invariants (ascending boundaries, pruned placement)."""
-    import os
-
-    import elastic_stream_spark.kv as kvmod
-
-    saved = (
-        kvmod.KV_SHARDS,
-        kvmod.KV_RESHARD_AT,
-        kvmod.KV_MAX_SHARDS,
-        kvmod.OR_INLINE_MAX,
-    )
-    kvmod.KV_SHARDS, kvmod.KV_RESHARD_AT, kvmod.KV_MAX_SHARDS = 4, 4, 64
-    kvmod.OR_INLINE_MAX = 5
-    try:
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        with tempfile.TemporaryDirectory(prefix="ess-kvmig-", dir=base) as root:
-            h = KVStore(os.path.join(root, "h"))
-            m = KVStore(os.path.join(root, "m"))  # hash, then migrated
-            mid = len(ops) // 2
-            for op in ops[:mid]:
-                _apply_layout_op(h, m, op)
-            m.migrate_layout("ordered")
-            assert m._read_meta()["layout"] == "ordered"
-            for op in ops[mid:]:
-                _apply_layout_op(h, m, op)
-            assert h.range(b"", KVStore.FROM_KEY) == m.range(b"", KVStore.FROM_KEY)
-            oranges = m._oranges(m._read_meta())
-            uppers = [u for _, u in oranges]
-            assert uppers[-1] is None
-            dec = [KVStore._dec(u) for u in uppers[:-1]]
-            assert dec == sorted(dec) and len(set(dec)) == len(dec)
-    finally:
-        (
-            kvmod.KV_SHARDS,
-            kvmod.KV_RESHARD_AT,
-            kvmod.KV_MAX_SHARDS,
-            kvmod.OR_INLINE_MAX,
-        ) = saved

@@ -31,10 +31,10 @@ from elastic_stream_spark.operators import GATE_ORDER, all_oracles, all_queries
 # curriculum_ramp_drift_audit) stay queued in operators/staged_r14/r15.
 NEW_R14: set[str] = set()
 
-# Changed in round 14 — none: the KV boundary-manifest paging and
-# migrate_layout work is storage-format-internal (hypothesis
-# equivalence property pins observational equivalence; kv_range_scan
-# builds its store fresh per run), and the bench canary is off-gate.
+# Changed in round 14 — none: that round's KV storage-format work
+# (since removed with the ordered layout) was internal to the store
+# (kv_range_scan builds its store fresh per run), and the bench canary
+# is off-gate.
 CHANGED_R14: set[str] = set()
 
 # The 50 queries whose last driver row is CORRECTNESS_r11 (they sat out

@@ -71,8 +71,7 @@ def bench_size(n: int) -> dict:
                 st.set_entry(f"key:{i:08d}".encode(), VALUE)
         del st  # release the bulk-load state BEFORE probing: it holds the
         gc.collect()  # whole keyspace, and gen-2 scans of it would charge
-        # ~100 ms harness-GC pauses to store puts (r14 finding — the r13
-        # ordered-at-cap p90 was dominated by exactly this artifact)
+        # ~100 ms harness-GC pauses to store puts
         # steady-state updates (no keyspace growth, no splits)
         upd = []
         for i in range(PROBES):
@@ -87,8 +86,8 @@ def bench_size(n: int) -> dict:
             kv.put(f"grow:{i:08d}".encode(), VALUE)
             ins.append((time.perf_counter() - t0) * 1000)
         meta = kv._read_meta()
-        nshards = meta.get("nshards", KV_SHARDS)
-        nextp = meta.get("next", 0)
+        nshards = meta["nshards"]
+        nextp = meta["next"]
         eff = nshards + nextp * (KV_RESHARD_FACTOR - 1)
         u50, u90, _ = _stats(upd)
         i50, i90, imax = _stats(ins)
@@ -122,14 +121,14 @@ def spike_point(boundary: int) -> dict:
         del st
         gc.collect()  # same harness-GC hygiene as bench_size
         before = kv._read_meta()
-        nextp0 = before.get("next", 0)
-        ns0 = before.get("nshards", KV_SHARDS)
+        nextp0 = before["next"]
+        ns0 = before["nshards"]
         for i in range(10):
             t0 = time.perf_counter()
             kv.put(f"spike:{i:02d}".encode(), VALUE)
             dt = (time.perf_counter() - t0) * 1000
             m = kv._read_meta()
-            if (m.get("nshards", KV_SHARDS), m.get("next", 0)) != (ns0, nextp0):
+            if (m["nshards"], m["next"]) != (ns0, nextp0):
                 return {
                     "boundary_keys": boundary,
                     "split_trigger_put_ms": round(dt, 3),
@@ -138,157 +137,6 @@ def spike_point(boundary: int) -> dict:
         raise RuntimeError(f"no split fired within 10 puts at {boundary}")
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-SPAN_KEYS = 1_000_000
-SPAN_WIDTH = 100  # keys per narrow prefix scan
-
-
-def span_scan_ab() -> dict:
-    """Hash-vs-ordered span-scan A/B at 1M keys (r12 VERDICT "what's
-    wrong" item 2 / next-round item 3): a 100-key prefix scan on the
-    hash layout must read EVERY bucket (any key hashes anywhere) while
-    the ordered layout's manifest-carried boundary keys prune it to the
-    overlapping bucket(s).  Also records the layouts' point-op parity
-    (both O(1)) and the ordered bulk-load cost so the trade is explicit."""
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out: dict = {"span_keys": SPAN_KEYS, "span_width": SPAN_WIDTH}
-    for layout in ("hash", "ordered"):
-        root = tempfile.mkdtemp(prefix=f"kvspan-{layout}-", dir=base)
-        try:
-            kv = KVStore(root, layout=layout)
-            t0 = time.perf_counter()
-            with kv._txn() as st:
-                for i in range(SPAN_KEYS):
-                    st.set_entry(f"key:{i:08d}".encode(), VALUE)
-            load_s = time.perf_counter() - t0
-            del st
-            gc.collect()  # same harness-GC hygiene as bench_size
-            meta = kv._read_meta()
-            if layout == "ordered":
-                buckets = len(meta["shards"])
-            else:
-                buckets = meta.get("nshards", KV_SHARDS) + meta.get(
-                    "next", 0
-                ) * (KV_RESHARD_FACTOR - 1)
-            # narrow prefix scans at five offsets, best-of to shed stalls
-            scans = []
-            for off in range(0, SPAN_KEYS, SPAN_KEYS // 5):
-                lo = f"key:{off:08d}".encode()
-                hi = f"key:{off + SPAN_WIDTH:08d}".encode()
-                t0 = time.perf_counter()
-                items, _ = kv.range(lo, hi)
-                scans.append((time.perf_counter() - t0) * 1000)
-                assert len(items) == SPAN_WIDTH
-            # pruned DeleteRange for the same width
-            t0 = time.perf_counter()
-            n_del = kv.delete_range(b"key:00000500", b"key:00000600")
-            del_ms = (time.perf_counter() - t0) * 1000
-            assert n_del == 100
-            # point-op parity
-            pts = []
-            for i in range(100):
-                k = f"key:{i * (SPAN_KEYS // 100):08d}".encode()
-                t0 = time.perf_counter()
-                kv.get(k)
-                pts.append((time.perf_counter() - t0) * 1000)
-            p50, _, _ = _stats(pts)
-            out[layout] = {
-                "buckets": buckets,
-                "bulk_load_s": round(load_s, 1),
-                "span_scan_ms_best": round(min(scans), 2),
-                "span_scan_ms_p50": round(statistics.median(scans), 2),
-                "delete_span_ms": round(del_ms, 2),
-                "point_get_ms_p50": p50,
-            }
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    out["scan_speedup_ordered"] = round(
-        out["hash"]["span_scan_ms_p50"] / out["ordered"]["span_scan_ms_p50"], 1
-    )
-    return out
-
-
-AT_CAP_KEYS = 4_500_000  # > 2*KV_RESHARD_AT * KV_MAX_SHARDS = 4.19M
-
-
-def ordered_at_cap() -> dict:
-    """BOTH layouts at the cap-binding keyspace, apples-to-apples (r13
-    review finding: the ordered cap was asserted but unbenched, and an
-    ordered-at-cap number against a hash-at-1M number flattered hash):
-    load past 2·KV_RESHARD_AT·KV_MAX_SHARDS keys so the ordered
-    boundary cap binds (hash reaches its round cap far earlier), then
-    record per layout the manifest size, point-put percentiles, and the
-    narrow span scan.  The expected read: ordered pays ~2× per put for
-    the manifest's boundary list and buys 3 orders of magnitude on
-    span scans; both manifests are CAP-BOUNDED, so neither grows with
-    further keyspace."""
-    import json as _json
-
-    from elastic_stream_spark.kv import KV_MAX_SHARDS
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out: dict = {"keys": AT_CAP_KEYS, "boundary_cap": KV_MAX_SHARDS}
-    for layout in ("hash", "ordered"):
-        root = tempfile.mkdtemp(prefix=f"kvcap-{layout}-", dir=base)
-        try:
-            kv = KVStore(root, layout=layout)
-            t0 = time.perf_counter()
-            with kv._txn() as st:
-                for i in range(AT_CAP_KEYS):
-                    st.set_entry(f"key:{i:08d}".encode(), VALUE)
-            load_s = time.perf_counter() - t0
-            del st
-            gc.collect()  # same harness-GC hygiene as bench_size; at 4.5M
-            # live entry dicts a gen-2 pass measured ~105 ms, and 8 of 50
-            # put probes paid it in the r13 artifact
-            meta_path = os.path.join(root, "kv-meta.json")
-            with open(meta_path) as f:
-                meta = _json.load(f)
-            max_bucket = 0
-            for b, g in meta["shards"].items():
-                p = os.path.join(root, KVStore._shard_filename(b, g))
-                # entry count without parsing: '"value"' per entry
-                with open(p) as bf:
-                    max_bucket = max(max_bucket, bf.read().count('"value"'))
-            puts = []
-            for i in range(50):
-                k = f"key:{i * (AT_CAP_KEYS // 50):08d}".encode()
-                t0 = time.perf_counter()
-                kv.put(k, VALUE + b"u")
-                puts.append((time.perf_counter() - t0) * 1000)
-            scans = []
-            for off in range(0, AT_CAP_KEYS, AT_CAP_KEYS // 5):
-                lo = f"key:{off:08d}".encode()
-                hi = f"key:{off + SPAN_WIDTH:08d}".encode()
-                t0 = time.perf_counter()
-                items, _ = kv.range(lo, hi)
-                scans.append((time.perf_counter() - t0) * 1000)
-                assert len(items) == SPAN_WIDTH
-            p50, p90, _ = _stats(puts)
-            row = {
-                "bulk_load_s": round(load_s, 1),
-                "manifest_bytes": os.path.getsize(meta_path),
-                "max_bucket_entries": max_bucket,
-                "put_ms_p50": p50,
-                "put_ms_p90": p90,
-                "span_scan_ms_p50": round(statistics.median(scans), 2),
-            }
-            if layout == "ordered":
-                # boundaries live in the kv-oranges side file past
-                # OR_INLINE_MAX (r14) — resolve through the store
-                oranges = kv._oranges(meta)
-                row["boundaries"] = len(oranges)
-                row["cap_bound"] = len(oranges) <= KV_MAX_SHARDS
-                gen = meta.get("oranges_gen")
-                if gen is not None:
-                    row["oranges_file_bytes"] = os.path.getsize(
-                        os.path.join(root, KVStore._oranges_file(gen))
-                    )
-            out[layout] = row
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 def main() -> None:
@@ -304,8 +152,6 @@ def main() -> None:
         "growth_inserts": GROWTH,
         "points": [bench_size(n) for n in SIZES],
         "split_spikes": [spike_point(b) for b in SPIKE_BOUNDARIES],
-        "span_scan_ab": span_scan_ab(),
-        "ordered_at_cap": ordered_at_cap(),
     }
     p50 = {p["keys"]: p["put_ms_p50"] for p in out["points"]}
     out["p50_growth_100x_keys"] = round(p50[100_000] / p50[1_000], 2)
