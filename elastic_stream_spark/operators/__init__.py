@@ -26,32 +26,24 @@ def _modules():
         relational,
         relational_ext,
         relational_tpch,
-        relational_tpch2,
-        relational_tpch3,
         retrieval,
         retrieval_fusion,
         scale_patterns,
-        staged_r12,
-        staged_r13,
-        text_pipeline,
         similarity,
         stream_ops,
         streaming_ops,
         text,
+        text_pipeline,
         timeseries,
     )
 
     return [
-        staged_r12,
-        staged_r13,
         retrieval,
         retrieval_fusion,
         stream_ops,
         relational,
         relational_ext,
         relational_tpch,
-        relational_tpch2,
-        relational_tpch3,
         dedup,
         pipeline,
         timeseries,
@@ -78,22 +70,21 @@ def _modules():
 # preempt a window slot.
 # r14 rotation — registry stays 150 (saturation; the r14 window is
 # fully claimed by its staleness-deadline class, zero free slots, no
-# NEW entries — the staged candidates pack_loader_roundtrip_audit and
-# curriculum_ramp_drift_audit stay queued).  The 50 queries whose last
-# driver row is r11 hit the ≤3-round staleness deadline and take ALL 50
-# window slots.  No r14 code touch changes a registered query's plan or
-# output: the r14 KV storage-format work (since removed with the
-# ordered layout) was internal to the store (kv_range_scan — the one
-# KV-backed registry query — builds its store fresh per run),
-# and the bench canary is off-gate.  So no CHANGED re-entries.
+# NEW entries).  The 50 queries whose last driver row is r11 hit the
+# ≤3-round staleness deadline and take ALL 50 window slots.  No r14
+# code touch changes a registered query's plan or output: the r14 KV
+# storage-format work (since removed with the ordered layout) was
+# internal to the store (kv_range_scan — the one KV-backed registry
+# query — builds its store fresh per run), and the bench canary is
+# off-gate.  So no CHANGED re-entries.
 #
 # Post-saturation escape hatch (policy, stated for future rounds): a
 # registered query may be RETIRED — removed here together with its
-# oracle and bench entry — when a staged successor strictly supersedes
-# it; the retirement frees that query's future deadline slots and the
-# successor enters as NEW inside the same window.  Until then, new
-# operators queue fully verified in operators/staged_r{N}.py
-# (currently: pack_loader_roundtrip_audit, curriculum_ramp_drift_audit).
+# oracle and bench entry — when a successor strictly supersedes it;
+# the retirement frees that query's future deadline slots and the
+# successor enters as NEW inside the same window.  Every operator lives
+# in the module of its family and is registered here
+# (tests/test_registry.py pins both).
 GATE_ORDER = [
     # ---------------- r14 window (first 50 = the driver's gate) ---------
     # --- the 50 r11-stale driver rows (rotation policy's ≤3-round

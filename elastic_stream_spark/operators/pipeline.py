@@ -194,6 +194,56 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def dedup_cluster_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Transitive-closure overreach audit for the near-dup clusters:
+    connected components chain A~B~C into one cluster even when A and C
+    were never verified as a pair, so a low-density large cluster is the
+    signature of chaining artifacts (and of over-aggressive keep-list
+    pruning: every non-representative member of that cluster is
+    dropped).  Per cluster SIZE, the audit reports how many clusters
+    exist, their verified-edge mass against the complete-graph
+    possible-pair count, and the resulting density — the table read
+    before trusting CC-based dedup at a new threshold.
+
+    Plan: the verified pair set is the session materialization (built
+    once, shared with dedup_clusters/pipeline_keep_list), labels come
+    from the same CC fixpoint; edges map onto their cluster via ONE
+    label join keyed on doc_a (doc_b carries the same label by
+    construction), then two map-side-combinable rollups (per cluster →
+    per size).  Nothing here exceeds the pair-set scale, which the
+    decade battery pins linear."""
+    pairs = ngram_pair_set(spark, sf_dir).select("doc_a", "doc_b")
+    labels = connected_components(pairs)
+    edges = pairs.join(
+        labels.withColumnRenamed("doc_id", "doc_a"), "doc_a"
+    ).select("cluster_id")
+    per_cluster = (
+        labels.groupBy("cluster_id")
+        .agg(F.count("*").cast("bigint").alias("n_docs"))
+        .join(
+            edges.groupBy("cluster_id").agg(
+                F.count("*").cast("bigint").alias("n_edges")
+            ),
+            "cluster_id",
+        )
+    )
+    return (
+        per_cluster.groupBy(F.col("n_docs").alias("cluster_size"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_clusters"),
+            F.sum("n_edges").cast("bigint").alias("n_edges"),
+            F.sum(F.expr("n_docs * (n_docs - 1) div 2"))
+            .cast("bigint")
+            .alias("n_possible"),
+        )
+        .withColumn(
+            "density",
+            F.round(F.col("n_edges") / F.col("n_possible"), 4),
+        )
+        .orderBy("cluster_size")
+    )
+
+
 # Standing-label memo for the incremental CC path: in production these
 # are YESTERDAY'S stored cluster labels (built once per corpus version);
 # cc_append's job is absorbing today's batch into them.  Session-memoized
@@ -703,6 +753,7 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "dedup_clusters": dedup_clusters,
+    "dedup_cluster_density_audit": dedup_cluster_density_audit,
     "cc_append": cc_append,
     "pipeline_keep_list": pipeline_keep_list,
     "pipeline_curation_verdict": pipeline_curation_verdict,
@@ -1044,4 +1095,27 @@ ORACLES = {
         GROUP BY split, shard
         ORDER BY split, shard
     """,
+    "dedup_cluster_density_audit": f"""
+        WITH RECURSIVE {_CC_SQL},
+        sized AS (
+          SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_docs
+          FROM comp GROUP BY cluster_id
+        ), cedges AS (
+          SELECT c.cluster_id, CAST(count(*) AS BIGINT) AS n_edges
+          FROM vpairs v JOIN comp c ON c.doc_id = v.doc_a
+          GROUP BY c.cluster_id
+        ), j AS (
+          SELECT s.n_docs AS cluster_size, e.n_edges, s.cluster_id
+          FROM sized s JOIN cedges e USING (cluster_id)
+        )
+        SELECT cluster_size,
+               CAST(count(*) AS BIGINT) AS n_clusters,
+               CAST(sum(n_edges) AS BIGINT) AS n_edges,
+               CAST(sum(cluster_size * (cluster_size - 1) // 2) AS BIGINT)
+                 AS n_possible,
+               round(sum(n_edges) * 1.0
+                     / sum(cluster_size * (cluster_size - 1) // 2), 4)
+                 AS density
+        FROM j GROUP BY cluster_size ORDER BY cluster_size
+        """,
 }

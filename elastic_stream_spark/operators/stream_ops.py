@@ -21,6 +21,8 @@ read path the reference exposes on the wire:
                           (rpc.fbs:788-819)
 - schema-on-read decode → ``payload_decode``    from_json over the log's
                           opaque payload bytes (flat_record.rs:30)
+- WAL recovery checks   → ``stream_integrity_audit`` via
+                          ``StreamLog.records`` (wal.rs:274-307)
 
 Plan shape at scale: fetch/trim filter on ``stream_id`` → directory-level
 partition pruning in the log layout; offset predicates push to parquet
@@ -163,6 +165,57 @@ def offset_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "stream_id BIGINT, event_type STRING, next_offset BIGINT",
     ).orderBy("stream_id")
+
+
+def stream_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's WAL-recovery verification (CRC + index rebuild,
+    components/store/src/io/wal.rs:274-307 / indexer.rs:295-352)
+    re-expressed as a DECLARATIVE audit over the stored log: per stream,
+    the offset space must be dense (no gaps), unique (no duplicate
+    offsets), 0-based, and partitioned into ranges none of which exceeds
+    the range size — the invariants every fetch relies on, as a
+    queryable table rather than a recovery-time side effect.  A non-zero
+    ``n_gaps``/``n_dups`` row is a torn or double-applied append the
+    log's reconcile path should have repaired.
+
+    Plan: one map-side-combinable aggregate over the (partition-pruned)
+    log scan per stream plus a per-(stream, range) rollup for the range
+    span — no joins wider than the |streams|-row key, no windows."""
+    eng = get_engine(spark, sf_dir)
+    rec = eng.log.records()
+    per_stream = rec.groupBy("stream_id").agg(
+        F.count("*").cast("bigint").alias("n_records"),
+        F.min("offset").cast("bigint").alias("first_offset"),
+        (F.max("offset") + 1).cast("bigint").alias("next_offset"),
+        F.countDistinct("offset").cast("bigint").alias("n_distinct"),
+    )
+    ranges = (
+        rec.groupBy("stream_id", "range_index")
+        .agg((F.max("offset") - F.min("offset") + 1).alias("span"))
+        .groupBy("stream_id")
+        .agg(
+            F.count("*").cast("bigint").alias("n_ranges"),
+            F.max("span").cast("bigint").alias("max_range_span"),
+        )
+    )
+    return (
+        per_stream.join(ranges, "stream_id")
+        .select(
+            "stream_id",
+            "n_records",
+            "first_offset",
+            "next_offset",
+            (F.col("next_offset") - F.col("first_offset") - F.col("n_distinct"))
+            .cast("bigint")
+            .alias("n_gaps"),
+            (F.col("n_records") - F.col("n_distinct"))
+            .cast("bigint")
+            .alias("n_dups"),
+            "n_ranges",
+            "max_range_span",
+        )
+        .orderBy("stream_id")
+    )
 
 
 def kv_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,6 +398,7 @@ QUERIES = {
     "list_ranges": list_ranges,
     "trim_fetch": trim_fetch,
     "offset_accounting": offset_accounting,
+    "stream_integrity_audit": stream_integrity_audit,
     "offset_for_timestamp": offset_for_timestamp,
     "kv_range_scan": kv_range_scan,
     "list_resources": list_resources,
@@ -434,6 +488,33 @@ ORACLES = {
                count(*) AS n, round(sum(value), 4) AS sum_value
         FROM records GROUP BY k_decile ORDER BY k_decile
     """,
+    "stream_integrity_audit": f"""
+        WITH records AS ({ENVELOPE_SQL}),
+        per_stream AS (
+          SELECT stream_id,
+                 CAST(count(*) AS BIGINT) AS n_records,
+                 CAST(min("offset") AS BIGINT) AS first_offset,
+                 CAST(max("offset") + 1 AS BIGINT) AS next_offset,
+                 CAST(count(DISTINCT "offset") AS BIGINT) AS n_distinct
+          FROM records GROUP BY stream_id
+        ), rngs AS (
+          SELECT stream_id,
+                 CAST(count(*) AS BIGINT) AS n_ranges,
+                 CAST(max(span) AS BIGINT) AS max_range_span
+          FROM (
+            SELECT stream_id, range_index,
+                   max("offset") - min("offset") + 1 AS span
+            FROM records GROUP BY stream_id, range_index
+          ) GROUP BY stream_id
+        )
+        SELECT p.stream_id, p.n_records, p.first_offset, p.next_offset,
+               CAST(p.next_offset - p.first_offset - p.n_distinct AS BIGINT)
+                 AS n_gaps,
+               CAST(p.n_records - p.n_distinct AS BIGINT) AS n_dups,
+               r.n_ranges, r.max_range_span
+        FROM per_stream p JOIN rngs r USING (stream_id)
+        ORDER BY p.stream_id
+        """,
 }
 
 # Replaying the watch feed must reproduce LIST_RESOURCE exactly — the

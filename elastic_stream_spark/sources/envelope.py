@@ -90,9 +90,8 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Session-memoized table row counts (r16): the two eval-holdout
-# broadcast sites (curation.decontaminate_ngrams,
-# staged_r17.decontaminate_semantic) guard their F.broadcast hint on
+# Session-memoized table row counts (r16): the eval-holdout broadcast
+# site (curation.decontaminate_ngrams) guards its F.broadcast hint on
 # the corpus size — the "eval set" is a modulus slice of the corpus, so
 # its size grows ∝ corpus and an unconditional broadcast OOMs at true
 # scale (r15 VERDICT item 2).  One count job per (session, sf_dir,

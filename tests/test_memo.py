@@ -5,11 +5,8 @@ every entry pins, directories included."""
 from __future__ import annotations
 
 import os
-import sys
 
 from conftest import SF_DIR
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SERVED = ("neardup_lookup_served", "sim_ann_ivf_pq_served", "jsonl_roundtrip_audit")
 
@@ -33,7 +30,6 @@ def test_sibling_session_gets_its_own_entries(spark):
 def test_evict_all_removes_memo_directories_and_rebuilds(spark):
     """The LSH index, IVF-PQ index and JSONL export are temp directories:
     eviction deletes them, and the next call rebuilds an equal answer."""
-    sys.path.insert(0, REPO)
     from elastic_stream_spark.functions.materialize import evict_all
     from elastic_stream_spark.operators import (
         all_oracles,

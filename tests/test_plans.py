@@ -280,7 +280,7 @@ def test_q21_profile_has_no_expand(spark):
     lineitem-sized shuffle input (r6 VERDICT "What's wrong" #1).  The
     rewrite keeps the result hash identical (driver gate) while this
     pins the plan shape."""
-    from elastic_stream_spark.operators.relational_tpch3 import q21_waiting_supplier
+    from elastic_stream_spark.operators.relational_tpch import q21_waiting_supplier
 
     plan = plan_of(q21_waiting_supplier(spark, SF_DIR))
     assert "Expand" not in plan, "q21 regressed to a countDistinct Expand"
@@ -646,17 +646,18 @@ def test_r11_operator_plans(spark):
     assert cm.count("Window") <= 1
 
 
-def test_r12_operator_plans(spark):
-    """Plan shapes for the three queries registered in r12: no cartesian
-    products, no Python evals, and — the load-bearing design claim — NO
-    window anywhere: the self-MRR rank is a count aggregate against a
-    broadcast self-score table (never a per-probe sort), and both audits
-    are pure map-side-combinable rollup chains.  The self-MRR's only
-    nested-loop joins are the 1-row corpus-stats attaches (broadcast of
-    a scalar, corpus-size-independent)."""
-    from elastic_stream_spark.operators.staged_r12 import (
+def test_self_mrr_one_window_and_audits_rollup_only(spark):
+    """Plan shapes for the self-MRR evaluation and the cluster-density /
+    stream-integrity audits: no cartesian products, no Python evals; the
+    self-MRR rank is ONE probe-partitioned window, and both audits are
+    pure map-side-combinable rollup chains with no window at all.  The
+    self-MRR's only nested-loop joins are the 1-row corpus-stats
+    attaches (broadcast of a scalar, corpus-size-independent)."""
+    from elastic_stream_spark.operators.pipeline import (
         dedup_cluster_density_audit,
-        retrieval_self_mrr,
+    )
+    from elastic_stream_spark.operators.retrieval import retrieval_self_mrr
+    from elastic_stream_spark.operators.stream_ops import (
         stream_integrity_audit,
     )
 
@@ -672,7 +673,7 @@ def test_r12_operator_plans(spark):
     # single-evaluation plan); r15's count-agg formulation avoided the
     # sort but evaluated the scoring subtree twice via a broadcast
     # self-score table — the interleaved A/B picked the window (see
-    # staged_r12.retrieval_self_mrr docstring).  Exactly one Window:
+    # retrieval.retrieval_self_mrr docstring).  Exactly one Window:
     # a second one would mean the double-evaluation crept back.
     assert mrr.count("Window") == 1
     assert "BroadcastHashJoin" in mrr  # probe terms broadcast
@@ -687,23 +688,15 @@ def test_r12_operator_plans(spark):
         assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_r13_operator_plans(spark):
-    """Plan shapes for the r13 registration and the staged r14 audit.
-    The attention-waste audit must be the span manifest's ONE placement
-    window followed by pure map-side-combinable rollups — no joins of
-    any kind.  The staged round-trip audit must read its span manifest
-    from the materialized cache in BOTH branches (InMemoryTableScan ≥ 2)
-    instead of re-deriving the corpus placement window per branch — the
-    double-traversal shape the r11 review caught in the fragmentation
-    audit's original form."""
+def test_attention_waste_audit_is_one_window_plus_rollups(spark):
+    """The attention-waste audit must be the span manifest's ONE
+    placement window followed by pure map-side-combinable rollups — no
+    joins of any kind."""
     from elastic_stream_spark.functions.materialize import (
         unpersist_materialized,
     )
-    from elastic_stream_spark.operators.staged_r13 import (
+    from elastic_stream_spark.operators.curation import (
         pack_attention_waste_audit,
-    )
-    from elastic_stream_spark.operators.staged_r14 import (
-        pack_loader_roundtrip_audit,
     )
 
     # hermetic: an earlier test's materialize() of the span manifest
@@ -724,31 +717,3 @@ def test_r13_operator_plans(spark):
     assert "Join" not in waste  # rollup chain only — no join of any kind
     assert "partial" in waste.lower()  # map-side combine in the rollups
 
-    rt = plan(pack_loader_roundtrip_audit)
-    assert "CartesianProduct" not in rt
-    assert "BatchEvalPython" not in rt and "ArrowEvalPython" not in rt
-    assert rt.count("InMemoryTableScan") >= 2  # manifest materialized once
-    assert "BroadcastNestedLoopJoin" not in rt  # all joins keyed
-
-
-def test_staged_decontamination_plans_have_no_scale_killers(spark):
-    """The staged r16/r17 candidates sit outside the registry plan
-    sweep until registered, so their 100 TB contract is pinned here:
-    candidate generation must stay an equi-join (no cartesian / no
-    nested-loop product), and the only Python boundary allowed is the
-    Arrow mapInPandas signature matmul (no row-at-a-time
-    BatchEvalPython anywhere)."""
-    from elastic_stream_spark.operators.staged_r16 import decontaminate_neardup
-    from elastic_stream_spark.operators.staged_r17 import decontaminate_semantic
-
-    for q in (decontaminate_neardup, decontaminate_semantic):
-        plan = plan_of(q(spark, SF_DIR))
-        assert "CartesianProduct" not in plan, q.__name__
-        assert "BatchEvalPython" not in plan, q.__name__
-        assert "BroadcastNestedLoopJoin" not in plan, q.__name__
-    # r15: the semantic leg's eval side is now EXPLICITLY broadcast
-    # (F.broadcast(ue) — the 100 TB physical plan its docstring promises,
-    # matching staged_r16's F.broadcast(eval_b)): the verified join's
-    # eval side must be a BroadcastHashJoin, not left to size estimates
-    sem = plan_of(decontaminate_semantic(spark, SF_DIR))
-    assert "BroadcastHashJoin" in sem

@@ -12,6 +12,9 @@ driver row was r11 take ALL 50 policy-deadline slots this round
 Every query is additionally re-verified each round by the committed
 strict full-registry self-check at both sf.
 
+Every operator module is in ``_modules()`` and named for its family,
+never for the round that wrote it (the last test pins both).
+
 Refactor convention (FP_TERM_MOD precedent, r10): code touches that
 provably change neither the plan nor the output on the gate fixtures do
 NOT preempt window slots; the full self-check covers them.  No r14 code
@@ -23,12 +26,16 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
-from elastic_stream_spark.operators import GATE_ORDER, all_oracles, all_queries
+from elastic_stream_spark.operators import (
+    GATE_ORDER,
+    _modules,
+    all_oracles,
+    all_queries,
+)
 
-# New in round 14 — none: the registry is saturated (zero free slots);
-# the staged candidates (pack_loader_roundtrip_audit,
-# curriculum_ramp_drift_audit) stay queued in operators/staged_r14/r15.
+# New in round 14 — none: the registry is saturated (zero free slots).
 NEW_R14: set[str] = set()
 
 # Changed in round 14 — none: that round's KV storage-format work
@@ -199,3 +206,30 @@ def test_only_the_session_memo_reads_session_identity():
             if "applicationId" in src or "sessionUUID" in src:
                 readers.append(os.path.relpath(path, here))
     assert not readers, f"modules reading session identity: {readers}"
+
+
+def test_every_operator_module_is_registered_and_named_for_its_family():
+    """Every operator module is reachable from the registry — a module
+    outside ``_modules()`` is code only its own tests run — and no
+    source or test file is named for the round that wrote it (an
+    ``_r<N>`` suffix) rather than for what it does."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ops = os.path.join(here, "elastic_stream_spark", "operators")
+    on_disk = {
+        fn[: -len(".py")]
+        for fn in os.listdir(ops)
+        if fn.endswith(".py") and fn != "__init__.py"
+    }
+    registered = {m.__name__.rsplit(".", 1)[-1] for m in _modules()}
+    assert on_disk - registered == set(), "operator modules outside _modules()"
+
+    round_named = []
+    for top in ("elastic_stream_spark", "tests"):
+        for root, dirs, files in os.walk(os.path.join(here, top)):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            round_named += [
+                os.path.relpath(os.path.join(root, fn), here)
+                for fn in dirs + files
+                if re.search(r"_r\d+", fn)
+            ]
+    assert not round_named, f"round-named files: {round_named}"

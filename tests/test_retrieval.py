@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from elastic_stream_spark.operators import all_oracles
@@ -218,3 +219,16 @@ def test_lsh_index_layout_and_serving_parity(spark, workdir):
     served = [tuple(r) for r in neardup_lookup_served(spark, workdir).collect()]
     assert served == inline
     assert served, "crafted batch doc must near-dup the corpus docs"
+
+
+def test_self_mrr_invariants(spark):
+    """Every probe is answered; MRR ∈ (0, 1]; top-1 hits never exceed
+    probe counts; and the probe modulus actually selects probes."""
+    from elastic_stream_spark.operators.retrieval import retrieval_self_mrr
+
+    rows = retrieval_self_mrr(spark, SF_DIR).collect()
+    assert rows
+    for r in rows:
+        assert r.n_probes >= 1
+        assert 0 <= r.n_top1 <= r.n_probes
+        assert 0.0 < r.mrr <= 1.0

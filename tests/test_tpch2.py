@@ -1,7 +1,8 @@
-"""Second TPC-H tranche (relational_tpch2) + corpus-pipeline operators
-(text_pipeline): semantic spot checks at sf0.001 plus the plan-shape
-assertions that pin the 100 TB execution contract (broadcast dims, no
-cartesian products, map-side partial aggregation)."""
+"""TPC-H queries q2/q4/q6/q15/q17/q18/q22 (``relational_tpch``) +
+corpus-pipeline operators (``text_pipeline``): semantic spot checks at
+sf0.001 plus the plan-shape assertions that pin the 100 TB execution
+contract (broadcast dims, no cartesian products, map-side partial
+aggregation)."""
 
 from __future__ import annotations
 
@@ -10,9 +11,16 @@ import hashlib
 import io
 from collections import Counter
 
-from pyspark.sql import functions as F
-
 SF_DIR = "/root/testdata/sf0.001"
+TPCH_QUERIES = (
+    "q2_min_acctbal_supplier",
+    "q4_order_priority",
+    "q6_forecast_revenue",
+    "q15_top_supplier",
+    "q17_small_quantity_revenue",
+    "q18_large_volume_customer",
+    "q22_global_sales_opportunity",
+)
 
 
 def plan_of(df) -> str:
@@ -22,11 +30,11 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-# ---------------------------------------------------------------- tpch2
+# ---------------------------------------------------------------- tpch
 
 
 def test_q6_matches_manual_aggregate(spark):
-    from elastic_stream_spark.operators.relational_tpch2 import q6_forecast_revenue
+    from elastic_stream_spark.operators.relational_tpch import q6_forecast_revenue
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").collect()
     exp = sum(
@@ -42,7 +50,7 @@ def test_q6_matches_manual_aggregate(spark):
 
 
 def test_q18_threshold_and_order(spark):
-    from elastic_stream_spark.operators.relational_tpch2 import (
+    from elastic_stream_spark.operators.relational_tpch import (
         Q18_MIN_QTY,
         q18_large_volume_customer,
     )
@@ -54,7 +62,7 @@ def test_q18_threshold_and_order(spark):
 
 
 def test_q15_selects_the_max_revenue_suppliers(spark):
-    from elastic_stream_spark.operators.relational_tpch2 import q15_top_supplier
+    from elastic_stream_spark.operators.relational_tpch import q15_top_supplier
 
     df = q15_top_supplier(spark, SF_DIR)
     rows = df.collect()
@@ -63,7 +71,7 @@ def test_q15_selects_the_max_revenue_suppliers(spark):
 
 
 def test_q2_rank1_is_min_acctbal_per_part(spark):
-    from elastic_stream_spark.operators.relational_tpch2 import (
+    from elastic_stream_spark.operators.relational_tpch import (
         q2_min_acctbal_supplier,
     )
 
@@ -77,20 +85,20 @@ def test_q2_rank1_is_min_acctbal_per_part(spark):
 
 
 def test_tpch2_plans_broadcast_and_no_cartesian(spark):
-    """Every tpch2 query: dims broadcast, and no cartesian / nested-loop
-    product sneaks in (the q15/q22 scalar joins must plan as 1-row
-    BROADCAST joins on the constant key, not CartesianProduct)."""
-    from elastic_stream_spark.operators import relational_tpch2 as t2
+    """Every query of this file's set: dims broadcast, and no cartesian /
+    nested-loop product sneaks in (the q15/q22 scalar joins must plan as
+    1-row BROADCAST joins on the constant key, not CartesianProduct)."""
+    from elastic_stream_spark.operators.relational_tpch import QUERIES
 
-    for name, fn in t2.QUERIES.items():
-        plan = plan_of(fn(spark, SF_DIR))
+    for name in TPCH_QUERIES:
+        plan = plan_of(QUERIES[name](spark, SF_DIR))
         assert "CartesianProduct" not in plan, name
         if name not in ("q6_forecast_revenue",):  # q6 is joinless
             assert "Broadcast" in plan, name
 
 
 def test_q4_semi_join_shape(spark):
-    from elastic_stream_spark.operators.relational_tpch2 import q4_order_priority
+    from elastic_stream_spark.operators.relational_tpch import q4_order_priority
 
     plan = plan_of(q4_order_priority(spark, SF_DIR))
     assert "LeftSemi" in plan
