@@ -67,11 +67,6 @@ class FencedError(RuntimeError):
     """Writer presented a stale epoch (≙ EXPIRED_RANGE_EPOCH, rpc.fbs:48-51)."""
 
 
-class OffsetOutOfOrder(RuntimeError):
-    """Append base offset does not match next expected offset
-    (≙ range-server/src/range_manager/window.rs:79 check_barrier)."""
-
-
 class SealedRange(RuntimeError):
     """Write addressed to a sealed (immutable) range."""
 
@@ -96,21 +91,6 @@ class StreamMeta:
     # offset advance); readers admit up to confirmed, never reserved.
     confirmed_offset: int = 0
     epoch: int = 0  # writer fencing token
-
-    @classmethod
-    def from_raw(cls, raw: dict) -> "StreamMeta":
-        """Deserialize a shard's stream record, upgrading legacy shards
-        written before ``confirmed_offset`` existed: absent field → the
-        stream predates in-flight tracking, so everything ever appended
-        is durable (confirmed = next_offset).  This matches the streaming
-        source's fallback (streaming/datasource.py
-        _read_confirmed_offset); defaulting to the dataclass's 0 instead
-        made ``StreamLog.confirmed_offset()`` / ``poll_fetch`` report
-        zero availability on pre-upgrade catalogs — silent empty fetches
-        until the next append confirmed (caught in review)."""
-        if "confirmed_offset" not in raw:
-            raw = {**raw, "confirmed_offset": raw["next_offset"]}
-        return cls(**raw)
 
 
 @dataclass
@@ -222,7 +202,13 @@ class StreamCatalog:
         if not os.path.exists(p):
             return None
         with open(p) as f:
-            return json.load(f)
+            data = json.load(f)
+        if "confirmed_offset" not in data["stream"]:
+            # every writer stamps the field (create_stream, bulk_register);
+            # guessing it would either hide landed records (0) or admit
+            # in-flight ones (next_offset)
+            raise ValueError(f"{p}: stream record has no confirmed_offset")
+        return data
 
     def _write_shard(self, stream_id: int, data: dict) -> None:
         os.makedirs(self._streams_dir, exist_ok=True)
@@ -271,13 +257,6 @@ class StreamCatalog:
                 t.sid = stream_id
                 t.stream = data["stream"]
                 t.ranges = data["ranges"]
-                # upgrade-on-first-write for legacy shards (see
-                # StreamMeta.from_raw): materialize the confirmed =
-                # next_offset fallback BEFORE any mutation — a
-                # reserve_offsets that bumps next_offset first would
-                # otherwise inflate the fallback and mark its own
-                # in-flight block durable
-                t.stream.setdefault("confirmed_offset", t.stream["next_offset"])
             yield t
             self._stage_events(t)
             if t.sid is not None:
@@ -365,8 +344,7 @@ class StreamCatalog:
                 if not fn.endswith(".json"):
                     continue
                 sid = fn[: -len(".json")]
-                with open(os.path.join(self._streams_dir, fn)) as f:
-                    data = json.load(f)
+                data = self._read_shard(int(sid))
                 st.streams[sid] = data["stream"]
                 st.ranges[sid] = data["ranges"]
         if m.pending_shard is not None:  # committed, not yet applied
@@ -423,7 +401,7 @@ class StreamCatalog:
         data = self._read_shard(stream_id)
         if data is None or data["stream"]["deleted"]:
             raise StreamNotFound(stream_id)
-        return StreamMeta.from_raw(data["stream"])
+        return StreamMeta(**data["stream"])
 
     def update_stream(self, stream_id: int, **updates) -> StreamMeta:
         """≙ UPDATE_STREAM 0x3003 (pd/pkg/server/cluster/stream.go:79-96).
@@ -437,7 +415,7 @@ class StreamCatalog:
                 raise StreamNotFound(stream_id)
             t.stream.update(updates)
             self._emit(t, "updated", "stream", stream_id, **updates)
-            return StreamMeta.from_raw(t.stream)
+            return StreamMeta(**t.stream)
 
     def delete_stream(self, stream_id: int) -> None:
         """≙ DELETE_STREAM 0x3002 — tombstone; data reclaim is deferred to
@@ -448,7 +426,7 @@ class StreamCatalog:
 
     def list_streams(self, include_deleted: bool = False) -> list[StreamMeta]:
         st = self._load()
-        out = [StreamMeta.from_raw(raw) for raw in st.streams.values()]
+        out = [StreamMeta(**raw) for raw in st.streams.values()]
         if not include_deleted:
             out = [s for s in out if not s.deleted]
         return sorted(out, key=lambda s: s.stream_id)
@@ -647,9 +625,7 @@ class StreamCatalog:
             # bulk registration happens AFTER the bulk data write landed
             # (the bulk_load → bulk_register protocol), so the whole
             # extent is durable — confirm it
-            sraw["confirmed_offset"] = max(
-                next_offset, sraw.get("confirmed_offset", 0)
-            )
+            sraw["confirmed_offset"] = max(next_offset, sraw["confirmed_offset"])
             sraw["epoch"] = n_full
             for r in ranges:
                 self._emit(
@@ -733,7 +709,7 @@ class StreamCatalog:
             if sraw["deleted"]:
                 raise StreamNotFound(stream_id)
             if new_start_offset <= sraw["start_offset"]:
-                return StreamMeta.from_raw(sraw)
+                return StreamMeta(**sraw)
             if new_start_offset > sraw["next_offset"]:
                 raise ValueError("cannot trim past next_offset")
             sraw["start_offset"] = new_start_offset
@@ -759,4 +735,4 @@ class StreamCatalog:
             self._emit(
                 t, "trimmed", "stream", stream_id, start_offset=new_start_offset
             )
-            return StreamMeta.from_raw(sraw)
+            return StreamMeta(**sraw)

@@ -139,8 +139,8 @@ class Stream:
         """Driver-side payload bytes, offset order — the reference's
         ``Vec<Bytes>`` shape (small windows only; use ``read`` for
         anything big)."""
-        rows = self.read(start_offset, end_offset).select("offset", "payload").collect()
-        return [bytes(r.payload) for r in sorted(rows, key=lambda r: r.offset)]
+        rows = self.read(start_offset, end_offset).select("payload").collect()
+        return [bytes(r.payload) for r in rows]  # fetch orders by offset
 
     # --------------------------------------------------------- lifecycle
 

@@ -60,10 +60,3 @@ def bow_fingerprint(text: Column | str) -> Column:
     DuckDB: ``md5(array_to_string(list_sort(list_distinct(
     string_split(lower(text),' '))), ' '))``."""
     return F.md5(F.concat_ws(" ", F.sort_array(distinct_tokens(text))))
-
-
-def minhash_value(shingle: Column, seed: int) -> Column:
-    """One MinHash hash: md5 hex of ``seed|shingle`` — a uniform hash whose
-    *string* minimum is the minhash (hex strings order like their numeric
-    value).  DuckDB: ``md5(concat(seed, '|', shingle))``."""
-    return F.md5(F.concat(F.lit(f"{seed}|"), shingle))

@@ -23,6 +23,7 @@ matching the reference's claim that throughput is flat in stream count).
 from __future__ import annotations
 
 import fcntl
+import glob
 import os
 from contextlib import contextmanager
 
@@ -47,6 +48,41 @@ RECORD_SCHEMA = T.StructType(
 PAYLOAD_COLS = ["ts", "properties", "payload"]
 
 
+# Record layout: every path under the records root is built and parsed
+# here, so the log, the objects catalog and the streaming source agree on
+# it.  The functions take the records root, not a catalog root: a
+# trimmed-engine clone shares its parent's records root.
+
+
+def records_root(catalog_root: str) -> str:
+    """The records root of the log kept under ``catalog_root``."""
+    return f"{catalog_root}/records"
+
+
+def range_dir(records_root: str, stream_id: int, range_index: int) -> str:
+    """The directory holding one range's data files."""
+    return f"{records_root}/stream_id={stream_id}/range_index={range_index}"
+
+
+def range_dirs(records_root: str, stream_id: int) -> list[tuple[int, str]]:
+    """``(range_index, directory)`` of each range directory the stream has
+    on disk, by range index."""
+    found = glob.glob(f"{records_root}/stream_id={stream_id}/range_index=*")
+    return sorted((int(d.rsplit("=", 1)[1]), d) for d in found)
+
+
+def path_stream_id(path: str) -> int | None:
+    """Stream id parsed from a log data-file path; None when the path is
+    not laid out by the log."""
+    for part in path.split(os.sep):
+        if part.startswith("stream_id="):
+            try:
+                return int(part.split("=", 1)[1])
+            except ValueError:
+                return None
+    return None
+
+
 class StreamLog:
     """Append/fetch over the partitioned record log.
 
@@ -59,7 +95,7 @@ class StreamLog:
 
         self.spark = spark
         self.catalog = catalog
-        self.records_root = f"{catalog.root}/records"
+        self.records_root = records_root(catalog.root)
         self.objects = ObjectStore(catalog.root)
 
     # ----------------------------------------------------------- append
@@ -285,7 +321,7 @@ class StreamLog:
     # ---------------------------------------------------- objects plane
 
     def _range_dir(self, stream_id: int, range_index: int) -> str:
-        return f"{self.records_root}/stream_id={stream_id}/range_index={range_index}"
+        return range_dir(self.records_root, stream_id, range_index)
 
     def commit_objects(self, stream_id: int) -> int:
         """Register every not-yet-committed data file of the stream in the
@@ -293,16 +329,11 @@ class StreamLog:
         becomes readable metadata).  Idempotent; returns the number of
         newly committed objects.  Row counts come from parquet footers —
         no data is read."""
-        import glob as _glob
-
         from elastic_stream_spark.objects import file_row_count, parquet_files
 
         known = {o.path for o in self.objects.list_objects(stream_id)}
         entries = []
-        for d in sorted(
-            _glob.glob(f"{self.records_root}/stream_id={stream_id}/range_index=*")
-        ):
-            ridx = int(d.rsplit("=", 1)[1])
+        for ridx, d in range_dirs(self.records_root, stream_id):
             for p in parquet_files(d):
                 if p in known:
                     continue
@@ -344,7 +375,6 @@ class StreamLog:
         vacuum/optimize entry — under ``_maintenance_lock``, so leftovers
         are guaranteed crash debris, never another process's live swap —
         and one completed maintenance pass heals any earlier crash."""
-        import glob as _glob
         import shutil
 
         for scratch in (
@@ -353,7 +383,7 @@ class StreamLog:
         ):
             if not os.path.isdir(scratch):
                 continue
-            for old in _glob.glob(f"{scratch}/old-s{stream_id}-r*"):
+            for old in glob.glob(f"{scratch}/old-s{stream_id}-r*"):
                 tag = os.path.basename(old)[len("old-") :]
                 sid_s, ridx_s = tag[1:].split("-r")
                 d = self._range_dir(int(sid_s), int(ridx_s))
@@ -361,7 +391,7 @@ class StreamLog:
                     os.replace(old, d)
                 else:
                     shutil.rmtree(old)
-            for tmp in _glob.glob(f"{scratch}/rewrite-s{stream_id}-r*"):
+            for tmp in glob.glob(f"{scratch}/rewrite-s{stream_id}-r*"):
                 shutil.rmtree(tmp, ignore_errors=True)
 
     def optimize(self, stream_id: int) -> dict[int, tuple[int, int]]:
@@ -439,13 +469,7 @@ class StreamLog:
             self._repair_swaps(stream_id)  # heal any earlier maintenance crash
             keep_from = sraw["start_offset"]
             live = {r["range_index"] for r in stream_ranges}
-            import glob
-            import os
-
-            for d in glob.glob(
-                f"{self.records_root}/stream_id={stream_id}/range_index=*"
-            ):
-                ridx = int(d.rsplit("=", 1)[1])
+            for ridx, d in range_dirs(self.records_root, stream_id):
                 if sraw["deleted"] or ridx not in live:
                     self.objects.remove(parquet_files(d))
                     shutil.rmtree(d)
@@ -464,7 +488,7 @@ class StreamLog:
             scratch = f"{self.catalog.root}/_vacuum_tmp"
             os.makedirs(scratch, exist_ok=True)
             for r in stream_ranges:
-                d = f"{self.records_root}/stream_id={stream_id}/range_index={r['range_index']}"
+                d = self._range_dir(stream_id, r["range_index"])
                 if not os.path.exists(d):
                     continue
                 df = self.spark.read.parquet(d)

@@ -40,6 +40,8 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from elastic_stream_spark.log import path_stream_id
+
 OBJECTS_SCHEMA = (
     "object_id BIGINT, stream_id BIGINT, range_index BIGINT, path STRING, "
     "n_records BIGINT, n_bytes BIGINT, committed_at_ms BIGINT"
@@ -57,19 +59,6 @@ class ObjectMeta:
     n_records: int
     n_bytes: int
     committed_at_ms: int
-
-
-def _path_stream_id(path: str) -> int | None:
-    """Stream id parsed from a log data-file path
-    (``.../stream_id=<sid>/range_index=<i>/...``); None when the path is
-    not laid out by the log."""
-    for part in path.split(os.sep):
-        if part.startswith("stream_id="):
-            try:
-                return int(part.split("=", 1)[1])
-            except ValueError:
-                return None
-    return None
 
 
 class ObjectStore:
@@ -196,7 +185,7 @@ class ObjectStore:
         with self._locked():
             by_sid: dict[int | None, list[str]] = {}
             for p in paths:
-                by_sid.setdefault(_path_stream_id(p), []).append(p)
+                by_sid.setdefault(path_stream_id(p), []).append(p)
             strays = by_sid.pop(None, [])
             n = 0
             for sid, ps in by_sid.items():

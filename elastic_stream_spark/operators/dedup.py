@@ -805,24 +805,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the band equi-join.
     """
     sh = _doc_shingles(spark, sf_dir)
-    mh = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"m{i}")
-            for i in range(MINHASH_K)
-        ]
-    )
-    # band bucket = hash of the band's row minhashes (projection, no agg)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"m{band * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-                ).alias("bucket"),
-            )
-            for band in range(LSH_BANDS)
-        ]
-    )
     # candidate pairs via POSTING LISTS, not a band self-join (r16 —
     # the dedup_simhash/_ngram_pair_set shape): each (band, bucket)
     # collects its sorted member list and pairs come from an in-place
@@ -833,11 +815,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # simhash rewrite removed (guide §2.4/§5).  Per-bucket state is
     # O(bucket size); the join generated the identical k²/2 pairs per
     # bucket.
-    bands = mh.select("doc_id", F.explode(band_structs).alias("bb")).select(
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-        "doc_id",
-    )
+    bands = _minhash_bands(sh)
     posting = (
         bands.groupBy("band", "bucket")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))

@@ -1,8 +1,4 @@
-from elastic_stream_spark.streaming.source import (
-    poll_fetch,
-    read_records_stream,
-    read_stream,
-)
+from elastic_stream_spark.streaming.source import poll_fetch
 from elastic_stream_spark.streaming.datasource import StreamLogDataSource
 from elastic_stream_spark.streaming.sink import ExactlyOnceAppendSink
 from elastic_stream_spark.streaming.pipeline import (
@@ -25,8 +21,6 @@ from elastic_stream_spark.streaming.metrics import (
 )
 
 __all__ = [
-    "read_stream",
-    "read_records_stream",
     "poll_fetch",
     "ExactlyOnceAppendSink",
     "IncrementalCCAbsorber",

@@ -2,15 +2,13 @@
 
 ≙ the reference's FETCH record/byte budget with long-poll
 (docs/sbp.md:220-285): every production consumer's first knob is "at most
-N records per poll".  The file-source subscription (``source.read_stream``)
-maps the BYTE and FILE budgets onto ``maxBytesPerTrigger`` /
-``maxFilesPerTrigger``, but Spark's file source admits whole files and
-cannot cap *rows* per microbatch.  This module closes that gap with a real
-Structured Streaming source built on the PySpark Python Data Source API
-(SPARK-44076, pyspark 4.x): stream offsets ARE the source's offsets, so
-record admission is exact — ``latestOffset`` advances by at most
-``maxRecordsPerTrigger`` past the last committed position, the
-``maxOffsetsPerTrigger`` contract Kafka consumers rely on.
+N records per poll".  This is the log's one Structured Streaming source,
+built on the PySpark Python Data Source API (SPARK-44076, pyspark 4.x):
+stream offsets ARE the source's offsets, so record admission is exact —
+``latestOffset`` advances by at most ``maxRecordsPerTrigger`` past the
+last committed position, the ``maxOffsetsPerTrigger`` contract Kafka
+consumers rely on.  A subscription may start before the stream's first
+append.
 
 Plan shape: one ``InputPartition`` per overlapping catalog range, read
 executor-side as Arrow batches via pyarrow dataset with an offset-window
@@ -59,8 +57,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-# DDL mirror of log.RECORD_SCHEMA (kept literal: the data source must not
-# import Spark-session machinery at executor unpickle time).
+from elastic_stream_spark.catalog import StreamCatalog, StreamNotFound
+from elastic_stream_spark.log import range_dir, range_dirs, records_root
+from elastic_stream_spark.objects import parquet_files
+
+# log.RECORD_SCHEMA as DDL, every column nullable
 RECORD_DDL = (
     "stream_id BIGINT, range_index INT, offset BIGINT, ts TIMESTAMP, "
     "properties MAP<STRING,STRING>, payload BINARY"
@@ -78,39 +79,9 @@ class RangeSlice(InputPartition):
     hi: int  # exclusive
 
 
-def _read_shard(root: str, stream_id: int) -> dict | None:
-    """The stream's catalog shard (``streams/<sid>.json``) — a plain JSON
-    read so partition planning needs no catalog class on executors; one
-    shard is O(this stream), independent of catalog size."""
-    path = os.path.join(root, "streams", f"{stream_id}.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
-def _read_confirmed_offset(root: str, stream_id: int) -> int:
-    """Durable availability probe (driver-side, metadata-only; ≙ the
-    long-poll's confirm-offset check, docs/sbp.md:246-252): the CONFIRM
-    offset, advanced only after a reserved block's data write lands.
-    Admitting the reserve-time ``next_offset`` instead would let the
-    source plan a window over an in-flight write, find zero rows at
-    read time, commit the batch, and permanently skip the records that
-    land moments later (silent loss — caught in review).  Falls back to
-    next_offset for shards written before the confirm field existed."""
-    data = _read_shard(root, stream_id)
-    if data is None:
-        return 0
-    s = data["stream"]
-    return int(s.get("confirmed_offset", s["next_offset"]))
-
-
-def _read_ranges(root: str, stream_id: int) -> list[dict]:
-    data = _read_shard(root, stream_id)
-    return [] if data is None else data["ranges"]
-
-
-def _stream_row_groups(root: str, stream_id: int) -> list[tuple[int, int, int, int]]:
+def _stream_row_groups(
+    records_root: str, stream_id: int
+) -> list[tuple[int, int, int, int]]:
     """(offset_lo, offset_hi, n_rows, compressed_bytes) per parquet row
     group across the stream's range files, offset-sorted — footer metadata
     only (the same footers the fetch path reads for row-group pruning),
@@ -120,17 +91,10 @@ def _stream_row_groups(root: str, stream_id: int) -> list[tuple[int, int, int, i
     stream-wide average could."""
     import pyarrow.parquet as pq
 
-    base = os.path.join(root, "records", f"stream_id={stream_id}")
     out: list[tuple[int, int, int, int]] = []
-    if not os.path.isdir(base):
-        return out
-    for rng in sorted(os.scandir(base), key=lambda e: e.name):
-        if not rng.is_dir():
-            continue
-        for f in sorted(os.scandir(rng.path), key=lambda e: e.name):
-            if not f.name.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(f.path).metadata
+    for _, d in range_dirs(records_root, stream_id):
+        for path in parquet_files(d):
+            md = pq.ParquetFile(path).metadata
             for g in range(md.num_row_groups):
                 rg = md.row_group(g)
                 lo = hi = None
@@ -175,6 +139,8 @@ def fair_split(backlog: dict[int, int], budget: int) -> dict[int, int]:
 class StreamLogStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         self.root = options["root"]
+        self.catalog = StreamCatalog(self.root)
+        self.records_root = records_root(self.root)
         ids = options.get("streamids", options.get("streamid"))
         if ids is None:
             raise ValueError("stream_log source needs streamId or streamIds")
@@ -266,11 +232,24 @@ class StreamLogStreamReader(DataSourceStreamReader):
             os.replace(tmp, self._progress_path)
         return self._to_wire(dict(self.start_offsets))
 
+    def _confirmed(self, sid: int) -> int:
+        """Durable availability (≙ the long-poll's confirm-offset check,
+        docs/sbp.md:246-252): the CONFIRM offset, advanced only after a
+        reserved block's data write lands.  Admitting the reserve-time
+        ``next_offset`` instead would let the source plan a window over
+        an in-flight write, find zero rows at read time, commit the
+        batch, and permanently skip the records that land moments later.
+        A stream the catalog does not know (yet), or a deleted one,
+        admits nothing."""
+        try:
+            return self.catalog.describe_stream(sid).confirmed_offset
+        except StreamNotFound:
+            return 0
+
     def latestOffset(self) -> dict:  # noqa: N802
         base = self._committed_progress() if self._last is None else self._last
         backlog = {
-            s: max(0, _read_confirmed_offset(self.root, s) - base[s])
-            for s in self.stream_ids
+            s: max(0, self._confirmed(s) - base[s]) for s in self.stream_ids
         }
         admitted = fair_split(backlog, self.max_records)
         if self.max_bytes is not None:
@@ -287,11 +266,11 @@ class StreamLogStreamReader(DataSourceStreamReader):
         listing until the next reservation; the confirm offset only
         advances after the files are durable, so a refreshed listing is
         always complete up to the key."""
-        committed = _read_confirmed_offset(self.root, sid)
+        committed = self._confirmed(sid)
         hit = self._rg_cache.get(sid)
         if hit is not None and hit[0] == committed:
             return hit[1]
-        groups = _stream_row_groups(self.root, sid)
+        groups = _stream_row_groups(self.records_root, sid)
         self._rg_cache[sid] = (committed, groups)
         return groups
 
@@ -388,18 +367,13 @@ class StreamLogStreamReader(DataSourceStreamReader):
             hi = hi_map.get(sid, lo)
             if hi <= lo:
                 continue
-            for r in _read_ranges(self.root, sid):
-                r_lo = max(lo, int(r["start"]))
-                r_hi = hi if r["end"] is None else min(hi, int(r["end"]))
+            for r in self.catalog.list_ranges(sid):
+                r_lo = max(lo, r.start)
+                r_hi = hi if r.end is None else min(hi, r.end)
                 if r_hi <= r_lo:
                     continue
-                d = os.path.join(
-                    self.root,
-                    "records",
-                    f"stream_id={sid}",
-                    f"range_index={r['range_index']}",
-                )
-                out.append(RangeSlice(d, sid, int(r["range_index"]), r_lo, r_hi))
+                d = range_dir(self.records_root, sid, r.range_index)
+                out.append(RangeSlice(d, sid, r.range_index, r_lo, r_hi))
         return out
 
     # --------------------------------------------------------------- read

@@ -1,110 +1,18 @@
-"""Structured Streaming source over the record log.
+"""Synchronous long-poll FETCH over the record log.
 
-≙ the reference's long-poll FETCH (docs/sbp.md:220-285): consumers see
-records as they are appended.  The log's physical layout (append-only
-parquet files under ``records/stream_id=*/range_index=*``) is exactly
-Spark's file-stream contract — each ``StreamLog.append`` commits new
-immutable files, the file source discovers them per microbatch, and
-offset-ordering within a stream is restored by the envelope's ``offset``
-column.
-
-Admission control maps the reference's fetch knobs onto the file source:
-
-- ``max_fetch_bytes`` (FETCH's per-request byte budget,
-  docs/sbp.md:246-252) → ``maxBytesPerTrigger``: each microbatch admits
-  whole files up to the byte budget.
-- ``max_files_per_trigger`` → ``maxFilesPerTrigger``: the coarse
-  file-count analogue (a file ≈ one append batch, so this is the
-  "max batches per poll" knob).
-- ``max_wait_ms`` / ``min_bytes`` (long-poll blocking) → the trigger
-  interval / ``Trigger.AvailableNow``; for the synchronous fetch path,
-  ``poll_fetch`` below implements the blocking semantics directly
-  against the catalog's committed ``next_offset``.
-
-Scale: a per-stream subscription lists ONLY the stream's partition
-directory (``records/stream_id=<id>``), not the whole table — discovery
-cost tracks the subscribed stream, not the log size.  This is asserted
-in tests/test_streaming.py (the FileStreamSource's root is the stream
-dir).
+≙ the reference's long-poll FETCH (docs/sbp.md:220-285): a consumer
+blocks until records are committed past its position, then reads a
+bounded window.  The streaming form of the same fetch is the
+``stream_log`` source (``streaming/datasource.py``).
 """
 
 from __future__ import annotations
 
-import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from elastic_stream_spark.log import RECORD_SCHEMA, StreamLog
-
-
-def _admission(reader, max_files_per_trigger: int | None, max_fetch_bytes: int | None):
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if max_fetch_bytes is not None:
-        reader = reader.option("maxBytesPerTrigger", max_fetch_bytes)
-    return reader
-
-
-def read_records_stream(
-    spark: SparkSession,
-    log: StreamLog,
-    max_files_per_trigger: int | None = None,
-    max_fetch_bytes: int | None = None,
-) -> DataFrame:
-    """Unbounded view of the whole log (all streams), envelope schema."""
-    reader = _admission(
-        spark.readStream.schema(RECORD_SCHEMA).option("basePath", log.records_root),
-        max_files_per_trigger,
-        max_fetch_bytes,
-    )
-    return reader.parquet(log.records_root)
-
-
-def read_stream(
-    spark: SparkSession,
-    log: StreamLog,
-    stream_id: int,
-    start_offset: int = 0,
-    max_files_per_trigger: int | None = None,
-    max_fetch_bytes: int | None = None,
-) -> DataFrame:
-    """Subscribe to one stream from ``start_offset`` — the streaming FETCH.
-
-    The subscription's listing root is the stream's partition directory,
-    so file discovery is O(this stream's files) — other streams' appends
-    are invisible to the listing (directory-level pruning, ≙ the
-    reference's per-stream fetch addressing one range server).  The
-    offset predicate drops already-consumed prefixes via row-group
-    stats.
-
-    Live-tail caveat: a subscription that must START before the first
-    append should use the ``stream_log`` data source instead
-    (datasource.py) — Spark 4.1's FileStreamSource fails microbatch
-    planning (PLAN_VALIDATION_FAILED in PushDownPredicates over the
-    late-appearing ``range_index`` partition column) when the first
-    files land only after the query starts; with data present at start,
-    both availableNow and processingTime subscriptions are fine."""
-    from pyspark.sql import types as T
-
-    stream_dir = f"{log.records_root}/stream_id={stream_id}"
-    os.makedirs(stream_dir, exist_ok=True)  # subscribable before first append
-    # the listing root IS the stream dir, so range_index is the only
-    # partition column under it; stream_id re-attaches as a literal
-    # (constant-folded — never read from disk).
-    sub_schema = T.StructType(
-        [f for f in RECORD_SCHEMA.fields if f.name != "stream_id"]
-    )
-    reader = _admission(
-        spark.readStream.schema(sub_schema), max_files_per_trigger, max_fetch_bytes
-    )
-    sdf = reader.parquet(stream_dir).withColumn(
-        "stream_id", F.lit(stream_id).cast("long")
-    )
-    return sdf.select([f.name for f in RECORD_SCHEMA.fields]).where(
-        F.col("offset") >= start_offset
-    )
+from elastic_stream_spark.log import StreamLog
 
 
 def poll_fetch(

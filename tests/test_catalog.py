@@ -255,37 +255,36 @@ def test_txn_touches_only_its_stream_shard(workdir):
 
 
 def test_legacy_shard_confirmed_offset_fallback(workdir):
-    """Shards written before ``confirmed_offset`` existed must read back
-    as fully durable (confirmed = next_offset, matching the streaming
-    source's fallback) — NOT confirmed = 0, which made poll_fetch report
-    zero availability on pre-upgrade catalogs (r6 ADVICE, medium).  A
-    write txn materializes the upgrade BEFORE mutating, so a reservation
-    on a legacy shard never counts its own in-flight block as durable."""
+    """A shard without ``confirmed_offset`` has no fallback: it is
+    refused with a ValueError naming the shard file, on reads and on
+    write txns alike.  Every writer stamps the field, and each guess is
+    wrong somewhere — 0 hides landed records from poll_fetch, next_offset
+    reports an in-flight block as durable."""
     import json as _json
+    import re
 
     cat = StreamCatalog(workdir)
     sid = cat.create_stream().stream_id
     cat.reserve_offsets(sid, 10)
     cat.confirm_offset(sid, 10)
-    # strip the field → simulate a pre-upgrade catalog
+    # replayed (stale) confirm never regresses the watermark
+    cat.confirm_offset(sid, 3)
+    assert cat.describe_stream(sid).confirmed_offset == 10
+    # strip the field → a shard no writer of this engine produces
     p = cat._shard_path(sid)
     with open(p) as f:
         data = _json.load(f)
     del data["stream"]["confirmed_offset"]
     with open(p, "w") as f:
         _json.dump(data, f)
-    # read path: legacy shard reports full durability
-    assert cat.describe_stream(sid).confirmed_offset == 10
-    assert [s for s in cat.list_streams() if s.stream_id == sid][
-        0
-    ].confirmed_offset == 10
-    # write path: the upgrade happens before the reservation bumps
-    # next_offset — the new in-flight block [10, 15) must NOT be
-    # reported durable until its writer confirms it
-    cat.reserve_offsets(sid, 5)
-    assert cat.describe_stream(sid).confirmed_offset == 10
-    cat.confirm_offset(sid, 15)
-    assert cat.describe_stream(sid).confirmed_offset == 15
-    # replayed (stale) confirm never regresses the watermark
-    cat.confirm_offset(sid, 3)
-    assert cat.describe_stream(sid).confirmed_offset == 15
+    for op in (
+        lambda: cat.describe_stream(sid),
+        lambda: cat.list_streams(),
+        lambda: cat.list_ranges(sid),
+        lambda: cat.reserve_offsets(sid, 5),
+    ):
+        with pytest.raises(ValueError, match=re.escape(p)):
+            op()
+    # the refused write left the shard as it was
+    with open(p) as f:
+        assert _json.load(f) == data

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 import pytest
 
 from elastic_stream_spark.catalog import StreamCatalog
-from elastic_stream_spark.log import StreamLog
+from elastic_stream_spark.log import StreamLog, range_dirs
 from elastic_stream_spark.objects import parquet_files
 
 
@@ -73,13 +73,8 @@ def test_optimize_skips_mutable_range(spark, log):
 
 
 def _on_disk_files(log, sid):
-    import glob
-
-    return sorted(
-        p
-        for d in glob.glob(f"{log.records_root}/stream_id={sid}/range_index=*")
-        for p in parquet_files(d)
-    )
+    dirs = range_dirs(log.records_root, sid)
+    return sorted(p for _, d in dirs for p in parquet_files(d))
 
 
 def test_vacuum_reconciles_objects_after_trim(spark, log):

@@ -1510,9 +1510,10 @@ def test_hamilton_alloc_matches_python_model(spark):
         assert got == model(budget), f"budget={budget}"
 
 
-def test_r10_ops_edge_corpora(spark, workdir):
-    """The r10 operators on degenerate documents (empty text, single
-    token, mega-doc over the trim budget): no op may throw; the trim's
+def test_curation_and_dup_audits_on_degenerate_documents(spark, workdir):
+    """Trim, novelty curve, threshold sweep, dup matrix, band audit and
+    epoch coverage on degenerate documents (empty text, single token,
+    mega-doc over the trim budget): no op may throw; the trim's
     no-overflow rule must drop a doc that alone exceeds the budget; the
     novelty curve must exclude gram-less docs; the sweep must keep its
     threshold rows consistent with the discrete score set."""
@@ -1591,14 +1592,13 @@ def test_hamilton_alloc_empty_corpus_degrades_to_empty(spark):
     assert _hamilton_doc_alloc(empty, 100).count() == 0
 
 
-def test_r11_ops_edge_corpora_and_invariants(spark, workdir):
-    """The r11 operators on degenerate documents: the fragmentation
-    audit's accounting identities must hold on empty/mega docs (pads are
-    non-negative, fragments partition every doc, cuts = fragments −
-    docs), and the curriculum allocation must conserve the budget
-    exactly on a skewed corpus (Σ alloc == CURRICULUM_BUDGET, alloc
-    monotone-ish in weight via the Hamilton bound |alloc − budget·w/W|
-    ≤ 1)."""
+def test_fragmentation_and_curriculum_invariants_on_degenerate_documents(spark, workdir):
+    """On degenerate documents the fragmentation audit's accounting
+    identities must hold on empty/mega docs (pads are non-negative,
+    fragments partition every doc, cuts = fragments − docs), and the
+    curriculum allocation must conserve the budget exactly on a skewed
+    corpus (Σ alloc == CURRICULUM_BUDGET, alloc monotone-ish in weight
+    via the Hamilton bound |alloc − budget·w/W| ≤ 1)."""
     rows = [
         (0, "", "en", "s0", 0),
         (1, "one", "en", "s0", 3),

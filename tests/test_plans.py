@@ -470,9 +470,10 @@ def test_substring_span_stage_is_bounded_working_set(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_r9_batch2_plans(spark):
-    """Plan shapes for the r9 batch-2 operators: no cartesian products,
-    no Python evals anywhere; the drift audit's top-k must be a
+def test_audit_epoch_and_manifest_plans_topk_and_join_free(spark):
+    """Plan shapes for the drift/calibration audits, soft-dedup weights,
+    epoch schedule/sample and manifest diff: no cartesian products, no
+    Python evals anywhere; the drift audit's top-k must be a
     TakeOrderedAndProject (per-partition heaps), never a global sort of
     the token table; the calibration cross-tab must be join-free; the
     soft-dedup weights must broadcast nothing corpus-sized (fp groupBy +
@@ -555,9 +556,10 @@ def test_epoch_coverage_prunes_ranked_draw_map_side(spark):
     )
 
 
-def test_r10_operator_plans(spark):
-    """Plan shapes for the r10 batch: no cartesian products, no Python
-    evals; token_budget_trim's only window is partitioned by source;
+def test_trim_sweep_dup_matrix_band_audit_and_novelty_plans(spark):
+    """Plan shapes for the token-budget trim, threshold sweep, cross-source
+    dup matrix, LSH band audit and novelty curve: no cartesian products,
+    no Python evals; token_budget_trim's only window is partitioned by source;
     cross_source_dup_matrix broadcasts the pair side (never the corpus);
     quality_threshold_sweep's corpus work is one aggregate (the sweep
     explode runs on the 4-row per-score table); the novelty curve's
@@ -602,9 +604,9 @@ def test_r10_operator_plans(spark):
     assert "BroadcastNestedLoopJoin" not in plans["corpus_novelty_curve"]
 
 
-def test_r11_operator_plans(spark):
-    """Plan shapes for the r11 batch: no cartesian products, no Python
-    evals; the fragmentation audit's only window is the per-shard
+def test_fragmentation_audit_and_curriculum_allocation_plans(spark):
+    """Plan shapes for the pack fragmentation audit and the curriculum
+    allocation: no cartesian products, no Python evals; the fragmentation audit's only window is the per-shard
     placement sum (partitioned by source) and its source-keyed rollup
     join stays a broadcast-free small-key join or broadcast — never a
     corpus-sized exchange class; the curriculum allocation follows the

@@ -208,11 +208,34 @@ def test_only_the_session_memo_reads_session_identity():
     assert not readers, f"modules reading session identity: {readers}"
 
 
+def test_only_the_log_spells_out_the_record_layout():
+    """The ``records/stream_id=<sid>/range_index=<i>`` path layout is
+    built and parsed by ``log.py``'s layout functions alone; a module that
+    spells it out itself is a second copy to keep in step."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    owner = os.path.join(here, "elastic_stream_spark", "log.py")
+    spellings = ("stream_id={", "range_index={", "range_index=*", '"stream_id="')
+    copies = []
+    for top in ("elastic_stream_spark", "tests", "tools"):
+        for root, dirs, files in os.walk(os.path.join(here, top)):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for fn in files:
+                path = os.path.join(root, fn)
+                if not fn.endswith(".py") or path in (owner, os.path.abspath(__file__)):
+                    continue
+                with open(path, encoding="utf-8") as f:
+                    src = f.read()
+                if any(s in src for s in spellings):
+                    copies.append(os.path.relpath(path, here))
+    assert not copies, f"modules spelling out the record layout: {copies}"
+
+
 def test_every_operator_module_is_registered_and_named_for_its_family():
     """Every operator module is reachable from the registry — a module
     outside ``_modules()`` is code only its own tests run — and no
-    source or test file is named for the round that wrote it (an
-    ``_r<N>`` suffix) rather than for what it does."""
+    source file, test file or test function is named for the round that
+    wrote it (an ``_r<N>`` suffix, a ``test_r<N>`` name) rather than for
+    what it does."""
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     ops = os.path.join(here, "elastic_stream_spark", "operators")
     on_disk = {
@@ -233,3 +256,12 @@ def test_every_operator_module_is_registered_and_named_for_its_family():
                 if re.search(r"_r\d+", fn)
             ]
     assert not round_named, f"round-named files: {round_named}"
+
+    round_named_tests = []
+    for root, dirs, files in os.walk(os.path.join(here, "tests")):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for fn in files:
+            if fn.endswith(".py"):
+                with open(os.path.join(root, fn), encoding="utf-8") as f:
+                    round_named_tests += re.findall(r"^def (test_r\d+\w*)", f.read(), re.M)
+    assert not round_named_tests, f"round-named tests: {round_named_tests}"

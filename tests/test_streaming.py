@@ -12,8 +12,8 @@ from elastic_stream_spark.kv import KVStore
 from elastic_stream_spark.log import StreamLog
 from elastic_stream_spark.streaming import (
     ExactlyOnceAppendSink,
+    StreamLogDataSource,
     poll_fetch,
-    read_stream,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -32,6 +32,36 @@ def _events(spark, n, base_ts=0):
     )
 
 
+def _read_log(spark, log, stream_ids, **options):
+    """``format("stream_log")`` over ``stream_ids`` (one id or a list)."""
+    spark.dataSource.register(StreamLogDataSource)
+    reader = spark.readStream.format("stream_log").option("root", log.catalog.root)
+    if isinstance(stream_ids, int):
+        reader = reader.option("streamId", stream_ids)
+    else:
+        reader = reader.option("streamIds", ",".join(str(s) for s in stream_ids))
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
+def _drain(sdf, name, output_mode="append"):
+    """Run ``sdf`` into the memory table ``name`` until every admitted
+    window is processed; returns the stopped query."""
+    q = (
+        sdf.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
 def _run_available_now(sdf, name, output_mode="append"):
     q = (
         sdf.writeStream.outputMode(output_mode)
@@ -47,65 +77,40 @@ def _run_available_now(sdf, name, output_mode="append"):
 def test_streaming_fetch_sees_appends(spark, log):
     sid = log.catalog.create_stream().stream_id
     log.append(sid, _events(spark, 5))
-    sdf = read_stream(spark, log, sid)
+    sdf = _read_log(spark, log, sid)
     _run_available_now(sdf, "t_fetch1")
     got = spark.sql("SELECT offset FROM t_fetch1 ORDER BY offset").collect()
     assert [r.offset for r in got] == [0, 1, 2, 3, 4]
 
-    # new append → a fresh availableNow run picks up exactly the new files
+    # new append → a fresh availableNow run from offset 5 reads exactly it
     log.append(sid, _events(spark, 3, base_ts=10_000_000))
-    sdf2 = read_stream(spark, log, sid, start_offset=5)
+    sdf2 = _read_log(spark, log, sid, startOffset=5)
     _run_available_now(sdf2, "t_fetch2")
     got2 = spark.sql("SELECT offset FROM t_fetch2 ORDER BY offset").collect()
     assert [r.offset for r in got2] == [5, 6, 7]
 
 
 def test_per_stream_subscription_prunes_listing(spark, log):
-    """A per-stream subscription must list ONLY the stream's partition
-    directory — discovery cost tracks the subscribed stream, not the log
+    """A per-stream subscription must plan ONLY the stream's range
+    directories — read cost tracks the subscribed stream, not the log
     (≙ per-stream FETCH addressing one range server, not the cluster)."""
+    from elastic_stream_spark.log import range_dirs
+    from elastic_stream_spark.streaming.datasource import StreamLogStreamReader
+
     a = log.catalog.create_stream().stream_id
     b = log.catalog.create_stream().stream_id
     log.append(a, _events(spark, 4))
     log.append(b, _events(spark, 6))
-    sdf = read_stream(spark, log, a)
-    q = (
-        sdf.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_prune")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # the FileStreamSource's listing root is the stream's directory
-    desc = q.lastProgress["sources"][0]["description"]
-    assert f"stream_id={a}" in desc, desc
+    r = StreamLogStreamReader({"root": log.catalog.root, "streamid": str(a)})
+    parts = r.partitions(r.initialOffset(), r.latestOffset())
+    assert parts and {p.stream_id for p in parts} == {a}
+    own_dirs = {d for _, d in range_dirs(log.records_root, a)}
+    assert {p.range_dir for p in parts} <= own_dirs
+
+    _run_available_now(_read_log(spark, log, a), "t_prune")
     got = spark.sql("SELECT stream_id, offset FROM t_prune").collect()
     assert {r.stream_id for r in got} == {a}
     assert sorted(r.offset for r in got) == [0, 1, 2, 3]
-
-
-def test_byte_admission_splits_microbatches(spark, log):
-    """max_fetch_bytes (≙ FETCH byte budget / maxBytesPerTrigger): with a
-    1-byte budget each microbatch admits exactly one file, so three
-    appends stream as three batches — and the union is still complete."""
-    sid = log.catalog.create_stream().stream_id
-    for k in range(3):
-        log.append(sid, _events(spark, 2, base_ts=k * 1_000_000))
-    sdf = read_stream(spark, log, sid, max_fetch_bytes=1)
-    q = (
-        sdf.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_bytes")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(batches) == 3, [p["numInputRows"] for p in q.recentProgress]
-    assert all(p["numInputRows"] == 2 for p in batches)
-    got = spark.sql("SELECT offset FROM t_bytes ORDER BY offset").collect()
-    assert [r.offset for r in got] == list(range(6))
 
 
 def test_record_admission_caps_microbatches(spark, log):
@@ -404,7 +409,7 @@ def test_stateful_offset_tracker(spark, log):
     """Custom stateful op (applyInPandasWithState): per-stream counters
     accumulate across microbatches; the final emission per stream equals
     the batch ground truth, and emissions are monotone."""
-    from elastic_stream_spark.streaming import read_records_stream, stream_offset_tracker
+    from elastic_stream_spark.streaming import stream_offset_tracker
 
     a = log.catalog.create_stream().stream_id
     b = log.catalog.create_stream().stream_id
@@ -412,16 +417,8 @@ def test_stateful_offset_tracker(spark, log):
         log.append(a, _events(spark, 4, base_ts=k * 1_000_000))
     log.append(b, _events(spark, 7))
 
-    sdf = read_records_stream(spark, log, max_files_per_trigger=1)
-    out = stream_offset_tracker(sdf)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_state")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    sdf = _read_log(spark, log, [a, b], maxRecordsPerTrigger=4)
+    _drain(stream_offset_tracker(sdf), "t_state", output_mode="update")
     rows = spark.sql("SELECT * FROM t_state").collect()
     # last emission per stream = accumulated totals
     final = {}
@@ -507,7 +504,7 @@ def test_stream_end_to_end_pipeline(spark, log, workdir):
     dst = log.catalog.create_stream().stream_id
     log.append(src, _events(spark, 30))
 
-    sdf = read_stream(spark, log, src)
+    sdf = _read_log(spark, log, src)
     agg = (
         sdf.groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count("*").cast("string").alias("cnt"))
@@ -824,14 +821,12 @@ def test_streaming_heavy_hitters_space_saving(spark, log):
     across microbatches."""
     from collections import Counter
 
-    from elastic_stream_spark.streaming import (
-        read_records_stream,
-        streaming_heavy_hitters,
-    )
+    from elastic_stream_spark.streaming import streaming_heavy_hitters
 
     sid = log.catalog.create_stream().stream_id
     # skewed key distribution: key k_j appears with frequency ~ 60/(j+1)
-    # over 3 appends (3 microbatches at max_files_per_trigger=1)
+    # over 3 appends (3 microbatches: one append per record budget)
+    per_append = sum(60 // (j + 1) for j in range(12))
     truth: Counter = Counter()
     for batch in range(3):
         keys = []
@@ -845,18 +840,10 @@ def test_streaming_heavy_hitters_space_saving(spark, log):
         )
         log.append(sid, df)
 
-    sdf = read_records_stream(spark, log, max_files_per_trigger=1).select(
+    sdf = _read_log(spark, log, sid, maxRecordsPerTrigger=per_append).select(
         "stream_id", F.decode("payload", "UTF-8").alias("key")
     )
-    out = streaming_heavy_hitters(sdf, capacity=8, k=5)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_hh")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    _drain(streaming_heavy_hitters(sdf, capacity=8, k=5), "t_hh", output_mode="update")
     rows = spark.sql("SELECT * FROM t_hh").collect()
     assert rows
     # emissions per batch: ≤ k rows each, ranks 1..n
@@ -926,11 +913,7 @@ def test_confirmed_offset_gates_streaming_availability(spark, log):
     the data write lands — admitting the reserve-time next_offset let
     the source plan a window over the in-flight block, read zero rows,
     commit, and permanently skip the records (review finding)."""
-    from elastic_stream_spark.streaming.datasource import (
-        StreamLogStreamReader,
-        _read_confirmed_offset,
-    )
-    from elastic_stream_spark.streaming.source import poll_fetch
+    from elastic_stream_spark.streaming.datasource import StreamLogStreamReader
 
     sid = log.catalog.create_stream().stream_id
     log.append(sid, _events(spark, 3))
@@ -939,7 +922,6 @@ def test_confirmed_offset_gates_streaming_availability(spark, log):
     log.catalog.reserve_offsets(sid, 5)
     assert log.next_offset(sid) == 8
     assert log.confirmed_offset(sid) == 3
-    assert _read_confirmed_offset(log.catalog.root, sid) == 3
     r = StreamLogStreamReader({"root": log.catalog.root, "streamid": str(sid)})
     assert r.latestOffset()["offset"] == 3  # never past confirmed
     df, end = poll_fetch(log, sid, 0, min_records=1, max_wait_ms=200)
@@ -987,10 +969,7 @@ def test_transform_with_state_running_totals(spark, log):
     protocol); skipped where the container lacks it — see the
     environment-gate note in streaming/twstate.py."""
     pytest.importorskip("google.protobuf")
-    from elastic_stream_spark.streaming import (
-        read_records_stream,
-        stream_running_totals,
-    )
+    from elastic_stream_spark.streaming import stream_running_totals
 
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
@@ -1002,13 +981,11 @@ def test_transform_with_state_running_totals(spark, log):
         for k in range(3):
             log.append(sid, _events(spark, 5, base_ts=k * 1_000_000))
 
-        sdf = read_records_stream(spark, log, max_files_per_trigger=1).select(
+        sdf = _read_log(spark, log, sid, maxRecordsPerTrigger=5).select(
             (F.col("properties")["i"].cast("long") % 3).alias("key"),
             F.col("offset").cast("double").alias("value"),
         )
-        out = stream_running_totals(sdf)
-        q = _run_available_now(out, "twstate", output_mode="update")
-        q.stop()
+        _drain(stream_running_totals(sdf), "twstate", output_mode="update")
         rows = spark.sql("SELECT * FROM twstate").collect()
 
         final: dict[int, tuple[int, float]] = {}
@@ -1030,7 +1007,7 @@ def test_transform_with_state_running_totals(spark, log):
         )
         truth = {r.key: (r.n, r.s) for r in truth_rows}
         assert final == truth
-        # three appends at maxFilesPerTrigger=1 → state crossed batches
+        # three appends, one microbatch each → state crossed batches
         assert any(n >= 2 for n in (sum(1 for r in rows if r.key == k) for k in final))
     finally:
         if prev is None:
