@@ -23,11 +23,14 @@ Semantics mapped Spark-first:
   old epoch is fenced on its next append (``FencedError`` ≙
   EXPIRED_RANGE_EPOCH, rpc.fbs:48-51).
 - ``append`` takes a DataFrame batch (ts/properties/payload) — the
-  Spark-native record batch — or a plain list of payload bytes, and
-  returns ``AppendResult.base_offset`` (append_result.rs:1-10).
-- ``read`` returns the records DataFrame (offset-ordered, pruned scan);
-  ``read_payloads`` collects the raw payload bytes like the reference's
-  ``Vec<Bytes>`` return — driver-side, for small windows only.
+  Spark-native record batch, written by a Spark job — or a plain list of
+  payload bytes, which the driver writes as one Parquet file with no
+  Spark job; both return ``AppendResult.base_offset``
+  (append_result.rs:1-10).
+- ``read`` returns the records DataFrame (offset-ordered, pruned scan) —
+  the distributed path; ``read_payloads`` returns the raw payload bytes
+  like the reference's ``Vec<Bytes>`` return, read on the driver with
+  pyarrow and no Spark job — for windows that fit on the driver.
 """
 
 from __future__ import annotations
@@ -86,17 +89,7 @@ class Stream:
         element one record, stamped with ``ts_ms``).  Fenced with this
         handle's epoch: a newer ``open`` invalidates it."""
         self._check_open()
-        if not isinstance(batch, DataFrame):
-            from pyspark.sql import functions as F
-
-            batch = (
-                self._f.spark.createDataFrame(
-                    [(bytes(p),) for p in batch], "payload BINARY"
-                )
-                .withColumn("ts", F.timestamp_millis(F.lit(ts_ms)))
-                .select("ts", "payload")
-            )
-        base, end = self._f.log.append(self.id, batch, epoch=self.epoch)
+        base, end = self._f.log.append(self.id, batch, epoch=self.epoch, ts_ms=ts_ms)
         return AppendResult(base, end)
 
     # -------------------------------------------------------------- read
@@ -137,10 +130,11 @@ class Stream:
 
     def read_payloads(self, start_offset: int, end_offset: int) -> list[bytes]:
         """Driver-side payload bytes, offset order — the reference's
-        ``Vec<Bytes>`` shape (small windows only; use ``read`` for
-        anything big)."""
-        rows = self.read(start_offset, end_offset).select("payload").collect()
-        return [bytes(r.payload) for r in rows]  # fetch orders by offset
+        ``Vec<Bytes>`` shape, read with no Spark job
+        (``StreamLog.fetch_table``); use ``read`` for anything big."""
+        self._check_open()
+        table = self._f.log.fetch_table(self.id, start_offset, end_offset, ("offset", "payload"))
+        return table.column("payload").to_pylist()
 
     # --------------------------------------------------------- lifecycle
 

@@ -18,6 +18,24 @@ row is read — the Spark analogue of the reference's RocksDB
 reads O(bytes requested), not O(table size), and appends from different
 streams never contend (separate directories, separate catalog rows —
 matching the reference's claim that throughput is flat in stream count).
+
+Two writers, one file format.  Driver-side bytes (``append`` of a
+``list[bytes]``) become one Arrow table written as one Parquet file with
+no Spark job; DataFrames, the exactly-once sink's ``write_stamped`` and
+``bulk_load`` stay distributed Spark writes.  Both produce the same
+physical file: ``offset`` INT64 with footer min/max statistics, ``ts``
+INT96 (Spark's default ``outputTimestampType``), snappy.  The Arrow writer
+lands its file under a ``.``-prefixed temp name, fsyncs it, renames it to
+a fresh UUID name and fsyncs the directory, so a reader — Spark,
+``pyarrow.dataset``, ``parquet_files`` all skip hidden names — sees the
+whole file or none of it.
+
+Reads the same way: ``fetch`` is the Spark plan over one stream's range
+directories; ``fetch_table`` and the ``stream_log`` source read an offset
+window with pyarrow through ``scan_range``.  Offset spans come from one
+process-wide footer index keyed by path (a data file never changes once
+it has its final name), so a tail read opens only the files that overlap
+its window, however many files the stream has.
 """
 
 from __future__ import annotations
@@ -25,13 +43,16 @@ from __future__ import annotations
 import fcntl
 import glob
 import os
+import uuid
 from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from elastic_stream_spark.catalog import StreamCatalog
+from elastic_stream_spark.catalog import StreamCatalog, StreamNotFound
 
 # Envelope schema — SURVEY.md §1.3 / FIXTURES.md B.1.
 RECORD_SCHEMA = T.StructType(
@@ -83,6 +104,213 @@ def path_stream_id(path: str) -> int | None:
     return None
 
 
+def parquet_files(range_dir: str) -> list[str]:
+    """The data files of one range directory, by name.  Names starting
+    with ``.`` or ``_`` (an in-flight temp file, ``_SUCCESS``) are hidden,
+    as Spark and ``pyarrow.dataset`` hide them."""
+    return sorted(
+        p
+        for p in glob.glob(os.path.join(range_dir, "*.parquet"))
+        if not os.path.basename(p).startswith((".", "_"))
+    )
+
+
+@dataclass
+class RangeSlice:
+    """One catalog range ∩ an offset window ``[lo, hi)``."""
+
+    range_dir: str
+    stream_id: int
+    range_index: int
+    lo: int  # inclusive
+    hi: int | None  # exclusive; None: unbounded
+
+
+def range_slices(
+    catalog: StreamCatalog,
+    records_root: str,
+    stream_id: int,
+    lo: int = 0,
+    hi: int | None = None,
+) -> list[RangeSlice]:
+    """The stream's catalog ranges that overlap ``[lo, hi)`` (``hi=None``:
+    unbounded), each cut to the window, by range index.  A range's
+    directory may not exist yet (nothing written to it)."""
+    out: list[RangeSlice] = []
+    for r in catalog.list_ranges(stream_id):
+        r_lo = max(lo, r.start)
+        ends = [e for e in (hi, r.end) if e is not None]
+        r_hi = min(ends) if ends else None
+        if r_hi is not None and r_hi <= r_lo:
+            continue
+        d = range_dir(records_root, stream_id, r.range_index)
+        out.append(RangeSlice(d, stream_id, r.range_index, r_lo, r_hi))
+    return out
+
+
+# (offset_lo, offset_hi, n_rows, compressed_bytes, row_group_number) of
+# one parquet row group
+RowGroup = tuple[int, int, int, int, int]
+
+
+def _read_row_groups(path: str) -> tuple[RowGroup, ...] | None:
+    """The row groups of one data file from its footer (no data read);
+    None when a non-empty row group has no offset statistics."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    out: list[RowGroup] = []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        span = None
+        nbytes = 0
+        for ci in range(rg.num_columns):
+            col = rg.column(ci)
+            nbytes += col.total_compressed_size
+            st = col.statistics
+            if col.path_in_schema == "offset" and st is not None and st.has_min_max:
+                span = (int(st.min), int(st.max))
+        if span is None:
+            return None
+        out.append((span[0], span[1], rg.num_rows, int(nbytes), g))
+    return tuple(out)
+
+
+# The footer index: range directory -> {path: row groups} of the data
+# files it held when last listed.  A data file never changes once it has
+# its final name, and both writers give every file a fresh UUID name, so
+# an entry stays valid while its path is listed.  One per process, not
+# per StreamLog: the source's executor-side scan has no StreamLog, and
+# sharing is safe because an entry is a fact about an immutable file.
+_FOOTERS: dict[str, dict[str, tuple[RowGroup, ...] | None]] = {}
+
+
+def footer_listing(range_dir: str) -> list[tuple[str, tuple[RowGroup, ...] | None]]:
+    """``(path, row groups)`` of each data file in the directory, parsing
+    only footers not seen before; files no longer listed (vacuum,
+    optimize, torn-write cleanup) drop out of the index.  Concurrent
+    listings need no lock: each replaces the directory's whole entry with
+    a correct listing of its moment."""
+    known = _FOOTERS.get(range_dir, {})
+    entries = {
+        p: known[p] if p in known else _read_row_groups(p)
+        for p in parquet_files(range_dir)
+    }
+    if entries:
+        _FOOTERS[range_dir] = entries
+    else:
+        _FOOTERS.pop(range_dir, None)
+    return list(entries.items())
+
+
+def stream_row_groups(records_root: str, stream_id: int) -> list[tuple[int, int, int, int]]:
+    """``(offset_lo, offset_hi, n_rows, compressed_bytes)`` of every row
+    group with offset statistics across the stream's range directories,
+    offset-sorted — footer metadata only."""
+    out = [
+        g[:4]
+        for _, d in range_dirs(records_root, stream_id)
+        for _, groups in footer_listing(d)
+        for g in groups or ()
+    ]
+    out.sort()
+    return out
+
+
+def _file_schema():
+    """The record columns of a data file (the partition columns live in
+    the path), as Spark writes them: ``offset`` and ``ts`` required, the
+    map's values nullable.  ``ts`` is µs in Arrow and INT96 on disk."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            pa.field("offset", pa.int64(), nullable=False),
+            pa.field("ts", pa.timestamp("us"), nullable=False),
+            pa.field("properties", pa.map_(pa.string(), pa.string())),
+            pa.field("payload", pa.binary()),
+        ]
+    )
+
+
+FILE_COLUMNS = ("offset", *PAYLOAD_COLS)
+
+
+def scan_range(
+    range_dir: str, lo: int, hi: int | None, columns: Sequence[str] = FILE_COLUMNS
+) -> Iterator:
+    """Arrow record batches of one range directory's rows with offset in
+    ``[lo, hi)``, in file order (not offset-sorted).  Reads only the row
+    groups whose footer span overlaps the window, file by file (a
+    ``pyarrow.dataset`` scan costs about three times as much per small
+    file); INT96 ``ts`` comes back as µs, the unit Spark's Arrow ingest
+    takes.  A missing directory yields nothing."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([_file_schema().field(c) for c in columns])
+    read_cols = list(dict.fromkeys(["offset", *columns]))  # offset filters
+    for path, groups in footer_listing(range_dir):
+        if groups is None:  # no statistics: read it all, filter every row
+            pick, inside = None, False
+        else:
+            hit = [g for g in groups if g[1] >= lo and (hi is None or g[0] < hi)]
+            if not hit:
+                continue
+            pick = [g[4] for g in hit]
+            inside = all(g[0] >= lo and (hi is None or g[1] < hi) for g in hit)
+        pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+        if pick is None:
+            pick = list(range(pf.num_row_groups))
+        table = pf.read_row_groups(pick, columns=read_cols, use_threads=False)
+        if not inside:
+            keep = pc.greater_equal(table["offset"], lo)
+            if hi is not None:
+                keep = pc.and_(keep, pc.less(table["offset"], hi))
+            table = table.filter(keep)
+        if table.num_rows:
+            yield from table.select(list(columns)).cast(schema).to_batches()
+
+
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def write_record_file(range_dir: str, table) -> None:
+    """Land an Arrow table of ``_file_schema()`` as one data file of the
+    range directory.  The file is written under a hidden temp name and
+    fsynced, then renamed to a fresh UUID name and the directory fsynced:
+    a crash leaves either a hidden temp file no reader lists or the whole
+    file."""
+    import pyarrow.parquet as pq
+
+    created = not os.path.isdir(range_dir)
+    os.makedirs(range_dir, exist_ok=True)
+    name = uuid.uuid4().hex
+    tmp = os.path.join(range_dir, f".{name}.parquet.tmp")
+    path = os.path.join(range_dir, f"part-{name}.snappy.parquet")
+    pq.write_table(
+        table,
+        tmp,
+        compression="snappy",
+        use_deprecated_int96_timestamps=True,
+        store_schema=False,
+    )
+    _fsync(tmp)
+    os.replace(tmp, path)
+    _fsync(range_dir)
+    if created:  # the new range (and maybe stream) directory entries
+        _fsync(os.path.dirname(range_dir))
+        _fsync(os.path.dirname(os.path.dirname(range_dir)))
+
+
 class StreamLog:
     """Append/fetch over the partitioned record log.
 
@@ -101,21 +329,39 @@ class StreamLog:
     # ----------------------------------------------------------- append
 
     def append(
-        self, stream_id: int, batch: DataFrame, epoch: int | None = None
+        self,
+        stream_id: int,
+        batch: DataFrame | Sequence[bytes],
+        epoch: int | None = None,
+        ts_ms: int = 0,
     ) -> tuple[int, int]:
         """Append a batch to the stream's mutable range; returns
         ``(base_offset, last_offset_exclusive)``.
 
+        ``batch`` is a DataFrame with column ``ts`` (optional
+        ``properties``, ``payload``), or driver-side payload bytes, one
+        record each, stamped ``ts_ms`` with null properties.
+
         Offset assignment (SURVEY.md §7 hard-part 1): the catalog reserves a
         contiguous block under its lock (≙ the reference's write-window
-        serialization, window.rs:7-45), then offsets are stamped
-        ``base + row_number() - 1`` inside the job.  The per-stream
-        ``Window.orderBy`` is a single-partition sort *per stream per
-        batch* — exactly the reference's one-mutable-range-per-stream rule;
-        cross-stream appends parallelize freely.
+        serialization, window.rs:7-45).  Bytes take offsets
+        ``base + i`` in list order and land as one Parquet file with no
+        Spark job (``write_record_file``).  A DataFrame is stamped
+        ``base + row_number() - 1`` inside a Spark write job; the
+        per-stream ``Window.orderBy`` is a single-partition sort *per
+        stream per batch* — exactly the reference's
+        one-mutable-range-per-stream rule; cross-stream appends
+        parallelize freely.
 
-        ``batch`` needs columns ``ts``; optional ``properties``, ``payload``.
+        Reserve and confirm stay two catalog writes, one before the data
+        lands and one after.  The block's offsets must be taken before its
+        file becomes visible: were reserve and confirm one write after the
+        file landed, a crash between the file landing and that write would
+        hand the same offsets to the next append, and the log would hold
+        two records at each of them.
         """
+        if not isinstance(batch, DataFrame):
+            return self._append_payloads(stream_id, batch, ts_ms, epoch)
         batch = self.prepare_batch(batch)
         n = batch.count()
         if n == 0:
@@ -126,6 +372,32 @@ class StreamLog:
         # the write job completed → advance the durable confirm offset
         # (readers admit up to confirmed, never the reserve-time
         # next_offset — see StreamCatalog.confirm_offset)
+        self.catalog.confirm_offset(stream_id, base + n)
+        return base, base + n
+
+    def _append_payloads(
+        self, stream_id: int, payloads: Sequence[bytes], ts_ms: int, epoch: int | None
+    ) -> tuple[int, int]:
+        import numpy as np
+        import pyarrow as pa
+
+        payload = pa.array(payloads, pa.binary())  # bad input fails before reserving
+        n = len(payload)
+        if n == 0:
+            meta = self.catalog.describe_stream(stream_id)
+            return meta.next_offset, meta.next_offset
+        base, rng = self.catalog.reserve_offsets(stream_id, n, epoch=epoch)
+        schema = _file_schema()
+        table = pa.table(
+            [
+                pa.array(np.arange(base, base + n, dtype=np.int64)),
+                pa.array(np.full(n, ts_ms * 1000, dtype=np.int64), pa.timestamp("us")),
+                pa.nulls(n, schema.field("properties").type),
+                payload,
+            ],
+            schema=schema,
+        )
+        write_record_file(self._range_dir(stream_id, rng.range_index), table)
         self.catalog.confirm_offset(stream_id, base + n)
         return base, base + n
 
@@ -200,7 +472,7 @@ class StreamLog:
         the log — the reconcile probe for crash-recovery (partition-pruned
         point read)."""
         return (
-            self.records()
+            self._stream_records(stream_id, offset, offset + 1)
             .where((F.col("stream_id") == stream_id) & (F.col("offset") == offset))
             .limit(1)
             .count()
@@ -214,7 +486,7 @@ class StreamLog:
         exactly ``end - base``; a torn (mid-job-commit) write counts
         something in between."""
         return (
-            self.records()
+            self._stream_records(stream_id, base, end)
             .where(
                 (F.col("stream_id") == stream_id)
                 & (F.col("offset") >= base)
@@ -228,18 +500,11 @@ class StreamLog:
         ``[base, end)`` — torn-write cleanup before a replay re-writes the
         block.  Offsets in a reserved block belong to exactly one append
         attempt, so any overlapping file is a partial product of that
-        attempt.  A file without stats is conservatively deleted only if
-        the whole range is being replayed (never happens with our writer —
-        Spark always writes offset stats).  Returns files removed."""
-        from elastic_stream_spark.objects import file_offset_span, parquet_files
-
+        attempt.  A file without offset stats is kept (neither writer
+        writes one).  Returns files removed."""
         removed: list[str] = []
-        for p in parquet_files(self._range_dir(stream_id, range_index)):
-            span = file_offset_span(p)
-            if span is None:
-                continue
-            lo, hi = span
-            if lo < end and hi >= base:
+        for p, groups in footer_listing(self._range_dir(stream_id, range_index)):
+            if groups and any(lo < end and hi >= base for lo, hi, *_ in groups):
                 os.remove(p)
                 removed.append(p)
         if removed:
@@ -286,19 +551,38 @@ class StreamLog:
             .parquet(self.records_root)
         )
 
+    def _stream_records(self, stream_id: int, lo: int = 0, hi: int | None = None) -> DataFrame:
+        """The records of the stream's range directories that overlap
+        ``[lo, hi)``, typed per RECORD_SCHEMA — a plan that lists one
+        stream's files, not the whole log's.  Not filtered to the window:
+        callers add their own predicates.  A stream with no data
+        directory yet, or none the catalog knows, reads as empty."""
+        try:
+            slices = range_slices(self.catalog, self.records_root, stream_id, lo, hi)
+        except StreamNotFound:
+            slices = []
+        dirs = [s.range_dir for s in slices if os.path.isdir(s.range_dir)]
+        if not dirs:
+            return self.spark.createDataFrame([], RECORD_SCHEMA)
+        return (
+            self.spark.read.option("basePath", self.records_root)
+            .schema(RECORD_SCHEMA)
+            .parquet(*dirs)
+        )
+
     def fetch(self, stream_id: int, start_offset: int, end_offset: int) -> DataFrame:
         """FETCH ≙ read ``[start_offset, end_offset)`` in offset order.
 
-        The stream_id predicate prunes partitions (directory level); the
-        offset predicates push down to parquet row-group stats — the same
-        IO-skipping role as the reference's sparse index
+        The plan reads only the stream's range directories that overlap
+        the window; the offset predicates push down to parquet row-group
+        stats — the same IO-skipping role as the reference's sparse index
         (components/model/src/object.rs:31-97).  Reads below the trim
         horizon return nothing (≙ OffsetOutOfRange after TRIM_STREAM).
         """
         meta = self.catalog.describe_stream(stream_id)
         lo = max(start_offset, meta.start_offset)
         return (
-            self.records()
+            self._stream_records(stream_id, lo, end_offset)
             .where(
                 (F.col("stream_id") == stream_id)
                 & (F.col("offset") >= lo)
@@ -306,6 +590,31 @@ class StreamLog:
             )
             .orderBy("offset")
         )
+
+    def fetch_table(
+        self,
+        stream_id: int,
+        start_offset: int,
+        end_offset: int,
+        columns: Sequence[str] = FILE_COLUMNS,
+    ):
+        """FETCH into a driver-side Arrow table, offset-sorted — the same
+        window, trim clamp and ``StreamNotFound`` as ``fetch``, with no
+        Spark job: each overlapping range slice is read with pyarrow
+        (``scan_range``).  For windows that fit on the driver; ``fetch``
+        is the distributed read."""
+        import pyarrow as pa
+
+        meta = self.catalog.describe_stream(stream_id)
+        lo = max(start_offset, meta.start_offset)
+        batches = [
+            b
+            for s in range_slices(self.catalog, self.records_root, stream_id, lo, end_offset)
+            for b in scan_range(s.range_dir, s.lo, s.hi, columns)
+        ]
+        schema = pa.schema([_file_schema().field(c) for c in columns])
+        table = pa.Table.from_batches(batches, schema=schema)
+        return table.sort_by("offset") if "offset" in columns else table
 
     def next_offset(self, stream_id: int) -> int:
         """≙ DESCRIBE_RANGE's max-offset answer (SURVEY.md §2.3 row 17)."""
@@ -329,7 +638,7 @@ class StreamLog:
         becomes readable metadata).  Idempotent; returns the number of
         newly committed objects.  Row counts come from parquet footers —
         no data is read."""
-        from elastic_stream_spark.objects import file_row_count, parquet_files
+        from elastic_stream_spark.objects import file_row_count
 
         known = {o.path for o in self.objects.list_objects(stream_id)}
         entries = []
@@ -404,8 +713,6 @@ class StreamLog:
         swap uses the same crash-safe ordering as vacuum."""
         import shutil
 
-        from elastic_stream_spark.objects import parquet_files
-
         scratch = f"{self.catalog.root}/_optimize_tmp"
         os.makedirs(scratch, exist_ok=True)
         with self._maintenance_lock(stream_id):
@@ -452,8 +759,6 @@ class StreamLog:
         components/store/src/index/compaction.rs:18-56).
         """
         import shutil
-
-        from elastic_stream_spark.objects import parquet_files
 
         # single-shard read (same correctness level as describe_stream —
         # in-flight txn staging is replayed at catalog init): vacuum only
@@ -558,7 +863,7 @@ class StreamLog:
             return meta.start_offset
         horizon = F.timestamp_millis(F.lit(now_ms - meta.retention_ms))
         row = (
-            self.records()
+            self._stream_records(stream_id)
             .where((F.col("stream_id") == stream_id) & (F.col("ts") >= horizon))
             .agg(F.min("offset").alias("first_live"))
             .collect()[0]

@@ -30,7 +30,6 @@ stream's files in one txn instead of one txn per file.
 from __future__ import annotations
 
 import fcntl
-import glob
 import json
 import os
 import tempfile
@@ -230,43 +229,8 @@ class ObjectStore:
         return spark.createDataFrame(rows, OBJECTS_SCHEMA)
 
 
-def parquet_files(range_dir: str) -> list[str]:
-    return sorted(
-        p
-        for p in glob.glob(os.path.join(range_dir, "*.parquet"))
-        if not os.path.basename(p).startswith((".", "_"))
-    )
-
-
 def file_row_count(path: str) -> int:
     """Exact row count from the parquet footer (no data read)."""
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(path).metadata.num_rows
-
-
-def file_offset_span(path: str) -> tuple[int, int] | None:
-    """(min_offset, max_offset) of a log data file from parquet row-group
-    statistics (no data read) — the same footer min/max the fetch path's
-    predicate pushdown prunes on.  None if stats are absent."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    col_idx = None
-    for i in range(md.num_columns):
-        if md.schema.column(i).name == "offset":
-            col_idx = i
-            break
-    if col_idx is None:
-        return None
-    lo: int | None = None
-    hi: int | None = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(col_idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    if lo is None or hi is None:
-        return None
-    return int(lo), int(hi)

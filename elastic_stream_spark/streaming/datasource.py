@@ -10,13 +10,13 @@ last committed position, the ``maxOffsetsPerTrigger`` contract Kafka
 consumers rely on.  A subscription may start before the stream's first
 append.
 
-Plan shape: one ``InputPartition`` per overlapping catalog range, read
-executor-side as Arrow batches via pyarrow dataset with an offset-window
-filter (row-group stats skip non-overlapping row groups — the same sparse
--index pruning as the batch fetch path).  Availability comes from the
-catalog's committed ``next_offset`` (driver-side metadata read, no data
-scan, no directory listing) — discovery cost is O(1) per trigger
-regardless of log size.
+Plan shape: one ``InputPartition`` per overlapping catalog range
+(``log.range_slices``), read executor-side as Arrow batches by
+``log.scan_range`` — the same per-range scan ``StreamLog.fetch_table``
+uses, opening only the files whose footer offset span overlaps the
+window.  Availability comes from the catalog's confirm offset
+(driver-side metadata read, no data scan, no directory listing) —
+discovery cost is O(1) per trigger regardless of log size.
 
 Usage::
 
@@ -28,6 +28,13 @@ Usage::
            .option("maxRecordsPerTrigger", 500)
            .option("maxBytesPerTrigger", 1_000_000)  # hard cap (row-group priced)
            .load())
+
+The two caps do not combine with ``trigger(availableNow=True)``: pyspark
+4.1's Python stream reader has no admission-control hook, so the reader
+cannot tell which trigger it runs under, and an availableNow query ends
+after its first capped window, leaving the rest of the backlog unread.
+For a capped drain use a processing-time trigger and
+``processAllAvailable()``.
 
 Multi-stream subscription (≙ FETCH's N-streams-per-request batching,
 docs/sbp.md:220-285; batch layout range-server/src/handler/append.rs:21-29):
@@ -58,8 +65,13 @@ from pyspark.sql.datasource import (
 )
 
 from elastic_stream_spark.catalog import StreamCatalog, StreamNotFound
-from elastic_stream_spark.log import range_dir, range_dirs, records_root
-from elastic_stream_spark.objects import parquet_files
+from elastic_stream_spark.log import (
+    RangeSlice,
+    range_slices,
+    records_root,
+    scan_range,
+    stream_row_groups,
+)
 
 # log.RECORD_SCHEMA as DDL, every column nullable
 RECORD_DDL = (
@@ -69,47 +81,8 @@ RECORD_DDL = (
 
 
 @dataclass
-class RangeSlice(InputPartition):
-    """One catalog range ∩ the microbatch's offset window."""
-
-    range_dir: str
-    stream_id: int
-    range_index: int
-    lo: int  # inclusive
-    hi: int  # exclusive
-
-
-def _stream_row_groups(
-    records_root: str, stream_id: int
-) -> list[tuple[int, int, int, int]]:
-    """(offset_lo, offset_hi, n_rows, compressed_bytes) per parquet row
-    group across the stream's range files, offset-sorted — footer metadata
-    only (the same footers the fetch path reads for row-group pruning),
-    no data read.  The byte-admission cost model prices an offset window
-    at Σ overlap_rows × (group_bytes / group_rows): exact per row group,
-    so cross-range payload skew cannot fool the budget the way a
-    stream-wide average could."""
-    import pyarrow.parquet as pq
-
-    out: list[tuple[int, int, int, int]] = []
-    for _, d in range_dirs(records_root, stream_id):
-        for path in parquet_files(d):
-            md = pq.ParquetFile(path).metadata
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                lo = hi = None
-                nbytes = 0
-                for ci in range(rg.num_columns):
-                    col = rg.column(ci)
-                    nbytes += col.total_compressed_size
-                    if col.path_in_schema == "offset" and col.statistics is not None:
-                        lo = int(col.statistics.min)
-                        hi = int(col.statistics.max)
-                if lo is None or rg.num_rows == 0:
-                    continue
-                out.append((lo, hi, rg.num_rows, int(nbytes)))
-    out.sort()
-    return out
+class RangePartition(RangeSlice, InputPartition):
+    """A microbatch's range slice as a Spark input partition."""
 
 
 def fair_split(backlog: dict[int, int], budget: int) -> dict[int, int]:
@@ -259,18 +232,22 @@ class StreamLogStreamReader(DataSourceStreamReader):
         return self._to_wire(nxt)
 
     def _row_groups(self, sid: int) -> list[tuple[int, int, int, int]]:
-        """Footer row-group index for the stream, cached until its
-        CONFIRM offset moves (landed data is immutable, so the index
-        only grows as new blocks confirm).  Keying the cache on the
-        reserve-time next_offset froze a mid-write (incomplete) footer
-        listing until the next reservation; the confirm offset only
-        advances after the files are durable, so a refreshed listing is
-        always complete up to the key."""
+        """Footer row-group index for the stream (``log.stream_row_groups``)
+        — the byte-admission cost model prices an offset window at
+        Σ overlap_rows × (group_bytes / group_rows), exact per row group,
+        so cross-range payload skew cannot fool the budget the way a
+        stream-wide average could.  Cached until the stream's CONFIRM
+        offset moves (landed data is immutable, so the index only grows
+        as new blocks confirm).  Keying the cache
+        on the reserve-time next_offset froze a mid-write (incomplete)
+        footer listing until the next reservation; the confirm offset
+        only advances after the files are durable, so a refreshed listing
+        is always complete up to the key."""
         committed = self._confirmed(sid)
         hit = self._rg_cache.get(sid)
         if hit is not None and hit[0] == committed:
             return hit[1]
-        groups = _stream_row_groups(self.records_root, sid)
+        groups = stream_row_groups(self.records_root, sid)
         self._rg_cache[sid] = (committed, groups)
         return groups
 
@@ -361,73 +338,43 @@ class StreamLogStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         lo_map, hi_map = self._from_wire(start), self._from_wire(end)
-        out: list[RangeSlice] = []
+        out: list[RangePartition] = []
         for sid in self.stream_ids:
             lo = lo_map.get(sid, self.start_offsets[sid])
             hi = hi_map.get(sid, lo)
             if hi <= lo:
                 continue
-            for r in self.catalog.list_ranges(sid):
-                r_lo = max(lo, r.start)
-                r_hi = hi if r.end is None else min(hi, r.end)
-                if r_hi <= r_lo:
-                    continue
-                d = range_dir(self.records_root, sid, r.range_index)
-                out.append(RangeSlice(d, sid, r.range_index, r_lo, r_hi))
+            for s in range_slices(self.catalog, self.records_root, sid, lo, hi):
+                out.append(RangePartition(**vars(s)))
         return out
 
     # --------------------------------------------------------------- read
 
-    def read(self, partition: RangeSlice) -> Iterator:  # executor-side
+    def read(self, partition: RangePartition) -> Iterator:  # executor-side
         import pyarrow as pa
-        import pyarrow.dataset as ds
 
         if not os.path.isdir(partition.range_dir):
-            if partition.hi > partition.lo:
-                # the planned window covers CONFIRMED offsets, so the
-                # data must exist on disk — a missing dir means a
-                # concurrent maintenance swap is mid-rename (or its
-                # crash leftover).  Raising lets Spark retry the task —
-                # at-most-delay — where silently yielding nothing would
-                # commit the batch and permanently skip the records
-                # (caught in review).
-                raise FileNotFoundError(
-                    f"range dir missing for confirmed offsets "
-                    f"[{partition.lo}, {partition.hi}): {partition.range_dir} "
-                    "(concurrent maintenance swap? re-run sweep/vacuum to "
-                    "repair after a maintenance crash)"
-                )
-            return
-        dset = ds.dataset(partition.range_dir, format="parquet")
-        flt = (ds.field("offset") >= partition.lo) & (
-            ds.field("offset") < partition.hi
-        )
-        for batch in dset.to_batches(
-            filter=flt, columns=["offset", "ts", "properties", "payload"]
-        ):
-            if batch.num_rows == 0:
-                continue
+            # the planned window covers CONFIRMED offsets, so the data
+            # must exist on disk — a missing dir means a concurrent
+            # maintenance swap is mid-rename (or its crash leftover).
+            # Raising lets Spark retry the task — at-most-delay — where
+            # silently yielding nothing would commit the batch and
+            # permanently skip the records.
+            raise FileNotFoundError(
+                f"range dir missing for confirmed offsets "
+                f"[{partition.lo}, {partition.hi}): {partition.range_dir} "
+                "(concurrent maintenance swap? re-run sweep/vacuum to "
+                "repair after a maintenance crash)"
+            )
+        for batch in scan_range(partition.range_dir, partition.lo, partition.hi):
             n = batch.num_rows
-            # Spark writes INT96 timestamps, which pyarrow surfaces as
-            # nanos; Spark's Arrow ingest takes micros
-            ts = batch.column("ts").cast(pa.timestamp("us"))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([partition.stream_id] * n, type=pa.int64()),
                     pa.array([partition.range_index] * n, type=pa.int32()),
-                    batch.column("offset"),
-                    ts,
-                    batch.column("properties"),
-                    batch.column("payload"),
+                    *batch.columns,
                 ],
-                names=[
-                    "stream_id",
-                    "range_index",
-                    "offset",
-                    "ts",
-                    "properties",
-                    "payload",
-                ],
+                names=["stream_id", "range_index", *batch.schema.names],
             )
 
     def commit(self, end: dict) -> None:

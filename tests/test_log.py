@@ -97,6 +97,7 @@ def test_empty_append_noop(spark, log):
     base, end = log.append(sid, _events(spark, 0))
     assert (base, end) == (0, 0)
     assert log.catalog.describe_stream(sid).next_offset == 0
+    assert log.fetch(sid, 0, 10).count() == 0  # no data directory yet
 
 
 def test_vacuum_repairs_interrupted_swap(spark, log):

@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 import pytest
 
 from elastic_stream_spark.catalog import StreamCatalog
-from elastic_stream_spark.log import StreamLog, range_dirs
-from elastic_stream_spark.objects import parquet_files
+from elastic_stream_spark.log import StreamLog, parquet_files, range_dirs
 
 
 @pytest.fixture()

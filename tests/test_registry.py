@@ -230,6 +230,35 @@ def test_only_the_log_spells_out_the_record_layout():
     assert not copies, f"modules spelling out the record layout: {copies}"
 
 
+def test_only_the_log_writes_and_scans_record_files():
+    """Record files are written by ``log.py`` alone, and the streaming
+    source reads them through the log's scan rather than opening parquet
+    itself: a second writer or reader is a second copy of the file
+    format to keep in step."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(here, "elastic_stream_spark")
+    owner = os.path.join(pkg, "log.py")
+    writers = []
+    for root, dirs, files in os.walk(pkg):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for fn in files:
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or path == owner:
+                continue
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            if "write_table" in src or "ParquetWriter" in src:
+                writers.append(os.path.relpath(path, here))
+    assert not writers, f"modules writing parquet files besides log.py: {writers}"
+
+    with open(os.path.join(pkg, "streaming", "datasource.py"), encoding="utf-8") as f:
+        src = f.read()
+    opens = re.findall(
+        r"pyarrow\.(?:parquet|dataset)\b|from pyarrow import [^\n]*\b(?:parquet|dataset)\b", src
+    )
+    assert not opens, f"streaming/datasource.py reads parquet itself: {opens}"
+
+
 def test_every_operator_module_is_registered_and_named_for_its_family():
     """Every operator module is reachable from the registry — a module
     outside ``_modules()`` is code only its own tests run — and no
