@@ -4,12 +4,13 @@ and data-processing capabilities of AutoMQ/elastic-stream.
 The reference (/root/reference) is a cloud-native streaming log store:
 streams of append-only records split into ranges, with a placement-driver
 metadata plane (streams/ranges/objects/KV).  This package re-expresses that
-surface Spark-first:
+surface Spark-first; the objects are not a second catalog here, but a view
+of the log's data files (``StreamLog.list_objects``):
 
 - ``catalog``   — stream/range lifecycle (create/describe/update/delete,
                   seal, trim, epoch fencing)  ≙ SURVEY.md §2.2/§2.3/§2.6
 - ``log``       — the record log: append with contiguous per-stream offsets,
-                  offset-range fetch                ≙ SURVEY.md §2.1
+                  offset-range fetch, its data files ≙ SURVEY.md §2.1
 - ``kv``        — etcd-style KV with CAS/Txn        ≙ SURVEY.md §2.6 row 32
 - ``operators`` — relational queries, dedup, similarity search, text
                   analysis, multimodal plumbing (north-star operators)

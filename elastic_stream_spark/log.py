@@ -6,6 +6,12 @@ Reference parity:
 - FETCH  0x1002  ≙ range-server/src/handler/fetch.rs:48-155 + store fetch
   components/store/src/store/elastic_store.rs:204-322
 - retention expiry ≙ components/store/src/io/wal.rs:362-377
+- COMMIT_OBJECT  ≙ rpc.fbs:653-689: ``StreamLog.list_objects``, a view of
+  the data files on disk (the surveyed PD keeps no persisted copy either:
+  an in-memory ``MemoryObjectManager`` serves it)
+- small-object compaction ≙
+  components/object-storage/src/range_accumulator.rs:129-170:
+  ``StreamLog.optimize``
 - tiered storage / sparse index ≙ parquet row-group stats + partition
   pruning (components/model/src/object.rs:31-97 is replaced by Catalyst's
   min/max pruning — see SURVEY.md §4)
@@ -15,9 +21,13 @@ Physical layout: hive-partitioned parquet
 stream's offset window therefore prunes to a handful of files before any
 row is read — the Spark analogue of the reference's RocksDB
 (stream,range,offset)→handle index.  At 100 TB this layout keeps per-stream
-reads O(bytes requested), not O(table size), and appends from different
-streams never contend (separate directories, separate catalog rows —
-matching the reference's claim that throughput is flat in stream count).
+reads O(bytes requested), not O(table size).  Appends to different streams
+write to separate directories, but they do contend on the catalog: each
+append's ``reserve_offsets`` and ``confirm_offset`` are three fsync'd file
+replaces apiece under one catalog-wide ``fcntl`` lock (about 1.76 ms p50
+each alone).  Measured on 4 cores, ext4, each writer making 200 appends of
+bytes to its own stream: per-writer append p50 is 4–6 ms with 1 writer and
+15–20 ms with 4 writers on one catalog.
 
 Two writers, one file format.  Driver-side bytes (``append`` of a
 ``list[bytes]``) become one Arrow table written as one Parquet file with
@@ -35,7 +45,9 @@ directories; ``fetch_table`` and the ``stream_log`` source read an offset
 window with pyarrow through ``scan_range``.  Offset spans come from one
 process-wide footer index keyed by path (a data file never changes once
 it has its final name), so a tail read opens only the files that overlap
-its window, however many files the stream has.
+its window, however many files the stream has.  That index is the log's
+only record of its data files: ``list_objects`` is a view of it, and the
+maintenance jobs change the files alone, with no second list to update.
 """
 
 from __future__ import annotations
@@ -46,7 +58,7 @@ import os
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,9 +82,9 @@ PAYLOAD_COLS = ["ts", "properties", "payload"]
 
 
 # Record layout: every path under the records root is built and parsed
-# here, so the log, the objects catalog and the streaming source agree on
-# it.  The functions take the records root, not a catalog root: a
-# trimmed-engine clone shares its parent's records root.
+# here, so the log and the streaming source agree on it.  The functions
+# take the records root, not a catalog root: a trimmed-engine clone
+# shares its parent's records root.
 
 
 def records_root(catalog_root: str) -> str:
@@ -92,16 +104,10 @@ def range_dirs(records_root: str, stream_id: int) -> list[tuple[int, str]]:
     return sorted((int(d.rsplit("=", 1)[1]), d) for d in found)
 
 
-def path_stream_id(path: str) -> int | None:
-    """Stream id parsed from a log data-file path; None when the path is
-    not laid out by the log."""
-    for part in path.split(os.sep):
-        if part.startswith("stream_id="):
-            try:
-                return int(part.split("=", 1)[1])
-            except ValueError:
-                return None
-    return None
+def stream_ids(records_root: str) -> list[int]:
+    """Ids of the streams that have a directory under the records root."""
+    found = glob.glob(f"{records_root}/stream_id=*")
+    return sorted(int(d.rsplit("=", 1)[1]) for d in found)
 
 
 def parquet_files(range_dir: str) -> list[str]:
@@ -311,20 +317,31 @@ def write_record_file(range_dir: str, table) -> None:
         _fsync(os.path.dirname(os.path.dirname(range_dir)))
 
 
-class StreamLog:
-    """Append/fetch over the partitioned record log.
+class DataFile(NamedTuple):
+    """One data file of the log (≙ the ``Obj`` descriptor COMMIT_OBJECT
+    registers, rpc.fbs:662-681)."""
 
-    One instance per catalog root; all methods are driver-side plan builders
-    except ``append`` which executes a write job.
+    stream_id: int
+    range_index: int
+    path: str
+    n_records: int
+    n_bytes: int
+
+
+class StreamLog:
+    """Append/fetch over the partitioned record log, one instance per
+    catalog root.
+
+    A bytes ``append``, ``fetch_table`` and ``list_objects`` run on the
+    driver with pyarrow and no Spark job.  ``fetch`` and ``records``
+    return Spark plans.  A DataFrame ``append``, ``write_stamped``,
+    ``bulk_load``, ``count_span`` and the maintenance jobs run Spark jobs.
     """
 
     def __init__(self, spark: SparkSession, catalog: StreamCatalog):
-        from elastic_stream_spark.objects import ObjectStore
-
         self.spark = spark
         self.catalog = catalog
         self.records_root = records_root(catalog.root)
-        self.objects = ObjectStore(catalog.root)
 
     # ----------------------------------------------------------- append
 
@@ -438,9 +455,11 @@ class StreamLog:
         append addresses exactly one range), not via ``partitionBy`` over
         the whole tree: concurrent appends to different streams then use
         disjoint output dirs — including disjoint job staging dirs — so
-        cross-stream appends never contend on anything but the catalog's
-        microsecond offset reservation.  (Same-stream concurrent writers
-        are excluded by epoch fencing — the one-writer-per-stream rule.)
+        cross-stream appends contend only on the catalog: the offset
+        reservation and confirm, each three fsync'd file replaces under
+        the catalog-wide lock (about 1.76 ms p50 apiece alone).
+        (Same-stream concurrent writers are excluded by epoch fencing —
+        the one-writer-per-stream rule.)
         """
         from pyspark.sql import Window
 
@@ -467,18 +486,6 @@ class StreamLog:
         ).select("offset", "ts", "properties", "payload")
         out.write.mode("append").parquet(self._range_dir(stream_id, range_index))
 
-    def has_offset(self, stream_id: int, offset: int) -> bool:
-        """True iff a record at exactly (stream_id, offset) is durably in
-        the log — the reconcile probe for crash-recovery (partition-pruned
-        point read)."""
-        return (
-            self._stream_records(stream_id, offset, offset + 1)
-            .where((F.col("stream_id") == stream_id) & (F.col("offset") == offset))
-            .limit(1)
-            .count()
-            > 0
-        )
-
     def count_span(self, stream_id: int, base: int, end: int) -> int:
         """Rows durably in the log with offset in ``[base, end)`` —
         partition-pruned, footer-stats-skipped count.  The crash-recovery
@@ -502,14 +509,12 @@ class StreamLog:
         attempt, so any overlapping file is a partial product of that
         attempt.  A file without offset stats is kept (neither writer
         writes one).  Returns files removed."""
-        removed: list[str] = []
+        removed = 0
         for p, groups in footer_listing(self._range_dir(stream_id, range_index)):
             if groups and any(lo < end and hi >= base for lo, hi, *_ in groups):
                 os.remove(p)
-                removed.append(p)
-        if removed:
-            self.objects.remove(removed)
-        return len(removed)
+                removed += 1
+        return removed
 
     def bulk_load(self, records: DataFrame) -> None:
         """Bulk-ingest pre-stamped records (all RECORD_SCHEMA columns
@@ -627,31 +632,32 @@ class StreamLog:
         reserve-time next_offset."""
         return self.catalog.describe_stream(stream_id).confirmed_offset
 
-    # ---------------------------------------------------- objects plane
+    # ------------------------------------------------------ data files
 
     def _range_dir(self, stream_id: int, range_index: int) -> str:
         return range_dir(self.records_root, stream_id, range_index)
 
-    def commit_objects(self, stream_id: int) -> int:
-        """Register every not-yet-committed data file of the stream in the
-        objects catalog (≙ COMMIT_OBJECT, rpc.fbs:653-689: offloaded data
-        becomes readable metadata).  Idempotent; returns the number of
-        newly committed objects.  Row counts come from parquet footers —
-        no data is read."""
-        from elastic_stream_spark.objects import file_row_count
+    def list_objects(self, stream_id: int | None = None) -> list[DataFile]:
+        """The data files of the stream (of every stream with a directory
+        when None), by stream, range and path — COMMIT_OBJECT's objects
+        catalog (rpc.fbs:653-689) as a view of the disk.  Read from the
+        footer index on each call, so it lists exactly the files a read
+        sees; ``n_records`` is the footer's row count, also for a file
+        without offset statistics, and ``n_bytes`` the file size."""
+        import pyarrow.parquet as pq
 
-        known = {o.path for o in self.objects.list_objects(stream_id)}
-        entries = []
-        for ridx, d in range_dirs(self.records_root, stream_id):
-            for p in parquet_files(d):
-                if p in known:
-                    continue
-                entries.append(
-                    (stream_id, ridx, p, file_row_count(p), os.path.getsize(p))
-                )
-        if entries:  # one txn for the whole stream, not one per file
-            self.objects.commit_batch(entries)
-        return len(entries)
+        sids = stream_ids(self.records_root) if stream_id is None else [stream_id]
+        out: list[DataFile] = []
+        for sid in sids:
+            for ridx, d in range_dirs(self.records_root, sid):
+                for path, groups in footer_listing(d):
+                    n = (
+                        sum(g[2] for g in groups)
+                        if groups is not None
+                        else pq.read_metadata(path).num_rows
+                    )
+                    out.append(DataFile(sid, ridx, path, n, os.path.getsize(path)))
+        return out
 
     @contextmanager
     def _maintenance_lock(self, stream_id: int):
@@ -737,10 +743,7 @@ class StreamLog:
                 os.replace(d, old)
                 shutil.move(tmp, d)
                 shutil.rmtree(old)
-                self.objects.remove(files)
                 out[r.range_index] = (len(files), len(parquet_files(d)))
-            if out:
-                self.commit_objects(stream_id)
             return out
 
     # ------------------------------------------------- maintenance jobs
@@ -750,13 +753,6 @@ class StreamLog:
         streams.  Rewrites only the straddling range partition; ranges
         entirely below the horizon are removed wholesale (cheap directory
         deletes — the common case, ≙ WAL segment reclaim wal.rs:435-541).
-
-        The objects catalog is reconciled in the same pass: descriptors of
-        deleted files are dropped, and if the rewritten straddling range
-        had committed descriptors, its new file is committed in their
-        place — the metadata plane never points at reclaimed data
-        (≙ compaction never leaves committed object metadata behind,
-        components/store/src/index/compaction.rs:18-56).
         """
         import shutil
 
@@ -776,7 +772,6 @@ class StreamLog:
             live = {r["range_index"] for r in stream_ranges}
             for ridx, d in range_dirs(self.records_root, stream_id):
                 if sraw["deleted"] or ridx not in live:
-                    self.objects.remove(parquet_files(d))
                     shutil.rmtree(d)
                     continue
             if sraw["deleted"]:
@@ -803,28 +798,20 @@ class StreamLog:
                 tag = f"s{stream_id}-r{r['range_index']}"
                 tmp = f"{scratch}/rewrite-{tag}"
                 old = f"{scratch}/old-{tag}"
-                old_files = parquet_files(d)
                 kept.write.mode("overwrite").parquet(tmp)
                 os.replace(d, old)
                 shutil.move(tmp, d)
                 shutil.rmtree(old)
-                # metadata reconcile: drop descriptors of the replaced
-                # files; if any existed, the stream's objects are
-                # catalog-managed — commit the rewritten file(s) so the
-                # catalog matches disk.
-                if self.objects.remove(old_files):
-                    self.commit_objects(stream_id)
 
     def sweep(self, now_ms: int | None = None, optimize: bool = False) -> dict:
         """One maintenance pass over ALL streams — the engine's analogue of
         the reference's background reclaim + offload loops
         (components/store/src/io/wal.rs:362-377 check_expired_segment on a
         timer; components/object-storage/src/range_accumulator.rs:129-170
-        compaction): per stream, retention trim → vacuum (which reconciles
-        the objects catalog), deleted-stream data reclaim, optional
-        compaction of sealed multi-file ranges, and a final orphan-descriptor
-        reconcile.  Idempotent; safe to run on any schedule.  Returns a
-        per-stream report.
+        compaction): per stream, retention trim → vacuum, deleted-stream
+        data reclaim and optional compaction of sealed multi-file ranges.
+        Idempotent; safe to run on any schedule.  Returns a per-stream
+        report.
 
         At 100 TB each step is either driver-side metadata or a
         partition-pruned per-range Spark job; streams are independent, so
@@ -836,7 +823,7 @@ class StreamLog:
         for meta in self.catalog.list_streams(include_deleted=True):
             sid = meta.stream_id
             if meta.deleted:
-                self.vacuum(sid)  # reclaims dirs + object descriptors
+                self.vacuum(sid)  # reclaims its range directories
                 report[sid] = {"deleted": True}
                 continue
             entry: dict = {}
@@ -844,14 +831,6 @@ class StreamLog:
             if optimize:
                 entry["optimized"] = self.optimize(sid)
             report[sid] = entry
-        # catch-all reconcile: drop descriptors whose file no longer
-        # exists (e.g. metadata committed by an older engine version) —
-        # after this, the objects catalog exactly mirrors the data plane.
-        stale = [
-            o.path for o in self.objects.list_objects() if not os.path.exists(o.path)
-        ]
-        if stale:
-            self.objects.remove(stale)
         return report
 
     def expire_retention(self, stream_id: int, now_ms: int) -> int:

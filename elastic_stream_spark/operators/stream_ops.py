@@ -254,14 +254,18 @@ def list_resources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def list_objects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Objects catalog per range (≙ COMMIT_OBJECT bookkeeping,
-    rpc.fbs:653-689): object counts + exact record counts registered from
-    parquet footers at commit time.  The bulk-load path writes one object
-    per range (single writer task per stream), which the oracle asserts;
-    compaction invariants are exercised in tests/test_objects.py."""
+    """Objects per range (≙ COMMIT_OBJECT, rpc.fbs:653-689): object
+    counts and exact record counts from the log's view of its data files
+    (``StreamLog.list_objects``, parquet footers only).  The bulk-load path
+    writes one object per range (single writer task per stream), which the
+    oracle asserts; compaction keeps the view exact (tests/test_log.py)."""
     eng = get_engine(spark, sf_dir)
     return (
-        eng.log.objects.to_df(spark)
+        spark.createDataFrame(
+            eng.log.list_objects(),
+            "stream_id BIGINT, range_index BIGINT, path STRING, "
+            "n_records BIGINT, n_bytes BIGINT",
+        )
         .groupBy("stream_id", "range_index")
         .agg(
             F.count("*").alias("n_objects"),

@@ -86,8 +86,6 @@ def _build_engine(spark: SparkSession, sf_dir: str) -> EngineFixture:
         catalog.bulk_register(meta.stream_id, per_stream[name], RANGE_SIZE)
 
     log.bulk_load(env)
-    for sid in stream_names:
-        log.commit_objects(sid)  # ≙ COMMIT_OBJECT for the offloaded files
 
     # nation keyspace -> KV (value = nationkey; version is etcd-style
     # revision, not part of the oracle compare)

@@ -231,14 +231,18 @@ def test_only_the_log_spells_out_the_record_layout():
 
 
 def test_only_the_log_writes_and_scans_record_files():
-    """Record files are written by ``log.py`` alone, and the streaming
-    source reads them through the log's scan rather than opening parquet
-    itself: a second writer or reader is a second copy of the file
-    format to keep in step."""
+    """Record files are written by ``log.py`` alone, and no other module
+    opens parquet with pyarrow: the streaming source reads through the
+    log's scan and the objects view is the log's footer index.  A second
+    writer, reader or footer parser is a second copy of the file format
+    (or of the index of data files) to keep in step."""
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pkg = os.path.join(here, "elastic_stream_spark")
     owner = os.path.join(pkg, "log.py")
-    writers = []
+    opens_parquet = re.compile(
+        r"pyarrow\.(?:parquet|dataset)\b|from pyarrow import [^\n]*\b(?:parquet|dataset)\b"
+    )
+    writers, readers = [], []
     for root, dirs, files in os.walk(pkg):
         dirs[:] = [d for d in dirs if d != "__pycache__"]
         for fn in files:
@@ -249,14 +253,10 @@ def test_only_the_log_writes_and_scans_record_files():
                 src = f.read()
             if "write_table" in src or "ParquetWriter" in src:
                 writers.append(os.path.relpath(path, here))
+            if opens_parquet.search(src):
+                readers.append(os.path.relpath(path, here))
     assert not writers, f"modules writing parquet files besides log.py: {writers}"
-
-    with open(os.path.join(pkg, "streaming", "datasource.py"), encoding="utf-8") as f:
-        src = f.read()
-    opens = re.findall(
-        r"pyarrow\.(?:parquet|dataset)\b|from pyarrow import [^\n]*\b(?:parquet|dataset)\b", src
-    )
-    assert not opens, f"streaming/datasource.py reads parquet itself: {opens}"
+    assert not readers, f"modules reading parquet with pyarrow besides log.py: {readers}"
 
 
 def test_every_operator_module_is_registered_and_named_for_its_family():
