@@ -29,16 +29,18 @@ each alone).  Measured on 4 cores, ext4, each writer making 200 appends of
 bytes to its own stream: per-writer append p50 is 4–6 ms with 1 writer and
 15–20 ms with 4 writers on one catalog.
 
-Two writers, one file format.  Driver-side bytes (``append`` of a
-``list[bytes]``) become one Arrow table written as one Parquet file with
-no Spark job; DataFrames, the exactly-once sink's ``write_stamped`` and
-``bulk_load`` stay distributed Spark writes.  Both produce the same
-physical file: ``offset`` INT64 with footer min/max statistics, ``ts``
-INT96 (Spark's default ``outputTimestampType``), snappy.  The Arrow writer
-lands its file under a ``.``-prefixed temp name, fsyncs it, renames it to
-a fresh UUID name and fsyncs the directory, so a reader — Spark,
-``pyarrow.dataset``, ``parquet_files`` all skip hidden names — sees the
-whole file or none of it.
+Two writers, one file format.  Driver-side Arrow tables become one
+Parquet file each with no Spark job (``write_record_file``): the bytes of
+an ``append`` of a ``list[bytes]``, and the exactly-once sink's collected
+microbatch, which ``write_block`` stamps and lands.  A DataFrame
+``append`` (``write_stamped``) and ``bulk_load`` stay distributed Spark
+writes.  Both produce the same physical file: ``offset`` INT64 with
+footer min/max statistics, ``ts`` INT96 (Spark's default
+``outputTimestampType``), snappy.  The Arrow writer lands its file under
+a ``.``-prefixed temp name, fsyncs it, renames it to a fresh UUID name
+and fsyncs the directory, so a reader — Spark, ``pyarrow.dataset``,
+``parquet_files`` all skip hidden names — sees the whole file or none of
+it.
 
 Reads the same way: ``fetch`` is the Spark plan over one stream's range
 directories; ``fetch_table`` and the ``stream_log`` source read an offset
@@ -317,6 +319,18 @@ def write_record_file(range_dir: str, table) -> None:
         _fsync(os.path.dirname(os.path.dirname(range_dir)))
 
 
+def payload_frame(batch: DataFrame) -> DataFrame:
+    """An input batch as the payload columns: ``ts`` required, a missing
+    ``properties`` or ``payload`` added as nulls."""
+    if "ts" not in batch.columns:
+        raise ValueError("append batch missing columns: {'ts'}")
+    if "properties" not in batch.columns:
+        batch = batch.withColumn("properties", F.lit(None).cast("map<string,string>"))
+    if "payload" not in batch.columns:
+        batch = batch.withColumn("payload", F.lit(None).cast("binary"))
+    return batch.select(*PAYLOAD_COLS)
+
+
 class DataFile(NamedTuple):
     """One data file of the log (≙ the ``Obj`` descriptor COMMIT_OBJECT
     registers, rpc.fbs:662-681)."""
@@ -332,10 +346,11 @@ class StreamLog:
     """Append/fetch over the partitioned record log, one instance per
     catalog root.
 
-    A bytes ``append``, ``fetch_table`` and ``list_objects`` run on the
-    driver with pyarrow and no Spark job.  ``fetch`` and ``records``
-    return Spark plans.  A DataFrame ``append``, ``write_stamped``,
-    ``bulk_load``, ``count_span`` and the maintenance jobs run Spark jobs.
+    A bytes ``append``, ``write_block`` (the exactly-once sink's writer),
+    ``fetch_table``, ``count_span`` and ``list_objects`` run on the driver
+    with pyarrow and no Spark job.  ``fetch`` and ``records`` return Spark
+    plans.  A DataFrame ``append``, ``write_stamped``, ``bulk_load`` and
+    the maintenance jobs run Spark jobs.
     """
 
     def __init__(self, spark: SparkSession, catalog: StreamCatalog):
@@ -357,7 +372,9 @@ class StreamLog:
 
         ``batch`` is a DataFrame with column ``ts`` (optional
         ``properties``, ``payload``), or driver-side payload bytes, one
-        record each, stamped ``ts_ms`` with null properties.
+        record each, stamped ``ts_ms`` with null properties.  A DataFrame
+        with a null ``ts`` is refused (``ValueError``) before any offset
+        is reserved: ``ts`` is a required column of every data file.
 
         Offset assignment (SURVEY.md §7 hard-part 1): the catalog reserves a
         contiguous block under its lock (≙ the reference's write-window
@@ -380,7 +397,11 @@ class StreamLog:
         if not isinstance(batch, DataFrame):
             return self._append_payloads(stream_id, batch, ts_ms, epoch)
         batch = self.prepare_batch(batch)
-        n = batch.count()
+        # one job, like a count(): materializes the checkpoint, counts the
+        # rows and the null ts values a required column must refuse
+        n, n_ts = batch.agg(F.count(F.lit(1)), F.count("ts")).first()
+        if n_ts != n:
+            raise ValueError(f"append batch has {n - n_ts} rows with a null ts")
         if n == 0:
             meta = self.catalog.describe_stream(stream_id)
             return meta.next_offset, meta.next_offset
@@ -425,31 +446,22 @@ class StreamLog:
         (sample/shuffle re-execution, foreachBatch recompute) must not
         write a different row count than the reserved block.
 
-        Lazy on purpose: the caller's first action (``append``'s count)
-        materializes the checkpoint AND returns the row count in ONE Spark
-        job, instead of the eager-checkpoint + count double job — the
+        Lazy on purpose: the caller's first action (``append``'s count
+        aggregate) materializes the checkpoint AND returns the row count in
+        ONE Spark job, instead of the eager-checkpoint + count double job — the
         append path is two jobs total (materialize-count, write), which is
         what keeps per-append overhead low enough for aggregate throughput
         to scale with stream count (docs/benchmark.md:27-32)."""
-        missing = {"ts"} - set(batch.columns)
-        if missing:
-            raise ValueError(f"append batch missing columns: {missing}")
-        if "properties" not in batch.columns:
-            batch = batch.withColumn(
-                "properties", F.lit(None).cast("map<string,string>")
-            )
-        if "payload" not in batch.columns:
-            batch = batch.withColumn("payload", F.lit(None).cast("binary"))
-        return batch.select(*PAYLOAD_COLS).localCheckpoint(eager=False)
+        return payload_frame(batch).localCheckpoint(eager=False)
 
     def write_stamped(
         self, stream_id: int, batch: DataFrame, base: int, range_index: int
     ) -> None:
         """Write a prepared batch with offsets ``base + row_number - 1``
-        into the given range.  Split out from ``append`` so an
-        exactly-once sink can replay a write against an ALREADY-reserved
-        block (same base/range) after a crash, instead of reserving anew
-        and double-appending.
+        into the given range, an ALREADY-reserved block (same base/range).
+        ``append``'s DataFrame writer; the crash tests also call it to
+        build the state a torn Spark write leaves.  The exactly-once sink
+        writes through ``write_block`` instead.
 
         The write lands DIRECTLY in the range's partition directory (an
         append addresses exactly one range), not via ``partitionBy`` over
@@ -486,20 +498,41 @@ class StreamLog:
         ).select("offset", "ts", "properties", "payload")
         out.write.mode("append").parquet(self._range_dir(stream_id, range_index))
 
+    def write_block(self, stream_id: int, table, base: int, range_index: int) -> None:
+        """Write a driver-side Arrow table of the payload columns with
+        offsets ``base + i`` into the given range, in ``write_stamped``'s
+        order: ``ts`` ascending, ties in the table's row order
+        (``sort_indices`` is stable).  One data file through
+        ``write_record_file``, no Spark job.  The exactly-once sink's
+        writer, for a fresh block and for the replay of a reserved one.
+        ``ts`` must hold no null (the caller refuses one before
+        reserving)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        table = table.take(pc.sort_indices(table, [("ts", "ascending")]))
+        n = table.num_rows
+        stamped = pa.table(
+            [pa.array(np.arange(base, base + n, dtype=np.int64))]
+            + [table[c] for c in PAYLOAD_COLS],
+            names=list(FILE_COLUMNS),
+        ).cast(_file_schema())
+        write_record_file(self._range_dir(stream_id, range_index), stamped)
+
     def count_span(self, stream_id: int, base: int, end: int) -> int:
-        """Rows durably in the log with offset in ``[base, end)`` —
-        partition-pruned, footer-stats-skipped count.  The crash-recovery
-        reconcile probe: a completed write of a reserved block counts
-        exactly ``end - base``; a torn (mid-job-commit) write counts
-        something in between."""
-        return (
-            self._stream_records(stream_id, base, end)
-            .where(
-                (F.col("stream_id") == stream_id)
-                & (F.col("offset") >= base)
-                & (F.col("offset") < end)
-            )
-            .count()
+        """Rows durably in the log with offset in ``[base, end)``, with no
+        Spark job: the footer index picks the row groups of the stream's
+        range directories that overlap the window and only their
+        ``offset`` column is read, so the count is exact also for a row
+        group that overlaps the window only in part (an ``optimize``d
+        file).  The crash-recovery reconcile probe: a completed write of
+        a reserved block counts exactly ``end - base``; a torn
+        (mid-job-commit) Spark write counts something in between."""
+        return sum(
+            b.num_rows
+            for _, d in range_dirs(self.records_root, stream_id)
+            for b in scan_range(d, base, end, columns=("offset",))
         )
 
     def delete_offset_span(self, stream_id: int, range_index: int, base: int, end: int) -> int:
@@ -508,7 +541,12 @@ class StreamLog:
         block.  Offsets in a reserved block belong to exactly one append
         attempt, so any overlapping file is a partial product of that
         attempt.  A file without offset stats is kept (neither writer
-        writes one).  Returns files removed."""
+        writes one).  Returns files removed.
+
+        Only a Spark write tears a block: its task files land one by one.
+        The exactly-once sink now lands a block as one renamed file, so
+        its replay calls this only for a block reserved and partly
+        written by a sink from before the Arrow write."""
         removed = 0
         for p, groups in footer_listing(self._range_dir(stream_id, range_index)):
             if groups and any(lo < end and hi >= base for lo, hi, *_ in groups):

@@ -6,26 +6,40 @@ microbatches give the same at-least-once raw material; we upgrade to
 exactly-once with a two-phase, batchId-keyed marker in the KV store
 (SURVEY.md §2.8, §7 hard-part 4):
 
-1. reserve the offset block through the catalog, then CAS-create the
-   marker ``reserved:<base>:<end>:<range_index>`` (create-if-absent — a
+0. collect the microbatch once to the driver as an Arrow table — the one
+   Spark job of the call, which runs the query's stateful operator;
+1. reserve its row count through the catalog, then CAS-create the marker
+   ``reserved:<base>:<end>:<range_index>`` (create-if-absent — a
    concurrent/zombie attempt loses the CAS and backs off);
-2. write the stamped records;
+2. write that same table, stamped ``base + i``, as one data file
+   (``StreamLog.write_block``);
 3. flip the marker to ``committed:<base>:<end>``.
 
-Crash windows, all safe:
+The written rows are the collected rows, so the reserved count and the
+written count agree without checkpointing the microbatch.  A null ``ts``
+is refused (``ValueError``) before anything is reserved, and so is a
+microbatch too large to collect: ``spark.driver.maxResultSize`` fails
+the collect.  Every caller emits an aggregate (a top-k, windowed counts,
+one manifest row per batch), a few rows per microbatch.
+
+The write is one file rename, so it lands whole or not at all.  Crash
+windows, all safe:
 - after reserve, before marker  → the reservation leaks (offset gap, no
   duplicate) — the same gap a fenced writer leaves in the reference;
-- after marker, before write    → replay counts 0 rows in ``[base, end)``
-  → re-writes the SAME offsets via ``write_stamped`` (no new
-  reservation, no duplicates);
-- DURING the write (torn job commit — parquet task files land
-  independently, the job commit is not atomic) → replay counts
-  ``0 < n < end - base`` rows → deletes the partial files of that offset
-  span (footer offset stats identify them; a reserved block belongs to
-  exactly one attempt) and re-writes the block — no silent tail loss, no
-  doubled offsets;
-- after write, before commit    → replay counts exactly ``end - base``
+- after marker, before the rename → replay counts 0 rows in
+  ``[base, end)`` → re-writes the SAME offsets (no new reservation, no
+  duplicates); the size check ``n != end - base`` refuses a source
+  that replays a different batch;
+- after the rename, before commit → replay counts exactly ``end - base``
   rows → flips to committed without writing.
+
+A marker reserved by a sink from before the Arrow write landed its block
+through a Spark Parquet job, whose task files land independently.  A
+crash during that job's commit leaves ``0 < n < end - base`` rows; the
+replay deletes the partial files of that offset span (footer offset stats
+identify them; a reserved block belongs to exactly one attempt) and
+re-writes the block — no silent tail loss, no doubled offsets.  That
+branch is kept for such markers only.
 
 Mode contract: the sink is for ``append``/``update`` output modes, where
 each microbatch carries only new/changed rows.  ``complete`` mode re-emits
@@ -38,7 +52,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from elastic_stream_spark.kv import KVStore
-from elastic_stream_spark.log import StreamLog
+from elastic_stream_spark.log import StreamLog, payload_frame
+
+
+def _collect(batch_df: DataFrame):
+    """The microbatch's payload columns as one Arrow table (one Spark
+    job); a null ``ts`` raises before the caller reserves or writes."""
+    table = payload_frame(batch_df).toArrow()
+    nulls = table["ts"].null_count
+    if nulls:
+        raise ValueError(f"sink batch has {nulls} rows with a null ts")
+    return table
 
 
 class ExactlyOnceAppendSink:
@@ -67,29 +91,28 @@ class ExactlyOnceAppendSink:
             base, end, ridx = int(base_s), int(end_s), int(ridx_s)
             n_present = self.log.count_span(self.stream_id, base, end)
             if n_present != end - base:
-                # 0 < n_present < end-base: the crash tore the parquet job
-                # commit mid-way — some task files landed, some didn't.
-                # Remove the partial files for this reserved span before
-                # re-writing, else the append-mode rewrite would double
-                # the offsets that did land.
+                table = _collect(batch_df)
+                if table.num_rows != end - base:
+                    raise RuntimeError(
+                        f"replayed batch {batch_id} size {table.num_rows} != "
+                        f"reserved block [{base},{end}) — non-deterministic "
+                        "source replay"
+                    )
+                # 0 < n_present < end-base: a Spark write's job commit was
+                # torn mid-way — some task files landed, some didn't.
+                # Remove them before re-writing, else the rewrite would
+                # double the offsets that did land.
                 if n_present > 0:
                     self.log.delete_offset_span(self.stream_id, ridx, base, end)
-                batch = self.log.prepare_batch(batch_df)
-                n = batch.count()
-                if n != end - base:
-                    raise RuntimeError(
-                        f"replayed batch {batch_id} size {n} != reserved "
-                        f"block [{base},{end}) — non-deterministic source replay"
-                    )
-                self.log.write_stamped(self.stream_id, batch, base, ridx)
+                self.log.write_block(self.stream_id, table, base, ridx)
             self.kv.cas(marker, version, f"committed:{base}:{end}".encode())
             # block verified durable (count_span == end-base or rewritten)
             # → advance the confirm offset downstream readers admit on
             self.log.catalog.confirm_offset(self.stream_id, end)
             return
 
-        batch = self.log.prepare_batch(batch_df)
-        n = batch.count()
+        table = _collect(batch_df)
+        n = table.num_rows
         if n == 0:
             self.kv.cas(marker, 0, b"committed:0:0")
             return
@@ -98,7 +121,7 @@ class ExactlyOnceAppendSink:
             marker, 0, f"reserved:{base}:{base + n}:{rng.range_index}".encode()
         ):
             return  # lost the create race — another attempt owns this batch
-        self.log.write_stamped(self.stream_id, batch, base, rng.range_index)
+        self.log.write_block(self.stream_id, table, base, rng.range_index)
         ent = self.kv.get(marker)
         assert ent is not None
         self.kv.cas(marker, ent[1], f"committed:{base}:{base + n}".encode())

@@ -4,6 +4,8 @@ batch formulations, watermark late-drop, exactly-once sink idempotence
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -346,6 +348,144 @@ def test_sink_recovers_torn_partial_job_commit(spark, log, workdir):
     assert [r.offset for r in rows] == [0, 1, 2, 3]  # no dups, no gaps
     assert log.count_span(sid, base, base + 4) == 4
     assert kv.get(sink._marker(0))[0].decode().startswith("committed:")
+
+
+def test_sink_runs_one_spark_job_per_batch(spark, log, workdir):
+    """A microbatch is collected once and landed by the Arrow record
+    writer: the whole sink call is one Spark job."""
+    kv = KVStore(workdir + "/kv_jobs")
+    sid = log.catalog.create_stream().stream_id
+    sink = ExactlyOnceAppendSink(log, kv, sid, "qjobs")
+    sc = spark.sparkContext
+    sc.setJobGroup("sink-one-batch", "one direct sink call")
+    try:
+        sink(_events(spark, 4), batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("sink-one-batch")) == 1
+    assert [r.offset for r in log.fetch(sid, 0, 100).collect()] == [0, 1, 2, 3]
+
+
+def test_sink_replays_torn_arrow_write_once(spark, log, workdir, monkeypatch):
+    """A crash at the data file's rename leaves the block reserved and
+    nothing visible to any reader; the replay writes the same offsets
+    once and commits."""
+    kv = KVStore(workdir + "/kv_torn4")
+    sid = log.catalog.create_stream().stream_id
+    log.append(sid, [b"a", b"b"])  # the sink's block starts at 2
+    sink = ExactlyOnceAppendSink(log, kv, sid, "qt4")
+    batch = _events(spark, 4)
+
+    real_replace = os.replace
+    crashed = []
+
+    def crash_once(src, dst):
+        if not crashed and str(src).endswith(".parquet.tmp"):
+            crashed.append(src)
+            raise OSError("crash at the data file's rename")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_once)
+    with pytest.raises(OSError, match="rename"):
+        sink(batch, batch_id=0)
+    assert crashed
+    assert kv.get(sink._marker(0))[0] == b"reserved:2:6:0"
+    assert log.confirmed_offset(sid) == 2
+    assert log.count_span(sid, 2, 6) == 0
+    assert log.fetch(sid, 2, 100).count() == 0
+    assert log.fetch_table(sid, 2, 100).num_rows == 0
+    _drain(_read_log(spark, log, sid), "torn_arrow_view")
+    assert spark.table("torn_arrow_view").where("offset >= 2").count() == 0
+
+    sink(batch, batch_id=0)  # the replay
+    assert [r.offset for r in log.fetch(sid, 0, 100).collect()] == list(range(6))
+    assert kv.get(sink._marker(0))[0] == b"committed:2:6"
+    assert log.confirmed_offset(sid) == 6
+    assert log.next_offset(sid) == 6
+    sink(batch, batch_id=0)  # a second replay is a pure no-op
+    assert log.fetch_table(sid, 0, 100).num_rows == 6
+
+
+def test_sink_and_dataframe_append_land_the_same_records(spark, log, workdir):
+    """The sink's Arrow write stamps offsets in the DataFrame append's
+    order (ts ascending, ties in arrival order) and stores the same
+    values, as every reader sees them."""
+    from datetime import datetime
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("properties", T.MapType(T.StringType(), T.StringType())),
+            T.StructField("payload", T.BinaryType()),
+        ]
+    )
+    rows = [
+        (datetime(2024, 1, 1, 0, 3), {"k": "a"}, b"a"),
+        (datetime(2024, 1, 1, 0, 1), {"k": "b", "x": "1"}, None),
+        (datetime(2024, 1, 1, 0, 2), {"k": "c"}, b"c"),
+        (datetime(2024, 1, 1, 0, 1), {"k": "d"}, b"d"),
+        (datetime(2024, 1, 1, 0, 0, 0, 7), {"k": "e"}, None),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    kv = KVStore(workdir + "/kv_equiv")
+    sunk = log.catalog.create_stream().stream_id
+    appended = log.catalog.create_stream().stream_id
+    log.append(sunk, [b"pad"])  # bases differ: 1 vs 0
+    ExactlyOnceAppendSink(log, kv, sunk, "qeq")(df, batch_id=0)
+    log.append(appended, df)
+
+    def via_fetch(sid, base):
+        return [
+            (r.offset - base, r.ts, r.properties, r.payload)
+            for r in log.fetch(sid, base, 100).collect()
+        ]
+
+    def via_fetch_table(sid, base):
+        return [
+            (r["offset"] - base, r["ts"], dict(r["properties"]), r["payload"])
+            for r in log.fetch_table(sid, base, 100).to_pylist()
+        ]
+
+    def via_stream_log(sid, base):
+        name = f"equiv_view_{'sunk' if sid == sunk else 'appended'}"
+        _drain(_read_log(spark, log, sid), name)
+        got = spark.table(name).where(F.col("offset") >= base).orderBy("offset")
+        return [(r.offset - base, r.ts, r.properties, r.payload) for r in got.collect()]
+
+    for view in (via_fetch, via_fetch_table, via_stream_log):
+        assert view(sunk, 1) == view(appended, 0), view.__name__
+    got = via_fetch(sunk, 1)
+    assert [p["k"] for _, _, p, _ in got] == ["e", "b", "d", "c", "a"]
+    assert got[1][3] is None
+
+
+def test_null_ts_is_refused_before_reserving(spark, log, workdir):
+    """``ts`` is a required column of every data file: the sink and a
+    DataFrame append refuse a batch with a null ``ts`` before reserving
+    offsets, so no reader later meets a null in it."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("ts", T.TimestampType()), T.StructField("payload", T.BinaryType())]
+    )
+    df = spark.createDataFrame([(None, b"x")], schema).union(
+        _events(spark, 2).select("ts", "payload")
+    )
+    kv = KVStore(workdir + "/kv_null_ts")
+    sid = log.catalog.create_stream().stream_id
+    sink = ExactlyOnceAppendSink(log, kv, sid, "qnull")
+    with pytest.raises(ValueError, match="null ts"):
+        sink(df, batch_id=0)
+    assert kv.get(sink._marker(0)) is None
+    with pytest.raises(ValueError, match="null ts"):
+        log.append(sid, df)
+    assert log.next_offset(sid) == 0
+    assert log.confirmed_offset(sid) == 0
+    assert log.list_objects(sid) == []
 
 
 def test_metrics_recorder_captures_batches(spark, log, workdir):
