@@ -23,10 +23,13 @@ feed revision, txn staging).  A metadata transaction therefore writes
 O(one stream's ranges) bytes regardless of how many streams exist, where a
 monolithic snapshot would rewrite the world per append batch (measured:
 38 ms/op at just 1 000 streams).  It is not free: ``reserve_offsets`` and
-``confirm_offset`` each take about 1.76 ms p50 (three fsync'd file
-replaces under the one catalog-wide lock), and writers to different
-streams of one catalog queue on that lock — on 4 cores, ext4, per-writer
-append p50 is 4–6 ms with 1 writer and 15–20 ms with 4.
+``confirm_offset`` are each one fsync'd shard replace under the one
+catalog-wide lock (an offset commit, below), measured on 4 cores, ext4 at
+0.5–1.6 ms p50 alone and 1.1–1.5 ms p50 inside the ``log_ingest_fetch``
+benchmark.  Writers to different streams of one catalog queue on that
+lock: with each writer making 200 byte appends to its own stream,
+per-writer append p50 is 3.2–5.8 ms with 1 writer and 8.9–14.3 ms with 4,
+of which lock wait is about a third.
 
 Transaction protocol (single writer lock, atomic commit point):
 1. take the catalog ``fcntl`` lock; repair any prior crash window;
@@ -42,6 +45,13 @@ idempotent replays of recorded bytes, so committed state is never lost
 and the feed never shows an uncommitted txn (same WAL-then-apply shape as
 the reference PD's raft log → state machine).
 
+Offset commit: a txn that stages no event and leaves the meta unchanged
+(``reserve_offsets``, ``confirm_offset``, a no-op ``trim_stream``) has
+nothing for ``catalog.json`` to carry, so steps (4)-(5) shrink to one
+atomic shard replace, its commit point; the repair in step (1) is what
+makes that safe (``_txn``).  Every event-emitting op (create, update,
+delete, seal, trim, ``bulk_register``) keeps steps (4)-(5).
+
 Concurrency: the per-catalog lock serializes metadata transactions across
 processes; epoch fencing rejects zombie writers (``FencedError`` ≙
 EXPIRED_RANGE_EPOCH).  Reads are lock-free single-shard file reads.
@@ -55,7 +65,7 @@ import os
 import tempfile
 import time
 from contextlib import contextmanager
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 
 
 class StreamNotFound(KeyError):
@@ -167,7 +177,8 @@ class StreamCatalog:
     """Metadata plane: stream + range lifecycle with epoch fencing.
 
     All mutating methods are transactions: lock, load meta + one shard,
-    mutate, atomic meta commit, apply shard, publish feed events.
+    mutate, atomic meta commit, apply shard, publish feed events — or,
+    for an offset commit, one atomic shard replace.
     """
 
     def __init__(self, root: str):
@@ -189,7 +200,7 @@ class StreamCatalog:
         fd, tmp = tempfile.mkstemp(dir=self.root, prefix=".catalog-")
         try:
             with os.fdopen(fd, "w") as f:
-                json.dump(asdict(m), f)
+                f.write(json.dumps(asdict(m)))  # C encoder, one write
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(tmp, self._meta_path)  # atomic commit point
@@ -218,7 +229,7 @@ class StreamCatalog:
         fd, tmp = tempfile.mkstemp(dir=self.root, prefix=".shard-")
         try:
             with os.fdopen(fd, "w") as f:
-                json.dump(data, f)
+                f.write(json.dumps(data))
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(tmp, self._shard_path(stream_id))
@@ -247,7 +258,15 @@ class StreamCatalog:
         lock holder, which replays the exact recorded bytes — same name,
         same content — so a FileStreamSource watcher (which never
         re-reads a filename) still sees every committed revision exactly
-        once."""
+        once.
+
+        An offset commit (module docstring) writes the shard alone, no
+        ``catalog.json``.  What makes that safe is the order here:
+        ``_repair_locked`` runs under the lock BEFORE the shard is read,
+        so a ``pending_shard`` a crashed event txn left for this stream
+        lands first, and the offset commit rewrites the repaired shard
+        instead of being overwritten by a later replay.  A txn that
+        changes the meta without an event is refused, not dropped."""
         with open(self._lock_path, "a") as lockf:
             fcntl.flock(lockf, fcntl.LOCK_EX)
             m = self._read_meta()
@@ -260,7 +279,16 @@ class StreamCatalog:
                 t.sid = stream_id
                 t.stream = data["stream"]
                 t.ranges = data["ranges"]
+                meta_before = replace(m)
             yield t
+            if stream_id is not None and not t.events:
+                if m != meta_before:
+                    raise RuntimeError(
+                        "catalog txn changed catalog.json state without a "
+                        "change-feed event; it must take the write-ahead path"
+                    )
+                self._write_shard(t.sid, {"stream": t.stream, "ranges": t.ranges})
+                return
             self._stage_events(t)
             if t.sid is not None:
                 m.pending_shard = {
@@ -537,7 +565,9 @@ class StreamCatalog:
 
         Cost is O(this stream's ranges) — one shard file — independent of
         the number of streams in the catalog (the property that keeps
-        aggregate append throughput flat in stream count)."""
+        aggregate append throughput flat in stream count).  An offset
+        commit: one fsync'd replace of the shard under the catalog lock,
+        no ``catalog.json`` write and no feed event (module docstring)."""
         with self._txn(stream_id) as t:
             sraw = t.stream
             if sraw["deleted"]:
@@ -584,7 +614,10 @@ class StreamCatalog:
         the range to fence the dead writer; our analogue is the same —
         seal_range fences, and a sealed stream's confirm equals its end.
         Concurrent same-epoch writers remain outside the contract for
-        both engines."""
+        both engines.
+
+        An offset commit, like ``reserve_offsets``: one fsync'd shard
+        replace, no ``catalog.json`` write, no feed event."""
         with self._txn(stream_id) as t:
             sraw = t.stream
             if upto > sraw["next_offset"]:

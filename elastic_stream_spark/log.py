@@ -23,11 +23,12 @@ row is read — the Spark analogue of the reference's RocksDB
 (stream,range,offset)→handle index.  At 100 TB this layout keeps per-stream
 reads O(bytes requested), not O(table size).  Appends to different streams
 write to separate directories, but they do contend on the catalog: each
-append's ``reserve_offsets`` and ``confirm_offset`` are three fsync'd file
-replaces apiece under one catalog-wide ``fcntl`` lock (about 1.76 ms p50
-each alone).  Measured on 4 cores, ext4, each writer making 200 appends of
-bytes to its own stream: per-writer append p50 is 4–6 ms with 1 writer and
-15–20 ms with 4 writers on one catalog.
+append's ``reserve_offsets`` and ``confirm_offset`` are one fsync'd shard
+replace apiece under one catalog-wide ``fcntl`` lock (0.5–1.6 ms p50 each
+alone).  Measured on 4 cores, ext4, each writer making 200 appends of
+bytes to its own stream: per-writer append p50 is 3.2–5.8 ms with 1
+writer and 8.9–14.3 ms with 4 writers on one catalog, about a third of it
+waiting for the lock.
 
 Two writers, one file format.  Driver-side Arrow tables become one
 Parquet file each with no Spark job (``write_record_file``): the bytes of
@@ -468,8 +469,8 @@ class StreamLog:
         the whole tree: concurrent appends to different streams then use
         disjoint output dirs — including disjoint job staging dirs — so
         cross-stream appends contend only on the catalog: the offset
-        reservation and confirm, each three fsync'd file replaces under
-        the catalog-wide lock (about 1.76 ms p50 apiece alone).
+        reservation and confirm, each one fsync'd shard replace under
+        the catalog-wide lock (0.5–1.6 ms p50 apiece alone).
         (Same-stream concurrent writers are excluded by epoch fencing —
         the one-writer-per-stream rule.)
         """

@@ -229,9 +229,12 @@ def test_seal_below_next_offset_rejected(workdir):
 
 def test_txn_touches_only_its_stream_shard(workdir):
     """The sharded layout's scale contract: a metadata txn writes the ONE
-    stream shard it addresses plus the tiny meta record — never the other
-    shards (what keeps reserve_offsets O(1) in stream count, measured
-    flat ~2 ms/op from 100 to 10,000 streams)."""
+    stream shard it addresses — never the other shards (what keeps
+    reserve_offsets O(1) in stream count, measured flat ~2 ms/op from
+    100 to 10,000 streams).  An event txn (seal, trim) also writes the
+    tiny meta record; an offset commit (reserve, confirm) writes the
+    shard alone and leaves ``catalog.json`` and the revision as they
+    were."""
     import os
 
     cat = StreamCatalog(workdir)
@@ -243,8 +246,16 @@ def test_txn_touches_only_its_stream_shard(workdir):
             sid: os.stat(cat._shard_path(sid)).st_mtime_ns for sid in sids
         }
 
+    def meta_snap():
+        with open(cat._meta_path, "rb") as f:
+            return f.read(), os.stat(cat._meta_path).st_mtime_ns, cat.revision
+
     before = snap()
-    cat.reserve_offsets(target, 100)
+    meta_before = meta_snap()
+    base, _ = cat.reserve_offsets(target, 100)
+    cat.confirm_offset(target, base + 100)
+    assert meta_snap() == meta_before
+    assert cat.describe_stream(target).confirmed_offset == 100
     cat.seal_range(target, epoch=0)
     cat.trim_stream(target, 50)
     after = snap()
@@ -288,3 +299,117 @@ def test_legacy_shard_confirmed_offset_fallback(workdir):
     # the refused write left the shard as it was
     with open(p) as f:
         assert _json.load(f) == data
+
+
+def test_crashed_event_txn_is_repaired_before_offset_commit(spark, workdir, monkeypatch):
+    """A seal that crashed after its catalog.json commit, before its
+    shard write, leaves ``pending_shard`` and ``pending_changes`` on
+    disk.  The next offset commit (one shard replace, no catalog.json
+    write) must land on the REPAIRED shard: the seal is applied, the
+    reservation is kept, and the feed shows each event once."""
+    import json as _json
+    import os
+
+    cat = StreamCatalog(workdir)
+    sid = cat.create_stream().stream_id
+    cat.reserve_offsets(sid, 10)
+    cat.confirm_offset(sid, 10)
+
+    real = StreamCatalog._write_shard
+
+    def crash_once(self, stream_id, data):
+        monkeypatch.setattr(StreamCatalog, "_write_shard", real)
+        raise OSError("crash after the catalog.json commit")
+
+    monkeypatch.setattr(StreamCatalog, "_write_shard", crash_once)
+    with pytest.raises(OSError, match="crash after"):
+        cat.seal_range(sid, epoch=0)
+    with open(cat._meta_path) as f:
+        torn = _json.load(f)
+    assert torn["pending_shard"]["sid"] == sid
+    assert torn["pending_changes"]["name"] == "000000000003.json"  # the seal's
+    assert not os.path.exists(os.path.join(workdir, "changes", "000000000003.json"))
+    assert len(cat.list_ranges(sid)) == 1  # shard still the pre-seal one
+
+    base, rng = cat.reserve_offsets(sid, 5)
+    assert base == 10  # starts at the old next_offset
+    assert (rng.range_index, rng.start, rng.epoch) == (1, 10, 1)
+    data = cat._read_shard(sid)
+    assert data["stream"]["epoch"] == 1
+    assert data["stream"]["next_offset"] == 15  # the reservation is kept
+    assert data["stream"]["confirmed_offset"] == 10
+    assert [(r["range_index"], r["start"], r["end"], r["sealed"], r["epoch"])
+            for r in data["ranges"]] == [(0, 0, 10, True, 0), (1, 10, None, False, 1)]
+    with open(cat._meta_path) as f:
+        assert _json.load(f)["pending_shard"] is None
+
+    ch = cat.changes(spark).collect()
+    assert [r.revision for r in ch] == [1, 2, 3, 4]
+    assert [(r.kind, r.resource_type, r.range_index) for r in ch] == [
+        ("created", "stream", None),
+        ("created", "range", 0),
+        ("sealed", "range", 0),
+        ("created", "range", 1),
+    ]
+    assert cat.revision == 4
+
+
+def test_offset_commits_and_event_txns_serialize_across_processes(workdir):
+    """Offset commits (shard replace only) and event txns (write-ahead
+    through catalog.json) on the SAME stream, from two processes, still
+    serialize on the one catalog lock: no reservation, confirm, update
+    or feed event is lost or doubled."""
+    import glob
+    import json as _json
+    import multiprocessing as mp
+    import os
+
+    N = 200
+    cat = StreamCatalog(workdir)
+    sid = cat.create_stream().stream_id
+
+    def offsets(root: str) -> None:
+        c = StreamCatalog(root)
+        for _ in range(N):
+            base, _ = c.reserve_offsets(sid, 1)
+            c.confirm_offset(sid, base + 1)
+
+    def updates(root: str) -> None:
+        c = StreamCatalog(root)
+        for i in range(N):
+            c.update_stream(sid, retention_ms=i)
+
+    ctx = mp.get_context("fork")
+    procs = [ctx.Process(target=f, args=(workdir,)) for f in (offsets, updates)]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(120)
+        assert p.exitcode == 0
+    s = cat.describe_stream(sid)
+    assert s.next_offset == s.confirmed_offset == N
+    assert s.retention_ms == N - 1
+    revs = []
+    for path in glob.glob(os.path.join(workdir, "changes", "*.json")):
+        with open(path) as f:
+            revs += [_json.loads(line)["revision"] for line in f]
+    assert sorted(revs) == list(range(1, N + 3))  # 2 create + N update
+    assert cat.revision == N + 2
+
+
+def test_meta_change_without_event_is_refused(workdir):
+    """An op that changes catalog.json state but stages no feed event
+    would take the offset-commit path and lose that change; the txn
+    raises instead, and nothing is written."""
+    cat = StreamCatalog(workdir)
+    sid = cat.create_stream().stream_id
+    with open(cat._meta_path, "rb") as f:
+        meta = f.read()
+    shard = cat._read_shard(sid)
+    with pytest.raises(RuntimeError, match="without a change-feed event"):
+        with cat._txn(sid) as t:
+            t.meta.next_stream_id += 1
+            t.stream["next_offset"] = 5
+    with open(cat._meta_path, "rb") as f:
+        assert f.read() == meta
+    assert cat._read_shard(sid) == shard
