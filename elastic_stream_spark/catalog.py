@@ -695,12 +695,20 @@ class StreamCatalog:
         read, O(1)."""
         return self._read_meta().revision
 
-    def _repair(self) -> None:
+    def repair(self) -> None:
         """Take the lock briefly and repair any crash window (apply a
-        committed shard post-image, publish the recorded feed file)."""
+        committed shard post-image, publish the recorded feed file), then
+        remove the ``.catalog-*`` and ``.shard-*`` temp files a killed
+        writer left in the root.  Each is created and renamed under the
+        lock, so one seen while holding it belongs to no live writer.  Not
+        part of ``_repair_locked``: that runs on every offset commit.
+        ``StreamLog.sweep`` calls it as its first maintenance step."""
         with open(self._lock_path, "a") as lockf:
             fcntl.flock(lockf, fcntl.LOCK_EX)
             self._repair_locked(self._read_meta())
+            for name in os.listdir(self.root):
+                if name.startswith((".catalog-", ".shard-")):
+                    os.unlink(os.path.join(self.root, name))
 
     def changes(self, spark, from_revision: int = 0, ordered: bool = True):
         """LIST_RESOURCE-style batch read of the change feed: every
@@ -712,7 +720,7 @@ class StreamCatalog:
         the feed, r15)."""
         from pyspark.sql import functions as F
 
-        self._repair()  # repair a prior crash window
+        self.repair()  # repair a prior crash window
         changes_dir = os.path.join(self.root, "changes")
         if not os.path.isdir(changes_dir) or not os.listdir(changes_dir):
             return spark.createDataFrame([], CHANGES_SCHEMA)
@@ -729,7 +737,7 @@ class StreamCatalog:
         gives the reference's PD clients."""
         from pyspark.sql import functions as F
 
-        self._repair()  # repair a prior crash window
+        self.repair()  # repair a prior crash window
         changes_dir = os.path.join(self.root, "changes")
         os.makedirs(changes_dir, exist_ok=True)
         sdf = spark.readStream.schema(CHANGES_SCHEMA).json(changes_dir)

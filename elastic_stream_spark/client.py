@@ -86,8 +86,11 @@ class Stream:
     def append(self, batch, ts_ms: int = 0) -> AppendResult:
         """≙ stream.rs:39-77.  ``batch`` is a DataFrame with ``ts`` (+
         optional properties/payload) or a list of payload ``bytes`` (each
-        element one record, stamped with ``ts_ms``).  Fenced with this
-        handle's epoch: a newer ``open`` invalidates it."""
+        element one record, stamped with ``ts_ms``).  Either lands as one
+        data file, whole or not at all; a DataFrame is collected to the
+        driver first, so it is bounded by ``spark.driver.maxResultSize``
+        (``StreamLog.append``).  Fenced with this handle's epoch: a newer
+        ``open`` invalidates it."""
         self._check_open()
         base, end = self._f.log.append(self.id, batch, epoch=self.epoch, ts_ms=ts_ms)
         return AppendResult(base, end)
@@ -115,7 +118,7 @@ class Stream:
             # fetch span — the span a byte budget implies is small by
             # construction; the non-foldable constant partition key is
             # the same execution as an unpartitioned window without the
-            # spurious warning (rationale at log.append).
+            # spurious warning.
             one = Window.partitionBy(
                 F.pmod(F.col("offset"), F.lit(1))
             ).orderBy("offset")

@@ -30,18 +30,19 @@ bytes to its own stream: per-writer append p50 is 3.2–5.8 ms with 1
 writer and 8.9–14.3 ms with 4 writers on one catalog, about a third of it
 waiting for the lock.
 
-Two writers, one file format.  Driver-side Arrow tables become one
-Parquet file each with no Spark job (``write_record_file``): the bytes of
-an ``append`` of a ``list[bytes]``, and the exactly-once sink's collected
-microbatch, which ``write_block`` stamps and lands.  A DataFrame
-``append`` (``write_stamped``) and ``bulk_load`` stay distributed Spark
-writes.  Both produce the same physical file: ``offset`` INT64 with
-footer min/max statistics, ``ts`` INT96 (Spark's default
-``outputTimestampType``), snappy.  The Arrow writer lands its file under
-a ``.``-prefixed temp name, fsyncs it, renames it to a fresh UUID name
-and fsyncs the directory, so a reader — Spark, ``pyarrow.dataset``,
-``parquet_files`` all skip hidden names — sees the whole file or none of
-it.
+One writer of stamped blocks.  A reserved block is a driver-side Arrow
+table that becomes one Parquet file with no Spark job
+(``write_record_file``): the bytes of an ``append`` of a ``list[bytes]``,
+and the rows of a DataFrame ``append`` or of the exactly-once sink's
+microbatch, which ``prepare_batch`` collects and ``write_stamped`` stamps
+and lands.  The file is written under a ``.``-prefixed temp name,
+fsynced, renamed to a fresh UUID name and the directory fsynced, so a
+reader — Spark, ``pyarrow.dataset``, ``parquet_files`` all skip hidden
+names — sees the whole block or none of it.  Spark writes only what is
+not a reserved block: ``bulk_load`` and the maintenance rewrites
+(``optimize``, ``vacuum``).  Every file has the same format: ``offset``
+INT64 with footer min/max statistics, ``ts`` INT96 (Spark's default
+``outputTimestampType``), snappy.
 
 Reads the same way: ``fetch`` is the Spark plan over one stream's range
 directories; ``fetch_table`` and the ``stream_log`` source read an offset
@@ -63,6 +64,10 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Iterator, NamedTuple, Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -165,8 +170,6 @@ RowGroup = tuple[int, int, int, int, int]
 def _read_row_groups(path: str) -> tuple[RowGroup, ...] | None:
     """The row groups of one data file from its footer (no data read);
     None when a non-empty row group has no offset statistics."""
-    import pyarrow.parquet as pq
-
     md = pq.read_metadata(path)
     out: list[RowGroup] = []
     for g in range(md.num_row_groups):
@@ -189,7 +192,7 @@ def _read_row_groups(path: str) -> tuple[RowGroup, ...] | None:
 
 # The footer index: range directory -> {path: row groups} of the data
 # files it held when last listed.  A data file never changes once it has
-# its final name, and both writers give every file a fresh UUID name, so
+# its final name, and every writer gives each file a fresh UUID name, so
 # an entry stays valid while its path is listed.  One per process, not
 # per StreamLog: the source's executor-side scan has no StreamLog, and
 # sharing is safe because an entry is a fact about an immutable file.
@@ -199,9 +202,9 @@ _FOOTERS: dict[str, dict[str, tuple[RowGroup, ...] | None]] = {}
 def footer_listing(range_dir: str) -> list[tuple[str, tuple[RowGroup, ...] | None]]:
     """``(path, row groups)`` of each data file in the directory, parsing
     only footers not seen before; files no longer listed (vacuum,
-    optimize, torn-write cleanup) drop out of the index.  Concurrent
-    listings need no lock: each replaces the directory's whole entry with
-    a correct listing of its moment."""
+    optimize) drop out of the index.  Concurrent listings need no lock:
+    each replaces the directory's whole entry with a correct listing of
+    its moment."""
     known = _FOOTERS.get(range_dir, {})
     entries = {
         p: known[p] if p in known else _read_row_groups(p)
@@ -232,8 +235,6 @@ def _file_schema():
     """The record columns of a data file (the partition columns live in
     the path), as Spark writes them: ``offset`` and ``ts`` required, the
     map's values nullable.  ``ts`` is µs in Arrow and INT96 on disk."""
-    import pyarrow as pa
-
     return pa.schema(
         [
             pa.field("offset", pa.int64(), nullable=False),
@@ -256,10 +257,6 @@ def scan_range(
     ``pyarrow.dataset`` scan costs about three times as much per small
     file); INT96 ``ts`` comes back as µs, the unit Spark's Arrow ingest
     takes.  A missing directory yields nothing."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     schema = pa.schema([_file_schema().field(c) for c in columns])
     read_cols = list(dict.fromkeys(["offset", *columns]))  # offset filters
     for path, groups in footer_listing(range_dir):
@@ -298,8 +295,6 @@ def write_record_file(range_dir: str, table) -> None:
     fsynced, then renamed to a fresh UUID name and the directory fsynced:
     a crash leaves either a hidden temp file no reader lists or the whole
     file."""
-    import pyarrow.parquet as pq
-
     created = not os.path.isdir(range_dir)
     os.makedirs(range_dir, exist_ok=True)
     name = uuid.uuid4().hex
@@ -320,18 +315,6 @@ def write_record_file(range_dir: str, table) -> None:
         _fsync(os.path.dirname(os.path.dirname(range_dir)))
 
 
-def payload_frame(batch: DataFrame) -> DataFrame:
-    """An input batch as the payload columns: ``ts`` required, a missing
-    ``properties`` or ``payload`` added as nulls."""
-    if "ts" not in batch.columns:
-        raise ValueError("append batch missing columns: {'ts'}")
-    if "properties" not in batch.columns:
-        batch = batch.withColumn("properties", F.lit(None).cast("map<string,string>"))
-    if "payload" not in batch.columns:
-        batch = batch.withColumn("payload", F.lit(None).cast("binary"))
-    return batch.select(*PAYLOAD_COLS)
-
-
 class DataFile(NamedTuple):
     """One data file of the log (≙ the ``Obj`` descriptor COMMIT_OBJECT
     registers, rpc.fbs:662-681)."""
@@ -347,11 +330,13 @@ class StreamLog:
     """Append/fetch over the partitioned record log, one instance per
     catalog root.
 
-    A bytes ``append``, ``write_block`` (the exactly-once sink's writer),
-    ``fetch_table``, ``count_span`` and ``list_objects`` run on the driver
-    with pyarrow and no Spark job.  ``fetch`` and ``records`` return Spark
-    plans.  A DataFrame ``append``, ``write_stamped``, ``bulk_load`` and
-    the maintenance jobs run Spark jobs.
+    Every ``append`` lands its block through the Arrow writer on the
+    driver: a list of bytes directly, a DataFrame after one collect
+    (``prepare_batch``, the one Spark job) and ``write_stamped``, which the
+    exactly-once sink calls too.  ``fetch_table``, ``count_span`` and
+    ``list_objects`` also run on the driver with pyarrow and no Spark job.
+    ``fetch`` and ``records`` return Spark plans; ``bulk_load`` and the
+    maintenance jobs run Spark jobs.
     """
 
     def __init__(self, spark: SparkSession, catalog: StreamCatalog):
@@ -379,14 +364,14 @@ class StreamLog:
 
         Offset assignment (SURVEY.md §7 hard-part 1): the catalog reserves a
         contiguous block under its lock (≙ the reference's write-window
-        serialization, window.rs:7-45).  Bytes take offsets
-        ``base + i`` in list order and land as one Parquet file with no
-        Spark job (``write_record_file``).  A DataFrame is stamped
-        ``base + row_number() - 1`` inside a Spark write job; the
-        per-stream ``Window.orderBy`` is a single-partition sort *per
-        stream per batch* — exactly the reference's
-        one-mutable-range-per-stream rule; cross-stream appends
-        parallelize freely.
+        serialization, window.rs:7-45).  Bytes take offsets ``base + i``
+        in list order; a DataFrame is collected to the driver once
+        (``prepare_batch``) and stamped in ``ts`` order
+        (``write_stamped``).  Either way the block lands as one Parquet
+        file with no further Spark job (``write_record_file``), whole or
+        not at all.  A DataFrame append is therefore bounded by
+        ``spark.driver.maxResultSize``, which fails the collect before any
+        offset is reserved; ``bulk_load`` is the distributed ingest path.
 
         Reserve and confirm stay two catalog writes, one before the data
         lands and one after.  The block's offsets must be taken before its
@@ -397,29 +382,22 @@ class StreamLog:
         """
         if not isinstance(batch, DataFrame):
             return self._append_payloads(stream_id, batch, ts_ms, epoch)
-        batch = self.prepare_batch(batch)
-        # one job, like a count(): materializes the checkpoint, counts the
-        # rows and the null ts values a required column must refuse
-        n, n_ts = batch.agg(F.count(F.lit(1)), F.count("ts")).first()
-        if n_ts != n:
-            raise ValueError(f"append batch has {n - n_ts} rows with a null ts")
+        table = self.prepare_batch(batch)
+        n = table.num_rows
         if n == 0:
             meta = self.catalog.describe_stream(stream_id)
             return meta.next_offset, meta.next_offset
         base, rng = self.catalog.reserve_offsets(stream_id, n, epoch=epoch)
-        self.write_stamped(stream_id, batch, base, rng.range_index)
-        # the write job completed → advance the durable confirm offset
-        # (readers admit up to confirmed, never the reserve-time
-        # next_offset — see StreamCatalog.confirm_offset)
+        self.write_stamped(stream_id, table, base, rng.range_index)
+        # the block landed → advance the durable confirm offset (readers
+        # admit up to confirmed, never the reserve-time next_offset — see
+        # StreamCatalog.confirm_offset)
         self.catalog.confirm_offset(stream_id, base + n)
         return base, base + n
 
     def _append_payloads(
         self, stream_id: int, payloads: Sequence[bytes], ts_ms: int, epoch: int | None
     ) -> tuple[int, int]:
-        import numpy as np
-        import pyarrow as pa
-
         payload = pa.array(payloads, pa.binary())  # bad input fails before reserving
         n = len(payload)
         if n == 0:
@@ -440,78 +418,32 @@ class StreamLog:
         self.catalog.confirm_offset(stream_id, base + n)
         return base, base + n
 
-    def prepare_batch(self, batch: DataFrame) -> DataFrame:
-        """Normalize an input batch to the payload columns and truncate its
-        lineage (LAZY localCheckpoint), so the counted rows and the written
-        rows are the same physical data: a non-deterministic input
-        (sample/shuffle re-execution, foreachBatch recompute) must not
-        write a different row count than the reserved block.
+    def prepare_batch(self, batch: DataFrame):
+        """An input batch's payload columns as one driver-side Arrow table,
+        collected with one Spark job (``toArrow``): ``ts`` required, a
+        missing ``properties`` or ``payload`` added as nulls.  A null
+        ``ts`` raises ``ValueError`` before the caller reserves offsets,
+        since ``ts`` is a required column of every data file.  The written
+        rows are the collected rows, so a non-deterministic input cannot
+        land a different row count than the block reserved for it."""
+        if "ts" not in batch.columns:
+            raise ValueError("batch missing columns: {'ts'}")
+        for col, typ in (("properties", "map<string,string>"), ("payload", "binary")):
+            if col not in batch.columns:
+                batch = batch.withColumn(col, F.lit(None).cast(typ))
+        table = batch.select(*PAYLOAD_COLS).toArrow()
+        nulls = table["ts"].null_count
+        if nulls:
+            raise ValueError(f"batch has {nulls} rows with a null ts")
+        return table
 
-        Lazy on purpose: the caller's first action (``append``'s count
-        aggregate) materializes the checkpoint AND returns the row count in
-        ONE Spark job, instead of the eager-checkpoint + count double job — the
-        append path is two jobs total (materialize-count, write), which is
-        what keeps per-append overhead low enough for aggregate throughput
-        to scale with stream count (docs/benchmark.md:27-32)."""
-        return payload_frame(batch).localCheckpoint(eager=False)
-
-    def write_stamped(
-        self, stream_id: int, batch: DataFrame, base: int, range_index: int
-    ) -> None:
-        """Write a prepared batch with offsets ``base + row_number - 1``
-        into the given range, an ALREADY-reserved block (same base/range).
-        ``append``'s DataFrame writer; the crash tests also call it to
-        build the state a torn Spark write leaves.  The exactly-once sink
-        writes through ``write_block`` instead.
-
-        The write lands DIRECTLY in the range's partition directory (an
-        append addresses exactly one range), not via ``partitionBy`` over
-        the whole tree: concurrent appends to different streams then use
-        disjoint output dirs — including disjoint job staging dirs — so
-        cross-stream appends contend only on the catalog: the offset
-        reservation and confirm, each one fsync'd shard replace under
-        the catalog-wide lock (0.5–1.6 ms p50 apiece alone).
-        (Same-stream concurrent writers are excluded by epoch fencing —
-        the one-writer-per-stream rule.)
-        """
-        from pyspark.sql import Window
-
-        # Single-partition window — AUDITED, acceptable: one append
-        # addresses exactly one range, so the window spans a single
-        # record batch (bounded by batch size), mirroring the reference's
-        # one-mutable-range write serialization.  The partition key is a
-        # constant-valued NON-FOLDABLE expression (pmod(ts, 1) ≡ 0): it
-        # hashes every row to one partition — identical execution to an
-        # unpartitioned window — while surviving constant folding (a
-        # plain lit(0) is optimized away, resurrecting the spurious "No
-        # Partition Defined" warning that would mask a REAL data-sized
-        # global window elsewhere).
-        # coalesce: a NULL ts must not hash to a second (NULL-keyed)
-        # window partition — that would restart row_number and stamp
-        # duplicate offsets (caught in review); NULL-ts rows sort first
-        # (Spark asc_nulls_first), deterministically inside the one
-        # partition
-        w = Window.partitionBy(
-            F.pmod(F.coalesce(F.col("ts").cast("long"), F.lit(0)), F.lit(1))
-        ).orderBy(F.col("ts"), F.monotonically_increasing_id())
-        out = batch.withColumn(
-            "offset", (F.lit(base) + F.row_number().over(w) - 1).cast("long")
-        ).select("offset", "ts", "properties", "payload")
-        out.write.mode("append").parquet(self._range_dir(stream_id, range_index))
-
-    def write_block(self, stream_id: int, table, base: int, range_index: int) -> None:
-        """Write a driver-side Arrow table of the payload columns with
-        offsets ``base + i`` into the given range, in ``write_stamped``'s
-        order: ``ts`` ascending, ties in the table's row order
-        (``sort_indices`` is stable).  One data file through
-        ``write_record_file``, no Spark job.  The exactly-once sink's
-        writer, for a fresh block and for the replay of a reserved one.
-        ``ts`` must hold no null (the caller refuses one before
-        reserving)."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
+    def write_stamped(self, stream_id: int, table, base: int, range_index: int) -> None:
+        """Write a ``prepare_batch`` table with offsets ``base + i`` into
+        the given range, an already-reserved block: ``ts`` ascending, ties
+        in the table's row order (``sort_indices`` is stable), as one data
+        file through ``write_record_file``, no Spark job.  The writer of a
+        DataFrame ``append`` and of the exactly-once sink, for a fresh
+        block and for the replay of a reserved one."""
         table = table.take(pc.sort_indices(table, [("ts", "ascending")]))
         n = table.num_rows
         stamped = pa.table(
@@ -527,33 +459,15 @@ class StreamLog:
         range directories that overlap the window and only their
         ``offset`` column is read, so the count is exact also for a row
         group that overlaps the window only in part (an ``optimize``d
-        file).  The crash-recovery reconcile probe: a completed write of
-        a reserved block counts exactly ``end - base``; a torn
-        (mid-job-commit) Spark write counts something in between."""
+        file).  The sink's replay probe: a reserved block counts 0 before
+        its file lands and exactly ``end - base`` after; a count in
+        between means trimming cut into the block, or a writer that landed
+        it through a Spark job was killed mid-commit."""
         return sum(
             b.num_rows
             for _, d in range_dirs(self.records_root, stream_id)
             for b in scan_range(d, base, end, columns=("offset",))
         )
-
-    def delete_offset_span(self, stream_id: int, range_index: int, base: int, end: int) -> int:
-        """Remove data files of one range whose footer offset stats overlap
-        ``[base, end)`` — torn-write cleanup before a replay re-writes the
-        block.  Offsets in a reserved block belong to exactly one append
-        attempt, so any overlapping file is a partial product of that
-        attempt.  A file without offset stats is kept (neither writer
-        writes one).  Returns files removed.
-
-        Only a Spark write tears a block: its task files land one by one.
-        The exactly-once sink now lands a block as one renamed file, so
-        its replay calls this only for a block reserved and partly
-        written by a sink from before the Arrow write."""
-        removed = 0
-        for p, groups in footer_listing(self._range_dir(stream_id, range_index)):
-            if groups and any(lo < end and hi >= base for lo, hi, *_ in groups):
-                os.remove(p)
-                removed += 1
-        return removed
 
     def bulk_load(self, records: DataFrame) -> None:
         """Bulk-ingest pre-stamped records (all RECORD_SCHEMA columns
@@ -647,8 +561,6 @@ class StreamLog:
         Spark job: each overlapping range slice is read with pyarrow
         (``scan_range``).  For windows that fit on the driver; ``fetch``
         is the distributed read."""
-        import pyarrow as pa
-
         meta = self.catalog.describe_stream(stream_id)
         lo = max(start_offset, meta.start_offset)
         batches = [
@@ -683,8 +595,6 @@ class StreamLog:
         footer index on each call, so it lists exactly the files a read
         sees; ``n_records`` is the footer's row count, also for a file
         without offset statistics, and ``n_bytes`` the file size."""
-        import pyarrow.parquet as pq
-
         sids = stream_ids(self.records_root) if stream_id is None else [stream_id]
         out: list[DataFile] = []
         for sid in sids:
@@ -849,8 +759,9 @@ class StreamLog:
         timer; components/object-storage/src/range_accumulator.rs:129-170
         compaction): per stream, retention trim → vacuum, deleted-stream
         data reclaim and optional compaction of sealed multi-file ranges.
-        Idempotent; safe to run on any schedule.  Returns a per-stream
-        report.
+        First it removes the catalog temp files a killed writer left
+        (``StreamCatalog.repair``).  Idempotent; safe to run on any
+        schedule.  Returns a per-stream report.
 
         At 100 TB each step is either driver-side metadata or a
         partition-pruned per-range Spark job; streams are independent, so
@@ -858,6 +769,7 @@ class StreamLog:
         import time as _time
 
         now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
+        self.catalog.repair()
         report: dict = {}
         for meta in self.catalog.list_streams(include_deleted=True):
             sid = meta.stream_id

@@ -217,9 +217,8 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c_t"))
     )
     # single-partition vocabulary rank, made explicit via a non-foldable
-    # constant partition key (identical execution, no spurious warning —
-    # rationale at log.append) — the ranked table is vocabulary-sized,
-    # far below the corpus
+    # constant partition key (identical execution, no spurious warning)
+    # — the ranked table is vocabulary-sized, far below the corpus
     w = Window.partitionBy(F.pmod(F.col("c_t"), F.lit(1))).orderBy(
         F.desc("c_t"), F.asc("token")
     )

@@ -152,7 +152,7 @@ def events_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes through a global (single-partition) window.
     # non-foldable constant partition key = identical execution to an
     # unpartitioned window over this |streams|-row dim, explicit intent,
-    # no spurious "No Partition Defined" warning (rationale at log.append)
+    # no spurious "No Partition Defined" warning
     sid = Window.partitionBy(
         F.pmod(F.length("event_type"), F.lit(1))
     ).orderBy("event_type")

@@ -6,13 +6,14 @@ microbatches give the same at-least-once raw material; we upgrade to
 exactly-once with a two-phase, batchId-keyed marker in the KV store
 (SURVEY.md §2.8, §7 hard-part 4):
 
-0. collect the microbatch once to the driver as an Arrow table — the one
-   Spark job of the call, which runs the query's stateful operator;
+0. collect the microbatch once to the driver as an Arrow table
+   (``StreamLog.prepare_batch``) — the one Spark job of the call, which
+   runs the query's stateful operator;
 1. reserve its row count through the catalog, then CAS-create the marker
    ``reserved:<base>:<end>:<range_index>`` (create-if-absent — a
    concurrent/zombie attempt loses the CAS and backs off);
 2. write that same table, stamped ``base + i``, as one data file
-   (``StreamLog.write_block``);
+   (``StreamLog.write_stamped``, the writer a DataFrame append uses);
 3. flip the marker to ``committed:<base>:<end>``.
 
 The written rows are the collected rows, so the reserved count and the
@@ -33,13 +34,17 @@ windows, all safe:
 - after the rename, before commit → replay counts exactly ``end - base``
   rows → flips to committed without writing.
 
-A marker reserved by a sink from before the Arrow write landed its block
-through a Spark Parquet job, whose task files land independently.  A
-crash during that job's commit leaves ``0 < n < end - base`` rows; the
-replay deletes the partial files of that offset span (footer offset stats
-identify them; a reserved block belongs to exactly one attempt) and
-re-writes the block — no silent tail loss, no doubled offsets.  That
-branch is kept for such markers only.
+A replay that counts ``0 < n < end - base`` rows in a reserved block
+raises ``RuntimeError`` before collecting and deletes nothing.  Every
+writer lands a block as one file, so only trimming, or a sink that landed
+its block through a Spark job and was killed mid-commit, leaves one
+partly landed.  Its rows are not the replay's alone to delete: once
+``optimize`` or ``vacuum`` has rewritten the range, the files that
+overlap the block hold committed records of other blocks too.  To
+recover by hand, inspect the span with ``StreamLog.count_span`` and
+``fetch``, then delete the ``reserved:`` marker from the KV store (the
+replay then lands the batch at new offsets) or overwrite it with
+``committed:<base>:<end>`` (the replay then skips the batch).
 
 Mode contract: the sink is for ``append``/``update`` output modes, where
 each microbatch carries only new/changed rows.  ``complete`` mode re-emits
@@ -52,17 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from elastic_stream_spark.kv import KVStore
-from elastic_stream_spark.log import StreamLog, payload_frame
-
-
-def _collect(batch_df: DataFrame):
-    """The microbatch's payload columns as one Arrow table (one Spark
-    job); a null ``ts`` raises before the caller reserves or writes."""
-    table = payload_frame(batch_df).toArrow()
-    nulls = table["ts"].null_count
-    if nulls:
-        raise ValueError(f"sink batch has {nulls} rows with a null ts")
-    return table
+from elastic_stream_spark.log import StreamLog
 
 
 class ExactlyOnceAppendSink:
@@ -86,32 +81,34 @@ class ExactlyOnceAppendSink:
             state = value.decode()
             if state.startswith("committed:"):
                 return  # replayed microbatch — already fully applied
-            # torn attempt: reserved:<base>:<end>:<range_index>
+            # an attempt that crashed: reserved:<base>:<end>:<range_index>
             _, base_s, end_s, ridx_s = state.split(":")
             base, end, ridx = int(base_s), int(end_s), int(ridx_s)
             n_present = self.log.count_span(self.stream_id, base, end)
-            if n_present != end - base:
-                table = _collect(batch_df)
+            if n_present not in (0, end - base):
+                raise RuntimeError(
+                    f"batch {batch_id}: reserved block [{base},{end}) holds "
+                    f"{n_present} of its {end - base} rows — partly landed, "
+                    "not replayed; inspect the span with count_span/fetch, then "
+                    f"delete or overwrite the KV marker {marker!r} to release "
+                    "the batch"
+                )
+            if n_present == 0:
+                table = self.log.prepare_batch(batch_df)
                 if table.num_rows != end - base:
                     raise RuntimeError(
                         f"replayed batch {batch_id} size {table.num_rows} != "
                         f"reserved block [{base},{end}) — non-deterministic "
                         "source replay"
                     )
-                # 0 < n_present < end-base: a Spark write's job commit was
-                # torn mid-way — some task files landed, some didn't.
-                # Remove them before re-writing, else the rewrite would
-                # double the offsets that did land.
-                if n_present > 0:
-                    self.log.delete_offset_span(self.stream_id, ridx, base, end)
-                self.log.write_block(self.stream_id, table, base, ridx)
+                self.log.write_stamped(self.stream_id, table, base, ridx)
             self.kv.cas(marker, version, f"committed:{base}:{end}".encode())
-            # block verified durable (count_span == end-base or rewritten)
+            # block verified durable (count_span == end-base or written)
             # → advance the confirm offset downstream readers admit on
             self.log.catalog.confirm_offset(self.stream_id, end)
             return
 
-        table = _collect(batch_df)
+        table = self.log.prepare_batch(batch_df)
         n = table.num_rows
         if n == 0:
             self.kv.cas(marker, 0, b"committed:0:0")
@@ -121,7 +118,7 @@ class ExactlyOnceAppendSink:
             marker, 0, f"reserved:{base}:{base + n}:{rng.range_index}".encode()
         ):
             return  # lost the create race — another attempt owns this batch
-        self.log.write_block(self.stream_id, table, base, rng.range_index)
+        self.log.write_stamped(self.stream_id, table, base, rng.range_index)
         ent = self.kv.get(marker)
         assert ent is not None
         self.kv.cas(marker, ent[1], f"committed:{base}:{base + n}".encode())

@@ -413,3 +413,25 @@ def test_meta_change_without_event_is_refused(workdir):
     with open(cat._meta_path, "rb") as f:
         assert f.read() == meta
     assert cat._read_shard(sid) == shard
+
+
+def test_sweep_removes_catalog_temp_files(workdir):
+    """A write killed between its temp file and the rename leaves a
+    ``.catalog-*`` or ``.shard-*`` file; a maintenance ``sweep`` removes
+    it under the catalog lock, and an offset commit leaves it alone."""
+    import os
+
+    from elastic_stream_spark.log import StreamLog
+
+    cat = StreamCatalog(workdir)
+    sid = cat.create_stream().stream_id
+    stray = [os.path.join(workdir, n) for n in (".catalog-x1", ".shard-x2")]
+    for p in stray:
+        with open(p, "w") as f:
+            f.write("{")
+    cat.reserve_offsets(sid, 3)
+    cat.confirm_offset(sid, 3)
+    assert all(os.path.exists(p) for p in stray)
+    StreamLog(None, cat).sweep()
+    assert not any(os.path.exists(p) for p in stray)
+    assert cat.describe_stream(sid).confirmed_offset == 3

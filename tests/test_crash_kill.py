@@ -19,6 +19,9 @@ After every kill, through the lock-free read paths:
 - the published change-feed revisions are ``1..n`` with ``n`` at most the
   catalog's revision (equal once the crash window is repaired).
 
+Once ``StreamCatalog.repair`` has run, no ``.catalog-*`` or ``.shard-*``
+temp file a killed write left remains in the catalog root.
+
 A reserved block with no ack may be a hole: a reservation no writer
 confirms (``StreamCatalog.confirm_offset``'s docstring), not a failure.
 A SIGKILL stops the process, not the machine, so this covers crash points
@@ -55,9 +58,6 @@ def block_digest(payloads) -> str:
 def child(root: str, ack_path: str, seed: int) -> None:
     """Append forever until killed; one fsync'd ack line per returned
     append: ``sid base end sha256``."""
-    import numpy  # noqa: F401  the append's lazy imports, loaded before
-    import pyarrow.parquet  # noqa: F401  "ready" so kills land in appends
-
     from elastic_stream_spark.log import StreamLog
 
     rng = random.Random(seed)
@@ -171,6 +171,8 @@ def test_sigkill_during_byte_appends_keeps_invariants(workdir):
     assert kills >= 10
     acks = read_acks(ack_path)
     assert len(acks) >= 20  # the children got past start-up
-    cat._repair()
+    cat.repair()
     check_invariants(root, acks)
+    leftovers = [n for n in os.listdir(root) if n.startswith((".catalog-", ".shard-"))]
+    assert leftovers == []
     assert published_revisions(root) == list(range(1, cat.revision + 1))

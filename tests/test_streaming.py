@@ -297,7 +297,7 @@ def test_sink_replays_torn_write_same_offsets(spark, log, workdir):
     kv = KVStore(workdir + "/kv_torn1")
     sid = log.catalog.create_stream().stream_id
     sink = ExactlyOnceAppendSink(log, kv, sid, "qt")
-    batch = log.prepare_batch(_events(spark, 4))
+    batch = _events(spark, 4)
     # simulate phase 1 only: reserve + marker, then "crash" before write
     base, rng = log.catalog.reserve_offsets(sid, 4)
     assert kv.cas(sink._marker(0), 0, f"reserved:{base}:{base + 4}:{rng.range_index}".encode())
@@ -318,54 +318,62 @@ def test_sink_replays_after_write_before_commit(spark, log, workdir):
     kv = KVStore(workdir + "/kv_torn2")
     sid = log.catalog.create_stream().stream_id
     sink = ExactlyOnceAppendSink(log, kv, sid, "qt2")
-    batch = log.prepare_batch(_events(spark, 3))
+    batch = _events(spark, 3)
     base, rng = log.catalog.reserve_offsets(sid, 3)
     assert kv.cas(sink._marker(0), 0, f"reserved:{base}:{base + 3}:{rng.range_index}".encode())
-    log.write_stamped(sid, batch, base, rng.range_index)  # crash after this
+    log.write_stamped(sid, log.prepare_batch(batch), base, rng.range_index)  # crash after this
     sink(batch, batch_id=0)
     assert log.fetch(sid, 0, 100).count() == 3  # not duplicated
     assert kv.get(sink._marker(0))[0].decode().startswith("committed:")
 
 
-def test_sink_recovers_torn_partial_job_commit(spark, log, workdir):
-    """Crash DURING the parquet job commit: some task files of the
-    reserved block landed, some didn't.  The replay must count the
-    partial span, delete its files (footer offset stats), and re-write
-    the whole block — no silent tail loss, no doubled offsets."""
-    kv = KVStore(workdir + "/kv_torn3")
+@pytest.mark.parametrize("compact", [False, True], ids=["plain", "compacted"])
+def test_sink_refuses_partly_landed_block(spark, log, workdir, compact):
+    """A replay that finds its reserved block partly landed raises and
+    deletes nothing.  Only a sink that landed its block through a Spark
+    job could tear one.  Once ``optimize`` has compacted the range, the
+    file that overlaps the block also holds the committed records of the
+    blocks before it, so deleting it to re-write the block loses them."""
+    kv = KVStore(workdir + f"/kv_partial_{compact}")
     sid = log.catalog.create_stream().stream_id
-    sink = ExactlyOnceAppendSink(log, kv, sid, "qt3")
-    full = log.prepare_batch(_events(spark, 4))
+    sink = ExactlyOnceAppendSink(log, kv, sid, "qpart")
+    sink(_events(spark, 4), batch_id=0)  # committed [0, 4)
     base, rng = log.catalog.reserve_offsets(sid, 4)
-    assert kv.cas(sink._marker(0), 0, f"reserved:{base}:{base + 4}:{rng.range_index}".encode())
-    # simulate the torn commit: only the first 2 rows of the block landed
-    partial = log.prepare_batch(_events(spark, 2))
-    log.write_stamped(sid, partial, base, rng.range_index)
+    assert kv.cas(sink._marker(1), 0, f"reserved:{base}:{base + 4}:{rng.range_index}".encode())
+    # only the first 2 rows of the block landed
+    log.write_stamped(sid, log.prepare_batch(_events(spark, 2)), base, rng.range_index)
+    if compact:
+        log.catalog.seal_range(sid, epoch=log.catalog.describe_stream(sid).epoch)
+        assert log.optimize(sid) == {rng.range_index: (2, 1)}
     assert log.count_span(sid, base, base + 4) == 2
-    # replay reconciles: partial files removed, full block re-written once
-    sink(full, batch_id=0)
-    rows = log.fetch(sid, 0, 100).collect()
-    assert [r.offset for r in rows] == [0, 1, 2, 3]  # no dups, no gaps
-    assert log.count_span(sid, base, base + 4) == 4
-    assert kv.get(sink._marker(0))[0].decode().startswith("committed:")
+    with pytest.raises(RuntimeError, match="partly landed"):
+        sink(_events(spark, 4), batch_id=1)
+    assert [r.offset for r in log.fetch(sid, 0, 100).collect()] == list(range(6))
+    assert kv.get(sink._marker(1))[0].decode().startswith("reserved:")
 
 
 def test_sink_runs_one_spark_job_per_batch(spark, log, workdir):
-    """A microbatch is collected once and landed by the Arrow record
-    writer: the whole sink call is one Spark job."""
+    """A microbatch, or a DataFrame append, is collected once and landed
+    by the Arrow record writer: the whole call is one Spark job."""
     kv = KVStore(workdir + "/kv_jobs")
     sid = log.catalog.create_stream().stream_id
     sink = ExactlyOnceAppendSink(log, kv, sid, "qjobs")
+    calls = {
+        "sink-one-batch": lambda: sink(_events(spark, 4), batch_id=0),
+        "append-one-batch": lambda: log.append(sid, _events(spark, 4)),
+    }
     sc = spark.sparkContext
-    sc.setJobGroup("sink-one-batch", "one direct sink call")
-    try:
-        sink(_events(spark, 4), batch_id=0)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    for group, call in calls.items():
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("sink-one-batch")) == 1
-    assert [r.offset for r in log.fetch(sid, 0, 100).collect()] == [0, 1, 2, 3]
+    for group in calls:
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, group
+    assert [r.offset for r in log.fetch(sid, 0, 100).collect()] == list(range(8))
 
 
 def test_sink_replays_torn_arrow_write_once(spark, log, workdir, monkeypatch):
