@@ -23,10 +23,10 @@ Semantics mapped Spark-first:
   old epoch is fenced on its next append (``FencedError`` ≙
   EXPIRED_RANGE_EPOCH, rpc.fbs:48-51).
 - ``append`` takes a DataFrame batch (ts/properties/payload) — the
-  Spark-native record batch, written by a Spark job — or a plain list of
-  payload bytes, which the driver writes as one Parquet file with no
-  Spark job; both return ``AppendResult.base_offset``
-  (append_result.rs:1-10).
+  Spark-native record batch, collected to the driver by its one Spark
+  job — or a plain list of payload bytes, with no Spark job; either way
+  the driver writes the block as one Parquet file, and both return
+  ``AppendResult.base_offset`` (append_result.rs:1-10).
 - ``read`` returns the records DataFrame (offset-ordered, pruned scan) —
   the distributed path; ``read_payloads`` returns the raw payload bytes
   like the reference's ``Vec<Bytes>`` return, read on the driver with

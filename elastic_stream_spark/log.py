@@ -10,8 +10,11 @@ Reference parity:
   the data files on disk (the surveyed PD keeps no persisted copy either:
   an in-memory ``MemoryObjectManager`` serves it)
 - small-object compaction ≙
-  components/object-storage/src/range_accumulator.rs:129-170:
-  ``StreamLog.optimize``
+  components/object-storage/src/range_accumulator.rs:129-170, dropping
+  rows below the minimum offset as components/store/src/index/
+  compaction.rs:18-56 does: ``StreamLog.optimize``
+- trim reclaim ≙ WAL segment reclaim components/store/src/io/
+  wal.rs:435-541: ``StreamLog.vacuum`` deletes whole files
 - tiered storage / sparse index ≙ parquet row-group stats + partition
   pruning (components/model/src/object.rs:31-97 is replaced by Catalyst's
   min/max pruning — see SURVEY.md §4)
@@ -39,10 +42,12 @@ and lands.  The file is written under a ``.``-prefixed temp name,
 fsynced, renamed to a fresh UUID name and the directory fsynced, so a
 reader — Spark, ``pyarrow.dataset``, ``parquet_files`` all skip hidden
 names — sees the whole block or none of it.  Spark writes only what is
-not a reserved block: ``bulk_load`` and the maintenance rewrites
-(``optimize``, ``vacuum``).  Every file has the same format: ``offset``
-INT64 with footer min/max statistics, ``ts`` INT96 (Spark's default
-``outputTimestampType``), snappy.
+not a reserved block: ``bulk_load`` and ``optimize``, the log's one
+rewrite of a range directory, which touches sealed ranges only.
+``vacuum`` reads footers and deletes whole files; it rewrites nothing,
+so it never races an append into the mutable range.  Every file has the
+same format: ``offset`` INT64 with footer min/max statistics, ``ts``
+INT96 (Spark's default ``outputTimestampType``), snappy.
 
 Reads the same way: ``fetch`` is the Spark plan over one stream's range
 directories; ``fetch_table`` and the ``stream_log`` source read an offset
@@ -334,9 +339,9 @@ class StreamLog:
     driver: a list of bytes directly, a DataFrame after one collect
     (``prepare_batch``, the one Spark job) and ``write_stamped``, which the
     exactly-once sink calls too.  ``fetch_table``, ``count_span`` and
-    ``list_objects`` also run on the driver with pyarrow and no Spark job.
-    ``fetch`` and ``records`` return Spark plans; ``bulk_load`` and the
-    maintenance jobs run Spark jobs.
+    ``list_objects`` and ``vacuum`` also run on the driver with pyarrow and
+    no Spark job.  ``fetch`` and ``records`` return Spark plans;
+    ``bulk_load``, ``optimize`` and ``expire_retention`` run Spark jobs.
     """
 
     def __init__(self, spark: SparkSession, catalog: StreamCatalog):
@@ -497,7 +502,10 @@ class StreamLog:
     # ------------------------------------------------------------ fetch
 
     def records(self) -> DataFrame:
-        """The full log as a DataFrame (all streams). Partition columns
+        """The full physical log as a DataFrame (all streams), not clamped
+        to any stream's ``start_offset``: a file straddling a trim horizon
+        keeps its rows below the start until ``optimize`` compacts its
+        sealed range (``fetch`` is the clamped read).  Partition columns
         stream_id/range_index come back typed per RECORD_SCHEMA.  An
         empty (never-written) log reads as an empty DataFrame — crash
         recovery probes the log before the first write may have landed."""
@@ -627,11 +635,13 @@ class StreamLog:
 
     def _repair_swaps(self, stream_id: int) -> None:
         """Complete/roll back any directory swap a maintenance crash left
-        half-done (vacuum/optimize rename ``d → old``, ``tmp → d``,
-        ``rm old``).  A crash between the two renames leaves the live
-        tree MISSING the range dir while the authoritative rows sit in
-        ``old-<tag>`` — without this repair they were stranded forever
-        (fetch returned nothing for the range; caught in review).  Rules:
+        half-done (``optimize`` renames ``d → old``, ``tmp → d``, then
+        ``rm old``; ``_vacuum_tmp`` is still read because a store written
+        by an older engine, whose vacuum also rewrote ranges, can hold a
+        crashed vacuum's ``old-*``).  A crash between the two renames
+        leaves the live tree MISSING the range dir while the authoritative
+        rows sit in ``old-<tag>`` — without this repair they were stranded
+        forever (fetch returned nothing for the range).  Rules:
         ``old`` present + target missing → roll back (restore old; the
         rewrite is redone later); ``old`` present + target present → the
         swap completed, finish the cleanup; stale ``rewrite-*`` scratch →
@@ -659,13 +669,22 @@ class StreamLog:
                 shutil.rmtree(tmp, ignore_errors=True)
 
     def optimize(self, stream_id: int) -> dict[int, tuple[int, int]]:
-        """Compact each SEALED multi-file range into one object
-        (≙ range_accumulator.rs:129-170 small-object compaction).  Sealed
-        ranges are immutable, so the rewrite races with nothing; the
-        mutable range is skipped (it still takes appends).  Returns
-        {range_index: (files_before, files_after)}.  Fetch results are
-        identical before/after — only the object layout changes.  The
-        swap uses the same crash-safe ordering as vacuum."""
+        """Compact each SEALED range into one object (≙
+        range_accumulator.rs:129-170 small-object compaction, which also
+        drops rows below the minimum offset, compaction.rs:18-56): a range
+        is rewritten when it has more than one file, or when a file's
+        footer span starts below the range's ``start`` (the range straddled
+        a trim horizon), keeping only rows with ``offset >= start``.  The
+        log's one rewrite of a range directory.  Sealed ranges take no
+        appends, so the rewrite races with no writer; the mutable range is
+        never touched.  Returns {range_index: (files_before,
+        files_after)}.  Fetch results are identical before/after — reads
+        already clamp at ``start_offset``.  Crash-safety order: the rewrite
+        is written outside the records tree, the old directory renamed
+        aside (outside too, so partition discovery never sees a stray dir),
+        the new one moved in, the old one deleted last; ``_repair_swaps``
+        rolls back a swap interrupted between the two renames, so the rows
+        are never stranded outside the read tree."""
         import shutil
 
         scratch = f"{self.catalog.root}/_optimize_tmp"
@@ -677,14 +696,16 @@ class StreamLog:
                 if not r.sealed:
                     continue
                 d = self._range_dir(stream_id, r.range_index)
-                files = parquet_files(d)
-                if len(files) <= 1:
+                listing = footer_listing(d)
+                straddles = any(g[0] < r.start for _, gs in listing for g in gs or ())
+                if len(listing) <= 1 and not straddles:
                     continue
                 tag = f"s{stream_id}-r{r.range_index}"
                 tmp = f"{scratch}/rewrite-{tag}"
                 old = f"{scratch}/old-{tag}"
                 (
                     self.spark.read.parquet(d)
+                    .where(F.col("offset") >= r.start)
                     .coalesce(1)
                     .write.mode("overwrite")
                     .parquet(tmp)
@@ -692,80 +713,58 @@ class StreamLog:
                 os.replace(d, old)
                 shutil.move(tmp, d)
                 shutil.rmtree(old)
-                out[r.range_index] = (len(files), len(parquet_files(d)))
+                out[r.range_index] = (len(listing), len(parquet_files(d)))
             return out
 
     # ------------------------------------------------- maintenance jobs
 
     def vacuum(self, stream_id: int) -> None:
         """Physically drop data below the trim horizon / of deleted
-        streams.  Rewrites only the straddling range partition; ranges
-        entirely below the horizon are removed wholesale (cheap directory
-        deletes — the common case, ≙ WAL segment reclaim wal.rs:435-541).
-        """
+        streams, by deleting whole files only (≙ WAL segment reclaim,
+        wal.rs:435-541): the directories of deleted streams and dropped
+        ranges, and each data file whose footer index says its largest
+        offset is below ``start_offset``.  A file without offset
+        statistics is kept, and so is one straddling the horizon; its rows
+        below ``start_offset`` stay until ``optimize`` compacts its sealed
+        range.  Nothing is rewritten and no Spark job runs, so appends,
+        which take no maintenance lock, race with nothing: an append lands
+        only offsets it reserved at or above ``next_offset``, which no trim
+        passes."""
         import shutil
 
-        # single-shard read (same correctness level as describe_stream —
-        # in-flight txn staging is replayed at catalog init): vacuum only
-        # needs THIS stream's metadata, and sweep() calls it per stream,
-        # so a full-catalog _load() here made sweep O(streams²) shard
-        # reads (caught in review)
+        # single-shard read: vacuum needs only this stream's metadata, and
+        # sweep() calls it per stream
         with self._maintenance_lock(stream_id):
             data = self.catalog._read_shard(stream_id)
             if data is None:
                 return
             sraw = data["stream"]
-            stream_ranges = data["ranges"]
             self._repair_swaps(stream_id)  # heal any earlier maintenance crash
-            keep_from = sraw["start_offset"]
-            live = {r["range_index"] for r in stream_ranges}
+            live = {r["range_index"] for r in data["ranges"]}
             for ridx, d in range_dirs(self.records_root, stream_id):
                 if sraw["deleted"] or ridx not in live:
                     shutil.rmtree(d)
                     continue
-            if sraw["deleted"]:
-                return
-            # rewrite the straddling range (drop rows below keep_from).
-            # Crash-safety order: write the rewrite OUTSIDE the records
-            # tree, rename the old partition aside (also outside the tree,
-            # so concurrent partition discovery never sees a stray dir),
-            # move the new one in, delete the old dir last — no point at
-            # which the retained rows exist in zero locations, and
-            # _repair_swaps (run at every maintenance entry) rolls back a
-            # swap interrupted between the two renames, so the rows are
-            # also never STRANDED outside the read tree.
-            scratch = f"{self.catalog.root}/_vacuum_tmp"
-            os.makedirs(scratch, exist_ok=True)
-            for r in stream_ranges:
-                d = self._range_dir(stream_id, r["range_index"])
-                if not os.path.exists(d):
-                    continue
-                df = self.spark.read.parquet(d)
-                if df.where(F.col("offset") < keep_from).limit(1).count() == 0:
-                    continue
-                kept = df.where(F.col("offset") >= keep_from)
-                tag = f"s{stream_id}-r{r['range_index']}"
-                tmp = f"{scratch}/rewrite-{tag}"
-                old = f"{scratch}/old-{tag}"
-                kept.write.mode("overwrite").parquet(tmp)
-                os.replace(d, old)
-                shutil.move(tmp, d)
-                shutil.rmtree(old)
+                for path, groups in footer_listing(d):
+                    if groups and max(g[1] for g in groups) < sraw["start_offset"]:
+                        os.unlink(path)
 
     def sweep(self, now_ms: int | None = None, optimize: bool = False) -> dict:
         """One maintenance pass over ALL streams — the engine's analogue of
         the reference's background reclaim + offload loops
         (components/store/src/io/wal.rs:362-377 check_expired_segment on a
         timer; components/object-storage/src/range_accumulator.rs:129-170
-        compaction): per stream, retention trim → vacuum, deleted-stream
-        data reclaim and optional compaction of sealed multi-file ranges.
+        compaction): per stream, retention trim → vacuum (whole-file
+        deletes), deleted-stream data reclaim and optional compaction of
+        sealed ranges with several files or rows below the start.
         First it removes the catalog temp files a killed writer left
         (``StreamCatalog.repair``).  Idempotent; safe to run on any
         schedule.  Returns a per-stream report.
 
-        At 100 TB each step is either driver-side metadata or a
-        partition-pruned per-range Spark job; streams are independent, so
-        a cluster deployment can shard the loop by stream_id."""
+        At 100 TB each step is either driver-side metadata (vacuum) or a
+        partition-pruned Spark job (retention's aggregate, a per-range
+        compaction); streams are independent, so a cluster deployment can
+        shard the loop by stream_id."""
         import time as _time
 
         now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
@@ -786,15 +785,21 @@ class StreamLog:
 
     def expire_retention(self, stream_id: int, now_ms: int) -> int:
         """Retention job ≙ wal.rs:362-377 check_expired_segment: trim the
-        stream to the first offset whose ts is within the retention window.
-        Returns the new start_offset."""
+        stream to the first offset at or above ``start_offset`` whose ts is
+        within the retention window (rows below the start that a vacuum
+        kept in a straddling file do not count).  Returns the new
+        start_offset."""
         meta = self.catalog.describe_stream(stream_id)
         if meta.retention_ms < 0:
             return meta.start_offset
         horizon = F.timestamp_millis(F.lit(now_ms - meta.retention_ms))
         row = (
-            self._stream_records(stream_id)
-            .where((F.col("stream_id") == stream_id) & (F.col("ts") >= horizon))
+            self._stream_records(stream_id, meta.start_offset)
+            .where(
+                (F.col("stream_id") == stream_id)
+                & (F.col("offset") >= meta.start_offset)
+                & (F.col("ts") >= horizon)
+            )
             .agg(F.min("offset").alias("first_live"))
             .collect()[0]
         )

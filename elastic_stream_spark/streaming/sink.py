@@ -39,7 +39,7 @@ raises ``RuntimeError`` before collecting and deletes nothing.  Every
 writer lands a block as one file, so only trimming, or a sink that landed
 its block through a Spark job and was killed mid-commit, leaves one
 partly landed.  Its rows are not the replay's alone to delete: once
-``optimize`` or ``vacuum`` has rewritten the range, the files that
+``optimize`` has rewritten the range, the files that
 overlap the block hold committed records of other blocks too.  To
 recover by hand, inspect the span with ``StreamLog.count_span`` and
 ``fetch``, then delete the ``reserved:`` marker from the KV store (the

@@ -1,21 +1,26 @@
-"""Kill-based crash test of the byte append path.
+"""Kill-based crash test of the byte append path, with trim + vacuum.
 
 A child process appends ``list[bytes]`` blocks to three streams through
 ``StreamLog(None, StreamCatalog(root))`` (no Spark), with an occasional
 ``update_stream`` and ``seal_range``, and acks each append that returned
 with an fsync'd line.  The parent ``SIGKILL``s it at a seeded random
 delay, checks the store, and starts a fresh child on the same root.
-While the child runs, the parent reads the catalog files lock-free, as
-``describe_stream`` does, so a catalog write that is not one atomic
-replace shows up as a file that does not parse.
+While the child runs, the parent trims one stream to the base of an
+acked block and runs ``StreamLog(None, cat).vacuum`` on it, then reads
+the catalog files lock-free, as ``describe_stream`` does, so a catalog
+write that is not one atomic replace shows up as a file that does not
+parse.
 
 After every kill, through the lock-free read paths:
 - every shard and ``catalog.json`` parse;
 - ``confirmed_offset <= next_offset``;
 - no offset is held twice by the row groups of the footer index, across
   all of a stream's range directories;
-- every acked block reads back once through ``fetch_table``, with its
-  bytes, and ``confirmed_offset`` covers it;
+- ``confirmed_offset`` covers every acked block, and each one that ends
+  above ``start_offset`` reads back once through ``fetch_table``, with
+  its bytes;
+- no data file whose largest offset is below ``start_offset`` is left:
+  every trim is followed by a completed vacuum;
 - the published change-feed revisions are ``1..n`` with ``n`` at most the
   catalog's revision (equal once the crash window is repaired).
 
@@ -110,19 +115,36 @@ def check_invariants(root: str, acks) -> None:
         assert s.confirmed_offset <= s.next_offset, s
         listing = [e for _, d in range_dirs(records_root(root), sid) for e in footer_listing(d)]
         assert all(gs is not None for _, gs in listing), listing  # offset stats
+        assert all(max(g[1] for g in gs) >= s.start_offset for _, gs in listing), (sid, s)
         groups = sorted(g[:3] for _, gs in listing for g in gs)
         prev_hi = -1
         for lo, hi, n in groups:
             assert n == hi - lo + 1 and lo > prev_hi, (sid, groups)
             prev_hi = hi
     for sid, base, end, digest in acks:
-        assert cat.describe_stream(sid).confirmed_offset >= end, (sid, base, end)
+        s = cat.describe_stream(sid)
+        assert s.confirmed_offset >= end, (sid, base, end)
+        if end <= s.start_offset:  # trimmed away
+            continue
         got = log.fetch_table(sid, base, end)
         assert got["offset"].to_pylist() == list(range(base, end)), (sid, base, end)
         assert block_digest(got["payload"].to_pylist()) == digest, (sid, base, end)
     revs = published_revisions(root)
     assert revs == list(range(1, len(revs) + 1))
     assert len(revs) <= cat.revision
+
+
+def trim_and_vacuum(cat: StreamCatalog, acks, rng: random.Random) -> None:
+    """Trim one stream to the base of an acked block halfway through its
+    live acks, then vacuum it, while the child appends."""
+    from elastic_stream_spark.log import StreamLog
+
+    sid = rng.randrange(N_STREAMS)
+    start = cat.describe_stream(sid).start_offset
+    bases = [base for s, base, _, _ in acks if s == sid and base > start]
+    if bases:
+        cat.trim_stream(sid, bases[len(bases) // 2])
+    StreamLog(None, cat).vacuum(sid)
 
 
 def published_revisions(root: str) -> list[int]:
@@ -159,6 +181,7 @@ def test_sigkill_during_byte_appends_keeps_invariants(workdir):
         try:
             assert proc.stdout.readline() == b"ready\n"
             stop = time.monotonic() + rng.uniform(0.05, 0.8)
+            trim_and_vacuum(cat, read_acks(ack_path), rng)
             while time.monotonic() < stop:
                 read_catalog_files(root)
             assert proc.poll() is None, "child exited before the kill"

@@ -74,8 +74,8 @@ def test_commit_objects_idempotent_and_footer_exact(spark, log):
 
 def test_vacuum_reconciles_objects_after_trim(spark, log):
     """The view matches the disk after trim + vacuum: no descriptor points
-    at a reclaimed file, and the rewritten straddling range lists with
-    footer-exact counts (≙ the reference never leaves committed object
+    at a reclaimed file, and the straddling range, once compacted, lists
+    with footer-exact counts (≙ the reference never leaves committed object
     metadata pointing at reclaimed WAL,
     components/store/src/index/compaction.rs:18-56)."""
     sid = log.catalog.create_stream().stream_id
@@ -85,8 +85,10 @@ def test_vacuum_reconciles_objects_after_trim(spark, log):
     log.append(sid, _events(spark, 4, base_ts=900_000), epoch=1)  # range 1: [12, 16)
     _assert_view_matches_disk(log, sid, 16)
 
-    log.catalog.trim_stream(sid, 6)  # range 0 straddles: rewritten
-    log.vacuum(sid)
+    log.catalog.trim_stream(sid, 6)  # range 0 straddles the horizon
+    log.vacuum(sid)  # deletes the file of offsets 0..3, keeps 4..7 whole
+    _assert_view_matches_disk(log, sid, 12)
+    assert log.optimize(sid) == {0: (2, 1)}  # compaction drops 4..5
     _assert_view_matches_disk(log, sid, 10)  # offsets 6..15
     log.catalog.trim_stream(sid, 12)  # past range 0: its directory goes
     log.vacuum(sid)

@@ -1091,9 +1091,10 @@ def test_byte_cap_admission_jumps_trim_gap(spark, log):
     from elastic_stream_spark.streaming.datasource import StreamLogStreamReader
 
     sid = log.catalog.create_stream().stream_id
-    log.append(sid, _events(spark, 10))
+    log.append(sid, _events(spark, 5))
+    log.append(sid, _events(spark, 5))
     log.catalog.trim_stream(sid, 5)
-    log.vacuum(sid)  # physically drop offsets [0, 5) → gap below 5
+    log.vacuum(sid)  # deletes the file of offsets [0, 5) → gap below 5
     r = StreamLogStreamReader(
         {
             "root": log.catalog.root,
