@@ -51,7 +51,9 @@ INT96 (Spark's default ``outputTimestampType``), snappy.
 
 Reads the same way: ``fetch`` is the Spark plan over one stream's range
 directories; ``fetch_table`` and the ``stream_log`` source read an offset
-window with pyarrow through ``scan_range``.  Offset spans come from one
+window with pyarrow through ``scan_range``, on the driver (the source in
+the driver's Python runner; an executor's Python worker only replays an
+uncommitted batch).  Offset spans come from one
 process-wide footer index keyed by path (a data file never changes once
 it has its final name), so a tail read opens only the files that overlap
 its window, however many files the stream has.  That index is the log's
@@ -199,7 +201,7 @@ def _read_row_groups(path: str) -> tuple[RowGroup, ...] | None:
 # files it held when last listed.  A data file never changes once it has
 # its final name, and every writer gives each file a fresh UUID name, so
 # an entry stays valid while its path is listed.  One per process, not
-# per StreamLog: the source's executor-side scan has no StreamLog, and
+# per StreamLog: the ``stream_log`` source's reads have no StreamLog, and
 # sharing is safe because an entry is a fact about an immutable file.
 _FOOTERS: dict[str, dict[str, tuple[RowGroup, ...] | None]] = {}
 

@@ -5,18 +5,36 @@
 N records per poll".  This is the log's one Structured Streaming source,
 built on the PySpark Python Data Source API (SPARK-44076, pyspark 4.x):
 stream offsets ARE the source's offsets, so record admission is exact —
-``latestOffset`` advances by at most ``maxRecordsPerTrigger`` past the
-last committed position, the ``maxOffsetsPerTrigger`` contract Kafka
-consumers rely on.  A subscription may start before the stream's first
-append.
+each window ends at most ``maxRecordsPerTrigger`` past the start Spark
+hands the reader, the ``maxOffsetsPerTrigger`` contract Kafka consumers
+rely on.  A subscription may start before the stream's first append.
 
-Plan shape: one ``InputPartition`` per overlapping catalog range
-(``log.range_slices``), read executor-side as Arrow batches by
-``log.scan_range`` — the same per-range scan ``StreamLog.fetch_table``
-uses, opening only the files whose footer offset span overlaps the
-window.  Availability comes from the catalog's confirm offset
-(driver-side metadata read, no data scan, no directory listing) —
-discovery cost is O(1) per trigger regardless of log size.
+Plan shape: the admitted window is read on the driver.  The reader is a
+``SimpleDataSourceStreamReader``, which pyspark runs in the driver's
+long-lived Python runner: when Spark asks for the latest offset,
+``read(start)`` admits the window's end (``admit``) and reads its rows
+as Arrow batches with ``log.scan_range`` over each overlapping catalog
+range (``log.range_slices``) — the same per-range scan
+``StreamLog.fetch_table`` uses, opening only the files whose footer
+offset span overlaps the window.  The runner caches the batches and
+hands them to the JVM when the microbatch is planned, so the source
+stage is a JVM-only task with no Python worker (the reference's FETCH
+likewise serves data from the range server straight to the client).
+The start of each read is Spark's own checkpointed offset, so a
+restarted query resumes admission where it stopped.  A batch planned
+but not committed before a restart is replayed by
+``readBetweenOffsets(start, end)``: the same window through the same
+read, run in an executor's Python worker (Structured Streaming's
+replayable-source contract).  Availability comes from the catalog's
+confirm offset (driver-side metadata read, no data scan, no directory
+listing) — discovery cost is O(1) per trigger regardless of log size.
+
+Trade-off: every admitted window passes through the driver, as every
+microbatch of ``ExactlyOnceAppendSink`` already does, and an uncapped
+subscription reads its whole backlog there in one trigger.  Cap it when
+the backlog may not fit.  There is no default cap: the caps do not
+combine with ``availableNow`` (below), so a default would cut short
+every uncapped drain.
 
 Usage::
 
@@ -39,8 +57,8 @@ For a capped drain use a processing-time trigger and
 Multi-stream subscription (≙ FETCH's N-streams-per-request batching,
 docs/sbp.md:220-285; batch layout range-server/src/handler/append.rs:21-29):
 ``streamIds`` takes a comma-separated list; source offsets become a
-per-stream map, microbatch partitions are the union of per-stream range
-slices, and the record-admission budget is split fairly across streams
+per-stream map, a microbatch is the union of per-stream range slices,
+and the record-admission budget is split fairly across streams
 with backlog (waterfall allocation in stream-id order — total admitted
 per trigger never exceeds ``maxRecordsPerTrigger``).  Single-stream
 subscriptions keep the scalar offset format, so existing checkpoints
@@ -52,37 +70,26 @@ Exactly-once downstream is unchanged: pair with
 
 from __future__ import annotations
 
-import json
 import math
 import os
-from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+import pyarrow as pa
+from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from elastic_stream_spark.catalog import StreamCatalog, StreamNotFound
 from elastic_stream_spark.log import (
-    RangeSlice,
+    RECORD_SCHEMA,
     range_slices,
     records_root,
     scan_range,
     stream_row_groups,
 )
 
-# log.RECORD_SCHEMA as DDL, every column nullable
-RECORD_DDL = (
-    "stream_id BIGINT, range_index INT, offset BIGINT, ts TIMESTAMP, "
-    "properties MAP<STRING,STRING>, payload BINARY"
-)
-
-
-@dataclass
-class RangePartition(RangeSlice, InputPartition):
-    """A microbatch's range slice as a Spark input partition."""
+# log.RECORD_SCHEMA with every column nullable
+SOURCE_SCHEMA = T.StructType([T.StructField(f.name, f.dataType) for f in RECORD_SCHEMA])
 
 
 def fair_split(backlog: dict[int, int], budget: int) -> dict[int, int]:
@@ -109,8 +116,9 @@ def fair_split(backlog: dict[int, int], budget: int) -> dict[int, int]:
     return admitted
 
 
-class StreamLogStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
+class StreamLogStreamReader(SimpleDataSourceStreamReader):
+    def __init__(self, options: dict, schema: T.StructType = SOURCE_SCHEMA):
+        self.arrow_schema = to_arrow_schema(schema)
         self.root = options["root"]
         self.catalog = StreamCatalog(self.root)
         self.records_root = records_root(self.root)
@@ -139,7 +147,7 @@ class StreamLogStreamReader(DataSourceStreamReader):
         # a HARD cap under per-row-group accounting — the admitted window
         # is priced from parquet footer row-group sizes (offset stats +
         # compressed bytes; driver-side metadata read, cached per
-        # next_offset), never a stream-wide average.  Whole records only.
+        # confirm offset), never a stream-wide average.  Whole records only.
         # Progress guarantee: when the budget admits nothing anywhere,
         # exactly ONE record of the single lowest-id backlogged stream is
         # admitted (the reference's fetch returns one batch even when it
@@ -150,26 +158,13 @@ class StreamLogStreamReader(DataSourceStreamReader):
         if self.max_bytes is not None and self.max_bytes <= 0:
             raise ValueError("maxBytesPerTrigger must be positive")
         self._rg_cache: dict[int, tuple[int, list[tuple[int, int, int, int]]]] = {}
-        # Subscription progress (≙ the consumer-group offset the reference
-        # keeps in PD KV): ``latestOffset`` takes no start argument in the
-        # Python source protocol, so the admitted window's base is tracked
-        # here — in memory per trigger, persisted on ``commit`` so a
-        # restarted query resumes admission from its true position instead
-        # of re-admitting from startOffset.  One subscription per
-        # checkpoint location (the Kafka group-id contract).
-        default_sub = "sub-" + "-".join(str(s) for s in self.stream_ids)
-        self.subscription = str(options.get("subscription", default_sub))
-        self._progress_path = os.path.join(
-            self.root, "_source_progress", f"{self.subscription}.json"
-        )
-        self._last: dict[int, int] | None = None
 
     # ------------------------------------------------------------ offsets
 
     def _to_wire(self, offsets: dict[int, int]) -> dict:
         """Serialize per-stream offsets.  Single-stream subscriptions keep
-        the scalar {"offset": n} format so pre-existing checkpoints (and
-        their progress files) resume unchanged."""
+        the scalar {"offset": n} format so pre-existing checkpoints
+        resume unchanged."""
         if len(self.stream_ids) == 1:
             return {"offset": offsets[self.stream_ids[0]]}
         return {"offsets": {str(s): offsets[s] for s in self.stream_ids}}
@@ -179,31 +174,8 @@ class StreamLogStreamReader(DataSourceStreamReader):
             return {int(k): int(v) for k, v in wire["offsets"].items()}
         return {self.stream_ids[0]: int(wire["offset"])}
 
-    def _committed_progress(self) -> dict[int, int]:
-        if not os.path.exists(self._progress_path):
-            return dict(self.start_offsets)
-        with open(self._progress_path) as f:
-            saved = self._from_wire(json.load(f))
-        return {
-            s: max(self.start_offsets[s], saved.get(s, self.start_offsets[s]))
-            for s in self.stream_ids
-        }
-
     def initialOffset(self) -> dict:  # noqa: N802 (API name)
-        # Spark calls this only when the CHECKPOINT has no offsets — a
-        # genuinely new query.  Reset the subscription's progress file to
-        # the start offsets: a stale file from a previous query life
-        # (checkpoint deleted, same subscription name) would otherwise
-        # floor the first admission window at its old position, making
-        # the first microbatch span [startOffset, old_progress + cap) —
-        # unbounded, violating the per-trigger cap (review finding).
-        if os.path.exists(self._progress_path):
-            os.makedirs(os.path.dirname(self._progress_path), exist_ok=True)
-            tmp = self._progress_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(self._to_wire(dict(self.start_offsets)), f)
-            os.replace(tmp, self._progress_path)
-        return self._to_wire(dict(self.start_offsets))
+        return self._to_wire(self.start_offsets)
 
     def _confirmed(self, sid: int) -> int:
         """Durable availability (≙ the long-poll's confirm-offset check,
@@ -219,17 +191,18 @@ class StreamLogStreamReader(DataSourceStreamReader):
         except StreamNotFound:
             return 0
 
-    def latestOffset(self) -> dict:  # noqa: N802
-        base = self._committed_progress() if self._last is None else self._last
+    def admit(self, start: dict) -> dict:
+        """The end of the window admitted past ``start``: the confirmed
+        backlog, fair-split under the record cap, then tightened to the
+        byte cap."""
+        base = self._from_wire(start)
         backlog = {
             s: max(0, self._confirmed(s) - base[s]) for s in self.stream_ids
         }
         admitted = fair_split(backlog, self.max_records)
         if self.max_bytes is not None:
             admitted = self._apply_byte_cap(admitted, base)
-        nxt = {s: base[s] + admitted[s] for s in self.stream_ids}
-        self._last = nxt
-        return self._to_wire(nxt)
+        return self._to_wire({s: base[s] + admitted[s] for s in self.stream_ids})
 
     def _row_groups(self, sid: int) -> list[tuple[int, int, int, int]]:
         """Footer row-group index for the stream (``log.stream_row_groups``)
@@ -336,62 +309,51 @@ class StreamLogStreamReader(DataSourceStreamReader):
                 out[starved[0]] = 1  # documented single-record overshoot
         return out
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        lo_map, hi_map = self._from_wire(start), self._from_wire(end)
-        out: list[RangePartition] = []
-        for sid in self.stream_ids:
-            lo = lo_map.get(sid, self.start_offsets[sid])
-            hi = hi_map.get(sid, lo)
-            if hi <= lo:
-                continue
-            for s in range_slices(self.catalog, self.records_root, sid, lo, hi):
-                out.append(RangePartition(**vars(s)))
-        return out
-
     # --------------------------------------------------------------- read
 
-    def read(self, partition: RangePartition) -> Iterator:  # executor-side
-        import pyarrow as pa
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        """The admitted window past ``start`` as Arrow batches, and its
+        end (the next read's start).  A list iterator, not a generator:
+        pyspark's wrapper ``copy.copy``s the cached iterator."""
+        end = self.admit(start)
+        return self.readBetweenOffsets(start, end), end
 
-        if not os.path.isdir(partition.range_dir):
-            # the planned window covers CONFIRMED offsets, so the data
-            # must exist on disk — a missing dir means a concurrent
-            # maintenance swap is mid-rename (or its crash leftover).
-            # Raising lets Spark retry the task — at-most-delay — where
-            # silently yielding nothing would commit the batch and
-            # permanently skip the records.
-            raise FileNotFoundError(
-                f"range dir missing for confirmed offsets "
-                f"[{partition.lo}, {partition.hi}): {partition.range_dir} "
-                "(concurrent maintenance swap? re-run sweep/vacuum to "
-                "repair after a maintenance crash)"
-            )
-        for batch in scan_range(partition.range_dir, partition.lo, partition.hi):
-            n = batch.num_rows
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([partition.stream_id] * n, type=pa.int64()),
-                    pa.array([partition.range_index] * n, type=pa.int32()),
-                    *batch.columns,
-                ],
-                names=["stream_id", "range_index", *batch.schema.names],
-            )
-
-    def commit(self, end: dict) -> None:
-        """Persist subscription progress (atomic rename).  Exactness note:
-        Spark's checkpoint remains the source of truth for batch replay;
-        this file only floors the NEXT admission window, and every crash
-        interleaving keeps the window ≤ maxRecordsPerTrigger (the window
-        [checkpointed_end, floor + max_records] is always within one cap
-        of the floor)."""
-        os.makedirs(os.path.dirname(self._progress_path), exist_ok=True)
-        tmp = self._progress_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(end, f)  # already wire format (scalar or per-stream)
-        os.replace(tmp, self._progress_path)
-
-    def stop(self) -> None:
-        pass
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:  # noqa: N802
+        """Rows with offsets in ``[start, end)`` per stream, cast to the
+        schema Spark declared: the JVM asserts the batches' schema equals
+        it, and the log's files carry ``ts`` without a time zone."""
+        lo_map, hi_map = self._from_wire(start), self._from_wire(end)
+        batches = []
+        for sid in self.stream_ids:
+            if hi_map[sid] <= lo_map[sid]:
+                continue
+            for s in range_slices(self.catalog, self.records_root, sid, lo_map[sid], hi_map[sid]):
+                if not os.path.isdir(s.range_dir):
+                    # the window covers CONFIRMED offsets, so the data
+                    # must exist on disk — a missing dir means a
+                    # concurrent maintenance swap is mid-rename (or its
+                    # crash leftover).  Failing the trigger delays the
+                    # records; yielding nothing would commit the batch
+                    # and skip them for good.
+                    raise FileNotFoundError(
+                        f"range dir missing for confirmed offsets "
+                        f"[{s.lo}, {s.hi}): {s.range_dir} "
+                        "(concurrent maintenance swap? re-run sweep/vacuum to "
+                        "repair after a maintenance crash)"
+                    )
+                for batch in scan_range(s.range_dir, s.lo, s.hi):
+                    n = batch.num_rows
+                    batches.append(
+                        pa.RecordBatch.from_arrays(
+                            [
+                                pa.array([sid] * n, type=pa.int64()),
+                                pa.array([s.range_index] * n, type=pa.int32()),
+                                *batch.columns,
+                            ],
+                            names=["stream_id", "range_index", *batch.schema.names],
+                        ).cast(self.arrow_schema)
+                    )
+        return iter(batches)
 
 
 class StreamLogDataSource(DataSource):
@@ -402,8 +364,8 @@ class StreamLogDataSource(DataSource):
     def name(cls) -> str:
         return "stream_log"
 
-    def schema(self) -> str:
-        return RECORD_DDL
+    def schema(self) -> T.StructType:
+        return SOURCE_SCHEMA
 
-    def streamReader(self, schema) -> StreamLogStreamReader:  # noqa: N802
-        return StreamLogStreamReader(self.options)
+    def simpleStreamReader(self, schema: T.StructType) -> StreamLogStreamReader:  # noqa: N802
+        return StreamLogStreamReader(self.options, schema)

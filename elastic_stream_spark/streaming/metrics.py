@@ -27,13 +27,17 @@ from pyspark.sql.streaming import StreamingQueryListener
 METRICS_SCHEMA = (
     "ts_ms BIGINT, query_id STRING, query_name STRING, batch_id BIGINT, "
     "num_input_rows BIGINT, input_rows_per_sec DOUBLE, "
-    "processed_rows_per_sec DOUBLE, trigger_ms BIGINT"
+    "processed_rows_per_sec DOUBLE, trigger_ms BIGINT, "
+    "duration_ms MAP<STRING,BIGINT>, state_rows_total BIGINT, "
+    "state_memory_bytes BIGINT"
 )
 
 
 class MetricsRecorder(StreamingQueryListener):
     """Capture per-microbatch progress of every query on the session into
-    ``<root>/metrics/`` (register with ``spark.streams.addListener``).
+    ``<root>/metrics/`` (register with ``spark.streams.addListener``): the
+    whole ``durationMs`` breakdown, and the row count and memory of the
+    first state operator (null for a stateless query).
     File name ``<query_id>-<batch_id>.json`` makes replayed batches
     overwrite their own record — at-most-one metrics row per batch."""
 
@@ -47,6 +51,7 @@ class MetricsRecorder(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
         durations = p.durationMs or {}
+        state = p.stateOperators[0] if p.stateOperators else None
         row = {
             "ts_ms": int(time.time() * 1000),
             "query_id": str(p.id),
@@ -56,6 +61,9 @@ class MetricsRecorder(StreamingQueryListener):
             "input_rows_per_sec": float(p.inputRowsPerSecond or 0.0),
             "processed_rows_per_sec": float(p.processedRowsPerSecond or 0.0),
             "trigger_ms": int(durations.get("triggerExecution", 0)),
+            "duration_ms": {k: int(v) for k, v in durations.items()},
+            "state_rows_total": state.numRowsTotal if state else None,
+            "state_memory_bytes": state.memoryUsedBytes if state else None,
         }
         path = os.path.join(self.metrics_dir, f"{p.id}-{p.batchId}.json")
         # dot-prefixed staging name: spark file listings (batch and

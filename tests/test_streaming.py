@@ -92,22 +92,27 @@ def test_streaming_fetch_sees_appends(spark, log):
     assert [r.offset for r in got2] == [5, 6, 7]
 
 
-def test_per_stream_subscription_prunes_listing(spark, log):
-    """A per-stream subscription must plan ONLY the stream's range
+def test_per_stream_subscription_prunes_listing(spark, log, monkeypatch):
+    """A per-stream subscription must scan ONLY the stream's range
     directories — read cost tracks the subscribed stream, not the log
     (≙ per-stream FETCH addressing one range server, not the cluster)."""
     from elastic_stream_spark.log import range_dirs
-    from elastic_stream_spark.streaming.datasource import StreamLogStreamReader
+    from elastic_stream_spark.streaming import datasource
 
     a = log.catalog.create_stream().stream_id
     b = log.catalog.create_stream().stream_id
     log.append(a, _events(spark, 4))
     log.append(b, _events(spark, 6))
-    r = StreamLogStreamReader({"root": log.catalog.root, "streamid": str(a)})
-    parts = r.partitions(r.initialOffset(), r.latestOffset())
-    assert parts and {p.stream_id for p in parts} == {a}
+    scanned = []
+    scan = datasource.scan_range
+    monkeypatch.setattr(
+        datasource, "scan_range", lambda d, lo, hi: scanned.append(d) or scan(d, lo, hi)
+    )
+    r = datasource.StreamLogStreamReader({"root": log.catalog.root, "streamid": str(a)})
+    batches, _ = r.read(r.initialOffset())
+    assert {v for bt in batches for v in bt["stream_id"].to_pylist()} == {a}
     own_dirs = {d for _, d in range_dirs(log.records_root, a)}
-    assert {p.range_dir for p in parts} <= own_dirs
+    assert scanned and set(scanned) <= own_dirs
 
     _run_available_now(_read_log(spark, log, a), "t_prune")
     got = spark.sql("SELECT stream_id, offset FROM t_prune").collect()
@@ -154,11 +159,11 @@ def test_record_admission_caps_microbatches(spark, log):
 
 
 def test_record_admission_survives_restart(spark, log):
-    """The reader's admission window must stay ≤ maxRecordsPerTrigger
-    across a query restart: subscription progress persisted on commit()
-    floors the next window, so a fresh reader instance does not re-admit
-    from startOffset (which would both break the cap and replan consumed
-    spans)."""
+    """The reader's admission window stays ≤ maxRecordsPerTrigger past
+    whatever start it is handed: a fresh reader instance (a restarted
+    query) admits from Spark's checkpointed offset, not from
+    startOffset, and reads exactly the admitted window.  The Spark-level
+    restart is ``test_stream_log_restart_and_replay_deliver_once``."""
     from elastic_stream_spark.streaming.datasource import StreamLogStreamReader
 
     sid = log.catalog.create_stream().stream_id
@@ -167,18 +172,96 @@ def test_record_admission_survives_restart(spark, log):
 
     r1 = StreamLogStreamReader(dict(opts))
     assert r1.initialOffset() == {"offset": 0}
-    assert r1.latestOffset() == {"offset": 5}  # capped
-    assert r1.latestOffset() == {"offset": 10}
-    r1.commit({"offset": 10})  # Spark committed two microbatches
+    assert r1.admit({"offset": 0}) == {"offset": 5}  # capped
+    assert r1.admit({"offset": 5}) == {"offset": 10}
 
-    # restart: a NEW reader resumes admission from the committed floor
+    # restart: a NEW reader admits from the start Spark hands it
     r2 = StreamLogStreamReader(dict(opts))
-    assert r2.latestOffset() == {"offset": 12}  # 10 + ≤5, clamped to tail
-    # partitions for the planned window slice only the overlapping range
-    parts = r2.partitions({"offset": 10}, {"offset": 12})
-    assert len(parts) == 1 and (parts[0].lo, parts[0].hi) == (10, 12)
-    # empty window → no partitions
-    assert r2.partitions({"offset": 12}, {"offset": 12}) == []
+    batches, end = r2.read({"offset": 10})
+    assert end == {"offset": 12}  # 10 + ≤5, clamped to tail
+    assert [o for b in batches for o in b["offset"].to_pylist()] == [10, 11]
+    # empty window → no batches, and the end does not move
+    batches, end = r2.read({"offset": 12})
+    assert end == {"offset": 12} and list(batches) == []
+
+
+def test_stream_log_restart_and_replay_deliver_once(spark, log, workdir):
+    """Spark-level restart and replay on one checkpoint.  A restart
+    resumes admission from the checkpointed offset under the same cap,
+    and every offset arrives once.  A batch whose commit is lost is
+    replayed through ``readBetweenOffsets`` with the same rows."""
+    sid = log.catalog.create_stream().stream_id
+    ckpt = os.path.join(workdir, "ckpt")
+    got: list[tuple[int, list[int]]] = []
+
+    def run():
+        q = (
+            _read_log(spark, log, sid, maxRecordsPerTrigger=5)
+            .writeStream.foreachBatch(
+                lambda df, bid: got.append(
+                    (bid, sorted(r.offset for r in df.select("offset").collect()))
+                )
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    log.append(sid, _events(spark, 12))
+    run()
+    log.append(sid, _events(spark, 12, base_ts=10_000_000))
+    run()  # restart on the same checkpoint
+    assert all(len(offs) <= 5 for _, offs in got), got
+    assert sorted(o for _, offs in got for o in offs) == list(range(24))
+    by_batch = dict(got)
+
+    # lose the last batch's commit: the restart replays that batch
+    last = max(int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit())
+    os.remove(os.path.join(ckpt, "commits", str(last)))
+    os.remove(os.path.join(ckpt, "commits", f".{last}.crc"))
+    got.clear()
+    run()
+    assert got == [(last, by_batch[last])], got
+
+
+def test_missing_range_dir_fails_the_read(spark, log, workdir):
+    """A confirmed window whose range directory is gone (a maintenance
+    swap mid-rename) raises, where ``scan_range`` alone would yield
+    nothing and the batch would commit past the records."""
+    from elastic_stream_spark.log import range_dirs
+    from elastic_stream_spark.streaming.datasource import StreamLogStreamReader
+
+    sid = log.catalog.create_stream().stream_id
+    log.append(sid, _events(spark, 4))
+    r = StreamLogStreamReader({"root": log.catalog.root, "streamid": str(sid)})
+    [(_, d)] = range_dirs(log.records_root, sid)
+    os.rename(d, os.path.join(workdir, "moved"))
+    with pytest.raises(FileNotFoundError, match="range dir missing"):
+        r.read(r.initialOffset())
+
+
+def test_read_batches_match_the_declared_arrow_schema(spark, log):
+    """The JVM asserts that the source's Arrow batches have exactly the
+    schema Spark declared; the log's files carry ``ts`` with no time
+    zone, so every batch ``read`` returns must come back cast."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    s1 = log.catalog.create_stream().stream_id
+    s2 = log.catalog.create_stream().stream_id
+    log.append(s1, _events(spark, 3))
+    log.append(s2, _events(spark, 2))
+    for ids in ({"streamid": str(s1)}, {"streamids": f"{s1},{s2}"}):
+        ds = StreamLogDataSource({"root": log.catalog.root, **ids})
+        want = to_arrow_schema(ds.schema())
+        assert want.field("ts").type == pa.timestamp("us", tz="UTC")
+        r = ds.simpleStreamReader(ds.schema())
+        batches = list(r.read(r.initialOffset())[0])
+        assert batches and all(b.schema == want for b in batches)
 
 
 def test_poll_fetch_long_poll_semantics(spark, log):
@@ -546,6 +629,13 @@ def test_metrics_recorder_captures_batches(spark, log, workdir):
     assert sum(r.num_input_rows for r in rows) == 20
     assert all(r.batch_id >= 0 and r.trigger_ms >= 0 for r in rows)
     assert any(r.processed_rows_per_sec > 0 for r in rows)
+    # the whole durationMs breakdown, triggerExecution included
+    for r in rows:
+        assert r.duration_ms["triggerExecution"] == r.trigger_ms
+        assert {"addBatch", "latestOffset", "walCommit"} <= set(r.duration_ms)
+    # the global count keeps one state row; its store reports memory
+    last = max(rows, key=lambda r: r.batch_id)
+    assert last.state_rows_total == 1 and last.state_memory_bytes > 0
 
     s = metrics_summary(spark, workdir).where(
         F.col("query_name") == "metrics_probe"
@@ -803,17 +893,23 @@ def test_multi_stream_subscription_admission_and_union(spark, log):
     r = StreamLogStreamReader(dict(opts))
     init = r.initialOffset()
     assert init == {"offsets": {str(s1): 0, str(s2): 0, str(s3): 0}}
-    first = r.latestOffset()["offsets"]
+    first = r.admit(init)["offsets"]
     # budget 4 over backlogs (9, 3, 0): fair share 2 each round →
     # s1 gets 2, s2 gets 2; total admitted == budget
     assert first[str(s1)] + first[str(s2)] == 4 and first[str(s3)] == 0
     assert first[str(s2)] <= 3
-    second = r.latestOffset()["offsets"]
+    second = r.admit({"offsets": first})["offsets"]
     assert sum(second.values()) - sum(first.values()) == 4
-    parts = r.partitions(init, {"offsets": first})
-    assert {p.stream_id for p in parts} == {s1, s2}
-    for p in parts:
-        assert p.hi - p.lo <= 4
+    batches, end = r.read(init)
+    assert end == {"offsets": first}
+    rows = [
+        (s, o)
+        for b in batches
+        for s, o in zip(b["stream_id"].to_pylist(), b["offset"].to_pylist())
+    ]
+    assert {s for s, _ in rows} == {s1, s2}
+    for s in (s1, s2):
+        assert sorted(o for s_, o in rows if s_ == s) == list(range(first[str(s)]))
 
     # --- end-to-end: every record of every subscribed stream arrives once
     spark.dataSource.register(StreamLogDataSource)
@@ -876,8 +972,8 @@ def test_byte_budget_admission_stream_log(spark, log):
         }
     )
     # each trigger admits exactly the 3 records the budget affords
-    assert r.latestOffset() == {"offset": 3}
-    assert r.latestOffset() == {"offset": 6}
+    assert r.admit({"offset": 0}) == {"offset": 3}
+    assert r.admit({"offset": 3}) == {"offset": 6}
     # record cap composes: the tighter of the two governs
     r2 = StreamLogStreamReader(
         {
@@ -887,7 +983,7 @@ def test_byte_budget_admission_stream_log(spark, log):
             "maxbytespertrigger": str(math.ceil(per_rec * 5)),
         }
     )
-    assert r2.latestOffset() == {"offset": 2}
+    assert r2.admit({"offset": 0}) == {"offset": 2}
     # budget below one record still admits exactly one — the documented
     # single-record progress floor, the only overshoot case
     r3 = StreamLogStreamReader(
@@ -897,7 +993,7 @@ def test_byte_budget_admission_stream_log(spark, log):
             "maxbytespertrigger": str(max(1, int(per_rec // 2))),
         }
     )
-    assert r3.latestOffset() == {"offset": 1}
+    assert r3.admit({"offset": 0}) == {"offset": 1}
     # 0 is rejected explicitly (not silently treated as unset)
     with pytest.raises(ValueError, match="maxBytesPerTrigger"):
         StreamLogStreamReader(
@@ -953,7 +1049,7 @@ def test_byte_budget_hard_cap_on_skewed_payloads(spark, log):
     )
     base = 0
     for _ in range(20):
-        end = r.latestOffset()["offset"]
+        end = r.admit({"offset": base})["offset"]
         if end == base:
             break
         cost = probe._window_cost(sid, base, end - base)
@@ -1071,7 +1167,7 @@ def test_confirmed_offset_gates_streaming_availability(spark, log):
     assert log.next_offset(sid) == 8
     assert log.confirmed_offset(sid) == 3
     r = StreamLogStreamReader({"root": log.catalog.root, "streamid": str(sid)})
-    assert r.latestOffset()["offset"] == 3  # never past confirmed
+    assert r.admit(r.initialOffset())["offset"] == 3  # never past confirmed
     df, end = poll_fetch(log, sid, 0, min_records=1, max_wait_ms=200)
     assert end == 3 and df.count() == 3
     # the landed write confirms and becomes visible
@@ -1079,7 +1175,7 @@ def test_confirmed_offset_gates_streaming_availability(spark, log):
     log.write_stamped(sid, batch, 3, 0)
     log.catalog.confirm_offset(sid, 8)
     r2 = StreamLogStreamReader({"root": log.catalog.root, "streamid": str(sid)})
-    assert r2.latestOffset()["offset"] == 8
+    assert r2.admit(r2.initialOffset())["offset"] == 8
 
 
 def test_byte_cap_admission_jumps_trim_gap(spark, log):
@@ -1102,7 +1198,7 @@ def test_byte_cap_admission_jumps_trim_gap(spark, log):
             "maxbytespertrigger": "100000",
         }
     )
-    end = r.latestOffset()["offset"]
+    end = r.admit(r.initialOffset())["offset"]
     assert end == 10, end  # gap [0,5) free + all 5 resident records afford
 
 
