@@ -612,9 +612,11 @@ class StreamCatalog:
         confirmed watermark below that leaked block forever (admission
         deadlock).  The reference resolves the same situation by sealing
         the range to fence the dead writer; our analogue is the same —
-        seal_range fences, and a sealed stream's confirm equals its end.
-        Concurrent same-epoch writers remain outside the contract for
-        both engines.
+        seal_range fences the writer's later reserves.  It does not
+        bound its confirms: the range is sealed at ``next_offset``,
+        which counts a reservation still in flight, and a confirm names
+        no epoch.  Concurrent same-epoch writers remain outside the
+        contract for both engines.
 
         An offset commit, like ``reserve_offsets``: one fsync'd shard
         replace, no ``catalog.json`` write, no feed event."""

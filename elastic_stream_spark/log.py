@@ -41,13 +41,14 @@ microbatch, which ``prepare_batch`` collects and ``write_stamped`` stamps
 and lands.  The file is written under a ``.``-prefixed temp name,
 fsynced, renamed to a fresh UUID name and the directory fsynced, so a
 reader — Spark, ``pyarrow.dataset``, ``parquet_files`` all skip hidden
-names — sees the whole block or none of it.  Spark writes only what is
-not a reserved block: ``bulk_load`` and ``optimize``, the log's one
-rewrite of a range directory, which touches sealed ranges only.
-``vacuum`` reads footers and deletes whole files; it rewrites nothing,
-so it never races an append into the mutable range.  Every file has the
-same format: ``offset`` INT64 with footer min/max statistics, ``ts``
-INT96 (Spark's default ``outputTimestampType``), snappy.
+names — sees the whole block or none of it.  The same writer lands
+``optimize``'s compaction, the log's one rewrite of a range directory,
+which touches sealed ranges only and copies them row group by row group.
+Spark writes only ``bulk_load``, the distributed ingest.  ``vacuum``
+reads footers and deletes whole files; it rewrites nothing, so it never
+races an append into the mutable range.  Every file has the same format:
+``offset`` INT64 with footer min/max statistics, ``ts`` INT96 (Spark's
+default ``outputTimestampType``), snappy.
 
 Reads the same way: ``fetch`` is the Spark plan over one stream's range
 directories; ``fetch_table`` and the ``stream_log`` source read an offset
@@ -66,6 +67,8 @@ from __future__ import annotations
 import fcntl
 import glob
 import os
+import shutil
+import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -79,7 +82,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from elastic_stream_spark.catalog import StreamCatalog, StreamNotFound
+from elastic_stream_spark.catalog import StreamCatalog
 
 # Envelope schema — SURVEY.md §1.3 / FIXTURES.md B.1.
 RECORD_SCHEMA = T.StructType(
@@ -238,20 +241,17 @@ def stream_row_groups(records_root: str, stream_id: int) -> list[tuple[int, int,
     return out
 
 
-def _file_schema():
-    """The record columns of a data file (the partition columns live in
-    the path), as Spark writes them: ``offset`` and ``ts`` required, the
-    map's values nullable.  ``ts`` is µs in Arrow and INT96 on disk."""
-    return pa.schema(
-        [
-            pa.field("offset", pa.int64(), nullable=False),
-            pa.field("ts", pa.timestamp("us"), nullable=False),
-            pa.field("properties", pa.map_(pa.string(), pa.string())),
-            pa.field("payload", pa.binary()),
-        ]
-    )
-
-
+# The record columns of a data file (the partition columns live in the
+# path), as Spark writes them: ``offset`` and ``ts`` required, the map's
+# values nullable.  ``ts`` is µs in Arrow and INT96 on disk.
+FILE_SCHEMA = pa.schema(
+    [
+        pa.field("offset", pa.int64(), nullable=False),
+        pa.field("ts", pa.timestamp("us"), nullable=False),
+        pa.field("properties", pa.map_(pa.string(), pa.string())),
+        pa.field("payload", pa.binary()),
+    ]
+)
 FILE_COLUMNS = ("offset", *PAYLOAD_COLS)
 
 
@@ -262,30 +262,34 @@ def scan_range(
     ``[lo, hi)``, in file order (not offset-sorted).  Reads only the row
     groups whose footer span overlaps the window, file by file (a
     ``pyarrow.dataset`` scan costs about three times as much per small
-    file); INT96 ``ts`` comes back as µs, the unit Spark's Arrow ingest
-    takes.  A missing directory yields nothing."""
-    schema = pa.schema([_file_schema().field(c) for c in columns])
+    file) and one row group at a time, so memory is bounded by one row
+    group and no batch spans two row groups; INT96 ``ts`` comes back as
+    µs, the unit Spark's Arrow ingest takes.  A missing directory yields
+    nothing."""
+    schema = pa.schema([FILE_SCHEMA.field(c) for c in columns])
     read_cols = list(dict.fromkeys(["offset", *columns]))  # offset filters
     for path, groups in footer_listing(range_dir):
         if groups is None:  # no statistics: read it all, filter every row
-            pick, inside = None, False
+            pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+            picks = [(g, False) for g in range(pf.num_row_groups)]
         else:
-            hit = [g for g in groups if g[1] >= lo and (hi is None or g[0] < hi)]
-            if not hit:
+            picks = [
+                (g[4], g[0] >= lo and (hi is None or g[1] < hi))  # (number, inside)
+                for g in groups
+                if g[1] >= lo and (hi is None or g[0] < hi)
+            ]
+            if not picks:
                 continue
-            pick = [g[4] for g in hit]
-            inside = all(g[0] >= lo and (hi is None or g[1] < hi) for g in hit)
-        pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
-        if pick is None:
-            pick = list(range(pf.num_row_groups))
-        table = pf.read_row_groups(pick, columns=read_cols, use_threads=False)
-        if not inside:
-            keep = pc.greater_equal(table["offset"], lo)
-            if hi is not None:
-                keep = pc.and_(keep, pc.less(table["offset"], hi))
-            table = table.filter(keep)
-        if table.num_rows:
-            yield from table.select(list(columns)).cast(schema).to_batches()
+            pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+        for g, inside in picks:
+            table = pf.read_row_group(g, columns=read_cols, use_threads=False)
+            if not inside:
+                keep = pc.greater_equal(table["offset"], lo)
+                if hi is not None:
+                    keep = pc.and_(keep, pc.less(table["offset"], hi))
+                table = table.filter(keep)
+            if table.num_rows:
+                yield from table.select(list(columns)).cast(schema).to_batches()
 
 
 def _fsync(path: str) -> None:
@@ -296,24 +300,37 @@ def _fsync(path: str) -> None:
         os.close(fd)
 
 
-def write_record_file(range_dir: str, table) -> None:
-    """Land an Arrow table of ``_file_schema()`` as one data file of the
-    range directory.  The file is written under a hidden temp name and
+def write_record_file(range_dir: str, parts) -> None:
+    """Land Arrow tables or record batches of ``FILE_SCHEMA`` as one data
+    file of the range directory, each non-empty part one row group; no
+    rows, no file.  The file is written under a hidden temp name and
     fsynced, then renamed to a fresh UUID name and the directory fsynced:
     a crash leaves either a hidden temp file no reader lists or the whole
-    file."""
+    file.  The writer of every reserved block and of ``optimize``."""
     created = not os.path.isdir(range_dir)
     os.makedirs(range_dir, exist_ok=True)
     name = uuid.uuid4().hex
     tmp = os.path.join(range_dir, f".{name}.parquet.tmp")
     path = os.path.join(range_dir, f"part-{name}.snappy.parquet")
-    pq.write_table(
-        table,
-        tmp,
-        compression="snappy",
-        use_deprecated_int96_timestamps=True,
-        store_schema=False,
-    )
+    rows = 0
+    try:
+        with pq.ParquetWriter(
+            tmp,
+            FILE_SCHEMA,
+            compression="snappy",
+            use_deprecated_int96_timestamps=True,
+            store_schema=False,
+        ) as writer:
+            for part in parts:
+                if part.num_rows:
+                    writer.write(part, row_group_size=part.num_rows)
+                    rows += part.num_rows
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    if not rows:
+        os.unlink(tmp)
+        return
     _fsync(tmp)
     os.replace(tmp, path)
     _fsync(range_dir)
@@ -340,10 +357,13 @@ class StreamLog:
     Every ``append`` lands its block through the Arrow writer on the
     driver: a list of bytes directly, a DataFrame after one collect
     (``prepare_batch``, the one Spark job) and ``write_stamped``, which the
-    exactly-once sink calls too.  ``fetch_table``, ``count_span`` and
-    ``list_objects`` and ``vacuum`` also run on the driver with pyarrow and
-    no Spark job.  ``fetch`` and ``records`` return Spark plans;
-    ``bulk_load``, ``optimize`` and ``expire_retention`` run Spark jobs.
+    exactly-once sink calls too.  ``fetch_table``, ``count_span``,
+    ``list_objects`` and the maintenance jobs (``vacuum``, ``optimize``,
+    ``expire_retention``, ``sweep``) also run on the driver with pyarrow
+    and no Spark job, so ``StreamLog(None, catalog)`` serves all of them.
+    Spark runs only where a DataFrame comes in or goes out: a DataFrame
+    ``append``'s collect, ``bulk_load``, and the plans ``fetch`` and
+    ``records`` return.
     """
 
     def __init__(self, spark: SparkSession, catalog: StreamCatalog):
@@ -411,17 +431,16 @@ class StreamLog:
             meta = self.catalog.describe_stream(stream_id)
             return meta.next_offset, meta.next_offset
         base, rng = self.catalog.reserve_offsets(stream_id, n, epoch=epoch)
-        schema = _file_schema()
         table = pa.table(
             [
                 pa.array(np.arange(base, base + n, dtype=np.int64)),
                 pa.array(np.full(n, ts_ms * 1000, dtype=np.int64), pa.timestamp("us")),
-                pa.nulls(n, schema.field("properties").type),
+                pa.nulls(n, FILE_SCHEMA.field("properties").type),
                 payload,
             ],
-            schema=schema,
+            schema=FILE_SCHEMA,
         )
-        write_record_file(self._range_dir(stream_id, rng.range_index), table)
+        write_record_file(self._range_dir(stream_id, rng.range_index), [table])
         self.catalog.confirm_offset(stream_id, base + n)
         return base, base + n
 
@@ -457,8 +476,8 @@ class StreamLog:
             [pa.array(np.arange(base, base + n, dtype=np.int64))]
             + [table[c] for c in PAYLOAD_COLS],
             names=list(FILE_COLUMNS),
-        ).cast(_file_schema())
-        write_record_file(self._range_dir(stream_id, range_index), stamped)
+        ).cast(FILE_SCHEMA)
+        write_record_file(self._range_dir(stream_id, range_index), [stamped])
 
     def count_span(self, stream_id: int, base: int, end: int) -> int:
         """Rows durably in the log with offset in ``[base, end)``, with no
@@ -519,25 +538,6 @@ class StreamLog:
             .parquet(self.records_root)
         )
 
-    def _stream_records(self, stream_id: int, lo: int = 0, hi: int | None = None) -> DataFrame:
-        """The records of the stream's range directories that overlap
-        ``[lo, hi)``, typed per RECORD_SCHEMA — a plan that lists one
-        stream's files, not the whole log's.  Not filtered to the window:
-        callers add their own predicates.  A stream with no data
-        directory yet, or none the catalog knows, reads as empty."""
-        try:
-            slices = range_slices(self.catalog, self.records_root, stream_id, lo, hi)
-        except StreamNotFound:
-            slices = []
-        dirs = [s.range_dir for s in slices if os.path.isdir(s.range_dir)]
-        if not dirs:
-            return self.spark.createDataFrame([], RECORD_SCHEMA)
-        return (
-            self.spark.read.option("basePath", self.records_root)
-            .schema(RECORD_SCHEMA)
-            .parquet(*dirs)
-        )
-
     def fetch(self, stream_id: int, start_offset: int, end_offset: int) -> DataFrame:
         """FETCH ≙ read ``[start_offset, end_offset)`` in offset order.
 
@@ -546,11 +546,18 @@ class StreamLog:
         stats — the same IO-skipping role as the reference's sparse index
         (components/model/src/object.rs:31-97).  Reads below the trim
         horizon return nothing (≙ OffsetOutOfRange after TRIM_STREAM).
+        A stream with no data directory in the window reads as empty.
         """
         meta = self.catalog.describe_stream(stream_id)
         lo = max(start_offset, meta.start_offset)
+        slices = range_slices(self.catalog, self.records_root, stream_id, lo, end_offset)
+        dirs = [s.range_dir for s in slices if os.path.isdir(s.range_dir)]
+        if not dirs:
+            return self.spark.createDataFrame([], RECORD_SCHEMA)
         return (
-            self._stream_records(stream_id, lo, end_offset)
+            self.spark.read.option("basePath", self.records_root)
+            .schema(RECORD_SCHEMA)
+            .parquet(*dirs)
             .where(
                 (F.col("stream_id") == stream_id)
                 & (F.col("offset") >= lo)
@@ -578,7 +585,7 @@ class StreamLog:
             for s in range_slices(self.catalog, self.records_root, stream_id, lo, end_offset)
             for b in scan_range(s.range_dir, s.lo, s.hi, columns)
         ]
-        schema = pa.schema([_file_schema().field(c) for c in columns])
+        schema = pa.schema([FILE_SCHEMA.field(c) for c in columns])
         table = pa.Table.from_batches(batches, schema=schema)
         return table.sort_by("offset") if "offset" in columns else table
 
@@ -651,8 +658,6 @@ class StreamLog:
         vacuum/optimize entry — under ``_maintenance_lock``, so leftovers
         are guaranteed crash debris, never another process's live swap —
         and one completed maintenance pass heals any earlier crash."""
-        import shutil
-
         for scratch in (
             f"{self.catalog.root}/_vacuum_tmp",
             f"{self.catalog.root}/_optimize_tmp",
@@ -676,19 +681,23 @@ class StreamLog:
         drops rows below the minimum offset, compaction.rs:18-56): a range
         is rewritten when it has more than one file, or when a file's
         footer span starts below the range's ``start`` (the range straddled
-        a trim horizon), keeping only rows with ``offset >= start``.  The
-        log's one rewrite of a range directory.  Sealed ranges take no
-        appends, so the rewrite races with no writer; the mutable range is
-        never touched.  Returns {range_index: (files_before,
-        files_after)}.  Fetch results are identical before/after — reads
-        already clamp at ``start_offset``.  Crash-safety order: the rewrite
-        is written outside the records tree, the old directory renamed
-        aside (outside too, so partition discovery never sees a stray dir),
-        the new one moved in, the old one deleted last; ``_repair_swaps``
-        rolls back a swap interrupted between the two renames, so the rows
-        are never stranded outside the read tree."""
-        import shutil
-
+        a trim horizon), keeping only rows in ``[start, end)``.  The log's
+        one rewrite of a range directory, with no Spark job: ``scan_range``
+        reads the range one row group at a time and ``write_record_file``
+        writes each as one row group of the new file, so memory is bounded
+        by one row group and the footer keeps the per-block offset spans
+        that reads prune by.  Sealed ranges take no appends, so the rewrite
+        races with no writer; the mutable range is never touched.  Returns
+        {range_index: (files_before, files_after)}.  Fetch results are
+        identical before/after — reads already clamp at ``start_offset``.
+        Crash-safety order: the rewrite is written outside the records
+        tree, the old directory renamed aside (outside too, so partition
+        discovery never sees a stray dir), the new one moved in and the
+        stream directory fsynced, the old one deleted last;
+        ``_repair_swaps`` rolls back a swap interrupted between the two
+        renames, so the rows are never stranded outside the read tree.
+        Between those renames the range directory is missing, and a
+        concurrent read sees none of its rows."""
         scratch = f"{self.catalog.root}/_optimize_tmp"
         os.makedirs(scratch, exist_ok=True)
         with self._maintenance_lock(stream_id):
@@ -705,15 +714,10 @@ class StreamLog:
                 tag = f"s{stream_id}-r{r.range_index}"
                 tmp = f"{scratch}/rewrite-{tag}"
                 old = f"{scratch}/old-{tag}"
-                (
-                    self.spark.read.parquet(d)
-                    .where(F.col("offset") >= r.start)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(tmp)
-                )
+                write_record_file(tmp, scan_range(d, r.start, r.end))
                 os.replace(d, old)
                 shutil.move(tmp, d)
+                _fsync(os.path.dirname(d))
                 shutil.rmtree(old)
                 out[r.range_index] = (len(listing), len(parquet_files(d)))
             return out
@@ -732,8 +736,6 @@ class StreamLog:
         which take no maintenance lock, race with nothing: an append lands
         only offsets it reserved at or above ``next_offset``, which no trim
         passes."""
-        import shutil
-
         # single-shard read: vacuum needs only this stream's metadata, and
         # sweep() calls it per stream
         with self._maintenance_lock(stream_id):
@@ -761,15 +763,14 @@ class StreamLog:
         sealed ranges with several files or rows below the start.
         First it removes the catalog temp files a killed writer left
         (``StreamCatalog.repair``).  Idempotent; safe to run on any
-        schedule.  Returns a per-stream report.
+        schedule.  Returns a per-stream report.  Runs no Spark job.
 
-        At 100 TB each step is either driver-side metadata (vacuum) or a
-        partition-pruned Spark job (retention's aggregate, a per-range
-        compaction); streams are independent, so a cluster deployment can
-        shard the loop by stream_id."""
-        import time as _time
-
-        now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
+        At 100 TB each step reads on the driver only what it changes:
+        footer metadata (vacuum), the expired ranges plus one (retention),
+        the sealed ranges it compacts, one row group at a time (optimize).
+        Streams are independent, so a cluster deployment can shard the
+        loop by stream_id."""
+        now_ms = int(time.time() * 1000) if now_ms is None else now_ms
         self.catalog.repair()
         report: dict = {}
         for meta in self.catalog.list_streams(include_deleted=True):
@@ -789,23 +790,25 @@ class StreamLog:
         """Retention job ≙ wal.rs:362-377 check_expired_segment: trim the
         stream to the first offset at or above ``start_offset`` whose ts is
         within the retention window (rows below the start that a vacuum
-        kept in a straddling file do not count).  Returns the new
-        start_offset."""
+        kept in a straddling file do not count), or to ``next_offset`` if
+        none is.  Ranges are disjoint and in offset order, so the first
+        range holding a live row holds that offset: the ranges are read
+        (``offset`` and ``ts`` only, through ``scan_range``) in order up to
+        it, with no Spark job.  Returns the new start_offset."""
         meta = self.catalog.describe_stream(stream_id)
         if meta.retention_ms < 0:
             return meta.start_offset
-        horizon = F.timestamp_millis(F.lit(now_ms - meta.retention_ms))
-        row = (
-            self._stream_records(stream_id, meta.start_offset)
-            .where(
-                (F.col("stream_id") == stream_id)
-                & (F.col("offset") >= meta.start_offset)
-                & (F.col("ts") >= horizon)
-            )
-            .agg(F.min("offset").alias("first_live"))
-            .collect()[0]
-        )
-        new_start = row["first_live"] if row["first_live"] is not None else meta.next_offset
+        horizon = pa.scalar((now_ms - meta.retention_ms) * 1000, pa.timestamp("us"))
+        new_start = meta.next_offset
+        for s in range_slices(self.catalog, self.records_root, stream_id, meta.start_offset):
+            live = [
+                pc.min(b["offset"].filter(pc.greater_equal(b["ts"], horizon))).as_py()
+                for b in scan_range(s.range_dir, s.lo, s.hi, ("offset", "ts"))
+            ]
+            live = [o for o in live if o is not None]
+            if live:
+                new_start = min(live)
+                break
         if new_start > meta.start_offset:
             self.catalog.trim_stream(stream_id, new_start)
             self.vacuum(stream_id)

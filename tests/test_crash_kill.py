@@ -1,9 +1,11 @@
-"""Kill-based crash test of the byte append path, with trim + vacuum.
+"""Kill-based crash test of the byte append path, with trim, vacuum and
+compaction.
 
 A child process appends ``list[bytes]`` blocks to three streams through
 ``StreamLog(None, StreamCatalog(root))`` (no Spark), with an occasional
-``update_stream`` and ``seal_range``, and acks each append that returned
-with an fsync'd line.  The parent ``SIGKILL``s it at a seeded random
+``update_stream`` and ``seal_range``, each seal followed by an
+``optimize`` of the stream, and acks each append that returned with an
+fsync'd line.  The parent ``SIGKILL``s it at a seeded random
 delay, checks the store, and starts a fresh child on the same root.
 While the child runs, the parent trims one stream to the base of an
 acked block and runs ``StreamLog(None, cat).vacuum`` on it, then reads
@@ -15,14 +17,22 @@ After every kill, through the lock-free read paths:
 - every shard and ``catalog.json`` parse;
 - ``confirmed_offset <= next_offset``;
 - no offset is held twice by the row groups of the footer index, across
-  all of a stream's range directories;
-- ``confirmed_offset`` covers every acked block, and each one that ends
-  above ``start_offset`` reads back once through ``fetch_table``, with
-  its bytes;
+  all of a stream's range directories, and each row group holds a
+  contiguous run of offsets (a compaction keeps one row group per block);
 - no data file whose largest offset is below ``start_offset`` is left:
   every trim is followed by a completed vacuum;
+- after ``StreamLog(None, cat).optimize`` heals each stream (it completes
+  or rolls back a swap the kill interrupted, the documented recovery),
+  the footer checks above hold again, ``confirmed_offset`` covers every
+  acked block, and each one that ends above ``start_offset`` reads back
+  once through ``fetch_table``, with its bytes;
 - the published change-feed revisions are ``1..n`` with ``n`` at most the
   catalog's revision (equal once the crash window is repaired).
+
+The footer checks run before the heal, so the heal cannot hide a file
+left below ``start_offset``.  A kill inside ``optimize`` is likely to land
+in its write or its read, rarely in the sub-millisecond window between its
+two renames; ``tests/test_objects.py`` forces that window.
 
 Once ``StreamCatalog.repair`` has run, no ``.catalog-*`` or ``.shard-*``
 temp file a killed write left remains in the catalog root.
@@ -78,6 +88,7 @@ def child(root: str, ack_path: str, seed: int) -> None:
                 cat.update_stream(sid, retention_ms=i)
             if i % 41 == 0:
                 cat.seal_range(sid, epoch=cat.describe_stream(sid).epoch)
+                log.optimize(sid)
             payloads = [rng.randbytes(rng.randrange(1, 512)) for _ in range(rng.randrange(1, 9))]
             base, end = log.append(sid, payloads)
             ack.write(f"{sid} {base} {end} {block_digest(payloads)}\n")
@@ -107,10 +118,7 @@ def check_invariants(root: str, acks) -> None:
         records_root,
     )
 
-    read_catalog_files(root)
-    cat = StreamCatalog(root)
-    log = StreamLog(None, cat)
-    for sid in range(N_STREAMS):
+    def check_footers(sid: int) -> None:
         s = cat.describe_stream(sid)
         assert s.confirmed_offset <= s.next_offset, s
         listing = [e for _, d in range_dirs(records_root(root), sid) for e in footer_listing(d)]
@@ -121,6 +129,15 @@ def check_invariants(root: str, acks) -> None:
         for lo, hi, n in groups:
             assert n == hi - lo + 1 and lo > prev_hi, (sid, groups)
             prev_hi = hi
+
+    read_catalog_files(root)
+    cat = StreamCatalog(root)
+    log = StreamLog(None, cat)
+    for sid in range(N_STREAMS):
+        check_footers(sid)
+    for sid in range(N_STREAMS):
+        log.optimize(sid)  # heal: complete or roll back an interrupted swap
+        check_footers(sid)
     for sid, base, end, digest in acks:
         s = cat.describe_stream(sid)
         assert s.confirmed_offset >= end, (sid, base, end)

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from elastic_stream_spark.catalog import FencedError, StreamCatalog
-from elastic_stream_spark.log import StreamLog, footer_listing
+from elastic_stream_spark.log import StreamLog, footer_listing, range_dirs
 
 
 @pytest.fixture()
@@ -228,3 +228,42 @@ def test_concurrent_writer_survives_trim_and_vacuum(spark, log):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = {g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
     assert jobs == dict.fromkeys(groups, 0), jobs
+
+
+def test_sweep_runs_no_spark_job(spark, log):
+    """Retention, reclaim and compaction need no Spark: a sweep through
+    ``StreamLog(None, catalog)`` runs 0 jobs and ends as
+    ``test_sweep_all_streams_agree`` does."""
+    a = log.catalog.create_stream(retention_ms=500_000).stream_id
+    log.append(a, [b"stale"] * 4, ts_ms=0)
+    log.append(a, [b"fresh"] * 4, ts_ms=800_000)
+    b = log.catalog.create_stream().stream_id
+    log.append(b, [b"gone"] * 3)
+    log.catalog.delete_stream(b)
+    c = log.catalog.create_stream().stream_id
+    for i in range(3):
+        log.append(c, [b"c%d" % i] * 2, ts_ms=i * 1_000)
+    log.catalog.seal_range(c, epoch=0)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("sweep-no-spark", "sweep-no-spark")
+    try:
+        report = StreamLog(None, StreamCatalog(log.catalog.root)).sweep(
+            now_ms=1_000_000, optimize=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("sweep-no-spark")) == 0
+
+    assert report == {
+        a: {"start_offset": 4, "optimized": {}},
+        b: {"deleted": True},
+        c: {"start_offset": 0, "optimized": {0: (3, 1)}},
+    }
+    assert log.fetch_table(a, 0, 100)["offset"].to_pylist() == [4, 5, 6, 7]
+    assert range_dirs(log.records_root, b) == []
+    got = log.fetch_table(c, 0, 100)
+    assert got["offset"].to_pylist() == list(range(6))
+    assert got["payload"].to_pylist() == [b"c0", b"c0", b"c1", b"c1", b"c2", b"c2"]

@@ -6,6 +6,7 @@ every maintenance step; fetch is identical before and after compaction."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -34,9 +35,13 @@ def _events(spark, n, base_ts=0):
     )
 
 
-
 def _on_disk_files(log, sid):
     return [(ridx, p) for ridx, d in range_dirs(log.records_root, sid) for p in parquet_files(d)]
+
+
+def _spans(log, sid, range_index):
+    """Offset spans of the row groups of one range directory's files."""
+    return sorted(g[:2] for _, gs in footer_listing(log._range_dir(sid, range_index)) for g in gs)
 
 
 def _assert_view_matches_disk(log, sid, n_records):
@@ -187,3 +192,50 @@ def test_sweep_all_streams_agree(spark, log):
     assert sorted(o.path for o in log.list_objects()) == disk_all
     _assert_view_matches_disk(log, a, 4)
     _assert_view_matches_disk(log, c, 6)
+
+
+def test_optimize_keeps_one_row_group_per_block(spark, log):
+    """A compacted file keeps each source block as its own row group,
+    clamped to the range's ``[start, end)``, also when a trim cuts into
+    the range and it is compacted again: reads keep pruning per block."""
+    sid = log.catalog.create_stream().stream_id
+    for k in range(6):
+        log.append(sid, [b"%d" % k] * (k + 2))  # blocks of 2..7 records
+    log.catalog.seal_range(sid, epoch=0)  # range 0 = [0, 27)
+    log.append(sid, [b"next"] * 3, epoch=1)
+    blocks = _spans(log, sid, 0)
+    assert len(blocks) == 6 and blocks[-1][1] == 26
+
+    assert log.optimize(sid) == {0: (6, 1)}
+    assert _spans(log, sid, 0) == blocks
+    log.catalog.trim_stream(sid, 7)  # cuts into the block [5, 9)
+    assert log.optimize(sid) == {0: (1, 1)}
+    assert _spans(log, sid, 0) == [(max(lo, 7), hi) for lo, hi in blocks if hi >= 7]
+    assert log.fetch_table(sid, 0, 30)["offset"].to_pylist() == list(range(7, 30))
+
+
+def test_optimize_repairs_its_own_interrupted_swap(spark, log, monkeypatch):
+    """A crash between optimize's two renames leaves the range directory
+    missing, and reads miss its confirmed rows; the next optimize rolls
+    the swap back and completes it."""
+    sid = log.catalog.create_stream().stream_id
+    for k in range(4):
+        log.append(sid, [b"%d:%d" % (k, i) for i in range(3)])
+    log.catalog.seal_range(sid, epoch=0)
+    before = log.fetch_table(sid, 0, 100)
+    d = log._range_dir(sid, 0)
+
+    def crash(src, dst):
+        raise OSError("crash between the renames")
+
+    monkeypatch.setattr(shutil, "move", crash)
+    with pytest.raises(OSError, match="between the renames"):
+        log.optimize(sid)
+    monkeypatch.undo()
+    assert not os.path.exists(d)
+    assert log.fetch_table(sid, 0, 100).num_rows == 0  # the hole a live read falls into
+    assert log.confirmed_offset(sid) == 12
+
+    assert log.optimize(sid) == {0: (4, 1)}
+    assert log.fetch_table(sid, 0, 100).equals(before)
+    assert os.listdir(f"{log.catalog.root}/_optimize_tmp") == []

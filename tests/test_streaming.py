@@ -502,7 +502,8 @@ def test_sink_replays_torn_arrow_write_once(spark, log, workdir, monkeypatch):
 def test_sink_and_dataframe_append_land_the_same_records(spark, log, workdir):
     """The sink's Arrow write stamps offsets in the DataFrame append's
     order (ts ascending, ties in arrival order) and stores the same
-    values, as every reader sees them."""
+    values, as every reader sees them, before and after a compaction
+    merges the sink's block with a byte append's."""
     from datetime import datetime
 
     from pyspark.sql import types as T
@@ -541,17 +542,28 @@ def test_sink_and_dataframe_append_land_the_same_records(spark, log, workdir):
             for r in log.fetch_table(sid, base, 100).to_pylist()
         ]
 
+    names = (f"equiv_view_{i}" for i in range(4))
+
     def via_stream_log(sid, base):
-        name = f"equiv_view_{'sunk' if sid == sunk else 'appended'}"
+        name = next(names)
         _drain(_read_log(spark, log, sid), name)
         got = spark.table(name).where(F.col("offset") >= base).orderBy("offset")
         return [(r.offset - base, r.ts, r.properties, r.payload) for r in got.collect()]
 
+    seen = {}
     for view in (via_fetch, via_fetch_table, via_stream_log):
-        assert view(sunk, 1) == view(appended, 0), view.__name__
-    got = via_fetch(sunk, 1)
+        seen[view] = view(sunk, 1)
+        assert seen[view] == view(appended, 0), view.__name__
+    got = seen[via_fetch]
     assert [p["k"] for _, _, p, _ in got] == ["e", "b", "d", "c", "a"]
     assert got[1][3] is None
+
+    for sid in (sunk, appended):
+        log.catalog.seal_range(sid, epoch=0)
+    assert log.optimize(sunk) == {0: (2, 1)}  # the pad block and the sink's
+    assert log.optimize(appended) == {}  # one file: nothing to compact
+    for view, want in seen.items():
+        assert view(sunk, 1) == view(appended, 0) == want, view.__name__
 
 
 def test_null_ts_is_refused_before_reserving(spark, log, workdir):
